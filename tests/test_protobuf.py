@@ -342,6 +342,82 @@ def test_merge_preserves_properties_and_offset(spark, tmp_path):
     assert r["text"]["frequent_items_offset"] >= 1
 
 
+def test_merge_profile_bins_nulls_nonfinite_models_metadata(spark, tmp_path):
+    # a three-file merge == the profile of the concatenated rows, with an
+    # all-NULL column, a column NULL in one file only, NaN/±Inf doubles,
+    # model metrics and partly shared metadata. Every per-file and total
+    # mean/variance is exact at the 6-decimal finalize rounding, so the
+    # merge must agree to rel 1e-9; a NULL that became NaN on the way into
+    # the merge (mean, min, variance of `sparse` in file 1) breaks it
+    import functools
+    import math
+
+    from whylogs_java_spark.sources.protobuf import (
+        merge_model_dicts,
+        merge_profile_bins,
+        regression_model_dict,
+    )
+
+    nan, inf = float("nan"), float("inf")
+    schema = "allnull double, sparse double, x double, k long, s string"
+    files = [
+        [(None, None, 1.5, 1, "a"), (None, None, nan, 5, "bb"),
+         (None, None, inf, None, None), (None, None, 2.5, None, None)],
+        [(None, 1.0, -inf, 2, "a"), (None, 3.0, 4.0, 6, "c d"),
+         (None, None, None, None, None), (None, None, 6.0, None, None)],
+        [(None, 5.0, 2.0, 7, "g h i"), (None, 7.0, nan, 9, "mmm"),
+         (None, 9.0, 8.0, None, None), (None, None, None, None, None)],
+    ]
+    metas = [
+        {"team": "a", "run": "1"}, {"team": "a", "run": "2"}, {"team": "a", "src": "x"},
+    ]
+    paths = [str(tmp_path / f"p{i}.bin") for i in range(3)]
+    frames = [spark.createDataFrame(rows, schema) for rows in files]
+    for i, (df, p) in enumerate(zip(frames, paths)):
+        model = regression_model_dict(
+            {"count": 4 + i, "sum_abs_diff": 0.5 * (i + 1),
+             "sum_diff": -0.25 * i, "sum2_diff": 1.5 + i},
+            "pred", "tgt",
+        )
+        write_profile_bin(df, p, metadata=metas[i], model=model)
+    out = str(tmp_path / "m.bin")
+    assert merge_profile_bins(spark, paths, out) == 1
+
+    def decoded(path):
+        return [decode_dataset_profile(m) for m in iter_delimited(open(path, "rb").read())]
+
+    (merged,) = decoded(out)
+    # the all-NULL column keeps no extremes and no NaN moments
+    nums = merged["columns"]["allnull"]["numbers"]
+    assert nums.get("doubles") is None and nums.get("longs") is None
+    assert nums["variance"]["count"] == 0
+    assert not any(math.isnan(v) for v in nums["variance"].values())
+    # models merge per tag group with ModelMetrics.merge; metadata keeps the
+    # pairs every input shares
+    want = functools.reduce(merge_model_dicts, [decoded(p)[0]["model"] for p in paths])
+    assert {k: v for k, v in merged["model"].items() if v is not None} == want
+    assert merged["properties"]["metadata"] == {"team": "a"}
+
+    got = {r["column_name"]: r for r in read_profile_bin(spark, out).collect()}
+    whole = frames[0].unionByName(frames[1]).unionByName(frames[2])
+    truth = {r["column_name"]: r for r in profile(whole).collect()}
+    assert set(got) == set(truth)
+    assert got["allnull"]["min"] is None and got["allnull"]["max"] is None
+    for name, t in truth.items():
+        g = got[name]
+        for f in ("count", "null_count", "n", "len_n", "tok_n"):
+            assert g[f] == t[f], (name, f)
+        for f in ("min", "max", "sum", "mean", "variance",
+                  "len_min", "len_max", "len_sum", "len_mean", "len_variance",
+                  "tok_min", "tok_max", "tok_sum", "tok_mean", "tok_variance"):
+            if t[f] is None:
+                assert g[f] is None, (name, f)
+            else:
+                # read_profile_bin reads a NaN on the wire as NULL
+                assert g[f] is not None, (name, f)
+                assert g[f] == pytest.approx(t[f], rel=1e-9, abs=0), (name, f)
+
+
 def _events_cls_df(spark):
     from whylogs_java_spark.sources.parquet import load_table
 

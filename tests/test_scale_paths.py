@@ -1556,3 +1556,33 @@ def test_literal_df_local_relation_and_fallback(spark):
         ("tag", "string"), ("flag", "boolean"),
     ]
     assert literal_df(spark, [], "a int, b string").count() == 0
+
+
+def test_literal_df_fallback_warns_once(spark, monkeypatch):
+    """Rows the pandas/Arrow route refuses take literal_df's plain-path
+    fallback, the slow Python-runner path: never silently, and with one
+    warning per process rather than one per call."""
+    import warnings
+    from decimal import Decimal
+
+    from whylogs_java_spark import ckpt
+
+    monkeypatch.setattr(ckpt, "_FALLBACK_WARNED", False)
+    # Arrow refuses 1.234 in a decimal(10,2) column (rescaling loses a
+    # digit); Spark's own non-Arrow retry of the pandas frame then refuses
+    # the NaN that pandas made of the int column's None
+    rows = [(None, Decimal("1.234")), (1, Decimal("2"))]
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        df = ckpt.literal_df(spark, rows, "a int, d decimal(10,2)")
+        ckpt.literal_df(spark, rows, "a int, d decimal(10,2)")
+    ours = [
+        w for w in caught
+        if w.category is RuntimeWarning and "literal_df" in str(w.message)
+    ]
+    assert len(ours) == 1
+    assert "Python-runner" in str(ours[0].message)
+    assert "LogicalRDD" in df._jdf.queryExecution().optimizedPlan().toString()
+    assert sorted(map(tuple, df.collect()), key=repr) == [
+        (1, Decimal("2.00")), (None, Decimal("1.23")),
+    ]

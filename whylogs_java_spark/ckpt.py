@@ -22,10 +22,12 @@ tests/test_scale_paths.py proves both modes produce identical results.
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import DataFrame
 
 _RELIABLE = False
+_FALLBACK_WARNED = False
 
 
 def set_reliable_checkpoints(enabled: bool) -> None:
@@ -111,9 +113,12 @@ def literal_df(spark, rows, schema: str) -> DataFrame:
     For CURATED literal tables only (metas, centroid codebooks, merge
     tables): exact floats/ints/strings/arrays round-trip through Arrow
     bit-identically, but pandas coerces None in NUMERIC columns to NaN
-    — callers with nullable numeric literals keep the plain path (the
-    fallback also catches anything Arrow refuses).
+    — callers with nullable numeric literals keep the plain path. Rows
+    the pandas/Arrow route refuses fall back to the plain path too, with
+    a ``RuntimeWarning`` the first time in a process: that path is the
+    slow one above, so it is never taken silently.
     """
+    global _FALLBACK_WARNED
     if not rows:
         return spark.createDataFrame([], schema)
     try:
@@ -122,5 +127,14 @@ def literal_df(spark, rows, schema: str) -> DataFrame:
         return spark.createDataFrame(
             pd.DataFrame([tuple(r) for r in rows]), schema=schema
         )
-    except Exception:
+    except Exception as e:
+        if not _FALLBACK_WARNED:
+            _FALLBACK_WARNED = True
+            warnings.warn(
+                f"literal_df: Arrow refused the rows ({type(e).__name__}: {e}); "
+                "they take the Python-runner path, which re-evaluates them on "
+                "every action (warned once per process)",
+                RuntimeWarning,
+                stacklevel=2,
+            )
         return spark.createDataFrame(rows, schema)

@@ -17,14 +17,12 @@ order-dependent in Java (SchemaTracker.java:135-138); here ties break by the
 fixed priority STRING > FRACTIONAL > INTEGRAL > BOOLEAN > NULL > UNKNOWN so
 results are deterministic.
 
-Both a PySpark Column builder and a SQL-text builder are provided so the
-Spark plan and the DuckDB oracle use literally the same logic.
+The tree is built as SQL text only, so the Spark plan
+(``plans.spark_sql.finalize_select_sql``) and the DuckDB oracle run
+literally the same logic.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 from ..constants import (
     TYPE_BOOLEAN,
@@ -35,54 +33,6 @@ from ..constants import (
     TYPE_UNKNOWN,
 )
 
-# tie-break priority: later entries win ties (stable argmax via strict >)
-_PRIORITY = [TYPE_UNKNOWN, TYPE_NULL, TYPE_BOOLEAN, TYPE_INTEGRAL, TYPE_FRACTIONAL, TYPE_STRING]
-
-
-def inferred_type_expr(
-    null_count: Column,
-    fractional_count: Column,
-    integral_count: Column,
-    boolean_count: Column,
-    string_count: Column,
-    unknown_count: Column,
-) -> Column:
-    counts = {
-        TYPE_NULL: null_count,
-        TYPE_FRACTIONAL: fractional_count,
-        TYPE_INTEGRAL: integral_count,
-        TYPE_BOOLEAN: boolean_count,
-        TYPE_STRING: string_count,
-        TYPE_UNKNOWN: unknown_count,
-    }
-    total = sum(counts.values(), F.lit(0)).cast("double")
-
-    # argmax with fixed tie-break: walk priority order, keep strictly-greater
-    cand_type = F.lit(_PRIORITY[0])
-    cand_count = counts[_PRIORITY[0]]
-    for t in _PRIORITY[1:]:
-        is_ge = counts[t] >= cand_count
-        cand_type = F.when(is_ge, F.lit(t)).otherwise(cand_type)
-        cand_count = F.when(is_ge, counts[t]).otherwise(cand_count)
-
-    frac_plus_int = counts[TYPE_FRACTIONAL] + counts[TYPE_INTEGRAL]
-
-    return (
-        F.when(total == 0, F.lit(TYPE_UNKNOWN))
-        .when(cand_count / total > 0.7, cand_type)
-        .when(
-            (cand_type == TYPE_STRING) & (counts[TYPE_STRING] > frac_plus_int),
-            F.lit(TYPE_STRING),
-        )
-        .when(
-            (cand_count / total > 0.5) & (cand_type == TYPE_FRACTIONAL),
-            F.lit(TYPE_FRACTIONAL),
-        )
-        .when(cand_count / total > 0.5, cand_type)
-        .when(frac_plus_int / total > 0.5, F.lit(TYPE_FRACTIONAL))
-        .otherwise(F.lit(TYPE_UNKNOWN))
-    )
-
 
 def inferred_type_sql(
     null_count: str,
@@ -92,7 +42,7 @@ def inferred_type_sql(
     string_count: str,
     unknown_count: str,
 ) -> str:
-    """ANSI-SQL text of the same decision tree, for DuckDB oracles.
+    """ANSI-SQL text of the decision tree above (Spark and DuckDB).
 
     Arguments are SQL expressions (typically aggregate aliases) for the six
     per-type counts.

@@ -6,9 +6,12 @@ StringTracker (length/token stats) — all associative & mergeable
 (core/.../ColumnProfile.java:37-74, core/.../statistics/NumberTracker.java:23-40,
 core/.../statistics/datatypes/StringTracker.java:24-49). Here every tracker
 becomes a set of built-in Catalyst aggregate expressions over the masked
-column, so a whole DatasetProfile is ONE ``df.groupBy(keys).agg(*exprs)``
-with map-side partial aggregation and whole-stage codegen — no opaque
-Java-serialized buffers (contrast DatasetProfileAggregator.scala:125-127).
+column, so a whole DatasetProfile is ONE grouped aggregation with map-side
+partial aggregation and whole-stage codegen — no opaque Java-serialized
+buffers (contrast DatasetProfileAggregator.scala:125-127). The profile's
+per-column expressions are SQL text (plans.spark_sql.ColumnSql); this
+module holds the numeric suite they share, as SQL and, for the operators
+that still build Column trees, as Columns.
 
 Mergeability: we aggregate *atoms* — counts, min, max, exact hi/lo long
 sums of x and x² (and of derived length/token-count columns). Two profiles merge by
@@ -25,32 +28,14 @@ with the same double arithmetic on both engines.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..constants import ROUND_DIGITS, TOKEN_DELIMITER
-from .inference import inferred_type_expr
-from .predicates import (
-    BOOLEAN_RE,
-    FRACTIONAL_RE,
-    INTEGRAL_RE,
-    is_floating,
-    is_integral,
-    is_numeric,
-    masked,
-    null_predicate,
-)
+from ..constants import ROUND_DIGITS
 
 # ---------------------------------------------------------------------------
 # numeric atom suite over an arbitrary (already-masked) numeric Column
 # ---------------------------------------------------------------------------
-
-
-def _cnt(cond: Column) -> Column:
-    return F.sum(F.when(cond, 1).otherwise(0)).cast("long")
 
 
 # Magnitude-tiered exact summation
@@ -122,27 +107,6 @@ def _suite_projection(d: Column, prefix: str) -> list[Column]:
         p.bitwiseAND(F.lit(BIG - 1)).alias(f"{prefix}_b31"),
         F.floor((dc2 - p) * 1000000.0 + 0.5).alias(f"{prefix}_lo2"),
         F.when(small, F.lit(0.0)).otherwise(d * d).alias(f"{prefix}_big2"),
-    ]
-
-
-def _suite_aggs(in_prefix: str, out_prefix: str) -> list[Column]:
-    """Aggregates of a projected numeric suite (plain attribute aggs)."""
-    v = F.col(f"{in_prefix}_v")
-    return [
-        F.count(v).alias(f"{out_prefix}_n"),
-        F.min(v).alias(f"{out_prefix}_min"),
-        F.max(v).alias(f"{out_prefix}_max"),
-        F.sum(f"{in_prefix}_hi").alias(f"{out_prefix}_sum_hi"),
-        F.sum(f"{in_prefix}_lo").alias(f"{out_prefix}_sum_lo"),
-        F.sum(f"{in_prefix}_big").alias(f"{out_prefix}_sum_big"),
-        F.sum(f"{in_prefix}_a31").alias(f"{out_prefix}_sum2_a"),
-        F.sum(f"{in_prefix}_b31").alias(f"{out_prefix}_sum2_b"),
-        F.sum(f"{in_prefix}_lo2").alias(f"{out_prefix}_sum2_lo"),
-        F.sum(f"{in_prefix}_big2").alias(f"{out_prefix}_sum2_big"),
-        # stable central moment (Welford/Chan inside var_samp); n<=1 -> 0.0
-        F.coalesce(F.var_samp(v) * (F.count(v) - F.lit(1)), F.lit(0.0)).alias(
-            f"{out_prefix}_m2"
-        ),
     ]
 
 
@@ -293,7 +257,7 @@ def numeric_final_sql(row_prefix: str, out_prefix: str = "") -> str:
 
 
 # ---------------------------------------------------------------------------
-# full per-column profile spec
+# the per-column atom schema (built per column by plans.spark_sql.ColumnSql)
 # ---------------------------------------------------------------------------
 
 ATOM_METRICS = [
@@ -342,198 +306,3 @@ ATOM_METRICS = [
 ]
 
 
-@dataclass
-class ColumnProfileSpec:
-    """Builds the aggregate expressions profiling one source column.
-
-    Mirrors ColumnProfile.track's per-type dispatch
-    (core/.../ColumnProfile.java:76-117): counters always update; numeric
-    values feed the NumberTracker suite; strings feed the StringTracker
-    (length + token-count suites); booleans feed trueCount. Because Spark
-    columns are statically typed, the per-value type dispatch collapses to a
-    per-column choice of which suites are non-trivial — the same
-    simplification the reference's Spark layer gets from typed Datasets.
-    """
-
-    name: str
-    dt: T.DataType
-    null_strings: tuple[str, ...] = ()
-    coerce_strings: bool = False  # TypedDataConverter string matching (opt-in)
-    tokenizer_delim: str = TOKEN_DELIMITER
-
-    def __post_init__(self) -> None:
-        self.key = self.name  # alias prefix; source names are parquet-safe
-
-    # -- two-phase: projection + aggregation ------------------------------
-    #
-    # Aggregate expressions don't share subexpressions across each other in
-    # codegen, so computing mask/floor/split once per *row* in a projection
-    # and aggregating plain attributes is much cheaper than embedding the
-    # derivations in every aggregate (measured ~2x on the sf0.1 flagship).
-
-    def _token_count(self, m: Column) -> Column:
-        """Token count with Java String.split(" ") semantics
-        (StringTracker.java:25): trailing empty tokens drop, '' counts 1,
-        all-delimiter strings count 0, inner empties are kept.
-        Branch-free (no CASE) so Catalyst subexpression elimination works
-        across the 8 atom projections this inlines into — see
-        plans.spark_sql._token_count_sql for the measured 10x rationale."""
-        d = self.tokenizer_delim
-        t = F.rtrim(m) if d == " " else F.regexp_replace(m, f"(?:{d})+$", "")
-        return (
-            F.size(F.split(t, d)).cast("double")
-            - ((t == "") & (m != "")).cast("int")
-        )
-
-    def projection_exprs(self) -> list[Column]:
-        """Row-level derived columns consumed by ``agg_exprs``."""
-        c = F.col(self.name)
-        dt = self.dt
-        p = self.key
-        out = [
-            null_predicate(c, dt, self.null_strings).cast("int").alias(f"{p}__isnull")
-        ]
-        m = masked(c, dt, self.null_strings)
-        if isinstance(dt, T.BooleanType):
-            out.append((m == F.lit(True)).cast("int").alias(f"{p}__true"))
-        if is_numeric(dt) and not isinstance(dt, T.BooleanType):
-            out += _suite_projection(m.cast("double"), f"{p}__num")
-        if isinstance(dt, T.StringType):
-            if self.coerce_strings:
-                # TypedDataConverter.java:62-84: a coerced value feeds the
-                # tracker of its COERCED type, not the string tracker —
-                # parsed numerics update the numeric suite, 'true'
-                # increments trueCount, and only unmatched values reach the
-                # length/token suites
-                is_int = m.rlike(INTEGRAL_RE)
-                is_frac = m.rlike(FRACTIONAL_RE)
-                is_bool = m.rlike(BOOLEAN_RE)
-                cleaned = F.regexp_replace(
-                    F.regexp_replace(m, "^[+] ", "+"), "^[-] ", "-"
-                )
-                num_m = F.when(is_int | is_frac, cleaned.cast("double"))
-                str_m = F.when(
-                    ~F.coalesce(is_int | is_frac | is_bool, F.lit(False)), m
-                )
-                out += _suite_projection(num_m, f"{p}__num")
-                out.append((F.lower(m) == "true").cast("int").alias(f"{p}__true"))
-                out += _suite_projection(F.length(str_m).cast("double"), f"{p}__len")
-                out += _suite_projection(self._token_count(str_m), f"{p}__tok")
-                out += [
-                    is_int.cast("int").alias(f"{p}__is_int"),
-                    is_frac.cast("int").alias(f"{p}__is_frac"),
-                    is_bool.cast("int").alias(f"{p}__is_bool"),
-                ]
-            else:
-                out += _suite_projection(F.length(m).cast("double"), f"{p}__len")
-                out += _suite_projection(self._token_count(m), f"{p}__tok")
-        return out
-
-    def agg_exprs(self) -> list[Column]:
-        """Aggregates over the projected attributes (plain sums/min/max)."""
-        dt = self.dt
-        p = self.key
-        cnt = F.count(F.lit(1)).cast("long")
-        nullc = F.sum(f"{p}__isnull").cast("long")
-        nn = (cnt - nullc).cast("long")
-        zero = F.max(F.lit(0)).cast("long")
-
-        coerced = isinstance(dt, T.StringType) and self.coerce_strings
-        exprs: list[Column] = [
-            cnt.alias(f"{p}_count"),
-            nullc.alias(f"{p}_null_count"),
-            (
-                F.sum(f"{p}__true").cast("long")
-                if isinstance(dt, T.BooleanType) or coerced
-                else zero
-            ).alias(f"{p}_true_count"),
-        ]
-
-        tc: dict[str, Column] = dict.fromkeys(
-            ("integral", "fractional", "boolean", "string", "unknown"), zero
-        )
-        if is_integral(dt):
-            tc["integral"] = nn
-        elif is_floating(dt) or isinstance(dt, T.DecimalType):
-            tc["fractional"] = nn
-        elif isinstance(dt, T.BooleanType):
-            tc["boolean"] = nn
-        elif isinstance(dt, T.StringType):
-            if self.coerce_strings:
-                # TypedDataConverter.java:62-84 regex coercion
-                i = F.sum(f"{p}__is_int").cast("long")
-                fr = F.sum(f"{p}__is_frac").cast("long")
-                b = F.sum(f"{p}__is_bool").cast("long")
-                tc["integral"], tc["fractional"], tc["boolean"] = i, fr, b
-                tc["string"] = (nn - i - fr - b).cast("long")
-            else:
-                tc["string"] = nn
-        else:
-            # timestamps/dates/complex: not tracked -> UNKNOWN
-            # (TypedData.java:54-57)
-            tc["unknown"] = nn
-        for k, e in tc.items():
-            exprs.append(e.alias(f"{p}_{k}_count"))
-
-        if (is_numeric(dt) and not isinstance(dt, T.BooleanType)) or coerced:
-            exprs += _suite_aggs(f"{p}__num", f"{p}_num")
-        else:
-            exprs += _null_numeric_atoms(f"{p}_num")
-        if isinstance(dt, T.StringType):
-            exprs += _suite_aggs(f"{p}__len", f"{p}_len")
-            exprs += _suite_aggs(f"{p}__tok", f"{p}_tok")
-        else:
-            exprs += _null_numeric_atoms(f"{p}_len")
-            exprs += _null_numeric_atoms(f"{p}_tok")
-        return exprs
-
-def _null_numeric_atoms(prefix: str) -> list[Column]:
-    nl = F.max(F.lit(None).cast("long"))
-    nd = F.max(F.lit(None).cast("double"))
-    return [
-        F.max(F.lit(0)).cast("long").alias(f"{prefix}_n"),
-        nd.alias(f"{prefix}_min"),
-        nd.alias(f"{prefix}_max"),
-        nl.alias(f"{prefix}_sum_hi"),
-        nl.alias(f"{prefix}_sum_lo"),
-        nd.alias(f"{prefix}_sum_big"),
-        nl.alias(f"{prefix}_sum2_a"),
-        nl.alias(f"{prefix}_sum2_b"),
-        nl.alias(f"{prefix}_sum2_lo"),
-        nd.alias(f"{prefix}_sum2_big"),
-        nd.alias(f"{prefix}_m2"),
-    ]
-
-
-# ---------------------------------------------------------------------------
-# finalization: atoms -> summary metrics (SummaryConverters semantics)
-# ---------------------------------------------------------------------------
-
-def finalize_exprs() -> list[Column]:
-    """Select-expressions turning a long-format atom row into the summary.
-
-    Output field set mirrors ColumnSummary/NumberSummary/StringSummary
-    (core/.../SummaryConverters.java:75-138).
-    """
-    out: list[Column] = [
-        F.col("count"),
-        F.col("null_count"),
-        F.col("true_count"),
-        F.col("integral_count"),
-        F.col("fractional_count"),
-        F.col("boolean_count"),
-        F.col("string_count"),
-        F.col("unknown_count"),
-        inferred_type_expr(
-            F.col("null_count"),
-            F.col("fractional_count"),
-            F.col("integral_count"),
-            F.col("boolean_count"),
-            F.col("string_count"),
-            F.col("unknown_count"),
-        ).alias("inferred_type"),
-    ]
-    for prefix, out_prefix in (("num", ""), ("len", "len_"), ("tok", "tok_")):
-        for name, expr in numeric_final_exprs(prefix, out_prefix).items():
-            out.append(expr.alias(name))
-    return out

@@ -26,19 +26,10 @@ FRACTIONAL_RE = r"^[-+]? ?\d+[.]\d+$"
 BOOLEAN_RE = r"^(?i)(true|false)$"
 
 _FLOATING = (T.DoubleType, T.FloatType)
-_INTEGRAL = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
 
 
 def is_floating(dt: T.DataType) -> bool:
     return isinstance(dt, _FLOATING)
-
-
-def is_integral(dt: T.DataType) -> bool:
-    return isinstance(dt, _INTEGRAL)
-
-
-def is_numeric(dt: T.DataType) -> bool:
-    return isinstance(dt, T.NumericType)
 
 
 def null_predicate(

@@ -29,26 +29,27 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..constants import HLL_LGK, KLL_K, SUMMARY_QUANTILES
-from ..functions.predicates import masked, truncated_text
+from ..plans.spark_sql import masked_sql, truncated_text_sql
 
 
-def sketch_aggs(df: DataFrame, columns: Sequence[str] | None, exclude: Sequence[str]):
-    """The per-column sketch aggregate list (shared by the batch
-    ``sketch_profile`` and the streaming ``windowed_sketch_profile``)."""
+def sketch_aggs(
+    df: DataFrame, columns: Sequence[str] | None, exclude: Sequence[str]
+) -> list[str]:
+    """The per-column sketch aggregates as Spark-SQL text. The batch
+    ``sketch_profile`` runs them as one statement; the streaming
+    ``windowed_sketch_profile`` wraps each in ``F.expr``. Text, not Column
+    trees: each Column node is a py4j round trip, and these lists are
+    three aggregates per column."""
     schema = {f.name: f.dataType for f in df.schema.fields}
     cols = [c for c in (columns or df.columns) if c not in set(exclude)]
     aggs = []
     for c in cols:
         dt = schema[c]
-        m = masked(F.col(c), dt)
         if dt.typeName() in ("double", "float", "long", "integer", "short", "byte"):
-            aggs.append(
-                F.kll_sketch_agg_float(m.cast("float"), F.lit(KLL_K)).alias(f"{c}__kll")
-            )
-            aggs.append(F.theta_sketch_agg(m.cast("double")).alias(f"{c}__theta"))
-        aggs.append(
-            F.hll_sketch_agg(truncated_text(F.col(c)), F.lit(HLL_LGK)).alias(f"{c}__hll")
-        )
+            m = masked_sql(c, dt)
+            aggs.append(f"kll_sketch_agg_float(CAST({m} AS FLOAT), {KLL_K}) AS `{c}__kll`")
+            aggs.append(f"theta_sketch_agg(CAST({m} AS DOUBLE)) AS `{c}__theta`")
+        aggs.append(f"hll_sketch_agg({truncated_text_sql(f'`{c}`')}, {HLL_LGK}) AS `{c}__hll`")
     return aggs
 
 
@@ -61,12 +62,13 @@ def sketch_profile(
 
     Numeric columns get a KLL(256) quantile sketch + theta distinct sketch;
     every column gets an HLL(lgK=12) sketch over its 256-char-truncated
-    string form (ColumnProfile.trackText semantics).
+    string form (ColumnProfile.trackText semantics). Built as one SQL
+    statement.
     """
-    keys = list(group_by)
-    aggs = sketch_aggs(df, columns, keys)
-    grouped = df.groupBy(*keys) if keys else df.groupBy()
-    return grouped.agg(*aggs)
+    keys = [f"`{k}`" for k in group_by]
+    select = ", ".join(keys + sketch_aggs(df, columns, group_by))
+    group = f" GROUP BY {', '.join(keys)}" if keys else ""
+    return df.sparkSession.sql(f"SELECT {select} FROM {{src}}{group}", src=df)
 
 
 def merge_sketch_profiles(sketches: DataFrame, group_by: Sequence[str] = ()) -> DataFrame:

@@ -30,7 +30,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.metrics import ATOM_METRICS, finalize_exprs
+from ..functions.metrics import ATOM_METRICS
 
 
 def profile_atoms(
@@ -53,6 +53,8 @@ def profile_atoms(
     the Column API costs seconds of py4j round trips per query; the SQL
     text is a single JVM call producing the identical Catalyst plan
     (projection -> partial+final hash-agg -> inline explode).
+    ``finalize_profile`` adds its summary SELECT the same way, so a
+    ``profile()`` build is two ``spark.sql`` calls whatever the width.
     """
     from ..plans.spark_sql import build_atoms_sql
 
@@ -114,8 +116,14 @@ def profile_melted(
 
 
 def finalize_profile(atoms: DataFrame, key_names: Sequence[str]) -> DataFrame:
-    """Atoms -> summary metrics (mean/variance/stddev/inferred type...)."""
-    return atoms.select(*key_names, F.col("column_name"), *finalize_exprs())
+    """Atoms -> summary metrics (mean/variance/stddev/inferred type...),
+    as one SQL statement over the atoms (the finalizer text the DuckDB
+    oracle also runs)."""
+    from ..plans.spark_sql import finalize_select_sql
+
+    return atoms.sparkSession.sql(
+        f"{finalize_select_sql(key_names)} FROM {{atoms}}", atoms=atoms
+    )
 
 
 def profile(

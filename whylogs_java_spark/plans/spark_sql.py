@@ -1,11 +1,15 @@
-"""Spark-SQL text generator for the profile aggregation.
+"""Spark-SQL text generator for the profile path.
 
-Why text instead of Column trees: building the ~400 expressions of a wide
-profile through the PySpark Column API costs seconds of py4j round trips
-per query (measured 2.4 s for an 11-column profile — comparable to the
-whole cluster-side execution at sf0.1). Emitting one SQL statement makes
-plan construction a single JVM call; Catalyst sees the identical logical
-plan.
+Why text instead of Column trees: building an expression through the
+PySpark Column API costs one py4j round trip per node, so the ~400
+expressions of a wide profile cost seconds per query (measured 2.4 s for
+an 11-column profile — comparable to the whole cluster-side execution
+at sf0.1). Emitting one SQL statement makes plan construction a single
+JVM call; Catalyst sees the identical logical plan. Every pass of the
+store path is built here or from these pieces: the profile atoms, their
+finalization (``finalize_select_sql``), the null mask and text
+truncation the sketch and frequent-items passes share (``masked_sql``,
+``truncated_text_sql``).
 
 The numeric atoms / finalizers / type-inference CASE tree are shared with
 the DuckDB oracle generator (same SQL in both dialects); only the null
@@ -19,6 +23,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import types as T
 
+from ..constants import STRING_LENGTH_MAX
 from ..functions.inference import inferred_type_sql
 from ..functions.metrics import ATOM_METRICS, numeric_atom_sql, numeric_final_sql
 from ..functions.predicates import BOOLEAN_RE, FRACTIONAL_RE, INTEGRAL_RE
@@ -73,6 +78,20 @@ def _null_pred(col: str, kind: str, null_strings: Sequence[str]) -> str:
         inlist = ", ".join("'" + s.replace("'", "''") + "'" for s in null_strings)
         preds.append(f"{col} IN ({inlist})")
     return " OR ".join(preds)
+
+
+def masked_sql(name: str, dt: T.DataType, null_strings: Sequence[str] = ()) -> str:
+    """Column ``name`` with every reference-null value as SQL NULL — the
+    SQL form of ``functions.predicates.masked``, on the same null
+    predicate the profile atoms use."""
+    c = _q(name)
+    return f"CASE WHEN NOT ({_null_pred(c, kind_of(dt), null_strings)}) THEN {c} END"
+
+
+def truncated_text_sql(expr: str) -> str:
+    """String form of ``expr`` capped at 256 chars (ColumnProfile.java:132-138)
+    — the SQL form of ``functions.predicates.truncated_text``."""
+    return f"substring(CAST({expr} AS STRING), 1, {STRING_LENGTH_MAX})"
 
 
 def _num_projection_sql(d: str, prefix: str) -> list[str]:
@@ -131,9 +150,14 @@ def _null_num_aggs(prefix: str) -> list[str]:
     ]
 
 
-class _ColumnSql:
-    """Per-column SQL fragments (projection, aggregation, struct fields),
-    mirroring metrics.ColumnProfileSpec exactly."""
+class ColumnSql:
+    """Per-column SQL fragments (projection, aggregation, struct fields):
+    ColumnProfile.track's per-type dispatch (ColumnProfile.java:76-117)
+    resolved per column, since Spark columns are statically typed —
+    counters always update; numeric values feed the NumberTracker suite;
+    strings feed the StringTracker (length + token-count suites); booleans
+    feed trueCount. Shared by the batch profile (``build_atoms_sql``) and
+    the streaming one (``streaming.profile_stream``)."""
 
     def __init__(
         self,
@@ -316,7 +340,7 @@ def build_atoms_sql(
             "columns list is empty)"
         )
     specs = [
-        _ColumnSql(c, schema[c], null_strings, coerce_strings) for c in profiled
+        ColumnSql(c, schema[c], null_strings, coerce_strings) for c in profiled
     ]
 
     keys_sel = (", ".join(_q(k) for k in key_names) + ",") if key_names else ""
@@ -465,4 +489,11 @@ def finalize_select_sql(key_names: Sequence[str]) -> str:
     )
 
 
-__all__ = ["build_atoms_sql", "finalize_select_sql", "kind_of", "numeric_atom_sql"]
+__all__ = [
+    "build_atoms_sql",
+    "finalize_select_sql",
+    "kind_of",
+    "masked_sql",
+    "numeric_atom_sql",
+    "truncated_text_sql",
+]

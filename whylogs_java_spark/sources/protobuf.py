@@ -1163,6 +1163,86 @@ def read_profile_bin(spark, path):
     return files.select("path", "content").mapInPandas(parse, schema=_READ_SCHEMA)
 
 
+def _read_table(rows: list[tuple]):
+    """``_rows_of_profile`` rows as an Arrow table in ``_READ_SCHEMA``'s
+    layout, which Spark takes as a JVM-side LocalRelation. Built in Arrow
+    directly, not through a pandas frame, which would widen a long column
+    holding a NULL to float64. A NaN in a double column becomes NULL, as
+    in ``read_profile_bin``'s pandas batches."""
+    import pyarrow as pa
+
+    types = {
+        "string": pa.string(), "int": pa.int32(), "long": pa.int64(),
+        "double": pa.float64(), "binary": pa.binary(),
+        "map<string,string>": pa.map_(pa.string(), pa.string()),
+        "map<string,bigint>": pa.map_(pa.string(), pa.int64()),
+    }
+    fields = [f.split(" ") for f in _READ_SCHEMA.split(", ")]
+    cols = list(zip(*rows)) if rows else [()] * len(fields)
+    return pa.table(
+        [
+            pa.array(c, type=types[t], from_pandas=t == "double")
+            for c, (_, t) in zip(cols, fields)
+        ],
+        names=[n for n, _ in fields],
+    )
+
+
+def _chan_sql(p: str) -> str:
+    """Merged (n, min, max, sum, mean, variance) of one numeric summary:
+    mean/variance combine via the order-independent parallel identity
+    m2_total = Σm2 + Σn·mean² − N·mean_w² (Chan's pairwise combine
+    generalized to k-way)."""
+    n_tot = f"SUM(`{p}n`)"
+    mean_w = f"(CASE WHEN {n_tot} > 0 THEN SUM(`{p}mean` * `{p}n`) / {n_tot} END)"
+    m2_tot = (
+        f"SUM(`{p}variance` * GREATEST(`{p}n` - 1, 0)) "
+        f"+ SUM(`{p}n` * `{p}mean` * `{p}mean`) - {n_tot} * {mean_w} * {mean_w}"
+    )
+    return (
+        f"{n_tot} AS `{p}n`, MIN(`{p}min`) AS `{p}min`, MAX(`{p}max`) AS `{p}max`, "
+        f"SUM(`{p}sum`) AS `{p}sum`, {mean_w} AS `{p}mean`, "
+        f"CASE WHEN {n_tot} > 1 THEN GREATEST({m2_tot}, 0.0D) / ({n_tot} - 1) "
+        f"WHEN {n_tot} = 1 THEN 0.0D END AS `{p}variance`"
+    )
+
+
+# merge of the parsed rows per (tag set, column): counts add, extremes
+# min/max, sums add, summaries combine via ``_chan_sql``, sketch binaries
+# union with Spark's native DataSketches aggregates. The rows already fit
+# on the driver, so one task aggregates them: the COALESCE(1) input
+# satisfies the GROUP BY's distribution, and the merge runs as one job
+# with no shuffle
+_MERGE_SQL = f"""
+SELECT to_json(map_from_entries(array_sort(map_entries(tags)))) AS __tags_key,
+  column_name,
+  first(tags) AS tags,
+  {", ".join(f"SUM(`{c}`) AS `{c}`" for c in (
+      "count", "null_count", "true_count", "integral_count",
+      "fractional_count", "boolean_count", "string_count", "unknown_count",
+  ))},
+  {_chan_sql("")},
+  {_chan_sql("len_")},
+  {_chan_sql("tok_")},
+  kll_merge_agg_float(kll) AS kll,
+  theta_union_agg(theta, 12) AS theta,
+  hll_union_agg(hll, true) AS hll,
+  collect_list(frequent_items) AS __items_list,
+  -- sum of the inputs' purge offsets = the merged sketch's worst-case
+  -- undercount (DataSketches union adds error bounds); saturation flag
+  -- via the largest input entry count
+  SUM(frequent_items_offset) AS __items_offset,
+  MAX(size(frequent_items)) AS __items_max_n,
+  -- dataset timestamp: earliest real (>= 0) input timestamp survives the
+  -- merge (DatasetProfile.merge keeps a representative timestamp; min is
+  -- the order-independent choice), NULL when no input has one
+  MIN(CASE WHEN data_timestamp >= 0 THEN data_timestamp END) AS __data_ts,
+  collect_list(metadata) AS __meta_list
+FROM (SELECT /*+ COALESCE(1) */ * FROM {{rows}}) __wjs_rows
+GROUP BY __tags_key, column_name
+"""
+
+
 def merge_profile_bins(
     spark,
     paths: Sequence[str] | str,
@@ -1175,8 +1255,10 @@ def merge_profile_bins(
     reference's DatasetProfileMerger/golden-fixture merge tests exercise).
 
     Messages merge per distinct tag set (profiles with different tags stay
-    separate, the reference's rule). The merge is distributed Spark
-    aggregation over the parsed rows: counts/type counts add, extremes
+    separate, the reference's rule). The driver reads every file and
+    decodes every message once (the inputs are O(groups) small); the
+    decoded rows go to Spark as one Arrow LocalRelation and merge in ONE
+    SQL GROUP BY (``_MERGE_SQL``): counts/type counts add, extremes
     min/max, sums add, mean/variance combine via the order-independent
     parallel identity (m2_total = Σm2 + Σn·mean² − N·mean_w²  — Chan's
     pairwise combine generalized to k-way), and the sketch binaries merge
@@ -1190,68 +1272,9 @@ def merge_profile_bins(
     pairs equal across every input (DatasetProfile.doMerge's
     sharedMetadata rule). Model metrics merge per tag group
     (ModelMetrics.merge: regression sums add, classification score
-    matrices union labels and add cells — decoded driver-side, the
-    messages are O(groups) small). Returns the number of merged messages
-    written.
+    matrices union labels and add cells, from the same decoded
+    messages). Returns the number of merged messages written.
     """
-    from pyspark.sql import functions as F
-
-    df = read_profile_bin(spark, paths)
-    tag_key = F.to_json(F.map_from_entries(F.array_sort(F.map_entries("tags"))))
-
-    def chan(prefix: str):
-        n = F.col(f"{prefix}n")
-        mean = F.col(f"{prefix}mean")
-        m2 = F.col(f"{prefix}variance") * F.greatest(n - 1, F.lit(0))
-        n_tot = F.sum(n)
-        mean_w = F.when(n_tot > 0, F.sum(mean * n) / n_tot)
-        m2_tot = F.sum(m2) + F.sum(n * mean * mean) - n_tot * mean_w * mean_w
-        var = F.when(n_tot > 1, F.greatest(m2_tot, F.lit(0.0)) / (n_tot - 1)).when(
-            n_tot == 1, F.lit(0.0)
-        )
-        return [
-            n_tot.alias(f"{prefix}n"),
-            F.min(f"{prefix}min").alias(f"{prefix}min"),
-            F.max(f"{prefix}max").alias(f"{prefix}max"),
-            F.sum(f"{prefix}sum").alias(f"{prefix}sum"),
-            mean_w.alias(f"{prefix}mean"),
-            var.alias(f"{prefix}variance"),
-        ]
-
-    aggs = [
-        F.first("tags").alias("tags"),
-        *[
-            F.sum(c).alias(c)
-            for c in (
-                "count", "null_count", "true_count", "integral_count",
-                "fractional_count", "boolean_count", "string_count", "unknown_count",
-            )
-        ],
-        *chan(""),
-        *chan("len_"),
-        *chan("tok_"),
-        F.kll_merge_agg_float("kll").alias("kll"),
-        F.theta_union_agg("theta", F.lit(12)).alias("theta"),
-        F.hll_union_agg("hll", F.lit(True)).alias("hll"),
-        F.collect_list("frequent_items").alias("__items_list"),
-        # sum of the inputs' purge offsets = the merged sketch's worst-case
-        # undercount (DataSketches union adds error bounds); saturation flag
-        # via the largest input entry count
-        F.sum("frequent_items_offset").alias("__items_offset"),
-        F.max(F.size("frequent_items")).alias("__items_max_n"),
-        # dataset timestamp: earliest real (>= 0) input timestamp survives
-        # the merge (DatasetProfile.merge keeps a representative timestamp;
-        # min is the order-independent choice), -1 when no input has one
-        F.min(
-            F.when(F.col("data_timestamp") >= 0, F.col("data_timestamp"))
-        ).alias("__data_ts"),
-        F.collect_list("metadata").alias("__meta_list"),
-    ]
-    merged = df.groupBy(tag_key.alias("__tags_key"), "column_name").agg(*aggs)
-
-    # model metrics live at message level, not column level: decode them
-    # driver-side from the (small, O(groups)) raw messages and merge per
-    # tag group
     import json
 
     def _model_key(tags: dict | None) -> str:
@@ -1261,16 +1284,24 @@ def merge_profile_bins(
             ensure_ascii=False,
         )
 
+    # every file is read once and every message decoded once, here on the
+    # driver: the inputs are O(groups) small messages. The decoded rows
+    # feed the Spark merge; model metrics live at message level, not
+    # column level, and merge per tag group right here
+    rows: list[tuple] = []
     models: dict[str, dict] = {}
-    for (content,) in (
-        spark.read.format("binaryFile").load(paths).select("content").collect()
-    ):
-        for msg in iter_delimited(bytes(content)):
+    files = spark.read.format("binaryFile").load(paths).select("path", "content")
+    for path_, content in files.collect():
+        for idx, msg in enumerate(iter_delimited(bytes(content))):
             prof = decode_dataset_profile(msg)
+            rows.extend(_rows_of_profile(path_, idx, prof))
             m = prof.get("model")
             if m is not None:
                 k = _model_key(prof["properties"].get("tags"))
                 models[k] = merge_model_dicts(models.get(k), m)
+
+    parsed = spark.createDataFrame(_read_table(rows))
+    merged = spark.sql(_MERGE_SQL, rows=parsed)
 
     groups: dict[str, list[dict]] = {}
     tags_of: dict[str, dict] = {}
@@ -1551,86 +1582,57 @@ def write_profile_bin_distributed(
 def _frequent_items_df(
     df, keys: Sequence[str], null_strings: Sequence[str], k: int
 ):
-    """Distributed (keys, column_name, value, cnt) top-k rows — the
-    DataFrame half of ``_frequent_items_by_group`` (which collects)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
+    """Exact top-k string forms per (group, column) as distributed
+    (keys, column_name, value, cnt) rows, ``None`` when no column is
+    tracked. ONE SQL statement: melt tracked columns to (keys,
+    column_name, value), count, rank within (keys, column_name) — the
+    window partitions on the melt key, so no partition holds more than
+    one column's distinct values per group."""
     from pyspark.sql import types as T
 
-    from ..functions.predicates import masked, truncated_text
+    from ..plans.spark_sql import masked_sql, truncated_text_sql
 
     tracked_types = (T.NumericType, T.BooleanType, T.StringType)
-    cols = [
-        f.name
+    tracked = {
+        f.name: f.dataType
         for f in df.schema.fields
         if f.name not in set(keys) and isinstance(f.dataType, tracked_types)
-    ]
-    if not cols:
+    }
+    if not tracked:
         return None
-    schema = {f.name: f.dataType for f in df.schema.fields}
-    entries = [
-        F.struct(
-            F.lit(c).alias("column_name"),
-            truncated_text(masked(F.col(c), schema[c], null_strings)).alias("value"),
-        )
-        for c in cols
-    ]
-    melted = df.select(*keys, F.explode(F.array(*entries)).alias("e")).select(
-        *keys, "e.*"
+    entries = ", ".join(
+        f"named_struct('column_name', '{c}', "
+        f"'value', {truncated_text_sql(masked_sql(c, dt, null_strings))})"
+        for c, dt in tracked.items()
     )
-    counts = (
-        melted.where(F.col("value").isNotNull())
-        .groupBy(*keys, "column_name", "value")
-        .agg(F.count(F.lit(1)).alias("cnt"))
+    ks = "".join(f"`{key}`, " for key in keys)
+    return df.sparkSession.sql(
+        f"""
+        SELECT {ks}column_name, value, cnt FROM (
+          SELECT {ks}column_name, value, cnt, row_number() OVER (
+            PARTITION BY {ks}column_name ORDER BY cnt DESC, value ASC) AS __r
+          FROM (
+            SELECT {ks}column_name, value, COUNT(1) AS cnt
+            FROM (SELECT {ks}inline(array({entries})) FROM {{src}}) __wjs_melt
+            WHERE value IS NOT NULL
+            GROUP BY {ks}column_name, value
+          ) __wjs_counts
+        ) __wjs_ranked
+        WHERE __r <= {int(k)}
+        """,
+        src=df,
     )
-    w = Window.partitionBy(*keys, "column_name").orderBy(
-        F.desc("cnt"), F.asc("value")
-    )
-    return counts.withColumn("__r", F.row_number().over(w)).where(F.col("__r") <= k)
 
 
 def _frequent_items_by_group(
     df, keys: Sequence[str], null_strings: Sequence[str], k: int
 ) -> dict[tuple, dict[str, list[tuple[str, int]]]]:
-    """Exact top-k string forms per (group, column) in ONE distributed
-    pass: melt tracked columns to (keys, column_name, value), count, rank
-    within (keys, column_name) — the window partitions on the melt key, so
-    no partition holds more than one column's distinct values per group."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from ..functions.predicates import masked, truncated_text
-
-    tracked_types = (T.NumericType, T.BooleanType, T.StringType)
-    cols = [
-        f.name
-        for f in df.schema.fields
-        if f.name not in set(keys) and isinstance(f.dataType, tracked_types)
-    ]
-    if not cols:
-        return {}
-    schema = {f.name: f.dataType for f in df.schema.fields}
-    entries = [
-        F.struct(
-            F.lit(c).alias("column_name"),
-            truncated_text(masked(F.col(c), schema[c], null_strings)).alias("value"),
-        )
-        for c in cols
-    ]
-    melted = df.select(*keys, F.explode(F.array(*entries)).alias("e")).select(
-        *keys, "e.*"
-    )
-    counts = (
-        melted.where(F.col("value").isNotNull())
-        .groupBy(*keys, "column_name", "value")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    w = Window.partitionBy(*keys, "column_name").orderBy(
-        F.desc("cnt"), F.asc("value")
-    )
-    top = counts.withColumn("__r", F.row_number().over(w)).where(F.col("__r") <= k)
+    """``_frequent_items_df`` collected: {group key: {column: [(value,
+    count), ...]}}."""
+    top = _frequent_items_df(df, keys, null_strings, k)
     out: dict[tuple, dict[str, list[tuple[str, int]]]] = {}
+    if top is None:
+        return out
     for r in top.collect():
         gk = tuple(r[key] for key in keys)
         out.setdefault(gk, {}).setdefault(r["column_name"], []).append(

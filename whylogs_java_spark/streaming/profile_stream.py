@@ -2,10 +2,11 @@
 
 The reference claims batch+stream fit but implements no streaming operators
 (SURVEY.md §2.10; README.md:18-20 vs the source). Because every metric here
-is a built-in mergeable aggregate, the exact same atom expressions run
-under Structured Streaming: tumbling/sliding windows + watermark give the
-time-bucketed profiles the reference produces per (tag, timestamp) group —
-with late-data semantics the reference never had.
+is a built-in mergeable aggregate, the batch profile's atom SQL
+(plans.spark_sql) runs unchanged under Structured Streaming:
+tumbling/sliding windows + watermark give the time-bucketed profiles the
+reference produces per (tag, timestamp) group — with late-data semantics
+the reference never had.
 
 State per (window, tags) group is the same O(columns × constants) atom row
 as batch, so streaming state stays bounded.
@@ -18,7 +19,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.metrics import ColumnProfileSpec
+from ..functions.metrics import ATOM_METRICS
+from ..plans.spark_sql import ColumnSql
 
 
 def profile_stream(
@@ -41,15 +43,14 @@ def profile_stream(
     excluded = set(group_by) | {time_column}
     profiled = [c for c in (columns or stream_df.columns) if c not in excluded]
     schema = {f.name: f.dataType for f in stream_df.schema.fields}
-    specs = [
-        ColumnProfileSpec(c, schema[c], tuple(null_strings)) for c in profiled
-    ]
-    projected = stream_df.select(
-        F.col(time_column),
-        *group_by,
-        *[e for s in specs for e in s.projection_exprs()],
-    )
-    agg_exprs = [e for s in specs for e in s.agg_exprs()]
+    specs = [ColumnSql(c, schema[c], null_strings, coerce_strings=False) for c in profiled]
+    # the batch profile's own SQL fragments (plans.spark_sql), in its two
+    # projection layers
+    passed = [f"`{c}`" for c in (time_column, *group_by)]
+    projected = stream_df.selectExpr(
+        *passed, *[e for s in specs for e in s.raw_projection()]
+    ).selectExpr(*passed, *[e for s in specs for e in s.piece_projection()])
+    agg_exprs = [F.expr(e) for s in specs for e in s.aggs()]
 
     if session_gap is not None:
         # session windows: activity-gap bucketing (additive over the
@@ -69,11 +70,5 @@ def profile_stream(
         F.col("window.start").alias("window_start"),
         F.col("window.end").alias("window_end"),
         *group_by,
-        *[F.col(f"{s.key}_{m}") for s in specs for m, _ in _atom_fields()],
+        *[F.col(f"{s.name}_{m}") for s in specs for m, _ in ATOM_METRICS],
     )
-
-
-def _atom_fields():
-    from ..functions.metrics import ATOM_METRICS
-
-    return ATOM_METRICS

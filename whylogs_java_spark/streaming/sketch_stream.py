@@ -43,7 +43,7 @@ def windowed_sketch_profile(
     the window bounds, ready for a profile-store append sink.
     """
     keys = list(group_by)
-    aggs = sketch_aggs(stream_df, columns, set(keys) | {time_column})
+    aggs = [F.expr(a) for a in sketch_aggs(stream_df, columns, set(keys) | {time_column})]
     win = F.window(
         F.col(time_column), window_duration, slide_duration or window_duration
     )
