@@ -967,18 +967,23 @@ def q_cube_lineitem(spark, sf_dir):
     """Profile metrics under CUBE grouping (free via Catalyst — the
     reference has no grouping sets; SURVEY.md §2.4 'grouping sets' row).
     NULL markers in the cube output double as the all-group rows."""
-    from whylogs_java_spark.functions.metrics import (
-        numeric_atom_exprs,
-        numeric_final_exprs,
-    )
+    from whylogs_java_spark.plans.spark_sql import _num_aggs_sql, _num_projection_sql
 
     li = _t(spark, sf_dir, "lineitem")
-    atoms = li.cube("l_returnflag", "l_linestatus").agg(
-        F.count(F.lit(1)).cast("long").alias("count"),
-        *numeric_atom_exprs(F.col("l_quantity"), "q"),
+    pieces = li.selectExpr(
+        "l_returnflag",
+        "l_linestatus",
+        *_num_projection_sql("CAST(l_quantity AS DOUBLE)", "__q"),
     )
-    finals = [e.alias(n) for n, e in numeric_final_exprs("q", "qty_").items()]
-    return atoms.select("l_returnflag", "l_linestatus", "count", *finals)
+    atoms = pieces.cube("l_returnflag", "l_linestatus").agg(
+        F.count(F.lit(1)).cast("long").alias("count"),
+        *[F.expr(e) for e in _num_aggs_sql("__q", "q")],
+    )
+    return spark.sql(
+        "SELECT l_returnflag, l_linestatus, `count`, "
+        f"{numeric_final_sql('q', 'qty_')} FROM {{atoms}}",
+        atoms=atoms,
+    )
 
 
 def q_charpos_documents(spark, sf_dir):

@@ -562,7 +562,7 @@ def test_asof_null_ts_and_keys(spark):
 
 
 def test_numeric_drift_infinity_is_invalid(spark):
-    """±Inf follows the package null convention (predicates.null_predicate)."""
+    """±Inf follows the package null convention (spark_sql.masked_sql)."""
     a = spark.createDataFrame(
         [(1.0,), (float("inf",),), (float("-inf"),), (3.0,)], "v double"
     )

@@ -532,43 +532,55 @@ def test_model_profile_regression_rewrite_matches_golden(spark, tmp_path):
         assert got["regression"][f] == pytest.approx(golden[f], rel=1e-12)
 
 
+def _kll_n(b: bytes) -> int:
+    """Item count of a KLL floats sketch binary: a 2-int preamble holds an
+    empty (flags bit 0) or single-item sketch, a full one stores n as the
+    int64 at byte 8."""
+    if b[0] & 0x3F == 2:
+        return 0 if b[3] & 1 else 1
+    return int.from_bytes(b[8:16], "little", signed=True)
+
+
 def test_distributed_sink_matches_driver_sink(spark, tmp_path):
-    # executor-side assembly must produce the same decoded content as the
-    # driver-side CLI sink, sketches and frequent items included
+    # executor-side assembly runs the driver-side sink's per-group
+    # assembler: every decoded field of every message agrees, theta and
+    # HLL bytes included; KLL sketches compare by n, as their compaction
+    # is randomised. Without sketches the messages are byte-identical
     from whylogs_java_spark.sources.protobuf import write_profile_bin_distributed
 
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    pd_, pc = str(tmp_path / "dist.bin"), str(tmp_path / "cli.bin")
-    n1 = write_profile_bin_distributed(li, pd_, group_by=["l_returnflag"])
-    n2 = write_profile_bin(li, pc, group_by=["l_returnflag"])
-    assert n1 == n2 == 3
 
-    def decoded(path):
-        out = {}
-        for msg in iter_delimited(open(path, "rb").read()):
-            p = decode_dataset_profile(msg)
-            out[p["properties"]["tags"]["whylogs.tag.l_returnflag"]] = p
-        return out
+    def messages(path):
+        return {
+            decode_dataset_profile(m)["properties"]["tags"]["whylogs.tag.l_returnflag"]: m
+            for m in iter_delimited(open(path, "rb").read())
+        }
 
-    da, dc = decoded(pd_), decoded(pc)
-    assert set(da) == set(dc) == {"A", "N", "R"}
-    for tag, p in dc.items():
-        q = da[tag]
-        assert set(q["columns"]) == set(p["columns"])
-        for name, col in p["columns"].items():
-            got = q["columns"][name]
-            assert got["count"] == col["count"], (tag, name)
-            assert got["type_counts"] == col["type_counts"], (tag, name)
-            if col["numbers"] and col["numbers"].get("doubles"):
-                for f in ("count", "min", "max", "sum"):
-                    assert got["numbers"]["doubles"][f] == pytest.approx(
-                        col["numbers"]["doubles"][f], rel=1e-9
-                    ), (tag, name, f)
-            # same frequent-items content
-            from whylogs_java_spark.sources.protobuf import decode_items_sketch
+    def decoded(msg):
+        p = decode_dataset_profile(msg)
+        for col in p["columns"].values():
+            nums = col["numbers"]
+            if nums and nums["kll"] is not None:
+                nums["kll"] = _kll_n(nums["kll"])
+        return p
 
-            assert decode_items_sketch(got["frequent_items"] or b"") == \
-                decode_items_sketch(col["frequent_items"] or b"")
+    for i, kwargs in enumerate(({}, {"include_sketches": False})):
+        pd_, pc = str(tmp_path / f"dist{i}.bin"), str(tmp_path / f"cli{i}.bin")
+        n1 = write_profile_bin_distributed(li, pd_, group_by=["l_returnflag"], **kwargs)
+        n2 = write_profile_bin(li, pc, group_by=["l_returnflag"], **kwargs)
+        assert n1 == n2 == 3
+        da, dc = messages(pd_), messages(pc)
+        assert set(da) == set(dc) == {"A", "N", "R"}
+        for tag, msg in dc.items():
+            assert decoded(da[tag]) == decoded(msg), (kwargs, tag)
+            if kwargs:
+                assert da[tag] == msg, tag
+        if not kwargs:
+            # the comparison covers the sketches: a numeric column carries
+            # KLL and theta binaries, an HLL one and its frequent items
+            qty = decoded(dc["A"])["columns"]["l_quantity"]
+            assert qty["numbers"]["kll"] > 0 and len(qty["numbers"]["theta"]) > 8
+            assert qty["hll"] and qty["frequent_items"]
 
 
 def test_distributed_sink_many_groups_merge(spark, tmp_path):

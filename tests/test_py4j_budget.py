@@ -7,7 +7,10 @@ Round-trip counts are deterministic for a given schema, unlike timings,
 so these fixed ceilings catch a pass sliding back to Column-tree
 construction. Measured on this frame: ~80 per ``write_profile_bin``
 (~6,600 when its passes were Column trees), ~85 per
-``merge_profile_bins`` and ~15 per lazy ``profile()`` build.
+``merge_profile_bins``, ~15 per lazy ``profile()`` build and ~150-240
+per lazy ``profile_messages_df`` build (~1,450-1,600 when its sketch
+melt and joins were Column trees; ~100-120 of the rest are
+``applyInArrow``'s UDF setup).
 """
 
 from __future__ import annotations
@@ -18,11 +21,16 @@ import datetime
 import pytest
 
 from whylogs_java_spark.operators.profile import profile
-from whylogs_java_spark.sources.protobuf import merge_profile_bins, write_profile_bin
+from whylogs_java_spark.sources.protobuf import (
+    merge_profile_bins,
+    profile_messages_df,
+    write_profile_bin,
+)
 
 WRITE_BUDGET = 400
 MERGE_BUDGET = 150
 PROFILE_BUILD_BUDGET = 150
+MESSAGES_BUILD_BUDGET = 400
 
 
 @contextlib.contextmanager
@@ -77,3 +85,7 @@ def test_store_path_round_trip_budgets(spark, frame, tmp_path):
     with _round_trips(spark) as n:
         profile(frame, group_by=["tag"], null_strings=("",))
     assert n[0] <= PROFILE_BUILD_BUDGET, n[0]
+
+    with _round_trips(spark) as n:
+        profile_messages_df(frame, ["tag"], null_strings=("",))
+    assert n[0] <= MESSAGES_BUILD_BUDGET, n[0]

@@ -3,8 +3,7 @@ wall duration of every stage, via the Spark UI REST API.
 
 Usage: python tools/stage_trace.py [--sf SF_DIR] <query> [query ...]
 
-The follow-up to ``opt_probe.py``: once a query is known to be
-exec-bound (few jobs, runtime = compute), this shows WHICH stage burns
+Once a query is known to be exec-bound (few jobs, runtime = compute), this shows WHICH stage burns
 the time and at what parallelism — the direct detector for the
 AQE-coalesced narrow-stage pathology (a compute-heavy stage whose
 shuffle input is byte-tiny runs on 1-8 tasks while the rest of the

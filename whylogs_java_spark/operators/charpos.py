@@ -19,7 +19,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.metrics import numeric_atom_exprs, numeric_final_exprs
+from ..functions.metrics import numeric_final_sql
+from ..plans.spark_sql import _num_aggs_sql, _num_projection_sql
 
 # CharPosTracker.java:49 verbatim (sic: missing 'x', duplicate 'z')
 DEFAULT_CHARSET = "abcdefghijklmnopqrstuvwzyz0123456789-@!#$%^&*()[]{}"
@@ -46,13 +47,19 @@ def char_pos_stats(
     bucketed = exploded.select(
         *keys,
         F.when(F.col("ch").isin(chars), F.col("ch")).otherwise(NITL).alias("character"),
-        F.col("pos").cast("double").alias("p"),
+        *[
+            F.expr(e)
+            for e in _num_projection_sql("CAST(pos AS DOUBLE)", "__p")
+        ],
     )
     atoms = bucketed.groupBy(*keys, "character").agg(
-        *numeric_atom_exprs(F.col("p"), "pos")
+        *[F.expr(e) for e in _num_aggs_sql("__p", "pos")]
     )
-    finals = [e.alias(n) for n, e in numeric_final_exprs("pos", "").items()]
-    return atoms.select(*keys, "character", *finals)
+    ks = "".join(f"`{k}`, " for k in keys)
+    return atoms.sparkSession.sql(
+        f"SELECT {ks}character, {numeric_final_sql('pos', '')} FROM {{atoms}}",
+        atoms=atoms,
+    )
 
 
 def char_pos_sql(table: str, text_col: str, group_by: Sequence[str] = ()) -> str:

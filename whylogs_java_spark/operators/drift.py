@@ -45,8 +45,8 @@ NULL_CAT = "\x00null"
 
 def _valid_value(v):
     """NULL ∪ NaN ∪ ±Inf are non-values — the package null convention
-    (functions/predicates.null_predicate, mirrored here on an
-    already-double column)."""
+    (the null predicate of plans/spark_sql.masked_sql, mirrored here on
+    an already-double column)."""
     return v.isNotNull() & ~F.isnan(v) & (F.abs(v) != F.lit(float("inf")))
 
 
@@ -435,11 +435,11 @@ def topk_drift(
             F.col("count").alias(f"count_{tag}"),
             F.col("rank").alias(f"rank_{tag}"),
         )
-        from ..functions.predicates import masked
+        from ..plans.spark_sql import masked_sql
 
         schema = {f.name: f.dataType for f in df.schema.fields}
         tot = df.groupBy(*keys).agg(
-            F.count(masked(F.col(column), schema[column])).alias(f"__tot_{tag}")
+            F.count(F.expr(masked_sql(column, schema[column]))).alias(f"__tot_{tag}")
         )
         if keys:
             return top.join(tot, on=keys, how="left")

@@ -17,7 +17,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.metrics import numeric_atom_exprs, numeric_final_exprs
+from ..functions.metrics import numeric_final_sql
+from ..plans.spark_sql import _num_aggs_sql, _num_projection_sql
 
 
 def _label(col: Column, dt: T.DataType) -> Column:
@@ -51,14 +52,16 @@ def confusion_matrix(
     )
     aggs = [F.count(F.lit(1)).alias("count")]
     if score:
-        aggs += numeric_atom_exprs(F.col("__score"), "score")
+        out = out.selectExpr("*", *_num_projection_sql("__score", "__s"))
+        aggs += [F.expr(e) for e in _num_aggs_sql("__s", "score")]
     res = out.groupBy(*keys, "prediction", "target").agg(*aggs)
     if score:
-        finals = [
-            e.alias(name)
-            for name, e in numeric_final_exprs("score", "score_").items()
-        ]
-        res = res.select(*keys, "prediction", "target", "count", *finals)
+        ks = "".join(f"`{k}`, " for k in keys)
+        res = res.sparkSession.sql(
+            f"SELECT {ks}prediction, target, `count`, "
+            f"{numeric_final_sql('score', 'score_')} FROM {{res}}",
+            res=res,
+        )
     return res
 
 

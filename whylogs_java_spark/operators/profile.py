@@ -30,6 +30,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..constants import TAG_PREFIX
 from ..functions.metrics import ATOM_METRICS
 
 
@@ -165,7 +166,7 @@ def with_session_meta(
     """
     entries: list[Column] = []
     for k in group_keys:
-        entries.append(F.lit(f"whylogs.tag.{k}"))
+        entries.append(F.lit(TAG_PREFIX + k))
         entries.append(F.coalesce(F.col(k).cast("string"), F.lit("")))
     tags = (
         F.create_map(*entries)

@@ -30,7 +30,7 @@ from ..constants import (
     ROUND_DIGITS,
     SUMMARY_QUANTILES,
 )
-from ..functions.predicates import masked, truncated_text
+from ..plans.spark_sql import masked_sql, truncated_text_sql
 
 
 def _resolve_tier(tier: str | None, exact: bool | None) -> str:
@@ -75,7 +75,7 @@ def quantile_summary(
     qs = list(quantiles)
     aggs = []
     for c in columns:
-        m = masked(F.col(c), schema[c]).cast("double")
+        m = F.expr(masked_sql(c, schema[c])).cast("double")
         agg = (
             F.percentile(m, F.lit(qs))
             if tier == "exact"
@@ -112,7 +112,7 @@ def histogram_custom_splits(
     (-inf, s0), [s0, s1), ..., [s_{n-1}, +inf).
     Output: (keys..., column_name, bin, bin_start, bin_end, count)."""
     schema = {f.name: f.dataType for f in df.schema.fields}
-    m = masked(F.col(column), schema[column]).cast("double")
+    m = F.expr(masked_sql(column, schema[column])).cast("double")
     keys = list(group_by)
     pts = sorted(float(s) for s in split_points)
 
@@ -154,7 +154,7 @@ def histogram(
     Output: (keys..., column_name, bin, bin_start, bin_end, count).
     """
     schema = {f.name: f.dataType for f in df.schema.fields}
-    m = masked(F.col(column), schema[column]).cast("double")
+    m = F.expr(masked_sql(column, schema[column])).cast("double")
     keys = list(group_by)
 
     grouped = df.groupBy(*keys) if keys else df.groupBy()
@@ -220,7 +220,9 @@ def frequent_items(
     """
     keys = list(group_by)
     schema = {f.name: f.dataType for f in df.schema.fields}
-    v = truncated_text(masked(F.col(column), schema[column], null_strings)).alias("value")
+    v = F.expr(
+        truncated_text_sql(masked_sql(column, schema[column], null_strings))
+    ).alias("value")
     counts = (
         df.select(*keys, v)
         .where(F.col("value").isNotNull())
@@ -320,7 +322,9 @@ def hll_sketch_profile(
     grouped = df.groupBy(*keys) if keys else df.groupBy()
     return grouped.agg(
         *[
-            F.hll_sketch_agg(truncated_text(F.col(c)), F.lit(HLL_LGK)).alias(f"{c}__hll")
+            F.hll_sketch_agg(
+                F.expr(truncated_text_sql(f"`{c}`")), F.lit(HLL_LGK)
+            ).alias(f"{c}__hll")
             for c in columns
         ]
     )

@@ -51,6 +51,8 @@ import os
 import struct
 from collections.abc import Iterable, Sequence
 
+from ..constants import HLL_LGK, TAG_PREFIX
+
 # ---------------------------------------------------------------------------
 # wire primitives
 # ---------------------------------------------------------------------------
@@ -635,10 +637,10 @@ def _numbers_msg(
 
 
 def _strings_msg(count: int, length_msg: bytes | None, tok_msg: bytes | None,
-                 theta: bytes | None, items: bytes | None = None) -> bytes:
+                 items: bytes | None = None) -> bytes:
     out = _f_varint(1, count)
     out += _f_bytes(3, items or _EMPTY_ITEMS_128)
-    out += _f_bytes(4, theta_v4_to_v3(theta) if theta else _EMPTY_THETA)
+    out += _f_bytes(4, _EMPTY_THETA)
     if length_msg is not None:
         out += _f_bytes(5, length_msg)
     if tok_msg is not None:
@@ -646,12 +648,12 @@ def _strings_msg(count: int, length_msg: bytes | None, tok_msg: bytes | None,
     return out
 
 
-def column_message(row: dict, sketches: dict | None = None) -> bytes:
+def column_message(row: dict) -> bytes:
     """Build a ColumnMessage from one finalized long-format profile row
-    (the output schema of ``finalize_profile``) plus optional sketch
-    binaries {'kll': .., 'theta': .., 'hll': .., 'hll_lgk': ..,
-    'str_theta': ..} from ``sketch_profile``."""
-    sk = sketches or {}
+    (the output schema of ``finalize_profile``). The row carries its own
+    sketch binaries under ``_READ_SCHEMA``'s names, each optional: ``kll``,
+    ``theta`` and ``hll`` from ``sketch_profile`` and ``items``, an
+    ItemsSketch<String> binary."""
     name = row["column_name"]
     tc = {
         _T_NULL: row.get("null_count") or 0,
@@ -667,7 +669,7 @@ def column_message(row: dict, sketches: dict | None = None) -> bytes:
     )
     numbers = _numbers_msg(
         n, row.get("min"), row.get("max"), row.get("sum"), row.get("mean"),
-        row.get("variance"), integral, sk.get("kll"), sk.get("theta"),
+        row.get("variance"), integral, row.get("kll"), row.get("theta"),
     )
     len_n = row.get("len_n") or 0
     length_msg = (
@@ -687,12 +689,12 @@ def column_message(row: dict, sketches: dict | None = None) -> bytes:
         if tok_n
         else None
     )
-    items_bytes = sk.get("items") or _EMPTY_ITEMS_128
+    items_bytes = row.get("items") or _EMPTY_ITEMS_128
     # the reference's StringTracker.items only sees STRING-typed values
     # (ColumnProfile.java:106-115); for string columns it coincides with
     # the column-level frequentItems, for others it stays empty
     strings = _strings_msg(
-        tc[_T_STRING], length_msg, tok_msg, sk.get("str_theta"),
+        tc[_T_STRING], length_msg, tok_msg,
         items_bytes if tc[_T_STRING] > 0 else None,
     )
 
@@ -703,9 +705,9 @@ def column_message(row: dict, sketches: dict | None = None) -> bytes:
     out += _f_bytes(5, strings)
     # lg_max_k = FREQUENT_MAX_LG_K (FrequentStringsSketch.java:26-30)
     out += _f_bytes(7, _f_bytes(1, items_bytes) + _f_varint(2, 7))
-    hll = sk.get("hll")
+    hll = row.get("hll")
     if hll:
-        out += _f_bytes(8, _f_bytes(1, hll) + _f_varint(2, sk.get("hll_lgk") or 12))
+        out += _f_bytes(8, _f_bytes(1, hll) + _f_varint(2, HLL_LGK))
     return out
 
 
@@ -925,18 +927,14 @@ def merge_model_dicts(a: dict | None, b: dict | None) -> dict | None:
     return out
 
 
-def dataset_profile_message(
-    column_rows: Sequence[dict],
-    session_id: str = "whylogs-java-spark",
-    session_timestamp: int = 0,
-    data_timestamp: int = -1,
-    tags: dict[str, str] | None = None,
-    metadata: dict[str, str] | None = None,
-    sketches_by_column: dict[str, dict] | None = None,
-    model: dict | None = None,
+def _properties_msg(
+    session_id: str,
+    session_timestamp: int,
+    data_timestamp: int,
+    tags: dict[str, str] | None,
+    metadata: dict[str, str] | None,
 ) -> bytes:
-    """One DatasetProfileMessage (non-delimited) from finalized profile rows."""
-    props = (
+    out = (
         _f_varint(1, SCHEMA_MAJOR)
         + _f_varint(2, SCHEMA_MINOR)
         + _f_str(3, session_id)
@@ -944,17 +942,33 @@ def dataset_profile_message(
         + _f_varint(5, data_timestamp)
     )
     for k, v in sorted((tags or {}).items()):
-        props += _map_entry_str(6, k, v)
+        out += _map_entry_str(6, k, v)
     for k, v in sorted((metadata or {}).items()):
-        props += _map_entry_str(7, k, v)
-    out = _f_bytes(1, props)
-    sks = sketches_by_column or {}
-    for row in sorted(column_rows, key=lambda r: r["column_name"]):
-        cm = column_message(row, sks.get(row["column_name"]))
-        out += _f_bytes(2, _f_str(1, row["column_name"]) + _f_bytes(2, cm))
-    if model is not None:
-        out += _f_bytes(10, model_profile_message(model))
+        out += _map_entry_str(7, k, v)
     return out
+
+
+def _column_entry(row: dict) -> bytes:
+    """One ``columns`` map entry: column name -> ColumnMessage."""
+    return _f_bytes(2, _f_str(1, row["column_name"]) + _f_bytes(2, column_message(row)))
+
+
+def dataset_profile_message(
+    column_rows: Sequence[dict],
+    session_id: str = "whylogs-java-spark",
+    session_timestamp: int = 0,
+    data_timestamp: int = -1,
+    tags: dict[str, str] | None = None,
+    metadata: dict[str, str] | None = None,
+    model: dict | None = None,
+) -> bytes:
+    """One DatasetProfileMessage (non-delimited) from finalized profile rows
+    (see ``column_message``): the unchunked case of
+    ``chunked_profile_messages``."""
+    return chunked_profile_messages(
+        column_rows, session_id, session_timestamp, data_timestamp, tags,
+        metadata, model, max_bytes=None,
+    )[0]
 
 
 # the reference caps each columns chunk at ~1MB
@@ -988,9 +1002,8 @@ def chunked_profile_messages(
     data_timestamp: int = -1,
     tags: dict[str, str] | None = None,
     metadata: dict[str, str] | None = None,
-    sketches_by_column: dict[str, dict] | None = None,
     model: dict | None = None,
-    max_bytes: int = CHUNK_MAX_BYTES,
+    max_bytes: int | None = CHUNK_MAX_BYTES,
     marker: str | None = None,
 ) -> list[bytes]:
     """Column-chunked profile messages, each ≤ ~``max_bytes`` of columns.
@@ -1009,52 +1022,41 @@ def chunked_profile_messages(
     (``merge_profile_bins`` — the reference's column-set-union merge)
     reconstructs the whole profile exactly.
 
+    ``max_bytes=None`` is the unchunked case: one message holding every
+    column, with no marker (``dataset_profile_message``).
+
     ``model`` metrics are dataset-level and ride on the first chunk only.
     Greedy packing is deterministic: columns sort by name.
     """
-    column_rows = list(column_rows)
-    if marker is None:
-        # deterministic marker (the reference uses sessionId + a fresh
-        # UUID per profile, DatasetProfile.java:193; a content hash keeps
-        # the sink reproducible run-to-run). The group tags fold into the
-        # hash so each profile in a grouped write gets a UNIQUE marker
-        # even though groups share one schema — a marker-based reader
-        # regroups chunks per profile, as the reference's UUID guarantees.
-        tag_part = "|".join(f"{k}={v}" for k, v in sorted((tags or {}).items()))
-        col_part = "|".join(sorted(r["column_name"] for r in column_rows))
-        marker = session_id + "-" + hashlib.md5(
-            (tag_part + "||" + col_part).encode()
-        ).hexdigest()
-    meta = dict(metadata or {})
-    meta["whylogs.chunk.marker"] = marker
-    sks = sketches_by_column or {}
-
-    encoded: list[bytes] = []
-    for row in sorted(column_rows, key=lambda r: r["column_name"]):
-        cm = column_message(row, sks.get(row["column_name"]))
-        encoded.append(_f_bytes(2, _f_str(1, row["column_name"]) + _f_bytes(2, cm)))
-
-    chunks = _greedy_chunks(encoded, max_bytes)
-
-    props = (
-        _f_varint(1, SCHEMA_MAJOR)
-        + _f_varint(2, SCHEMA_MINOR)
-        + _f_str(3, session_id)
-        + _f_varint(4, session_timestamp)
-        + _f_varint(5, data_timestamp)
+    column_rows = sorted(column_rows, key=lambda r: r["column_name"])
+    encoded = [_column_entry(row) for row in column_rows]
+    if max_bytes is None:
+        chunks = [encoded]
+    else:
+        chunks = _greedy_chunks(encoded, max_bytes)
+        if marker is None:
+            # deterministic marker (the reference uses sessionId + a fresh
+            # UUID per profile, DatasetProfile.java:193; a content hash
+            # keeps the sink reproducible run-to-run). The group tags fold
+            # into the hash so each profile in a grouped write gets a
+            # UNIQUE marker even though groups share one schema — a
+            # marker-based reader regroups chunks per profile, as the
+            # reference's UUID guarantees.
+            tag_part = "|".join(f"{k}={v}" for k, v in sorted((tags or {}).items()))
+            col_part = "|".join(r["column_name"] for r in column_rows)
+            marker = session_id + "-" + hashlib.md5(
+                (tag_part + "||" + col_part).encode()
+            ).hexdigest()
+        metadata = {**(metadata or {}), "whylogs.chunk.marker": marker}
+    props = _f_bytes(
+        1,
+        _properties_msg(session_id, session_timestamp, data_timestamp, tags, metadata),
     )
-    for k, v in sorted((tags or {}).items()):
-        props += _map_entry_str(6, k, v)
-    for k, v in sorted(meta.items()):
-        props += _map_entry_str(7, k, v)
-
-    out = []
-    for i, chunk in enumerate(chunks):
-        msg = _f_bytes(1, props) + b"".join(chunk)
-        if model is not None and i == 0:
-            msg += _f_bytes(10, model_profile_message(model))
-        out.append(msg)
-    return out
+    model_msg = b"" if model is None else _f_bytes(10, model_profile_message(model))
+    return [
+        props + b"".join(chunk) + (model_msg if i == 0 else b"")
+        for i, chunk in enumerate(chunks)
+    ]
 
 
 def write_delimited(messages: Iterable[bytes], path: str) -> None:
@@ -1305,7 +1307,6 @@ def merge_profile_bins(
 
     groups: dict[str, list[dict]] = {}
     tags_of: dict[str, dict] = {}
-    sketches: dict[str, dict[str, dict]] = {}
     data_ts_of: dict[str, int] = {}
     meta_of: dict[str, dict] = {}
     for r in merged.collect():
@@ -1328,13 +1329,6 @@ def merge_profile_bins(
                 meta_of[gk] = {
                     k: v for k, v in meta_of[gk].items() if m.get(k) == v
                 }
-        col = rd["column_name"]
-        cd = sketches.setdefault(gk, {}).setdefault(col, {})
-        for field in ("kll", "theta", "hll"):
-            blob = rd.pop(field)
-            if blob is not None:
-                cd[field] = bytes(blob)
-        cd["hll_lgk"] = 12
         fi: dict[str, int] = {}
         for m in items_list:
             for v, c in (m or {}).items():
@@ -1351,30 +1345,62 @@ def merge_profile_bins(
                 off += pairs[96][1]
             elif items_max_n >= 96 and off == 0:
                 off = 1
-            cd["items"] = items_sketch_bytes(
+            rd["items"] = items_sketch_bytes(
                 pairs[:96],
                 stream_length=(rd.get("count") or 0) - (rd.get("null_count") or 0),
                 offset=off,
             )
         groups.setdefault(gk, []).append(rd)
 
-    messages = []
-    for gk in sorted(groups):
-        messages.append(
-            dataset_profile_message(
-                groups[gk],
-                session_id=session_id,
-                session_timestamp=session_timestamp,
-                data_timestamp=data_ts_of.get(gk, -1),
-                tags=tags_of[gk],
-                metadata=meta_of.get(gk) or None,
-                sketches_by_column=sketches.get(gk),
-                model=models.get(_model_key(tags_of[gk])),
-            )
+    messages = [
+        dataset_profile_message(
+            groups[gk],
+            session_id=session_id,
+            session_timestamp=session_timestamp,
+            data_timestamp=data_ts_of.get(gk, -1),
+            tags=tags_of[gk],
+            metadata=meta_of.get(gk) or None,
+            model=models.get(_model_key(tags_of[gk])),
         )
+        for gk in sorted(groups)
+    ]
     os.makedirs(os.path.dirname(out_path) or ".", exist_ok=True)
     write_delimited(messages, out_path)
     return len(messages)
+
+
+def _group_messages(
+    keys: Sequence[str],
+    group_key: tuple,
+    column_rows: list[dict],
+    frequent_items_k: int,
+    tags: dict[str, str] | None,
+    **message_kwargs,
+) -> list[bytes]:
+    """One group's wire message(s) — the assembly both profile writers run
+    per group, ``write_profile_bin`` on the driver and
+    ``profile_messages_df`` in an executor.
+
+    ``column_rows`` are the group's finalized profile rows carrying their
+    ``kll``/``theta``/``hll`` binaries and ``frequent_items``, the exact
+    top-``frequent_items_k`` (value, count) pairs. Group key values join
+    ``tags`` under the reference's segment prefix (DatasetProfile.java:
+    40-53); the pairs become the row's ItemsSketch ``items`` with the
+    ``items_saturation_offset`` purge bound. ``message_kwargs`` go to
+    ``chunked_profile_messages``; ``max_bytes=None`` yields one message.
+    """
+    group_tags = dict(tags or {})
+    for k, v in zip(keys, group_key):
+        group_tags[TAG_PREFIX + k] = "" if v is None else str(v)
+    for row in column_rows:
+        fi = row.get("frequent_items")
+        if fi:
+            row["items"] = items_sketch_bytes(
+                fi,
+                stream_length=(row.get("count") or 0) - (row.get("null_count") or 0),
+                offset=items_saturation_offset(fi, frequent_items_k),
+            )
+    return chunked_profile_messages(column_rows, tags=group_tags, **message_kwargs)
 
 
 def profile_messages_df(
@@ -1389,21 +1415,23 @@ def profile_messages_df(
     include_sketches: bool = True,
     frequent_items_k: int = 128,
 ):
-    """DataFrame of assembled wire messages: one row (msg binary) per group,
-    built ON THE EXECUTORS.
+    """DataFrame of wire messages, one row (``msg`` binary) per group,
+    assembled in the executors.
 
-    The distributed message-assembly core shared by the delimited-file sink
+    The distributed core of the delimited-file sink
     (``write_profile_bin_distributed``) and the REST upload sink
-    (``sources.rest.upload_profiles``): finalized profile rows, melted
-    sketch binaries and per-column frequent items join on (group keys,
-    column_name) and each group's DatasetProfileMessage is built inside
-    ``applyInPandas`` (Arrow-batched, one group per call — the same
-    per-group grain as the reference's DatasetProfileAggregator).
-    Requires a non-empty ``group_by`` (ungrouped profiles are the one-
-    message CLI regime — use ``write_profile_bin``).
+    (``sources.rest.upload_profiles``). One SQL statement joins each
+    finalized profile row to its column's sketch binaries and frequent
+    items on (group keys, column_name), NULL group keys included; then
+    ``groupBy().applyInArrow`` hands each group's rows, as plain Python
+    values, to the per-group assembler ``write_profile_bin`` runs on the
+    driver, so both sinks write the same messages. Requires a non-empty
+    ``group_by`` (ungrouped profiles are the one-message CLI regime — use
+    ``write_profile_bin``).
     """
-    import pandas as pd
-    from pyspark.sql import functions as F
+    import datetime
+
+    import pyarrow as pa
 
     from ..operators.profile import profile
 
@@ -1414,113 +1442,72 @@ def profile_messages_df(
             "single-message regime of write_profile_bin"
         )
 
-    fin = profile(df, group_by=keys, null_strings=null_strings)
-    joined = fin
+    ks = "".join(f"`{k}`, " for k in keys)
 
+    def on(alias: str) -> str:
+        return " AND ".join(
+            [f"p.`{k}` <=> {alias}.`{k}`" for k in keys]
+            + [f"p.column_name = {alias}.column_name"]
+        )
+
+    rels = {"fin": profile(df, group_by=keys, null_strings=null_strings)}
+    select, joins = ["p.*"], ""
     if include_sketches:
         from ..operators.approx import sketch_profile
 
-        sk_wide = sketch_profile(df, group_by=keys)
-        field_names = {f.name for f in sk_wide.schema.fields}
-        cols = sorted({n.rsplit("__", 1)[0] for n in field_names if "__" in n})
+        rels["sk"] = sketch_profile(df, group_by=keys)
+        fields = set(rels["sk"].columns)
 
-        def blob(name: str):
-            return (
-                F.col(name) if name in field_names else F.lit(None).cast("binary")
-            )
+        def blob(c: str, kind: str) -> str:
+            name = f"{c}__{kind}"
+            return f"`{name}`" if name in fields else "CAST(NULL AS BINARY)"
 
-        entries = [
-            F.struct(
-                F.lit(c).alias("column_name"),
-                blob(f"{c}__kll").alias("__kll"),
-                blob(f"{c}__theta").alias("__theta"),
-                blob(f"{c}__hll").alias("__hll"),
-            )
+        cols = sorted({n.rsplit("__", 1)[0] for n in fields if "__" in n})
+        entries = ", ".join(
+            f"named_struct('column_name', '{c}', 'kll', {blob(c, 'kll')}, "
+            f"'theta', {blob(c, 'theta')}, 'hll', {blob(c, 'hll')})"
             for c in cols
-        ]
-        sk_long = sk_wide.select(
-            *keys, F.explode(F.array(*entries)).alias("e")
-        ).select(*keys, "e.*")
-        joined = joined.join(sk_long, on=[*keys, "column_name"], how="left")
-    else:
-        joined = (
-            joined.withColumn("__kll", F.lit(None).cast("binary"))
-            .withColumn("__theta", F.lit(None).cast("binary"))
-            .withColumn("__hll", F.lit(None).cast("binary"))
         )
-
+        select += ["s.kll", "s.theta", "s.hll"]
+        joins += (
+            f" LEFT JOIN (SELECT {ks}inline(array({entries})) FROM {{sk}}) s"
+            f" ON {on('s')}"
+        )
     top = (
         _frequent_items_df(df, keys, null_strings, frequent_items_k)
         if frequent_items_k
         else None
     )
     if top is not None:
-        fi_long = top.groupBy(*keys, "column_name").agg(
-            F.collect_list(F.struct("value", "cnt")).alias("__fi")
+        rels["top"] = top
+        select.append("f.frequent_items")
+        joins += (
+            f" LEFT JOIN (SELECT {ks}column_name, "
+            f"map_from_entries(collect_list(struct(value, cnt))) AS frequent_items"
+            f" FROM {{top}} GROUP BY {ks}column_name) f ON {on('f')}"
         )
-        joined = joined.join(fi_long, on=[*keys, "column_name"], how="left")
-    else:
-        joined = joined.withColumn(
-            "__fi", F.lit(None).cast("array<struct<value:string,cnt:bigint>>")
+    joined = df.sparkSession.sql(
+        f"SELECT {', '.join(select)} FROM {{fin}} p{joins}", **rels
+    )
+
+    def build(table: "pa.Table") -> "pa.Table":
+        rows = table.to_pylist()
+        # a TIMESTAMP key arrives zone-aware; a driver collect gives the
+        # naive local time that write_profile_bin's tags spell
+        group_key = tuple(
+            v.astimezone().replace(tzinfo=None)
+            if isinstance(v, datetime.datetime) and v.tzinfo
+            else v
+            for v in (rows[0][k] for k in keys)
         )
-
-    base_tags = dict(tags or {})
-    stat_fields = [
-        f.name
-        for f in joined.schema.fields
-        if f.name not in set(keys) and not f.name.startswith("__")
-    ]
-
-    def build(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        import math as _math
-
-        gtags = dict(base_tags)
-        for k in keys:
-            v = pdf.iloc[0][k]
-            gtags[f"whylogs.tag.{k}"] = "" if v is None else str(v)
-        column_rows = []
-        sks: dict[str, dict] = {}
-        for _, r in pdf.iterrows():
-            rd = {}
-            for f_ in stat_fields:
-                v = r[f_]
-                if v is None or (isinstance(v, float) and _math.isnan(v)):
-                    rd[f_] = None
-                elif hasattr(v, "item"):
-                    rd[f_] = v.item()
-                else:
-                    rd[f_] = v
-            column_rows.append(rd)
-            cd: dict = {}
-            for field, kind in (("__kll", "kll"), ("__theta", "theta"), ("__hll", "hll")):
-                v = r[field]
-                if v is not None and not (isinstance(v, float) and _math.isnan(v)):
-                    cd[kind] = bytes(v)
-            if "hll" in cd:
-                cd["hll_lgk"] = 12
-            fi = r["__fi"]
-            if fi is not None and len(fi):
-                tracked = (rd.get("count") or 0) - (rd.get("null_count") or 0)
-                fi_pairs = [(e["value"], int(e["cnt"])) for e in fi]
-                cd["items"] = items_sketch_bytes(
-                    fi_pairs,
-                    stream_length=tracked,
-                    offset=items_saturation_offset(fi_pairs, frequent_items_k),
-                )
-            if cd:
-                sks[rd["column_name"]] = cd
-        msg = dataset_profile_message(
-            column_rows,
-            session_id=session_id,
-            session_timestamp=session_timestamp,
-            data_timestamp=data_timestamp,
-            tags=gtags,
-            metadata=metadata,
-            sketches_by_column=sks,
+        msgs = _group_messages(
+            keys, group_key, rows, frequent_items_k, tags,
+            session_id=session_id, session_timestamp=session_timestamp,
+            data_timestamp=data_timestamp, metadata=metadata, max_bytes=None,
         )
-        return pd.DataFrame({"msg": [msg]})
+        return pa.table({"msg": pa.array(msgs, pa.binary())})
 
-    return joined.groupBy(*keys).applyInPandas(build, schema="msg binary")
+    return joined.groupBy(*keys).applyInArrow(build, schema="msg binary")
 
 
 def write_profile_bin_distributed(
@@ -1536,16 +1523,16 @@ def write_profile_bin_distributed(
     include_sketches: bool = True,
     frequent_items_k: int = 128,
 ) -> int:
-    """Many-group wire sink: protobuf assembly runs ON THE EXECUTORS.
+    """Many-group wire sink: each group's message is assembled in the
+    executors.
 
-    ``write_profile_bin`` collects finalized rows and assembles messages on
-    the driver — the right shape for the CLI regime (one or a few
-    messages), a bottleneck at millions of groups. Here the messages come
-    from ``profile_messages_df`` (executor-side assembly) and the driver
-    streams the finished blobs to the delimited file via
-    ``toLocalIterator`` — it holds one partition of O(columns)-sized
-    messages at a time, never the whole output, and only concatenates
-    bytes.
+    The messages come from ``profile_messages_df``, which runs the same
+    per-group assembler as ``write_profile_bin``, so a group's message
+    decodes the same from either sink. The driver streams the finished
+    blobs to the delimited file via ``toLocalIterator``: it holds one
+    partition of O(columns)-sized messages at a time, never the whole
+    output, and only concatenates bytes. Ungrouped input is one message
+    and goes to ``write_profile_bin``.
 
     Message order in the file follows partition order (readers treat the
     stream as a set — DatasetProfile.parseDelimitedFrom semantics).
@@ -1658,19 +1645,19 @@ def write_profile_bin(
 ) -> int:
     """Profile ``df`` and write wire-compatible DatasetProfileMessages.
 
+    One delimited message per group (ungrouped -> a single message, the
+    CLI shape — Profiler.java:158-163). Three distributed passes compute
+    the finalized profile rows, the sketch binaries and the exact top
+    ``frequent_items_k`` per column; each collects O(groups × columns)
+    rows. The driver then hands each group's rows to the per-group
+    assembler ``profile_messages_df`` also runs: group key values become
+    tags under ``constants.TAG_PREFIX`` (the reference's segmentation
+    convention, DatasetProfile.java:40-53), and the message is encoded.
     ``chunk_bytes`` switches each group to the column-chunked emission
     (``chunked_profile_messages`` — the reference's ≤1MB segment-stream
     shape, DatasetProfile.java:190-215): one delimited message per column
-    chunk, re-mergeable to the whole profile.
-
-    One delimited message per group (ungrouped -> a single message, the
-    CLI shape — Profiler.java:158-163). Group key values become
-    ``whylogs.tag.<column>`` tags on the message, the reference's
-    segmentation convention (DatasetProfile.java:40-53). The atoms are
-    computed distributed (one aggregation pass + optional sketch pass +
-    one melted top-k pass for frequent items); only the finalized
-    O(groups × columns) rows are collected for assembly. Returns the
-    number of messages written.
+    chunk, re-mergeable to the whole profile. ``model`` metrics ride on
+    each group's (first) message. Returns the number of messages written.
 
     Frequent items serialize as a real ItemsSketch<String> binary holding
     the exact top ``frequent_items_k`` per column (offset 0 — exact
@@ -1692,67 +1679,34 @@ def write_profile_bin(
     if frequent_items_k:
         freq = _frequent_items_by_group(df, keys, null_strings, frequent_items_k)
 
-    sketches: dict[tuple, dict[str, dict]] = {}
+    sketches: dict[tuple, dict] = {}
     if include_sketches:
         from ..operators.approx import sketch_profile
 
-        sk_rows = sketch_profile(df, group_by=keys).collect()
-        for r in sk_rows:
-            gk = tuple(r[k] for k in keys)
-            d = sketches.setdefault(gk, {})
-            rd = r.asDict()
-            for col_field, blob in rd.items():
-                if "__" not in col_field or blob is None:
-                    continue
-                col, kind = col_field.rsplit("__", 1)
-                cd = d.setdefault(col, {})
-                if kind == "kll":
-                    cd["kll"] = bytes(blob)
-                elif kind == "theta":
-                    cd["theta"] = bytes(blob)
-                elif kind == "hll":
-                    cd["hll"] = bytes(blob)
-                    cd["hll_lgk"] = 12
+        for r in sketch_profile(df, group_by=keys).collect():
+            sketches[tuple(r[k] for k in keys)] = r.asDict()
 
     groups: dict[tuple, list[dict]] = {}
     for r in fin:
         rd = r.asDict()
         gk = tuple(rd.pop(k) for k in keys)
-        groups.setdefault(gk, []).append(rd)
         col = rd["column_name"]
-        fi = freq.get(gk, {}).get(col)
-        if fi:
-            tracked = (rd.get("count") or 0) - (rd.get("null_count") or 0)
-            sketches.setdefault(gk, {}).setdefault(col, {})["items"] = (
-                items_sketch_bytes(
-                    fi,
-                    stream_length=tracked,
-                    offset=items_saturation_offset(fi, frequent_items_k),
-                )
-            )
+        sk = sketches.get(gk, {})
+        for kind in ("kll", "theta", "hll"):
+            rd[kind] = sk.get(f"{col}__{kind}")
+        rd["frequent_items"] = freq.get(gk, {}).get(col)
+        groups.setdefault(gk, []).append(rd)
 
     messages = []
     for gk in sorted(groups, key=lambda t: tuple(str(x) for x in t)):
-        gtags = dict(tags or {})
-        for k, v in zip(keys, gk):
-            gtags[f"whylogs.tag.{k}"] = "" if v is None else str(v)
-        common = dict(
-            session_id=session_id,
-            session_timestamp=session_timestamp,
-            data_timestamp=data_timestamp,
-            tags=gtags,
-            metadata=metadata,
-            sketches_by_column=sketches.get(gk),
-            model=model,
-        )
-        if chunk_bytes is not None:
-            messages.extend(
-                chunked_profile_messages(
-                    groups[gk], max_bytes=chunk_bytes, **common
-                )
+        messages.extend(
+            _group_messages(
+                keys, gk, groups[gk], frequent_items_k, tags,
+                session_id=session_id, session_timestamp=session_timestamp,
+                data_timestamp=data_timestamp, metadata=metadata, model=model,
+                max_bytes=chunk_bytes,
             )
-        else:
-            messages.append(dataset_profile_message(groups[gk], **common))
+        )
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
     write_delimited(messages, path)
     return len(messages)

@@ -6,9 +6,12 @@ exponential backoff (WhyLogs.scala:179-264; RetryUtil.scala:12-48: 3
 tries, delay doubling from 1000 ms). This module re-expresses that sink
 generically: it talks plain HTTP (urllib, no vendor SDK) so any endpoint
 that accepts profile bytes works, and the upload fan-out is
-``foreachPartition`` over the executor-assembled message DataFrame
-(``protobuf.profile_messages_df``) — uploads scale with executors, the
-driver never sees a profile byte.
+``foreachPartition`` over ``protobuf.profile_messages_df``'s message
+DataFrame. Each group's message is built in an executor by the same
+per-group assembler the driver-side ``write_profile_bin`` runs, so an
+uploaded profile decodes the same as the file sink's message for that
+group. Uploads scale with executors, and the driver never sees a
+profile byte.
 
 Two endpoint shapes:
 - direct: PUT/POST each delimited-ready message to ``endpoint`` as
