@@ -1743,14 +1743,12 @@ def q_multimodal_audio(spark, sf_dir):
     audio at all), parsed by pure JVM expressions. The DuckDB oracle
     predicts the parser output independently from the same doc_id
     formulas."""
+    from whylogs_java_spark.ckpt import spread
     from whylogs_java_spark.operators.multimodal import audio_header_meta
 
-    d = _t(spark, sf_dir, "documents").select("doc_id")
     # the RIFF walk is an interpreted fold: spread the tiny scan across
     # cores (no-op when the scan already has >= parallelism partitions)
-    target = spark.sparkContext.defaultParallelism
-    if d.rdd.getNumPartitions() < target:
-        d = d.repartition(target)
+    d = spread(_t(spark, sf_dir, "documents").select("doc_id"))
 
     # fixture built as ONE SQL-text expression (9 Column-API `le()`
     # builders cost ~0.6 s of py4j chatter per run — sqlexpr.py); the

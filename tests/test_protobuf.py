@@ -828,3 +828,31 @@ def test_variance_wire_golden_bytes_pin():
         "11" + "0000000000001240"  # field 2 double 4.5
         "19" + "0000000000000440"  # field 3 double 2.5
     )
+
+
+def test_column_names_needing_quotes(spark, tmp_path):
+    """Column names with a space, a quote, a hyphen, a dot or a backtick
+    profile through both atoms plans and both wire sinks, and decode back
+    to the same names."""
+    from whylogs_java_spark.operators.profile import (
+        finalize_profile,
+        profile_atoms,
+        profile_atoms_melted,
+    )
+    from whylogs_java_spark.sources.protobuf import write_profile_bin_distributed
+
+    names = ["a b", "it's", "a-b", "a.b", "x`y"]
+    df = spark.createDataFrame(
+        [("g", 1, 2.0, "x", 4, True), ("h", None, None, "it's", 5, None)],
+        "tag string, `a b` long, `it's` double, `a-b` string, `a.b` int, `x``y` boolean",
+    )
+    for atoms in (profile_atoms, profile_atoms_melted):
+        fin = finalize_profile(atoms(df, group_by=["tag"], null_strings=("",)), ["tag"])
+        assert sorted({r["column_name"] for r in fin.collect()}) == sorted(names)
+    for write in (write_profile_bin, write_profile_bin_distributed):
+        path = str(tmp_path / f"{write.__name__}.bin")
+        assert write(df, path, group_by=["tag"]) == 2
+        for msg in iter_delimited(open(path, "rb").read()):
+            cols = decode_dataset_profile(msg)["columns"]
+            assert sorted(cols) == sorted(names)
+            assert cols["a b"]["count"] == 1

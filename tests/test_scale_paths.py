@@ -1,7 +1,9 @@
-"""Scale-path tests: melt vs wide parity, wide-column stress, custom
-histogram splits, streaming sliding windows."""
+"""Scale-path tests: melt vs wide parity and profile()'s plan choice,
+wide-column stress, custom histogram splits, streaming sliding windows."""
 
 from __future__ import annotations
+
+import datetime
 
 import pytest
 from pyspark.sql import functions as F
@@ -9,20 +11,95 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_DIR
 from whylogs_java_spark.sources.parquet import load_table
 from whylogs_java_spark import profile
-from whylogs_java_spark.operators.profile import profile_melted
+import whylogs_java_spark.operators.profile as profile_mod
+from whylogs_java_spark.operators.profile import (
+    MELT_MAX_BYTES,
+    _plan_bytes,
+    finalize_profile,
+    profile_atoms,
+    profile_atoms_melted,
+    profile_melted,
+)
+from whylogs_java_spark.sources.protobuf import write_profile_bin
 from whylogs_java_spark.operators.summary import histogram_custom_splits
 from whylogs_java_spark.operators.summary import frequent_items as frequent_items_mod
 from whylogs_java_spark.streaming.profile_stream import profile_stream
 
 
+def _assert_plans_agree(df, **kw):
+    """Melt and wide atoms plans give equal atoms and finalized rows, and
+    equal schemas, nullability included. Both sides are built explicitly:
+    ``profile()`` picks one of them by input size."""
+    keys = list(kw.get("group_by", ())) + (["dataset_timestamp"] if kw.get("time_column") else [])
+    wide = profile_atoms(df, **kw)
+    melt = profile_atoms_melted(df, **kw)
+
+    def rows(x):
+        # NaN != NaN: compare through repr
+        return {
+            tuple(repr(r[k]) for k in [*keys, "column_name"]): repr(r.asDict())
+            for r in x.collect()
+        }
+
+    for w, m in ((wide, melt), (finalize_profile(wide, keys), finalize_profile(melt, keys))):
+        assert m.schema == w.schema
+        got, want = rows(m), rows(w)
+        assert set(got) == set(want)
+        for k, v in want.items():
+            assert got[k] == v, k
+
+
 def test_melted_equals_wide(spark):
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    key = lambda r: (r["l_returnflag"], r["column_name"])
-    wide = {key(r): r.asDict() for r in profile(li, group_by=["l_returnflag"]).collect()}
-    melt = {key(r): r.asDict() for r in profile_melted(li, group_by=["l_returnflag"]).collect()}
-    assert set(wide) == set(melt)
-    for k, w in wide.items():
-        assert melt[k] == w, k
+    _assert_plans_agree(li, group_by=["l_returnflag"])
+
+    t0 = datetime.datetime(2024, 1, 1)
+    inf, nan = float("inf"), float("nan")
+    rows = [
+        ("g1", t0, 1, 1.5, "a b", True, "x"),
+        ("g1", t0 + datetime.timedelta(days=1), None, nan, None, None, "NA"),
+        (None, t0, 3, inf, "", False, ""),
+        ("g2", None, 4, -inf, "   ", True, "y z"),
+        ("g2", t0, 2**40, None, "NA", None, None),
+        ("g2", t0, -5, 3e12, "q", False, "w"),
+    ]
+    df = spark.createDataFrame(
+        rows, "g string, ts timestamp, i long, d double, s string, b boolean, s2 string"
+    )
+    _assert_plans_agree(df, group_by=["g"], null_strings=("NA", ""))
+    _assert_plans_agree(df, group_by=["g"], time_column="ts", time_granularity="hour")
+    _assert_plans_agree(df, null_strings=("NA",))
+    # suites and kind counts no profiled column feeds
+    _assert_plans_agree(df, group_by=["g"], columns=["i", "b"])
+    _assert_plans_agree(df, columns=["ts"])
+
+
+def test_profile_plan_choice(spark, monkeypatch, tmp_path):
+    """profile() runs the melt plan (a Generate below the Aggregate) on a
+    small input, and the wide plan (the Generate above it) on an input
+    estimated above MELT_MAX_BYTES or with coerce_strings."""
+
+    def melted(df) -> bool:
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return plan.index("Generate") > plan.index("Aggregate")
+
+    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
+    assert _plan_bytes(li) <= MELT_MAX_BYTES
+    assert melted(profile(li, group_by=["l_returnflag"]))
+    assert not melted(profile(li, group_by=["l_returnflag"], coerce_strings=True))
+    big = spark.range(10**9)
+    assert _plan_bytes(big) > MELT_MAX_BYTES
+    assert not melted(profile(big))
+
+    # a small input's wire file is the wide plan's, byte for byte
+    def write(path):
+        write_profile_bin(li, path, group_by=["l_returnflag"], include_sketches=False)
+        return open(path, "rb").read()
+
+    melt_bytes = write(str(tmp_path / "melt.bin"))
+    monkeypatch.setattr(profile_mod, "MELT_MAX_BYTES", -1)
+    assert not melted(profile(li, group_by=["l_returnflag"]))
+    assert write(str(tmp_path / "wide.bin")) == melt_bytes
 
 
 def test_wide_column_stress(spark):

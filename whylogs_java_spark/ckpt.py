@@ -43,6 +43,20 @@ def reliable_checkpoints_enabled() -> bool:
     ) not in ("", "0", "false", "False")
 
 
+def spread(df: DataFrame) -> DataFrame:
+    """Repartition up to defaultParallelism when the input arrives in fewer
+    partitions than cores (the small-file regime: a few-MB parquet scans as
+    1-2 partitions, so a CPU-heavy explode would use 2 of 32 cores). At
+    cluster scale the scan already has more partitions than cores and this
+    is a no-op — the guard ensures the full-corpus reshuffle only happens
+    exactly when it is cheap. Only ever grows the partition count.
+    """
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < target:
+        return df.repartition(target)
+    return df
+
+
 def materialize(df: DataFrame) -> DataFrame:
     """Eagerly materialize ``df`` and sever its lineage.
 

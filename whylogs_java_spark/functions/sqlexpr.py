@@ -29,7 +29,9 @@ Conventions:
   IEEE-754 doubles exactly and the SQL parser reads `...D` as DOUBLE
   (a bare `0.1` in SQL would be DECIMAL — never emit one);
 - column names are backtick-quoted by `qcol` (caller-supplied names may
-  collide with SQL keywords).
+  collide with SQL keywords, or hold spaces, dots, quotes or backticks);
+- strings that become SQL literals, column names among them, go through
+  `slit`.
 """
 
 from __future__ import annotations
@@ -41,6 +43,12 @@ from collections.abc import Iterable
 def qcol(name: str) -> str:
     """Backtick-quote a column name for safe embedding in SQL text."""
     return "`" + name.replace("`", "``") + "`"
+
+
+def slit(s: str) -> str:
+    """Spark-SQL string literal of ``s``: the parser processes backslash
+    escapes, so backslashes double, and a single quote doubles."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "''") + "'"
 
 
 def dlit(x: float) -> str:

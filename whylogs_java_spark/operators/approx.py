@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..constants import HLL_LGK, KLL_K, SUMMARY_QUANTILES
+from ..functions.sqlexpr import qcol
 from ..plans.spark_sql import masked_sql, truncated_text_sql
 
 
@@ -47,9 +48,13 @@ def sketch_aggs(
         dt = schema[c]
         if dt.typeName() in ("double", "float", "long", "integer", "short", "byte"):
             m = masked_sql(c, dt)
-            aggs.append(f"kll_sketch_agg_float(CAST({m} AS FLOAT), {KLL_K}) AS `{c}__kll`")
-            aggs.append(f"theta_sketch_agg(CAST({m} AS DOUBLE)) AS `{c}__theta`")
-        aggs.append(f"hll_sketch_agg({truncated_text_sql(f'`{c}`')}, {HLL_LGK}) AS `{c}__hll`")
+            aggs.append(
+                f"kll_sketch_agg_float(CAST({m} AS FLOAT), {KLL_K}) AS {qcol(c + '__kll')}"
+            )
+            aggs.append(f"theta_sketch_agg(CAST({m} AS DOUBLE)) AS {qcol(c + '__theta')}")
+        aggs.append(
+            f"hll_sketch_agg({truncated_text_sql(qcol(c))}, {HLL_LGK}) AS {qcol(c + '__hll')}"
+        )
     return aggs
 
 
@@ -65,7 +70,7 @@ def sketch_profile(
     string form (ColumnProfile.trackText semantics). Built as one SQL
     statement.
     """
-    keys = [f"`{k}`" for k in group_by]
+    keys = [qcol(k) for k in group_by]
     select = ", ".join(keys + sketch_aggs(df, columns, group_by))
     group = f" GROUP BY {', '.join(keys)}" if keys else ""
     return df.sparkSession.sql(f"SELECT {select} FROM {{src}}{group}", src=df)

@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..ckpt import literal_df, materialize, materialize_lazy
+from ..ckpt import literal_df, materialize, materialize_lazy, spread
 from ..functions import sqlexpr as sqlx
 
 INT_SCALE = 1_000_000
@@ -103,9 +103,7 @@ def _prepare_emb(embeddings: DataFrame, id_col: str, vec_col: str) -> DataFrame:
         F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")
     ).where(F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) > 0))
     emb = emb.selectExpr("__id", f"{sqlx.as_double_s('__v')} AS __v")
-    target = embeddings.sparkSession.sparkContext.defaultParallelism
-    if emb.rdd.getNumPartitions() < target:
-        emb = emb.repartition(target)
+    emb = spread(emb)
     return emb.transform(materialize)
 
 

@@ -105,10 +105,10 @@ def decontaminate(
         F.col(id_col),
         F.greatest(F.size(words) - n + 1, F.lit(0)).alias("n_ngrams"),
     )
-    from whylogs_java_spark.operators.dedup import _spread
+    from whylogs_java_spark.ckpt import spread
 
     hits = (
-        _spread(corpus.select(id_col, text_col))
+        spread(corpus.select(id_col, text_col))
         .select(
             F.col(id_col),
             F.explode(ngram_digests(F.col(text_col), n)).alias("gram"),
@@ -232,7 +232,7 @@ def ngram_novelty(
     calling repeatedly (the streaming wrapper does) so the reference is
     never re-scanned per call.
     """
-    from whylogs_java_spark.operators.dedup import _spread
+    from whylogs_java_spark.ckpt import spread
 
     if ref_grams is None:
         if ref_df is None:
@@ -247,7 +247,7 @@ def ngram_novelty(
     if broadcast_ref:
         ref_grams = F.broadcast(ref_grams)
     doc_grams = (
-        _spread(corpus.select(id_col, text_col))
+        spread(corpus.select(id_col, text_col))
         .select(
             F.col(id_col),
             F.explode(ngram_digests(F.col(text_col), n)).alias("gram"),
@@ -409,7 +409,7 @@ def decontaminate_spans(
     """
     from pyspark.sql import Window
 
-    from .dedup import _spread
+    from ..ckpt import spread
 
     if eval_grams is None and eval_df is None:
         raise ValueError("pass eval_df or a precomputed eval_grams set")
@@ -419,7 +419,7 @@ def decontaminate_spans(
         else eval_ngram_set(eval_df, eval_text_col or text_col, n)
     )
     t = F.coalesce(F.col(text_col), F.lit(""))
-    base = _spread(corpus.select(id_col, text_col))
+    base = spread(corpus.select(id_col, text_col))
     hit_pos = (
         base.select(
             F.col(id_col),

@@ -26,7 +26,7 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..ckpt import literal_df, materialize_lazy
+from ..ckpt import literal_df, materialize_lazy, spread
 from ..ckpt import materialize as _materialize
 from ..functions.hof import let_bound
 from ..functions.sqlexpr import qcol
@@ -358,20 +358,6 @@ def minhash_candidate_pairs(
     return _candidates_from_bands(bands_df, id_col, bucket_cap=bucket_cap)
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Repartition up to defaultParallelism when the input arrives in fewer
-    partitions than cores (the small-file regime: a few-MB parquet scans as
-    1-2 partitions, so a CPU-heavy explode would use 2 of 32 cores). At
-    cluster scale the scan already has more partitions than cores and this
-    is a no-op — the guard ensures the full-corpus reshuffle only happens
-    exactly when it is cheap.
-    """
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
-
-
 def _jaccard_from_shingle_sets(sh: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
     """Exact shingle-set Jaccard for candidate pairs, given the distinct
     (id, shingle) table.
@@ -588,7 +574,7 @@ def near_dup_pairs(
         # shingle walk serializes on 2 of 32 cores (measured 18.6 s -> 4.5 s
         # for the char-5-gram query at sf0.1); at cluster scale the scan
         # already has >= cores partitions and this is a no-op.
-        df = _spread(df)
+        df = spread(df)
         sigs = minhash_signatures(
             df, text_col, id_col, num_hashes, shingle_size, char_ngrams,
             hash_family=hash_family, bands=bands,
@@ -644,7 +630,7 @@ def near_dup_stages(
     """
     if verify not in ("array", "explode"):
         raise ValueError(f"unknown verify mode: {verify!r}")
-    df = _spread(df)
+    df = spread(df)
     sigs = minhash_signatures(
         df, text_col, id_col, num_hashes, shingle_size, char_ngrams,
         hash_family=hash_family, bands=bands,
@@ -799,7 +785,7 @@ def simhash(
     # + nibble parses + hex rendering cost ~1 s of py4j chatter per
     # build via the Column API; identical trees, one parse each
     # (functions/sqlexpr.py)
-    toks = _spread(df.select(id_col, text_col)).select(
+    toks = spread(df.select(id_col, text_col)).select(
         F.col(id_col), F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("tok")
     ).where(F.col("tok") != "")
     if hash_family == "md5":
@@ -1355,7 +1341,7 @@ def containment_pairs(
     Output: (id_a, id_b, inter, size_a, size_b, containment_a,
     containment_b) with containment_X = |A∩B| / |size of X's set|.
     """
-    df = _spread(df)  # same small-file guard as near_dup_pairs
+    df = spread(df)  # same small-file guard as near_dup_pairs
     if candidates == "shingle":
         sh = shingle_sets(df, text_col, id_col, shingle_size, char_ngrams)
         pairs = shingle_candidate_pairs(sh, id_col, df_cap, min_shared)
@@ -1412,7 +1398,7 @@ def _segment_rows(
         )
 
     words_expr = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
-    return _spread(df.select(id_col, text_col)).select(
+    return spread(df.select(id_col, text_col)).select(
         F.col(id_col),
         F.explode(let_bound(words_expr, segs)).alias("s"),
     ).select(
@@ -1596,7 +1582,7 @@ def duplicate_spans(
         raise ValueError(f"gram_words must be >= 1, got {gram_words}")
     words = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
     n = F.size(words)
-    base = _spread(df.select(id_col, text_col)).select(
+    base = spread(df.select(id_col, text_col)).select(
         F.col(id_col), words.alias("__w"), n.alias("__n")
     )
     grams = base.where(F.col("__n") >= gram_words).select(
@@ -1647,7 +1633,7 @@ def duplicate_spans(
         F.sum(F.col("e") - F.col("s") + 1).alias("dup_tokens"),
         F.max(F.col("e") - F.col("s") + 1).alias("longest_span"),
     )
-    totals = _spread(df.select(id_col, text_col)).select(
+    totals = spread(df.select(id_col, text_col)).select(
         F.col(id_col), F.size(words).cast("long").alias("total_tokens")
     )
     return totals.join(per_doc, id_col, "left").select(
@@ -1701,8 +1687,8 @@ def cross_dedup_pairs(
     Output: (id_a = ref id, id_b = new id, inter, size_a, size_b,
     jaccard) for pairs with jaccard >= threshold.
     """
-    new_df = _spread(new_df.select(id_col, text_col))
-    ref_df = _spread(ref_df.select(id_col, text_col))
+    new_df = spread(new_df.select(id_col, text_col))
+    ref_df = spread(ref_df.select(id_col, text_col))
     sig_ref = minhash_signatures(
         ref_df, text_col, id_col, num_hashes, shingle_size, char_ngrams,
         hash_family=hash_family, bands=bands,
@@ -1789,7 +1775,7 @@ def build_minhash_store(
     per-batch cost is O(batch + matched candidates), with the ref side
     read partition-pruned, never recomputed.
     """
-    df = _spread(df.select(id_col, text_col))
+    df = spread(df.select(id_col, text_col))
     sig = minhash_signatures(
         df, text_col, id_col, num_hashes, shingle_size, char_ngrams,
         hash_family=hash_family, bands=bands,
@@ -1888,7 +1874,7 @@ def append_minhash_store(
     """
     spark = df.sparkSession
     m = spark.read.parquet(f"{path}/meta").first()
-    df = _spread(df.select(id_col, text_col))
+    df = spread(df.select(id_col, text_col))
     sig = minhash_signatures(
         df, text_col, id_col, m["num_hashes"], m["shingle_size"],
         m["char_ngrams"], hash_family=m["hash_family"], bands=m["bands"],
@@ -1952,7 +1938,7 @@ def cross_dedup_stored(
     spaces must be disjoint.
     """
     m = spark.read.parquet(f"{path}/meta").first()
-    new_df = _spread(new_df.select(id_col, text_col))
+    new_df = spread(new_df.select(id_col, text_col))
     sig_new = minhash_signatures(
         new_df, text_col, id_col, m["num_hashes"], m["shingle_size"],
         m["char_ngrams"], hash_family=m["hash_family"], bands=m["bands"],
@@ -2075,7 +2061,7 @@ def winnow_fingerprints(
     """
     t = F.lower(F.col(text_col))
     sel = _winnow_select_structs(t, k, window)
-    return _spread(df.select(id_col, text_col)).select(
+    return spread(df.select(id_col, text_col)).select(
         F.col(id_col),
         F.explode(F.array_distinct(sel)).alias("s"),
     ).select(
@@ -2186,7 +2172,7 @@ def winnow_pairs(
 
     sel = _winnow_select_structs(F.lower(F.col(text_col)), k, window)
     fps = (
-        _spread(df.select(id_col, text_col))
+        spread(df.select(id_col, text_col))
         .select(
             F.col(id_col),
             F.explode(
@@ -2285,7 +2271,7 @@ def winnow_screen(
     # (see winnow_pairs)
     sel = _winnow_select_structs(F.lower(F.col(text_col)), k, window)
     fps = (
-        _spread(df.select(id_col, text_col))
+        spread(df.select(id_col, text_col))
         .select(
             F.col(id_col),
             F.explode(
@@ -2369,7 +2355,7 @@ def build_winnow_store(
     """
     sel = _winnow_select_structs(F.lower(F.col(text_col)), k, window)
     prints = (
-        _spread(df.select(id_col, text_col))
+        spread(df.select(id_col, text_col))
         .select(
             F.col(id_col).alias("ref_id"),
             F.explode(
@@ -2415,7 +2401,7 @@ def append_winnow_store(
         F.lower(F.col(text_col)), int(m["k"]), int(m["window"])
     )
     (
-        _spread(df.select(id_col, text_col))
+        spread(df.select(id_col, text_col))
         .select(
             F.col(id_col).alias("ref_id"),
             F.explode(

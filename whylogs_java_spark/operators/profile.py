@@ -16,9 +16,15 @@ only partial aggregate rows, never data rows.
 
 Scale notes:
 - No second pass / union: wide inputs (600+ cols, WhyLogs.scala:146-148's
-  100-column batching) are handled by the single agg; for 5k+ columns use
-  ``melt=True`` which goes through a long-format stack first (one shuffle on
-  (keys, column_name) — the reference's column-batch rationale, Spark-first).
+  100-column batching) are handled by the single agg.
+- Two atoms plans, one choice. The wide plan above costs ~30 aggregates
+  per column to analyze, optimize and compile on every call, however few
+  the rows; the melt plan (``profile_atoms_melted``) stacks each row into
+  per-column entries first and aggregates them with one generic suite, so
+  its plan is O(1) in width but its work is rows x columns entries — the
+  reference's column-batch rationale, Spark-first. ``profile()`` picks by
+  the input's size estimate: melt at or below ``MELT_MAX_BYTES``, wide
+  above it (see the constant for the measured crossover).
 - No ``coalesce(defaultParallelism)`` (WhyLogs.scala:134-137): built-in aggs
   have small per-group state; AQE picks partitioning.
 """
@@ -32,6 +38,22 @@ from pyspark.sql import functions as F
 
 from ..constants import TAG_PREFIX
 from ..functions.metrics import ATOM_METRICS
+
+# Plan estimate (bytes) at or below which profile() runs the melt plan.
+# Set from warm process CPU-s per profile() call, wide vs melt (medians of
+# 7 alternating pairs in one local[4] JVM, 4 vCPUs):
+#   lineitem slices, 16 columns: 117 KB (6k rows) 1.29 vs 0.84, 218 KB
+#     (10k) 1.42 vs 0.90, 393 KB (20k) 1.24 vs 1.08, 558 KB (30k) 1.48
+#     vs 1.20, 723 KB (40k) 1.25 vs 1.18, 884 KB (50k) 1.15 vs 1.20,
+#     1.04 MB (60k) 1.30 vs 1.33: melt stops winning at ~700-900 KB;
+#   store_log batches, 12 columns: 325 KB (5k rows) 1.35 vs 0.84, 611 KB
+#     (10k) 1.75 vs 1.25.
+# 512 KiB routes every store_log batch and lineitem up to ~30k rows to
+# melt, below lineitem's crossover. Bytes on disk only proxy rows, so the
+# worst case the rule admits is a highly compressible file just under
+# the constant: 12 columns of 1,000-row runs, 522 KB holding 8.9M rows,
+# cost 50.8 vs 109.4 CPU-s (2.2x; 235 KB / 4M rows: 20.8 vs 50.5).
+MELT_MAX_BYTES = 512 * 1024
 
 
 def profile_atoms(
@@ -81,15 +103,17 @@ def profile_atoms_melted(
     columns: Sequence[str] | None = None,
     null_strings: Sequence[str] = (),
 ) -> DataFrame:
-    """Wide-table (1000s of columns) melt-path atoms.
+    """Melt-plan atoms: the same rows and schema as ``profile_atoms``
+    from a plan whose size is O(1) in width.
 
-    Same output schema as ``profile_atoms`` but with an O(1)-in-width plan:
-    rows melt into per-column entries and ONE generic suite aggregates by
-    (keys, column_name). Trade-off: the shuffle carries rows x columns
-    entries (map-side combined), vs the wide path's tiny partials — use
-    when plan width, not data volume, is the binding constraint (the
-    Spark-first equivalent of the reference's 100-column batching,
-    WhyLogs.scala:146-176).
+    Rows melt into per-column entries and ONE generic suite aggregates by
+    (keys, column_name). Trade-off: the work and the shuffle are rows x
+    columns entries (map-side combined), vs the wide plan's per-call cost
+    of analyzing and compiling ~30 aggregates per column — so it is the
+    cheaper plan when that fixed cost dominates: small inputs, which
+    ``profile()`` routes here, and very wide tables (the Spark-first
+    equivalent of the reference's 100-column batching,
+    WhyLogs.scala:146-176). String coercion is wide-plan only.
     """
     from ..plans.spark_sql import build_melted_atoms_sql
 
@@ -108,7 +132,8 @@ def profile_melted(
     columns: Sequence[str] | None = None,
     null_strings: Sequence[str] = (),
 ) -> DataFrame:
-    """Finalized profile via the melt path (see profile_atoms_melted)."""
+    """Finalized profile via the melt plan whatever the input size (see
+    ``profile_atoms_melted``)."""
     key_names = list(group_by) + (["dataset_timestamp"] if time_column else [])
     atoms = profile_atoms_melted(
         df, group_by, time_column, time_granularity, columns, null_strings
@@ -127,6 +152,13 @@ def finalize_profile(atoms: DataFrame, key_names: Sequence[str]) -> DataFrame:
     )
 
 
+def _plan_bytes(df: DataFrame) -> int:
+    """Catalyst's size estimate of ``df`` (optimized-plan statistics): a
+    file scan's bytes on disk scaled to the columns read; huge when
+    unknown (an RDD-backed frame estimates ``spark.sql.defaultSizeInBytes``)."""
+    return df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+
+
 def profile(
     df: DataFrame,
     group_by: Sequence[str] = (),
@@ -142,11 +174,28 @@ def profile(
     .groupBy(cols).aggProfiles()`` (WhyLogs.scala:36-177) with summary
     finalization applied (DatasetProfile.toSummary,
     DatasetProfile.java:174-188).
+
+    The one place that chooses the atoms plan: an input whose plan
+    estimate is at most ``MELT_MAX_BYTES`` profiles through the melt plan
+    (``profile_atoms_melted``), whose fixed cost per call does not grow
+    with width; a larger one, an unknown estimate, or ``coerce_strings``
+    (which only the wide plan supports) through the wide plan
+    (``profile_atoms``), which is cheaper per row. Measured per warm
+    call, melt is ~1.5x cheaper on a 5k-row store batch and on lineitem
+    up to 10k rows, 1.1-1.2x at 20-30k rows, and stops winning at
+    ~700-900 KB of lineitem (the constant's comment has the table). Both give the same rows and
+    schema (see ``build_melted_atoms_sql``); the row order differs.
     """
     key_names = list(group_by) + (["dataset_timestamp"] if time_column else [])
-    atoms = profile_atoms(
-        df, group_by, time_column, time_granularity, columns, null_strings, coerce_strings
-    )
+    if not coerce_strings and _plan_bytes(df) <= MELT_MAX_BYTES:
+        atoms = profile_atoms_melted(
+            df, group_by, time_column, time_granularity, columns, null_strings
+        )
+    else:
+        atoms = profile_atoms(
+            df, group_by, time_column, time_granularity, columns, null_strings,
+            coerce_strings,
+        )
     return finalize_profile(atoms, key_names)
 
 

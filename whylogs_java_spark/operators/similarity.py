@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..ckpt import literal_df, materialize, materialize_lazy
+from ..ckpt import literal_df, materialize, materialize_lazy, spread
 from ..functions import sqlexpr as sqlx
 
 
@@ -71,9 +71,7 @@ def cosine_topk(
     # (3 interpreted folds per candidate row becomes 1), and spread the
     # corpus when the scan arrives in fewer partitions than cores (no-op
     # at cluster scale)
-    target = embeddings.sparkSession.sparkContext.defaultParallelism
-    if embeddings.rdd.getNumPartitions() < target:
-        embeddings = embeddings.repartition(target)
+    embeddings = spread(embeddings)
     # SQL-text selects: one parse call instead of ~10 py4j-built lambdas
     # per side (identical trees — sqlexpr.py)
     vd = sqlx.as_double_s(sqlx.qcol(vec_col))
@@ -118,9 +116,7 @@ def cosine_topk_exact(
     """
     from pyspark.sql import Window
 
-    target = embeddings.sparkSession.sparkContext.defaultParallelism
-    if embeddings.rdd.getNumPartitions() < target:
-        embeddings = embeddings.repartition(target)
+    embeddings = spread(embeddings)
     vd = sqlx.as_double_s(sqlx.qcol(vec_col))
     vecs = embeddings.selectExpr(
         sqlx.qcol(id_col), f"{vd} AS __v", f"{sqlx.norm_s(vd)} AS __n"
@@ -162,9 +158,7 @@ def cosine_pairs_exact(
     deliberate O(n²) — oracle tier only.
     Output: (id_a, id_b, cosine).
     """
-    target = embeddings.sparkSession.sparkContext.defaultParallelism
-    if embeddings.rdd.getNumPartitions() < target:
-        embeddings = embeddings.repartition(target)
+    embeddings = spread(embeddings)
     vd = sqlx.as_double_s(sqlx.qcol(vec_col))
     vecs = embeddings.selectExpr(
         sqlx.qcol(id_col), f"{vd} AS __v", f"{sqlx.norm_s(vd)} AS __n"
@@ -331,9 +325,7 @@ def ivf_topk(
             )
         )
 
-    target = embeddings.sparkSession.sparkContext.defaultParallelism
-    if embeddings.rdd.getNumPartitions() < target:
-        embeddings = embeddings.repartition(target)
+    embeddings = spread(embeddings)
     cvd = _as_double(F.col(vec_col))
     corpus = embeddings.select(
         F.col(id_col).alias("neighbor_id"), cvd.alias("cv"), norm(cvd).alias("cn")
@@ -476,9 +468,7 @@ def ivf_topk_quantized(
         rerank = 3 * k
     levels = (1 << bits) - 1
 
-    target = embeddings.sparkSession.sparkContext.defaultParallelism
-    if embeddings.rdd.getNumPartitions() < target:
-        embeddings = embeddings.repartition(target)
+    embeddings = spread(embeddings)
     vd = sqlx.as_double_s(sqlx.qcol(vec_col))
     # zero-norm vectors have no defined cosine: excluded from the index
     # outright, else their 0/0=NaN exact-refine score sorts ABOVE all
@@ -665,9 +655,7 @@ def hyperplane_buckets_exact(
     Output: ``bands == 1`` -> (id, bucket); else (id, band, bucket).
     """
     total = planes * bands
-    target = embeddings.sparkSession.sparkContext.defaultParallelism
-    if embeddings.rdd.getNumPartitions() < target:
-        embeddings = embeddings.repartition(target)
+    embeddings = spread(embeddings)
 
     # sign components depend only on (plane, dim): build each plane's
     # ±1 array ONCE per distinct vector length and broadcast-join, the
@@ -783,9 +771,7 @@ def banded_buckets(
     # cores when the scan arrives in fewer partitions than parallelism (the
     # small-file regime; a no-op at cluster scale where the scan already
     # has more partitions than cores)
-    target = embeddings.sparkSession.sparkContext.defaultParallelism
-    if embeddings.rdd.getNumPartitions() < target:
-        embeddings = embeddings.repartition(target)
+    embeddings = spread(embeddings)
     e = embeddings.join(
         F.broadcast(plane_arrays),
         on=F.size(F.col(vec_col)) == F.col("__len"),
@@ -1102,9 +1088,7 @@ def lsh_bucket_topk(
     # two extra interpreted array folds per (query, neighbor) candidate
     # (the exact pattern already fixed in cosine_topk / the bucketed
     # verifier). With wide buckets the fold count dominates the query.
-    target = embeddings.sparkSession.sparkContext.defaultParallelism
-    if embeddings.rdd.getNumPartitions() < target:
-        embeddings = embeddings.repartition(target)
+    embeddings = spread(embeddings)
     vd = sqlx.as_double_s(sqlx.qcol(vec_col))
     sig = _hyperplane_signature_s(vd, planes)
     e = embeddings.selectExpr(
@@ -1183,9 +1167,7 @@ def knn_label_eval(
     """
     from pyspark.sql import Window
 
-    target = embeddings.sparkSession.sparkContext.defaultParallelism
-    if embeddings.rdd.getNumPartitions() < target:
-        embeddings = embeddings.repartition(target)
+    embeddings = spread(embeddings)
     vecd = _as_double(F.col(vec_col))
     vecs = embeddings.select(
         F.col(id_col), F.col(label_col), vecd.alias("__v"), norm(vecd).alias("__n")
@@ -1249,9 +1231,7 @@ def _ivf_structures(
     identical."""
     from pyspark.sql import Window
 
-    target = embeddings.sparkSession.sparkContext.defaultParallelism
-    if embeddings.rdd.getNumPartitions() < target:
-        embeddings = embeddings.repartition(target)
+    embeddings = spread(embeddings)
     vd = sqlx.as_double_s(sqlx.qcol(vec_col))
     vecs = embeddings.selectExpr(
         sqlx.qcol(id_col), f"{vd} AS __v", f"{sqlx.norm_s(vd)} AS __n"
@@ -1431,9 +1411,7 @@ def append_ivf_index(
         _validate_append_dim(
             embeddings, vec_col, int(dim_row["d"]), f"ivf index at {path}"
         )
-    target = embeddings.sparkSession.sparkContext.defaultParallelism
-    if embeddings.rdd.getNumPartitions() < target:
-        embeddings = embeddings.repartition(target)
+    embeddings = spread(embeddings)
     vecd = _as_double(F.col(vec_col))
     vecs = embeddings.select(
         F.col(id_col), vecd.alias("__v"), norm(vecd).alias("__n")
@@ -1615,9 +1593,7 @@ def pq_topk(
 
     if rerank is None:
         rerank = 3 * k
-    target = embeddings.sparkSession.sparkContext.defaultParallelism
-    if embeddings.rdd.getNumPartitions() < target:
-        embeddings = embeddings.repartition(target)
+    embeddings = spread(embeddings)
     vecd = _as_double(F.col(vec_col))
     vecs = embeddings.select(
         F.col(id_col), vecd.alias("__v"), norm(vecd).alias("__n")
@@ -2200,9 +2176,7 @@ def append_ivfpq_index(
         codebooks[r["subspace"]][r["code"]] = [float(x) for x in r["cvec"]]
     cvecs = spark.read.parquet(f"{path}/centroids")
 
-    target = embeddings.sparkSession.sparkContext.defaultParallelism
-    if embeddings.rdd.getNumPartitions() < target:
-        embeddings = embeddings.repartition(target)
+    embeddings = spread(embeddings)
     vecd = _as_double(F.col(vec_col))
     vecs = embeddings.select(
         F.col(id_col), vecd.alias("__v"), norm(vecd).alias("__n")

@@ -535,9 +535,9 @@ def build_bigram_lm(
     by unk-mapping-before-counting, checkpointed, with both count tables
     derived from it.
     """
-    from .dedup import _spread
+    from ..ckpt import spread
 
-    lm_toks = _spread(src.select(_lm_toks(F.col(text_col)).alias("__toks")))
+    lm_toks = spread(src.select(_lm_toks(F.col(text_col)).alias("__toks")))
     vocab = (
         lm_toks.select(F.explode("__toks").alias("tok"))
         .groupBy("tok")
@@ -552,7 +552,7 @@ def build_bigram_lm(
     # the caller's first action (KN's bigram-type count, or the scoring
     # job itself) materializes it once with no extra eager job.
     bc_full = (
-        _bigram_rows(_spread(src), text_col, vocab, id_col=None)
+        _bigram_rows(spread(src), text_col, vocab, id_col=None)
         .groupBy("prev", "w")
         .agg(F.count(F.lit(1)).alias("__cb"))
         .transform(materialize_lazy)
@@ -586,11 +586,11 @@ def lm_score_with(
     exp(-mean) rounded to 6; docs with < 2 tokens keep their row with
     n_bigrams=0 and null scores.
     """
-    from .dedup import _spread
+    from ..ckpt import spread
 
     denom_v = float(lm.alpha) * (lm.vocab_size + 1)
     scored = (
-        _bigram_rows(_spread(df), text_col, lm.vocab, id_col)
+        _bigram_rows(spread(df), text_col, lm.vocab, id_col)
         .join(F.broadcast(lm.prefix_counts), on="prev", how="left")
         .join(F.broadcast(lm.bigram_counts), on=["prev", "w"], how="left")
         .select(
@@ -738,13 +738,13 @@ def build_trigram_lm(
         raise ValueError(
             f"lambdas must be 3 positive weights summing to 1: {lambdas!r}"
         )
-    from .dedup import _spread
+    from ..ckpt import spread
 
     bi = build_bigram_lm(
         src, text_col, vocab_size=vocab_size,
         top_bigrams=top_bigrams, alpha=alpha,
     )
-    toks = _spread(src).select(
+    toks = spread(src).select(
         F.explode(_lm_toks(F.col(text_col))).alias("t0")
     )
     uv = bi.vocab.select(F.col("tok").alias("__uv"))
@@ -767,7 +767,7 @@ def build_trigram_lm(
 
     def _build_tc():
         return (
-            _trigram_rows(_spread(src), text_col, bi.vocab, id_col=None)
+            _trigram_rows(spread(src), text_col, bi.vocab, id_col=None)
             .groupBy("prev2", "prev", "w")
             .agg(F.count(F.lit(1)).alias("__ct"))
             .transform(materialize)
@@ -816,7 +816,7 @@ def build_trigram_lm(
     bg_types = bi.bigram_type_counts
     if bg_types is None:
         bg_types = (
-            _bigram_rows(_spread(src), text_col, bi.vocab, id_col=None)
+            _bigram_rows(spread(src), text_col, bi.vocab, id_col=None)
             .groupBy("prev", "w")
             .agg(F.count(F.lit(1)).alias("__cb"))
             .transform(materialize_lazy)  # the n11 count materializes it
@@ -861,12 +861,12 @@ def lm_score3_with(
     (the unigram α-floor keeps every log finite and sums to exactly 1
     over the mapped vocabulary, since ΣN1+(·,w) = N1+(·,·)).
     """
-    from .dedup import _spread
+    from ..ckpt import spread
 
     bi = lm.bigram
     a = float(bi.alpha)
     denom = a * (bi.vocab_size + 1)
-    rows = _trigram_rows(_spread(df), text_col, bi.vocab, id_col)
+    rows = _trigram_rows(spread(df), text_col, bi.vocab, id_col)
     if lm.smoothing == "kn":
         d = float(lm.discount)
         scored = (

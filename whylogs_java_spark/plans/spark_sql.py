@@ -27,6 +27,8 @@ from ..constants import STRING_LENGTH_MAX
 from ..functions.inference import inferred_type_sql
 from ..functions.metrics import ATOM_METRICS, numeric_final_sql
 from ..functions.predicates import BOOLEAN_RE, FRACTIONAL_RE, INTEGRAL_RE
+from ..functions.sqlexpr import qcol as _q
+from ..functions.sqlexpr import slit
 
 INTEGRAL = "integral"
 FRACTIONAL = "fractional"
@@ -45,10 +47,6 @@ def kind_of(dt: T.DataType) -> str:
     if isinstance(dt, T.StringType):
         return STRING
     return UNKNOWN
-
-
-def _q(name: str) -> str:
-    return f"`{name}`"
 
 
 def _token_count_sql(m: str, delim: str = " ", size_fn: str = "size(split({t}, '{d}'))") -> str:
@@ -75,7 +73,7 @@ def _null_pred(col: str, kind: str, null_strings: Sequence[str]) -> str:
         preds.append(f"isnan({col})")
         preds.append(f"abs({col}) = CAST('Infinity' AS DOUBLE)")
     if kind == STRING and null_strings:
-        inlist = ", ".join("'" + s.replace("'", "''") + "'" for s in null_strings)
+        inlist = ", ".join(slit(s) for s in null_strings)
         preds.append(f"{col} IN ({inlist})")
     return " OR ".join(preds)
 
@@ -105,60 +103,81 @@ def _num_projection_sql(d: str, prefix: str) -> list[str]:
     subexpression elimination shares them across the pieces — CASE WHEN
     around each piece would block CSE and re-evaluate d² per piece
     (measured 4x slower). Big values contribute 0 through the integer
-    path and flow through the two ``big`` doubles. NULL values yield NULL
-    pieces (skipped by SUM). ``_num_aggs_sql`` aggregates the pieces."""
+    path and flow through the two ``big`` doubles. A NULL value yields
+    NULL ``_v``/``_big``/``_big2`` pieces (skipped by the aggregates) and
+    0 for the clamped ones. ``_num_aggs_sql`` aggregates the pieces."""
     small = f"ABS({d}) < 2147483648.0"
     dc = f"(CASE WHEN {small} THEN {d} ELSE 0.0 END)"
     dc2 = f"({dc} * {dc})"
     p = f"CAST(FLOOR({dc2}) AS BIGINT)"
     return [
-        f"{d} AS {prefix}_v",
-        f"FLOOR({dc}) AS {prefix}_hi",
+        f"{d} AS {_q(prefix + '_v')}",
+        f"FLOOR({dc}) AS {_q(prefix + '_hi')}",
         # quantize via floor(y+0.5): identical to ROUND half-up for y >= 0
         # but pure double arithmetic (Spark's Round on doubles goes through
         # BigDecimal — measured 8x slower per row)
-        f"FLOOR(({dc} - FLOOR({dc})) * 1000000.0 + 0.5) AS {prefix}_lo",
-        f"CASE WHEN {small} THEN 0.0 ELSE {d} END AS {prefix}_big",
+        f"FLOOR(({dc} - FLOOR({dc})) * 1000000.0 + 0.5) AS {_q(prefix + '_lo')}",
+        f"CASE WHEN {small} THEN 0.0 ELSE {d} END AS {_q(prefix + '_big')}",
         # p >= 0, so shift/and give exact (p DIV 2^31, p MOD 2^31)
-        f"SHIFTRIGHT({p}, 31) AS {prefix}_a31",
-        f"({p} & 2147483647) AS {prefix}_b31",
-        f"FLOOR(({dc2} - {p}) * 1000000.0 + 0.5) AS {prefix}_lo2",
-        f"CASE WHEN {small} THEN 0.0 ELSE {d} * {d} END AS {prefix}_big2",
+        f"SHIFTRIGHT({p}, 31) AS {_q(prefix + '_a31')}",
+        f"({p} & 2147483647) AS {_q(prefix + '_b31')}",
+        f"FLOOR(({dc2} - {p}) * 1000000.0 + 0.5) AS {_q(prefix + '_lo2')}",
+        f"CASE WHEN {small} THEN 0.0 ELSE {d} * {d} END AS {_q(prefix + '_big2')}",
     ]
 
 
-def _num_aggs_sql(in_prefix: str, out_prefix: str) -> list[str]:
-    v = f"{in_prefix}_v"
+def _num_aggs_sql(
+    in_prefix: str, out_prefix: str, fed_when: str | None = None
+) -> list[str]:
+    """Aggregates of ``_num_projection_sql``'s pieces into one suite's
+    atoms. ``fed_when`` is a predicate on the grouping keys saying the
+    group's values feed this suite; where it is false, the sums and
+    ``_m2`` are NULL, as ``_null_num_aggs`` gives them (a NULL value's
+    clamped pieces are 0, not NULL)."""
+    def i(suffix: str) -> str:
+        return _q(in_prefix + suffix)
+
+    def o(suffix: str) -> str:
+        return _q(out_prefix + suffix)
+
+    def fed(agg: str) -> str:
+        return agg if fed_when is None else f"CASE WHEN {fed_when} THEN {agg} END"
+
+    v = i("_v")
+    sums = [
+        (f"SUM({i(piece)})", atom)
+        for piece, atom in (
+            ("_hi", "_sum_hi"), ("_lo", "_sum_lo"), ("_big", "_sum_big"),
+            ("_a31", "_sum2_a"), ("_b31", "_sum2_b"), ("_lo2", "_sum2_lo"),
+            ("_big2", "_sum2_big"),
+        )
+    ]
+    # stable central moment for the big-magnitude variance tier
+    # (metrics.py variance-tier note); n<=1 -> 0.0
+    m2 = f"COALESCE(VAR_SAMP({v}) * (COUNT({v}) - 1), 0.0)"
     return [
-        f"COUNT({v}) AS {out_prefix}_n",
-        f"MIN({v}) AS {out_prefix}_min",
-        f"MAX({v}) AS {out_prefix}_max",
-        f"SUM({in_prefix}_hi) AS {out_prefix}_sum_hi",
-        f"SUM({in_prefix}_lo) AS {out_prefix}_sum_lo",
-        f"SUM({in_prefix}_big) AS {out_prefix}_sum_big",
-        f"SUM({in_prefix}_a31) AS {out_prefix}_sum2_a",
-        f"SUM({in_prefix}_b31) AS {out_prefix}_sum2_b",
-        f"SUM({in_prefix}_lo2) AS {out_prefix}_sum2_lo",
-        f"SUM({in_prefix}_big2) AS {out_prefix}_sum2_big",
-        # stable central moment for the big-magnitude variance tier
-        # (metrics.py variance-tier note); n<=1 -> 0.0
-        f"COALESCE(VAR_SAMP({v}) * (COUNT({v}) - 1), 0.0) AS {out_prefix}_m2",
-    ]
+        f"COUNT({v}) AS {o('_n')}",
+        f"MIN({v}) AS {o('_min')}",
+        f"MAX({v}) AS {o('_max')}",
+    ] + [f"{fed(agg)} AS {o(atom)}" for agg, atom in sums + [(m2, "_m2")]]
 
 
 def _null_num_aggs(prefix: str) -> list[str]:
+    def o(suffix: str) -> str:
+        return _q(prefix + suffix)
+
     return [
-        f"CAST(0 AS BIGINT) AS {prefix}_n",
-        f"CAST(NULL AS DOUBLE) AS {prefix}_min",
-        f"CAST(NULL AS DOUBLE) AS {prefix}_max",
-        f"CAST(NULL AS BIGINT) AS {prefix}_sum_hi",
-        f"CAST(NULL AS BIGINT) AS {prefix}_sum_lo",
-        f"CAST(NULL AS DOUBLE) AS {prefix}_sum_big",
-        f"CAST(NULL AS BIGINT) AS {prefix}_sum2_a",
-        f"CAST(NULL AS BIGINT) AS {prefix}_sum2_b",
-        f"CAST(NULL AS BIGINT) AS {prefix}_sum2_lo",
-        f"CAST(NULL AS DOUBLE) AS {prefix}_sum2_big",
-        f"CAST(NULL AS DOUBLE) AS {prefix}_m2",
+        f"CAST(0 AS BIGINT) AS {o('_n')}",
+        f"CAST(NULL AS DOUBLE) AS {o('_min')}",
+        f"CAST(NULL AS DOUBLE) AS {o('_max')}",
+        f"CAST(NULL AS BIGINT) AS {o('_sum_hi')}",
+        f"CAST(NULL AS BIGINT) AS {o('_sum_lo')}",
+        f"CAST(NULL AS DOUBLE) AS {o('_sum_big')}",
+        f"CAST(NULL AS BIGINT) AS {o('_sum2_a')}",
+        f"CAST(NULL AS BIGINT) AS {o('_sum2_b')}",
+        f"CAST(NULL AS BIGINT) AS {o('_sum2_lo')}",
+        f"CAST(NULL AS DOUBLE) AS {o('_sum2_big')}",
+        f"CAST(NULL AS DOUBLE) AS {o('_m2')}",
     ]
 
 
@@ -197,32 +216,30 @@ class ColumnSql:
     # keeps the layers apart because CollapseProject refuses to duplicate
     # non-cheap aliases referenced more than once.
 
+    def _id(self, suffix: str) -> str:
+        """Quoted name of this column's generated attribute ``suffix``."""
+        return _q(self.name + suffix)
+
     def raw_projection(self) -> list[str]:
         c = _q(self.name)
         k = self.kind
-        p = self.name
+        a = self._id
         np = _null_pred(c, k, self.null_strings)
         m = f"CASE WHEN NOT ({np}) THEN {c} END"
-        out = [f"CAST(({np}) AS INT) AS {p}__isnull"]
+        out = [f"CAST(({np}) AS INT) AS {a('__isnull')}"]
         if k == BOOLEAN:
-            out.append(f"CAST(({m}) = TRUE AS INT) AS {p}__true")
+            out.append(f"CAST(({m}) = TRUE AS INT) AS {a('__true')}")
         if k in (INTEGRAL, FRACTIONAL):
-            out.append(f"CAST({m} AS DOUBLE) AS {p}__numv")
+            out.append(f"CAST({m} AS DOUBLE) AS {a('__numv')}")
         if k == STRING:
             if self.coerce:
                 # TypedDataConverter.java:62-84: coerced values feed the
                 # tracker of their coerced type — parsed numerics into the
                 # numeric suite, 'true' into trueCount; only unmatched
                 # values reach the length/token suites.
-                # Spark SQL string literals process backslash escapes:
-                # regexes must double them to survive parsing
-                i_re, f_re, b_re = (
-                    r.replace("\\", "\\\\")
-                    for r in (INTEGRAL_RE, FRACTIONAL_RE, BOOLEAN_RE)
-                )
-                i_p = f"(({m}) RLIKE '{i_re}')"
-                f_p = f"(({m}) RLIKE '{f_re}')"
-                b_p = f"(({m}) RLIKE '{b_re}')"
+                i_p = f"(({m}) RLIKE {slit(INTEGRAL_RE)})"
+                f_p = f"(({m}) RLIKE {slit(FRACTIONAL_RE)})"
+                b_p = f"(({m}) RLIKE {slit(BOOLEAN_RE)})"
                 cleaned = (
                     f"regexp_replace(regexp_replace({m}, '^[+] ', '+'), '^[-] ', '-')"
                 )
@@ -231,70 +248,74 @@ class ColumnSql:
                     f"CASE WHEN NOT COALESCE({i_p} OR {f_p} OR {b_p}, FALSE) "
                     f"THEN {m} END"
                 )
-                out.append(f"{num_m} AS {p}__numv")
-                out.append(f"CAST(LOWER({m}) = 'true' AS INT) AS {p}__true")
-                out.append(f"CAST(LENGTH({str_m}) AS DOUBLE) AS {p}__lenv")
+                out.append(f"{num_m} AS {a('__numv')}")
+                out.append(f"CAST(LOWER({m}) = 'true' AS INT) AS {a('__true')}")
+                out.append(f"CAST(LENGTH({str_m}) AS DOUBLE) AS {a('__lenv')}")
                 out.append(
-                    f"{_token_count_sql(f'({str_m})', self.delim)} AS {p}__tokv"
+                    f"{_token_count_sql(f'({str_m})', self.delim)} AS {a('__tokv')}"
                 )
                 out += [
-                    f"CAST({i_p} AS INT) AS {p}__is_int",
-                    f"CAST({f_p} AS INT) AS {p}__is_frac",
-                    f"CAST({b_p} AS INT) AS {p}__is_bool",
+                    f"CAST({i_p} AS INT) AS {a('__is_int')}",
+                    f"CAST({f_p} AS INT) AS {a('__is_frac')}",
+                    f"CAST({b_p} AS INT) AS {a('__is_bool')}",
                 ]
             else:
-                out.append(f"CAST(LENGTH({m}) AS DOUBLE) AS {p}__lenv")
-                out.append(f"{_token_count_sql(f'({m})', self.delim)} AS {p}__tokv")
+                out.append(f"CAST(LENGTH({m}) AS DOUBLE) AS {a('__lenv')}")
+                out.append(
+                    f"{_token_count_sql(f'({m})', self.delim)} AS {a('__tokv')}"
+                )
         return out
 
     def piece_projection(self) -> list[str]:
         k = self.kind
         p = self.name
-        out = [f"{p}__isnull"]
+        a = self._id
+        out = [a("__isnull")]
         if k == BOOLEAN or self.coerce:
-            out.append(f"{p}__true")
+            out.append(a("__true"))
         if k in (INTEGRAL, FRACTIONAL) or self.coerce:
-            out += _num_projection_sql(f"{p}__numv", f"{p}__num")
+            out += _num_projection_sql(a("__numv"), f"{p}__num")
         if k == STRING:
-            out += _num_projection_sql(f"{p}__lenv", f"{p}__len")
-            out += _num_projection_sql(f"{p}__tokv", f"{p}__tok")
+            out += _num_projection_sql(a("__lenv"), f"{p}__len")
+            out += _num_projection_sql(a("__tokv"), f"{p}__tok")
             if self.coerce:
-                out += [f"{p}__is_int", f"{p}__is_frac", f"{p}__is_bool"]
+                out += [a("__is_int"), a("__is_frac"), a("__is_bool")]
         return out
 
     # -- aggregation ------------------------------------------------------
     def aggs(self) -> list[str]:
         p = self.name
         k = self.kind
+        a = self._id
         cnt = "COUNT(1)"
-        nullc = f"SUM({p}__isnull)"
+        nullc = f"SUM({a('__isnull')})"
         nn = f"CAST({cnt} - {nullc} AS BIGINT)"
         zero = "CAST(0 AS BIGINT)"
 
         out = [
-            f"CAST({cnt} AS BIGINT) AS {p}_count",
-            f"CAST({nullc} AS BIGINT) AS {p}_null_count",
+            f"CAST({cnt} AS BIGINT) AS {a('_count')}",
+            f"CAST({nullc} AS BIGINT) AS {a('_null_count')}",
             (
-                f"CAST(SUM({p}__true) AS BIGINT) AS {p}_true_count"
+                f"CAST(SUM({a('__true')}) AS BIGINT) AS {a('_true_count')}"
                 if k == BOOLEAN or self.coerce
-                else f"{zero} AS {p}_true_count"
+                else f"{zero} AS {a('_true_count')}"
             ),
         ]
         tc = dict.fromkeys(
             ("integral", "fractional", "boolean", "string", "unknown"), zero
         )
         if self.coerce:
-            tc["integral"] = f"CAST(SUM({p}__is_int) AS BIGINT)"
-            tc["fractional"] = f"CAST(SUM({p}__is_frac) AS BIGINT)"
-            tc["boolean"] = f"CAST(SUM({p}__is_bool) AS BIGINT)"
+            tc["integral"] = f"CAST(SUM({a('__is_int')}) AS BIGINT)"
+            tc["fractional"] = f"CAST(SUM({a('__is_frac')}) AS BIGINT)"
+            tc["boolean"] = f"CAST(SUM({a('__is_bool')}) AS BIGINT)"
             tc["string"] = (
-                f"CAST({cnt} - {nullc} - SUM({p}__is_int) - SUM({p}__is_frac)"
-                f" - SUM({p}__is_bool) AS BIGINT)"
+                f"CAST({cnt} - {nullc} - SUM({a('__is_int')}) - SUM({a('__is_frac')})"
+                f" - SUM({a('__is_bool')}) AS BIGINT)"
             )
         elif k in tc:
             tc[k] = nn
         for key in ("integral", "fractional", "boolean", "string", "unknown"):
-            out.append(f"{tc[key]} AS {p}_{key}_count")
+            out.append(f"{tc[key]} AS {a(f'_{key}_count')}")
 
         if k in (INTEGRAL, FRACTIONAL) or self.coerce:
             out += _num_aggs_sql(f"{p}__num", f"{p}_num")
@@ -310,13 +331,43 @@ class ColumnSql:
 
     # -- long-format struct ----------------------------------------------
     def struct_sql(self) -> str:
-        fields = [f"'column_name', '{self.name}'"]
+        fields = [f"'column_name', {slit(self.name)}"]
         for fname, _ in ATOM_METRICS:
-            fields.append(f"'{fname}', {self.name}_{fname}")
+            fields.append(f"'{fname}', {self._id('_' + fname)}")
         return f"named_struct({', '.join(fields)})"
 
 
 _DATE_GRAINS = {"day", "week", "month", "quarter", "year"}
+
+
+def _keys_and_columns(
+    schema: dict[str, T.DataType],
+    group_by: Sequence[str],
+    time_column: str | None,
+    time_granularity: str | None,
+    columns: Sequence[str] | None,
+) -> tuple[list[str], list[str], list[str]]:
+    """(group-key SELECT items, key names, profiled columns) — the part
+    both atoms plans share. Group-by and time columns are not profiled
+    (DatasetProfileAggregator.scala:92-95)."""
+    key_exprs = [_q(c) for c in group_by]
+    key_names = list(group_by)
+    if time_column is not None:
+        grain = time_granularity or "day"
+        b = f"date_trunc({slit(grain)}, {_q(time_column)})"
+        if grain in _DATE_GRAINS:
+            b = f"CAST({b} AS DATE)"
+        key_exprs.append(f"{b} AS dataset_timestamp")
+        key_names.append("dataset_timestamp")
+
+    excluded = set(group_by) | ({time_column} if time_column else set())
+    profiled = [c for c in (columns or schema) if c not in excluded]
+    if not profiled:
+        raise ValueError(
+            "no columns to profile (all columns are group/time keys or the "
+            "columns list is empty)"
+        )
+    return key_exprs, key_names, profiled
 
 
 def build_atoms_sql(
@@ -334,44 +385,26 @@ def build_atoms_sql(
     Returns (sql, key_names). Shape:
     projection -> wide hash-agg -> inline(array(named_struct...)) explode.
     """
-    key_exprs = [f"{_q(c)}" for c in group_by]
-    key_names = list(group_by)
-    if time_column is not None:
-        grain = time_granularity or "day"
-        b = f"date_trunc('{grain}', {_q(time_column)})"
-        if grain in _DATE_GRAINS:
-            b = f"CAST({b} AS DATE)"
-        key_exprs.append(f"{b} AS dataset_timestamp")
-        key_names.append("dataset_timestamp")
-
-    excluded = set(group_by) | ({time_column} if time_column else set())
-    profiled = [c for c in (columns or schema) if c not in excluded]
-    if not profiled:
-        raise ValueError(
-            "no columns to profile (all columns are group/time keys or the "
-            "columns list is empty)"
-        )
+    key_exprs, key_names, profiled = _keys_and_columns(
+        schema, group_by, time_column, time_granularity, columns
+    )
     specs = [
         ColumnSql(c, schema[c], null_strings, coerce_strings) for c in profiled
     ]
 
-    keys_sel = (", ".join(_q(k) for k in key_names) + ",") if key_names else ""
+    keys = [_q(k) for k in key_names]
+    keys_sel = "".join(f"{k}, " for k in keys)
     raw = ",\n      ".join(key_exprs + [e for s in specs for e in s.raw_projection()])
-    pieces = ",\n      ".join(
-        ([_q(k) for k in key_names] if key_names else [])
-        + [e for s in specs for e in s.piece_projection()]
-    )
+    pieces = ",\n      ".join(keys + [e for s in specs for e in s.piece_projection()])
     aggs = ",\n      ".join(e for s in specs for e in s.aggs())
     structs = ",\n        ".join(s.struct_sql() for s in specs)
-    group_clause = (
-        "GROUP BY " + ", ".join(_q(k) for k in key_names) if key_names else ""
-    )
+    group_clause = "GROUP BY " + ", ".join(keys) if keys else ""
     sql = f"""
-    SELECT {keys_sel} inline(array(
+    SELECT {keys_sel}inline(array(
         {structs}
     ))
     FROM (
-      SELECT {keys_sel} {aggs}
+      SELECT {keys_sel}{aggs}
       FROM (
         SELECT {pieces}
         FROM (SELECT {raw} FROM {view}) __wjs_raw
@@ -391,38 +424,35 @@ def build_melted_atoms_sql(
     columns: Sequence[str] | None = None,
     null_strings: Sequence[str] = (),
 ) -> tuple[str, list[str]]:
-    """Melt-path profile atoms for very wide tables (1000s of columns).
+    """Melt-plan profile atoms: a plan whose size does not grow with width.
 
-    The wide path's plan/codegen size grows with column count (~30
-    aggregates per column); past a few thousand columns analyzer and
-    codegen costs dominate — the reason the reference batches 100 columns
-    per pass (WhyLogs.scala:146-176). Spark-first alternative: melt each
-    row into (keys, column_name, kind, value) entries via one
-    ``inline(array(...))`` generate, then run ONE generic metric suite
-    grouped by (keys, column_name). Plan size is O(1) in width (the melt
-    array is data, not operators); the shuffle carries rows x columns
-    entries reduced by map-side partial aggregation to
-    groups x columns atom rows.
+    The wide plan's size grows with column count (~30 aggregates per
+    column), and so does its fixed cost per call: analysis, optimization
+    and code generation, the reason the reference batches 100 columns per
+    pass (WhyLogs.scala:146-176). This plan melts each row into (keys,
+    column_name, kind, value) entries via one ``inline(array(...))``
+    generate, then runs ONE generic metric suite grouped by (keys,
+    column_name, kind). Plan size is O(1) in width (the melt array is
+    data, not operators); the shuffle carries rows x columns entries,
+    reduced by map-side partial aggregation to groups x columns atom
+    rows. So it wins where that fixed cost dominates (small inputs, and
+    very wide ones) and loses where rows do: ``operators.profile.profile``
+    chooses between the two by input size.
 
-    Output schema == the wide path's atom schema, so finalize/merge are
+    Output == the wide plan's atoms, schema (nullability included) and
+    values: a suite no profiled column feeds, and a kind count no
+    profiled column has, are the wide plan's constants; a suite's sums
+    and ``_m2`` are NULL for a column outside it. So finalize/merge are
     shared. String coercion is not supported on this path.
     """
-    key_exprs = [f"{_q(c)}" for c in group_by]
-    key_names = list(group_by)
-    if time_column is not None:
-        grain = time_granularity or "day"
-        b = f"date_trunc('{grain}', {_q(time_column)})"
-        if grain in _DATE_GRAINS:
-            b = f"CAST({b} AS DATE)"
-        key_exprs.append(f"{b} AS dataset_timestamp")
-        key_names.append("dataset_timestamp")
-
-    excluded = set(group_by) | ({time_column} if time_column else set())
-    profiled = [c for c in (columns or schema) if c not in excluded]
+    key_exprs, key_names, profiled = _keys_and_columns(
+        schema, group_by, time_column, time_granularity, columns
+    )
+    kinds = {c: kind_of(schema[c]) for c in profiled}
+    present = set(kinds.values())
 
     entries = []
-    for c in profiled:
-        kind = kind_of(schema[c])
+    for c, kind in kinds.items():
         qc = _q(c)
         np = _null_pred(qc, kind, null_strings)
         m = f"CASE WHEN NOT ({np}) THEN {qc} END"
@@ -432,53 +462,50 @@ def build_melted_atoms_sql(
             f"CAST(({m}) = TRUE AS INT)" if kind == BOOLEAN else "CAST(0 AS INT)"
         )
         entries.append(
-            f"named_struct('column_name', '{c}', 'kind', '{kind}', "
+            f"named_struct('column_name', {slit(c)}, 'kind', '{kind}', "
             f"'isnull', CAST(({np}) AS INT), 'num_v', {num_v}, "
             f"'str_v', {str_v}, 'is_true', {is_true})"
         )
 
-    keys_sel = (", ".join(_q(k) for k in key_names) + ",") if key_names else ""
-    melt = f"""SELECT {keys_sel} inline(array(
+    keys = [_q(k) for k in key_names]
+    keys_sel = "".join(f"{k}, " for k in keys)
+    melt = f"""SELECT {"".join(f"{e}, " for e in key_exprs)}inline(array(
         {", ".join(entries)}
     )) FROM {view}"""
 
-    # generic per-entry suite projection (shared across all columns)
-    proj_pieces = (
-        _num_projection_sql("num_v", "gnum")
-        + _num_projection_sql("CAST(LENGTH(str_v) AS DOUBLE)", "glen")
-        + _num_projection_sql(_token_count_sql("str_v"), "gtok")
-    )
-    keysel2 = (", ".join(_q(k) for k in key_names) + ",") if key_names else ""
-    proj = f"""SELECT {keysel2} column_name, kind, isnull, is_true,
-        {", ".join(proj_pieces)}
-    FROM ({melt}) __wjs_melt"""
-
-    def kind_count(k: str) -> str:
-        return (
-            f"CAST(SUM(CASE WHEN kind = '{k}' AND isnull = 0 THEN 1 ELSE 0 END) AS BIGINT)"
-        )
-
+    nn = "CAST(COUNT(1) - SUM(isnull) AS BIGINT)"
+    zero = "CAST(0 AS BIGINT)"
+    true_count = "CAST(SUM(is_true) AS BIGINT)" if BOOLEAN in present else zero
     aggs = [
         "CAST(COUNT(1) AS BIGINT) AS `count`",
         "CAST(SUM(isnull) AS BIGINT) AS null_count",
-        "CAST(SUM(is_true) AS BIGINT) AS true_count",
-        f"{kind_count('integral')} AS integral_count",
-        f"{kind_count('fractional')} AS fractional_count",
-        f"{kind_count('boolean')} AS boolean_count",
-        f"{kind_count('string')} AS string_count",
-        f"{kind_count('unknown')} AS unknown_count",
+        f"{true_count} AS true_count",
     ]
-    aggs += _num_aggs_sql("gnum", "num")
-    aggs += _num_aggs_sql("glen", "len")
-    aggs += _num_aggs_sql("gtok", "tok")
+    for k in (INTEGRAL, FRACTIONAL, BOOLEAN, STRING, UNKNOWN):
+        count = f"CASE WHEN kind = '{k}' THEN {nn} ELSE {zero} END" if k in present else zero
+        aggs.append(f"{count} AS {k}_count")
+    # generic per-entry suites, shared across all columns; a suite no
+    # profiled column feeds is the wide plan's NULL constants
+    pieces = []
+    for value, piece, suite, suite_kinds in (
+        ("num_v", "gnum", "num", {INTEGRAL, FRACTIONAL}),
+        ("CAST(LENGTH(str_v) AS DOUBLE)", "glen", "len", {STRING}),
+        (_token_count_sql("str_v"), "gtok", "tok", {STRING}),
+    ):
+        if not present & suite_kinds:
+            aggs += _null_num_aggs(suite)
+            continue
+        pieces += _num_projection_sql(value, piece)
+        kinds_in = ", ".join(f"'{k}'" for k in sorted(suite_kinds))
+        fed_when = None if present <= suite_kinds else f"kind IN ({kinds_in})"
+        aggs += _num_aggs_sql(piece, suite, fed_when)
 
-    group_clause = "GROUP BY " + ", ".join(
-        [_q(k) for k in key_names] + ["column_name"]
-    )
+    proj = f"""SELECT {", ".join(keys + ["column_name", "kind", "isnull", "is_true"] + pieces)}
+    FROM ({melt}) __wjs_melt"""
     sql = f"""
-    SELECT {keysel2} column_name, {", ".join(aggs)}
+    SELECT {keys_sel}column_name, {", ".join(aggs)}
     FROM ({proj}) __wjs_mproj
-    {group_clause}
+    GROUP BY {keys_sel}column_name, kind
     """
     return sql, key_names
 

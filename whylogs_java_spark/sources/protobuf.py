@@ -52,6 +52,7 @@ import struct
 from collections.abc import Iterable, Sequence
 
 from ..constants import HLL_LGK, TAG_PREFIX
+from ..functions.sqlexpr import qcol, slit
 
 # ---------------------------------------------------------------------------
 # wire primitives
@@ -1442,11 +1443,11 @@ def profile_messages_df(
             "single-message regime of write_profile_bin"
         )
 
-    ks = "".join(f"`{k}`, " for k in keys)
+    ks = "".join(f"{qcol(k)}, " for k in keys)
 
     def on(alias: str) -> str:
         return " AND ".join(
-            [f"p.`{k}` <=> {alias}.`{k}`" for k in keys]
+            [f"p.{qcol(k)} <=> {alias}.{qcol(k)}" for k in keys]
             + [f"p.column_name = {alias}.column_name"]
         )
 
@@ -1460,11 +1461,11 @@ def profile_messages_df(
 
         def blob(c: str, kind: str) -> str:
             name = f"{c}__{kind}"
-            return f"`{name}`" if name in fields else "CAST(NULL AS BINARY)"
+            return qcol(name) if name in fields else "CAST(NULL AS BINARY)"
 
         cols = sorted({n.rsplit("__", 1)[0] for n in fields if "__" in n})
         entries = ", ".join(
-            f"named_struct('column_name', '{c}', 'kll', {blob(c, 'kll')}, "
+            f"named_struct('column_name', {slit(c)}, 'kll', {blob(c, 'kll')}, "
             f"'theta', {blob(c, 'theta')}, 'hll', {blob(c, 'hll')})"
             for c in cols
         )
@@ -1588,11 +1589,11 @@ def _frequent_items_df(
     if not tracked:
         return None
     entries = ", ".join(
-        f"named_struct('column_name', '{c}', "
+        f"named_struct('column_name', {slit(c)}, "
         f"'value', {truncated_text_sql(masked_sql(c, dt, null_strings))})"
         for c, dt in tracked.items()
     )
-    ks = "".join(f"`{key}`, " for key in keys)
+    ks = "".join(f"{qcol(key)}, " for key in keys)
     return df.sparkSession.sql(
         f"""
         SELECT {ks}column_name, value, cnt FROM (

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.metrics import ATOM_METRICS
+from ..functions.sqlexpr import qcol
 from ..plans.spark_sql import ColumnSql
 
 
@@ -46,7 +47,7 @@ def profile_stream(
     specs = [ColumnSql(c, schema[c], null_strings, coerce_strings=False) for c in profiled]
     # the batch profile's own SQL fragments (plans.spark_sql), in its two
     # projection layers
-    passed = [f"`{c}`" for c in (time_column, *group_by)]
+    passed = [qcol(c) for c in (time_column, *group_by)]
     projected = stream_df.selectExpr(
         *passed, *[e for s in specs for e in s.raw_projection()]
     ).selectExpr(*passed, *[e for s in specs for e in s.piece_projection()])
@@ -70,5 +71,5 @@ def profile_stream(
         F.col("window.start").alias("window_start"),
         F.col("window.end").alias("window_end"),
         *group_by,
-        *[F.col(f"{s.name}_{m}") for s in specs for m, _ in ATOM_METRICS],
+        *[F.col(qcol(f"{s.name}_{m}")) for s in specs for m, _ in ATOM_METRICS],
     )
