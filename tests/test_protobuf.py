@@ -117,6 +117,28 @@ def test_theta_v4_to_v3_preserves_hashes(spark):
         assert union == pytest.approx(orig["e"], rel=1e-9)
 
 
+def test_theta_v4_to_v3_matches_datasketches_java(spark):
+    # datasketches-java (in Spark's jars) is the oracle: heapifying the
+    # serVer 4 sketch and writing it back gives serVer 3, preamble (p =
+    # 1.0f at bytes 12..16) and hashes, in exact and estimation mode
+    sizes = (2, 3, 10, 100, 4095, 4096, 4097, 15000, 200000)
+    aggs = [
+        F.theta_sketch_agg(F.when(F.col("id") < n, F.col("id").cast(t))).alias(f"{t}{n}")
+        for t in ("double", "bigint")
+        for n in (0, 1, *sizes)
+    ]
+    row = spark.range(200000).agg(*aggs).collect()[0]
+    jvm = spark._jvm.org.apache.datasketches
+    for t in ("double", "bigint"):
+        for n in (0, 1):  # empty and single-item sketches are serVer 3 already
+            sk = bytes(row[f"{t}{n}"])
+            assert sk[1] == 3 and theta_v4_to_v3(sk) == sk, (t, n)
+        for n in sizes:
+            sk = bytes(row[f"{t}{n}"])
+            java = jvm.theta.CompactSketch.heapify(jvm.memory.Memory.wrap(bytearray(sk)))
+            assert sk[1] == 4 and theta_v4_to_v3(sk) == bytes(java.toByteArray()), (t, n)
+
+
 def test_write_read_roundtrip(spark, tmp_path):
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
     out = str(tmp_path / "profiles.bin")

@@ -20,7 +20,11 @@ from whylogs_java_spark.operators.profile import (
     profile_atoms_melted,
     profile_melted,
 )
-from whylogs_java_spark.sources.protobuf import write_profile_bin
+from whylogs_java_spark.sources.protobuf import (
+    decode_dataset_profile,
+    iter_delimited,
+    write_profile_bin,
+)
 from whylogs_java_spark.operators.summary import histogram_custom_splits
 from whylogs_java_spark.operators.summary import frequent_items as frequent_items_mod
 from whylogs_java_spark.streaming.profile_stream import profile_stream
@@ -100,6 +104,23 @@ def test_profile_plan_choice(spark, monkeypatch, tmp_path):
     monkeypatch.setattr(profile_mod, "MELT_MAX_BYTES", -1)
     assert not melted(profile(li, group_by=["l_returnflag"]))
     assert write(str(tmp_path / "wide.bin")) == melt_bytes
+
+
+def test_column_names_differing_by_a_suffix(spark, monkeypatch, tmp_path):
+    """Columns ``a`` and ``a_null`` profile through the wide plan, whose
+    generated attributes are named by ordinal: ``a``'s null count and
+    ``a_null``'s count stay two attributes."""
+    df = spark.createDataFrame([(1, None, "x"), (2, 3, "4")], "a long, a_null long, s string")
+    _assert_plans_agree(df)
+    assert profile(df, coerce_strings=True).count() == 3
+    monkeypatch.setattr(profile_mod, "MELT_MAX_BYTES", -1)
+    path = str(tmp_path / "suffix.bin")
+    assert write_profile_bin(df, path) == 1
+    (msg,) = iter_delimited(open(path, "rb").read())
+    cols = decode_dataset_profile(msg)["columns"]
+    assert sorted(cols) == ["a", "a_null", "s"]
+    nulls = [cols[c]["type_counts"].get(1, 0) for c in ("a", "a_null")]  # NULL = 1
+    assert nulls == [0, 1]
 
 
 def test_wide_column_stress(spark):

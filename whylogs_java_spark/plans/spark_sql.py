@@ -188,10 +188,17 @@ class ColumnSql:
     counters always update; numeric values feed the NumberTracker suite;
     strings feed the StringTracker (length + token-count suites); booleans
     feed trueCount. Shared by the batch profile (``build_atoms_sql``) and
-    the streaming one (``streaming.profile_stream``)."""
+    the streaming one (``streaming.profile_stream``).
+
+    Generated attributes are named from the column's ``ordinal`` under
+    the library's reserved ``__wjs_`` prefix, never from its name: names
+    built as ``<column><suffix>`` collide across columns whose names
+    differ by such a suffix (``a``'s ``_null_count`` is column
+    ``a_null``'s ``_count``)."""
 
     def __init__(
         self,
+        ordinal: int,
         name: str,
         dt: T.DataType,
         null_strings: Sequence[str],
@@ -199,6 +206,7 @@ class ColumnSql:
         tokenizer_delim: str = " ",
     ) -> None:
         self.name = name
+        self.prefix = f"__wjs_c{ordinal}"
         self.kind = kind_of(dt)
         self.null_strings = null_strings
         self.coerce = coerce_strings and self.kind == STRING
@@ -216,14 +224,14 @@ class ColumnSql:
     # keeps the layers apart because CollapseProject refuses to duplicate
     # non-cheap aliases referenced more than once.
 
-    def _id(self, suffix: str) -> str:
+    def attr(self, suffix: str) -> str:
         """Quoted name of this column's generated attribute ``suffix``."""
-        return _q(self.name + suffix)
+        return _q(self.prefix + suffix)
 
     def raw_projection(self) -> list[str]:
         c = _q(self.name)
         k = self.kind
-        a = self._id
+        a = self.attr
         np = _null_pred(c, k, self.null_strings)
         m = f"CASE WHEN NOT ({np}) THEN {c} END"
         out = [f"CAST(({np}) AS INT) AS {a('__isnull')}"]
@@ -268,8 +276,8 @@ class ColumnSql:
 
     def piece_projection(self) -> list[str]:
         k = self.kind
-        p = self.name
-        a = self._id
+        p = self.prefix
+        a = self.attr
         out = [a("__isnull")]
         if k == BOOLEAN or self.coerce:
             out.append(a("__true"))
@@ -284,9 +292,9 @@ class ColumnSql:
 
     # -- aggregation ------------------------------------------------------
     def aggs(self) -> list[str]:
-        p = self.name
+        p = self.prefix
         k = self.kind
-        a = self._id
+        a = self.attr
         cnt = "COUNT(1)"
         nullc = f"SUM({a('__isnull')})"
         nn = f"CAST({cnt} - {nullc} AS BIGINT)"
@@ -333,7 +341,7 @@ class ColumnSql:
     def struct_sql(self) -> str:
         fields = [f"'column_name', {slit(self.name)}"]
         for fname, _ in ATOM_METRICS:
-            fields.append(f"'{fname}', {self._id('_' + fname)}")
+            fields.append(f"'{fname}', {self.attr('_' + fname)}")
         return f"named_struct({', '.join(fields)})"
 
 
@@ -389,7 +397,8 @@ def build_atoms_sql(
         schema, group_by, time_column, time_granularity, columns
     )
     specs = [
-        ColumnSql(c, schema[c], null_strings, coerce_strings) for c in profiled
+        ColumnSql(i, c, schema[c], null_strings, coerce_strings)
+        for i, c in enumerate(profiled)
     ]
 
     keys = [_q(k) for k in key_names]

@@ -38,9 +38,13 @@ translation is required: Spark emits theta CompactSketch serVer 4
 (compressed); the reference pins datasketches-java 1.3.0
 (core/build.gradle.kts:40), which reads only serVer <= 3 — so
 ``theta_v4_to_v3`` unpacks the v4 bit-packed hash deltas and re-emits the
-classic v3 (preamble + sorted hash longs) layout, validated by unioning
-the converted binary with the original in Spark (identical hash sets
-leave the estimate unchanged).
+classic v3 (preamble + sorted hash longs) layout. Every numeric column's
+sketch goes through it on every write and merge, so the unpack is
+vectorised (numpy, linear in the sketch's size). Its output, preamble
+included (sampling probability p = 1.0f), equals datasketches-java's own
+``CompactSketch.heapify(...).toByteArray()`` byte for byte, and unioning
+it with the original in Spark leaves the estimate unchanged (identical
+hash sets); ``tests/test_protobuf.py`` checks both.
 """
 
 from __future__ import annotations
@@ -50,6 +54,8 @@ import math
 import os
 import struct
 from collections.abc import Iterable, Sequence
+
+import numpy as np
 
 from ..constants import HLL_LGK, TAG_PREFIX
 from ..functions.sqlexpr import qcol, slit
@@ -419,11 +425,19 @@ def theta_v4_to_v3(b: bytes) -> bytes:
     bit-packed deltas, entryBits each, packed MSB-first into a big-endian
     continuous bit stream (verified against ground-truth hashes recovered
     from single-item serVer-3 sketches of the same values).
+
+    The unpack is linear and vectorised: the stream's bits, cut into one
+    row per entry and right-aligned in 64 bits, pack back into big-endian
+    deltas whose running sum is the hashes. The v3 preamble carries
+    numEntries and the sampling probability p = 1.0f (bytes 8..16), as
+    datasketches-java's ``CompactSketch.toByteArray()`` writes it; the
+    output equals that call's on the same sketch, byte for byte
+    (``tests/test_protobuf.py``).
     """
     if len(b) < 8 or b[1] != 4:
         return bytes(b)
     pre = b[0] & 0x3F
-    entry_bits, neb, flags = b[3], b[4], b[5]
+    entry_bits, neb = b[3], b[4]
     seed_hash = bytes(b[6:8])
     off = 8
     theta = (1 << 63) - 1
@@ -432,27 +446,20 @@ def theta_v4_to_v3(b: bytes) -> bytes:
         off = 16
     n = int.from_bytes(b[off : off + neb], "little")
     off += neb
-    data = b[off:]
-    packed = int.from_bytes(data, "big")
-    total_bits = len(data) * 8
-    mask = (1 << entry_bits) - 1
-    hashes = []
-    acc = 0
-    pos = 0
-    for _ in range(n):
-        acc += (packed >> (total_bits - pos - entry_bits)) & mask
-        pos += entry_bits
-        hashes.append(acc)
+    bits = np.unpackbits(np.frombuffer(b, np.uint8, offset=off))
+    rows = np.zeros((n, 64), np.uint8)
+    rows[:, 64 - entry_bits :] = bits[: n * entry_bits].reshape(n, entry_bits)
+    deltas = np.packbits(rows, axis=1).view(">u8").ravel()
+    hashes = np.cumsum(deltas, dtype=np.uint64)
     est_mode = pre >= 2
     pre_longs = 3 if est_mode else 2
     # flags: READ_ONLY(2) | COMPACT(8) | ORDERED(16)
     out = bytearray()
     out += bytes([pre_longs, 3, 3, 0, 0, 0x1A]) + seed_hash
-    out += struct.pack("<i", n) + b"\x00\x00\x00\x00"
+    out += struct.pack("<if", n, 1.0)
     if est_mode:
         out += struct.pack("<q", theta)
-    for h in hashes:
-        out += struct.pack("<q", h)
+    out += hashes.astype("<u8").tobytes()
     return bytes(out)
 
 

@@ -44,7 +44,10 @@ def profile_stream(
     excluded = set(group_by) | {time_column}
     profiled = [c for c in (columns or stream_df.columns) if c not in excluded]
     schema = {f.name: f.dataType for f in stream_df.schema.fields}
-    specs = [ColumnSql(c, schema[c], null_strings, coerce_strings=False) for c in profiled]
+    specs = [
+        ColumnSql(i, c, schema[c], null_strings, coerce_strings=False)
+        for i, c in enumerate(profiled)
+    ]
     # the batch profile's own SQL fragments (plans.spark_sql), in its two
     # projection layers
     passed = [qcol(c) for c in (time_column, *group_by)]
@@ -71,5 +74,9 @@ def profile_stream(
         F.col("window.start").alias("window_start"),
         F.col("window.end").alias("window_end"),
         *group_by,
-        *[F.col(qcol(f"{s.name}_{m}")) for s in specs for m, _ in ATOM_METRICS],
+        *[
+            F.col(s.attr(f"_{m}")).alias(f"{s.name}_{m}")
+            for s in specs
+            for m, _ in ATOM_METRICS
+        ],
     )
