@@ -818,14 +818,6 @@ def test_hyperplane_buckets_exact_keeps_null_vectors(spark):
     assert out[2] == "0000"  # NULL projections -> all-zero bucket
 
 
-def test_near_dup_stages_rejects_unknown_verify(spark):
-    from whylogs_java_spark.operators.dedup import near_dup_stages
-
-    df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="verify"):
-        near_dup_stages(df, "text", "doc_id", verify="arrays")
-
-
 def test_windowed_bin_counts_invalid_values_advance_watermark(spark, tmp_path):
     """A stream gone all-NaN must still flush completed windows: the
     invalid rows advance event time even though they count in no bin."""

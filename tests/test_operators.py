@@ -289,32 +289,6 @@ def test_frequent_items_high_cardinality_bounded(spark):
     assert rows[3]["value"] == "u0" and rows[4]["value"] == "u1"
 
 
-def test_near_dup_materialize_matches_lazy(spark):
-    docs = [(i, f"tok{i} common words shared by docs number {i} end") for i in range(40)]
-    docs += [(100 + i, f"tok{i} common words shared by docs number {i} ending") for i in range(0, 40, 4)]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    lazy = {
-        (r["id_a"], r["id_b"], r["jaccard"])
-        for r in near_dup_pairs(df, "text", "doc_id", threshold=0.5).collect()
-    }
-    staged = {
-        (r["id_a"], r["id_b"], r["jaccard"])
-        for r in near_dup_pairs(
-            df, "text", "doc_id", threshold=0.5, materialize=True
-        ).collect()
-    }
-    assert lazy == staged and len(lazy) >= 5
-    # staged path must not leak intermediate caches. Persisted RDDs that
-    # legitimately remain are caller-owned checkpoints: each verify's
-    # lazily checkpointed scored-pair table (one per near_dup_pairs call
-    # above — the barrier that keeps the threshold filter out of the
-    # verify join's condition) plus the staged result's eager
-    # localCheckpoint. A leaked pairs/sh_cand .persist() would push the
-    # count past this bound.
-    jsc = spark.sparkContext._jsc.sc()
-    assert jsc.getPersistentRDDs().size() <= 3
-
-
 def test_minhash_num_hashes_overflow_guard(spark):
     from whylogs_java_spark.operators.dedup import minhash_signatures
 
@@ -950,12 +924,17 @@ def test_cross_dedup_pairs_subset_of_union_near_dup(spark):
     assert len(cross) > 0
 
 
-def test_near_dup_materialize_honors_hash_family(spark):
-    # materialize=True must run the SAME hash family as the default path
-    # (it silently fell back to affine before) and must reject bad verify
+def test_near_dup_pairs_honors_hash_family(spark):
+    # near_dup_pairs must screen with the hash family it is given: every
+    # verified pair under banded32 is a banded32 band collision
     from pyspark.sql import functions as F
 
-    from whylogs_java_spark.operators.dedup import near_dup_pairs
+    from whylogs_java_spark.operators.dedup import (
+        _candidates_from_bands,
+        lsh_band_signatures,
+        minhash_signatures,
+        near_dup_pairs,
+    )
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
     mut = docs.where(F.col("doc_id") % 10 == 0).select(
@@ -967,19 +946,21 @@ def test_near_dup_materialize_honors_hash_family(spark):
         threshold=0.7, num_hashes=16, bands=4, shingle_size=5,
         char_ngrams=True, hash_family="banded32",
     )
-    default = {
+    pairs = {
         (r["id_a"], r["id_b"])
         for r in near_dup_pairs(corpus, "text", "doc_id", **kw).collect()
     }
-    staged = {
+    sigs = minhash_signatures(
+        corpus, "text", "doc_id", 16, 5, char_ngrams=True,
+        hash_family="banded32", bands=4,
+    )
+    candidates = {
         (r["id_a"], r["id_b"])
-        for r in near_dup_pairs(
-            corpus, "text", "doc_id", materialize=True, **kw
+        for r in _candidates_from_bands(
+            lsh_band_signatures(sigs, "doc_id", 16, 4), "doc_id"
         ).collect()
     }
-    assert staged == default and len(default) > 0
-    with pytest.raises(ValueError):
-        near_dup_pairs(corpus, "text", "doc_id", verify="bogus")
+    assert pairs and pairs <= candidates
 
 
 def test_resolve_clusters_star_ghost_endpoint_keeps_node_survivor(spark):

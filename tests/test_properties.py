@@ -347,11 +347,11 @@ _vocab = st.sampled_from(["alpha", "beta", "gamma", "delta", "eps"])
     )
 )
 def test_jaccard_verify_matches_python_sets(spark, docs):
-    """jaccard_verify_pairs (the MinHash pipeline's exact verifier)
+    """The exact verifier near_dup_pairs runs (per-doc shingle arrays)
     against brute-force Python set Jaccard over the same 3-word
-    shingles: every emitted pair matches exactly, and every omitted
-    pair truly has an empty intersection."""
-    from whylogs_java_spark.operators.dedup import jaccard_verify_pairs
+    shingles: every given pair is scored, and each score matches
+    exactly — pairs with no shared shingle included, at inter 0."""
+    from whylogs_java_spark.operators.dedup import _jaccard_from_shingle_arrays
 
     rows = [(i, " ".join(ws)) for i, ws in enumerate(docs)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
@@ -361,18 +361,18 @@ def test_jaccard_verify_matches_python_sets(spark, docs):
     pairs = spark.createDataFrame(all_pairs, "id_a long, id_b long")
     got = {
         (r["id_a"], r["id_b"]): (r["inter"], r["size_a"], r["size_b"], r["jaccard"])
-        for r in jaccard_verify_pairs(df, pairs, "text", "doc_id").collect()
+        for r in _jaccard_from_shingle_arrays(
+            df, pairs, "text", "doc_id", 3, False
+        ).collect()
     }
 
     def shingles(ws):
         return {" ".join(ws[i : i + 3]) for i in range(len(ws) - 2)}
 
     sets = {i: shingles(ws) for i, ws in enumerate(docs)}
+    assert set(got) == set(all_pairs)
     for i, j in all_pairs:
         inter = len(sets[i] & sets[j])
-        if inter == 0:
-            assert (i, j) not in got  # zero-overlap pairs are never emitted
-            continue
         union = len(sets[i] | sets[j])
         gi, ga, gb, gj = got[(i, j)]
         assert (gi, ga, gb) == (inter, len(sets[i]), len(sets[j]))

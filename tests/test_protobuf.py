@@ -878,3 +878,36 @@ def test_column_names_needing_quotes(spark, tmp_path):
             cols = decode_dataset_profile(msg)["columns"]
             assert sorted(cols) == sorted(names)
             assert cols["a b"]["count"] == 1
+
+
+def test_hll_skips_null_like_values(spark, tmp_path):
+    """HLL counts only values the reference tracks: NaN, ±Inf and
+    ``null_strings`` members are nulls there, checked before any tracker
+    update, so each column's HLL estimate is its 2 real distinct values
+    (not 4 and 3). Both wire sinks write the same HLL bytes."""
+    from whylogs_java_spark.sources.protobuf import write_profile_bin_distributed
+
+    df = spark.createDataFrame(
+        [
+            ("g", 1.0, "x"),
+            ("g", float("nan"), "NA"),
+            ("g", float("inf"), "y"),
+            ("g", 2.0, None),
+        ],
+        "tag string, d double, s string",
+    )
+    hll = {}
+    for write in (write_profile_bin, write_profile_bin_distributed):
+        path = str(tmp_path / f"{write.__name__}.bin")
+        assert write(df, path, group_by=["tag"], null_strings=["NA"]) == 1
+        est = {
+            r["column_name"]: r["h"]
+            for r in read_profile_bin(spark, path)
+            .select("column_name", F.hll_sketch_estimate("hll").alias("h"))
+            .collect()
+        }
+        assert est == {"d": 2, "s": 2}, write.__name__
+        (msg,) = iter_delimited(open(path, "rb").read())
+        cols = decode_dataset_profile(msg)["columns"]
+        hll[write.__name__] = {c: cols[c]["hll"] for c in ("d", "s")}
+    assert hll["write_profile_bin"] == hll["write_profile_bin_distributed"]

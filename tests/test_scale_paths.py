@@ -182,6 +182,18 @@ def test_streaming_sliding_window(spark, tmp_path):
     assert sum(r["value_count"] for r in rows) == ev.count() * 2
 
 
+def test_profile_stream_rejects_colliding_output_names(spark):
+    # columns a and a_null both name an output a_null_count (a's null
+    # count, a_null's count): refused before any query is built
+    import datetime as dt
+
+    df = spark.createDataFrame(
+        [(dt.datetime(2024, 1, 1), 1, 2)], "ts timestamp, a long, a_null long"
+    )
+    with pytest.raises(ValueError, match="a_null_count"):
+        profile_stream(df, "ts")
+
+
 def test_frequent_items_unique_gate(spark):
     # SummaryConverters.java:54-60: frequent strings emitted only when the
     # unique count stays under the gate

@@ -34,26 +34,32 @@ from ..plans.spark_sql import masked_sql, truncated_text_sql
 
 
 def sketch_aggs(
-    df: DataFrame, columns: Sequence[str] | None, exclude: Sequence[str]
+    df: DataFrame,
+    columns: Sequence[str] | None,
+    exclude: Sequence[str],
+    null_strings: Sequence[str] = (),
 ) -> list[str]:
     """The per-column sketch aggregates as Spark-SQL text. The batch
     ``sketch_profile`` runs them as one statement; the streaming
     ``windowed_sketch_profile`` wraps each in ``F.expr``. Text, not Column
     trees: each Column node is a py4j round trip, and these lists are
-    three aggregates per column."""
+    three aggregates per column. Every sketch sees the masked column
+    (``masked_sql``): the reference checks for null before it updates
+    any tracker, so NaN, ±Inf and ``null_strings`` members are never
+    counted as distinct values."""
     schema = {f.name: f.dataType for f in df.schema.fields}
     cols = [c for c in (columns or df.columns) if c not in set(exclude)]
     aggs = []
     for c in cols:
         dt = schema[c]
+        m = masked_sql(c, dt, null_strings)
         if dt.typeName() in ("double", "float", "long", "integer", "short", "byte"):
-            m = masked_sql(c, dt)
             aggs.append(
                 f"kll_sketch_agg_float(CAST({m} AS FLOAT), {KLL_K}) AS {qcol(c + '__kll')}"
             )
             aggs.append(f"theta_sketch_agg(CAST({m} AS DOUBLE)) AS {qcol(c + '__theta')}")
         aggs.append(
-            f"hll_sketch_agg({truncated_text_sql(qcol(c))}, {HLL_LGK}) AS {qcol(c + '__hll')}"
+            f"hll_sketch_agg({truncated_text_sql(m)}, {HLL_LGK}) AS {qcol(c + '__hll')}"
         )
     return aggs
 
@@ -62,16 +68,18 @@ def sketch_profile(
     df: DataFrame,
     columns: Sequence[str] | None = None,
     group_by: Sequence[str] = (),
+    null_strings: Sequence[str] = (),
 ) -> DataFrame:
     """Mergeable sketch atoms: one row per group, sketch binaries per column.
 
     Numeric columns get a KLL(256) quantile sketch + theta distinct sketch;
     every column gets an HLL(lgK=12) sketch over its 256-char-truncated
-    string form (ColumnProfile.trackText semantics). Built as one SQL
-    statement.
+    string form (ColumnProfile.trackText semantics). Null-like values
+    (SQL NULL, NaN/±Inf, ``null_strings`` members) feed no sketch. Built
+    as one SQL statement.
     """
     keys = [qcol(k) for k in group_by]
-    select = ", ".join(keys + sketch_aggs(df, columns, group_by))
+    select = ", ".join(keys + sketch_aggs(df, columns, group_by, null_strings))
     group = f" GROUP BY {', '.join(keys)}" if keys else ""
     return df.sparkSession.sql(f"SELECT {select} FROM {{src}}{group}", src=df)
 

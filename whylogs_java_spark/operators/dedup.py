@@ -14,9 +14,13 @@ Design for scale:
 - SimHash: 64-bit signed-projection fingerprint; near-dup = small Hamming
   distance. Bit arithmetic stays in JVM expressions.
 
-Determinism: minhash uses lexicographic MIN over md5 hex digests of
-(seed | shingle) — stable across engines and partitionings, so results are
-oracle-checkable in DuckDB with the same formulas.
+Determinism: every minhash is an integer MIN over values carved from md5
+hex digests — the affine family's h1 + i*h2 from one digest of the shingle
+(``_affine_parts``), the banded32 family's 32-bit slices of
+md5('mh{band}|' || shingle) — stable across engines and partitionings, so
+results are oracle-checkable in DuckDB with the same formulas. The exact
+Jaccard is rounded to 6 places (``_with_jaccard``), as the oracle SQL
+rounds it.
 """
 
 from __future__ import annotations
@@ -163,12 +167,9 @@ def shingle_sets(
     shingle_size: int = 3,
     char_ngrams: bool = False,
 ) -> DataFrame:
-    """Distinct (id, shingle) rows — the single shared shingle explode.
-
-    Both MinHash signatures (min over the set == min over the multiset)
-    and exact-Jaccard verification consume this table, so a near-dup
-    pipeline computes the expensive explode exactly once.
-    ``char_ngrams`` switches from word n-grams to character n-grams.
+    """Distinct (id, shingle) rows — the inverted-index input of
+    ``shingle_candidate_pairs``. ``char_ngrams`` switches from word
+    n-grams to character n-grams.
     """
     sh = _shingler(shingle_size, char_ngrams)
     return df.select(
@@ -177,22 +178,41 @@ def shingle_sets(
     ).distinct()
 
 
-def _minhash_from_shingles(sh: DataFrame, id_col: str, num_hashes: int) -> DataFrame:
-    """MinHash signatures from an (id, shingle) table: (id, mh0..mh{k-1})."""
+def _affine_parts(shingle: Column) -> tuple[Column, Column]:
+    """The affine family's two parts of one shingle, from its md5 hex:
+    h1 = hex[1:15] and h2 = hex[16:30] mod 2^55. The batch signatures and
+    the streaming flagger (``streaming.dedup_near_stream``) both hash
+    through here, so the stream flags exactly the batch band collisions."""
+    h = F.md5(shingle)
+    return (
+        F.conv(F.substring(h, 1, 15), 16, 10).cast("long"),
+        F.conv(F.substring(h, 16, 15), 16, 10).cast("long") % _H2_BOUND,
+    )
+
+
+def _affine_family(num_hashes: int) -> list:
+    """The k affine components h_i(h1, h2) = h1 + i*h2; a signature's
+    mh{i} is the MIN of h_i over the doc's shingles."""
     if num_hashes > _MAX_NUM_HASHES:
         raise ValueError(
             f"num_hashes={num_hashes} exceeds {_MAX_NUM_HASHES}: the affine "
             "family h1 + i*h2 overflows signed 64-bit beyond i=224"
         )
-    h = F.md5("shingle")
-    hashed = sh.select(
-        id_col,
-        F.conv(F.substring(h, 1, 15), 16, 10).cast("long").alias("h1"),
-        (F.conv(F.substring(h, 16, 15), 16, 10).cast("long") % _H2_BOUND).alias("h2"),
-    )
+
+    def component(i: int):
+        return lambda h1, h2: h1 + F.lit(i) * h2
+
+    return [component(i) for i in range(num_hashes)]
+
+
+def _minhash_from_shingles(sh: DataFrame, id_col: str, num_hashes: int) -> DataFrame:
+    """MinHash signatures from an (id, shingle) table: (id, mh0..mh{k-1})."""
+    family = _affine_family(num_hashes)
+    h1, h2 = _affine_parts(F.col("shingle"))
+    hashed = sh.select(id_col, h1.alias("h1"), h2.alias("h2"))
     aggs = [
-        F.min(F.col("h1") + F.lit(i) * F.col("h2")).alias(f"mh{i}")
-        for i in range(num_hashes)
+        F.min(h(F.col("h1"), F.col("h2"))).alias(f"mh{i}")
+        for i, h in enumerate(family)
     ]
     return hashed.groupBy(id_col).agg(*aggs)
 
@@ -300,6 +320,29 @@ def lsh_band_signatures(
     ).select(id_col, "bs.band", "bs.band_sig")
 
 
+# the signature parameters a MinHash store pins in its meta table
+_SIG_PARAMS = ("num_hashes", "bands", "shingle_size", "char_ngrams", "hash_family")
+
+
+def _band_table(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    num_hashes: int,
+    bands: int,
+    shingle_size: int,
+    char_ngrams: bool,
+    hash_family: str,
+) -> DataFrame:
+    """(id, band, band_sig) of every doc — the signature and banding
+    steps shared by every band-join screen and the MinHash store."""
+    sigs = minhash_signatures(
+        df, text_col, id_col, num_hashes, shingle_size, char_ngrams,
+        hash_family=hash_family, bands=bands,
+    )
+    return lsh_band_signatures(sigs, id_col, num_hashes, bands)
+
+
 def _candidates_from_bands(
     bands_df: DataFrame, id_col: str, bucket_cap: int | None = None
 ) -> DataFrame:
@@ -353,47 +396,40 @@ def minhash_candidate_pairs(
     shuffle on the band key only, no cross product. ``bucket_cap``
     bounds the hot-bucket fan-out (see ``_candidates_from_bands``).
     """
-    sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_size)
-    bands_df = lsh_band_signatures(sigs, id_col, num_hashes, bands)
+    bands_df = _band_table(
+        df, text_col, id_col, num_hashes, bands, shingle_size, False, "affine"
+    )
     return _candidates_from_bands(bands_df, id_col, bucket_cap=bucket_cap)
 
 
-def _jaccard_from_shingle_sets(sh: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
-    """Exact shingle-set Jaccard for candidate pairs, given the distinct
-    (id, shingle) table.
+def _shingle_set(text: Column, shingle_size: int, char_ngrams: bool) -> Column:
+    """A doc's distinct shingle set as ONE array value — the verify side
+    of every exact-Jaccard screen and the store's shingle table."""
+    return F.array_distinct(_shingler(shingle_size, char_ngrams)(text))
 
-    |A∩B| via an equi-join on shingle, sizes via per-doc counts.
-    Output: (id_a, id_b, inter, size_a, size_b, jaccard).
-    """
-    sh = sh.withColumnRenamed(id_col, "doc")
-    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
 
-    sa = sh.select(F.col("doc").alias("id_a"), "shingle")
-    sb = sh.select(F.col("doc").alias("id_b"), "shingle")
-    inter = (
-        pairs.join(sa, on="id_a")
-        .join(sb, on=["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    return (
-        inter.join(sizes.select(F.col("doc").alias("id_a"), F.col("sz").alias("size_a")), "id_a")
-        .join(sizes.select(F.col("doc").alias("id_b"), F.col("sz").alias("size_b")), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            "inter",
-            "size_a",
-            "size_b",
-            (
-                F.round(
-                    F.col("inter")
-                    / (F.col("size_a") + F.col("size_b") - F.col("inter")),
-                    6,
-                )
-                + 0.0
-            ).alias("jaccard"),
-        )
+def _set_size(shset: Column) -> Column:
+    return F.size(shset).cast("long")
+
+
+def _intersect_size(sa: str, sb: str) -> Column:
+    """|A∩B| of two shingle-set array columns, as ``inter``."""
+    return _set_size(F.array_intersect(F.col(sa), F.col(sb))).alias("inter")
+
+
+def _with_jaccard(scored: DataFrame) -> DataFrame:
+    """(id_a, id_b, inter, size_a, size_b, jaccard) of scored pair rows:
+    jaccard = |A∩B| / |A∪B| rounded to 6 places, the oracle SQL's own
+    formula — so a stored probe and an in-flight screen agree bit for
+    bit."""
+    inter, size_a, size_b = F.col("inter"), F.col("size_a"), F.col("size_b")
+    return scored.select(
+        "id_a",
+        "id_b",
+        "inter",
+        "size_a",
+        "size_b",
+        (F.round(inter / (size_a + size_b - inter), 6) + 0.0).alias("jaccard"),
     )
 
 
@@ -406,17 +442,16 @@ def _jaccard_from_shingle_arrays(
     char_ngrams: bool,
 ) -> DataFrame:
     """Exact shingle-set Jaccard for candidate pairs via per-doc shingle
-    ARRAYS and ``array_intersect`` — the high-candidate-volume verify tier.
+    ARRAYS and ``array_intersect`` — the one exact verifier.
 
-    The explode-join verify (``_jaccard_from_shingle_sets``)
-    materializes |pairs| × |shingles/doc| join rows before
-    re-aggregating (measured 9e8 join rows / 166 s at sf0.1 when the
-    affine hash family leaked 1.56M char-n-gram candidates). Here each
-    doc's distinct shingle set rides as ONE array row (`array_distinct`
-    of the shingle expression — no explode, no re-agg) and |A∩B| is a
+    Each doc's distinct shingle set rides as ONE array row
+    (``_shingle_set`` — no explode, no re-aggregation) and |A∩B| is a
     per-pair JVM hash-set intersect: O(|A|+|B|) per candidate with no
-    row blow-up. The same exact Jaccard comes out — the oracle SQL is
-    shared.
+    row blow-up. An explode-join verifier (one row per (doc, shingle),
+    joined on shingle and re-aggregated) materializes |pairs| ×
+    |shingles/doc| join rows instead — measured 9e8 join rows / 166 s at
+    sf0.1 when the affine hash family leaked 1.56M char-n-gram
+    candidates.
 
     Honest cost model: the per-pair intersect on ~300-string arrays is
     itself ~60 µs (interpreted UTF8 hashing), so this tier is linear in
@@ -428,22 +463,24 @@ def _jaccard_from_shingle_arrays(
     pairs join is a plain equi-join Spark can broadcast when the array
     table is small or sort-merge at scale — candidate rows carry two
     arrays briefly, never an exploded row per shingle.
+
+    Every given pair is scored, sharing shingles or not.
+    Output: (id_a, id_b, inter, size_a, size_b, jaccard).
     """
-    sh = _shingler(shingle_size, char_ngrams)
     docs = df.select(
-        F.col(id_col), F.array_distinct(sh(F.col(text_col))).alias("__shset")
+        F.col(id_col),
+        _shingle_set(F.col(text_col), shingle_size, char_ngrams).alias("__shset"),
     )
     a = docs.select(
         F.col(id_col).alias("id_a"),
         F.col("__shset").alias("__sa"),
-        F.size("__shset").cast("long").alias("size_a"),
+        _set_size(F.col("__shset")).alias("size_a"),
     )
     b = docs.select(
         F.col(id_col).alias("id_b"),
         F.col("__shset").alias("__sb"),
-        F.size("__shset").cast("long").alias("size_b"),
+        _set_size(F.col("__shset")).alias("size_b"),
     )
-    inter = F.size(F.array_intersect(F.col("__sa"), F.col("__sb"))).cast("long")
     # Two stage-shape guards around the per-pair intersect — the
     # compute-heavy fold over byte-tiny rows AQE cannot see (the
     # SemDeDup pathology, guide §2.5):
@@ -465,53 +502,10 @@ def _jaccard_from_shingle_arrays(
         pairs.repartition(target)
         .join(a, on="id_a")
         .join(b, on="id_b")
-        .select("id_a", "id_b", inter.alias("inter"), "size_a", "size_b")
+        .select("id_a", "id_b", _intersect_size("__sa", "__sb"), "size_a", "size_b")
         .transform(materialize_lazy)
     )
-    return scored.select(
-        "id_a",
-        "id_b",
-        "inter",
-        "size_a",
-        "size_b",
-        (
-            F.round(
-                F.col("inter")
-                / (F.col("size_a") + F.col("size_b") - F.col("inter")),
-                6,
-            )
-            + 0.0
-        ).alias("jaccard"),
-    )
-
-
-def jaccard_verify_pairs(
-    df: DataFrame,
-    pairs: DataFrame,
-    text_col: str,
-    id_col: str,
-    shingle_size: int = 3,
-    prune_to_candidates: bool = False,
-) -> DataFrame:
-    """Exact shingle-set Jaccard for candidate pairs (standalone form:
-    builds the distinct shingle sets from the raw corpus).
-
-    ``prune_to_candidates`` semi-joins the shingle sets to docs appearing
-    in a pair before exploding. Enable it when candidates are a small
-    fraction of a huge corpus (the typical 100 TB regime) AND ``pairs`` is
-    persisted/checkpointed — the prune consumes ``pairs`` a second time and
-    the extra stage only pays off when it removes most of the explode.
-    """
-    src = df
-    if prune_to_candidates:
-        cand_ids = (
-            pairs.select(F.col("id_a").alias(id_col))
-            .unionByName(pairs.select(F.col("id_b").alias(id_col)))
-            .distinct()
-        )
-        src = df.join(cand_ids, on=id_col, how="left_semi")
-    sh = shingle_sets(src, text_col, id_col, shingle_size)
-    return _jaccard_from_shingle_sets(sh, pairs, id_col)
+    return _with_jaccard(scored)
 
 
 def near_dup_pairs(
@@ -522,9 +516,7 @@ def near_dup_pairs(
     num_hashes: int = 16,
     bands: int = 4,
     shingle_size: int = 3,
-    materialize: bool = False,
     char_ngrams: bool = False,
-    verify: str = "array",
     hash_family: str = "affine",
     bucket_cap: int | None = None,
 ) -> DataFrame:
@@ -532,132 +524,40 @@ def near_dup_pairs(
     ``char_ngrams=True`` runs the same pipeline over character n-gram sets
     (the classic n-gram-Jaccard dedup; robust to word-boundary edits).
 
-    ``verify`` picks the exact-Jaccard implementation — identical answers
-    either way: ``"array"`` (default) intersects per-doc shingle arrays
-    per candidate pair (`_jaccard_from_shingle_arrays` — no explode-join
-    blow-up; the only safe choice for char n-grams, whose high background
-    Jaccard floods the bands with candidates); ``"explode"`` is the
-    shingle-row equi-join tier, kept for the staged/persisted variant
-    where the distinct-shingle table is shared across consumers.
-
-    The default single-DAG pipeline is NOT the naive "~6x shingle
-    recompute" it looks like statically: under AQE, identical shuffle
-    subtrees collapse into ``ReusedExchange`` nodes, so the EXECUTED plan
-    contains exactly TWO shingle explodes — one feeding the minhash
-    partial-aggregate (only 16 longs/doc cross that shuffle, never raw
-    shingle strings; the band join's second side reuses it), and one
-    building the distinct (doc, shingle) shuffle, which is written once
-    and read three times (sizes + both Jaccard join sides) from
-    shuffle files — disk-backed, so the sharing survives memory pressure
-    at cluster scale. Measured at sf0.1 on local[32], this runs ~2x
-    faster (≈3.5 s vs ≈5-9 s) than every explicitly staged
+    One lazy DAG, filter then verify: signatures → band self-join
+    (``_candidates_from_bands``) → per-pair shingle-array intersect
+    (``_jaccard_from_shingle_arrays``) → threshold. It is NOT the naive
+    shingle recompute it looks like statically: under AQE, identical
+    shuffle subtrees collapse into ``ReusedExchange`` nodes, so the
+    EXECUTED plan holds at most two shingle explodes, each feeding the
+    minhash partial aggregate (only 16 longs/doc cross that shuffle,
+    never raw shingle strings). Measured at sf0.1 on local[32], this ran
+    ~2x faster (≈3.5 s vs ≈5-9 s) than every explicitly staged
     persist/checkpoint variant tried (global shared distinct-shingle
     cache: 3x slower; candidate-pruned staged pipeline: 1.5-2x slower) —
     the extra jobs, cache fills, and materialization barriers cost more
-    than they save, at any scale where AQE reuse holds.
+    than they save, at any scale where AQE reuse holds. A caller that
+    composes long lineage on the result severs it with its own
+    checkpoint.
 
-    ``materialize=True`` runs the explicitly staged variant
-    (``near_dup_stages``): candidate pairs and candidate-pruned shingle
-    sets persist, the verified result is eagerly localCheckpointed, and
-    every intermediate is unpersisted before returning (no cache leak).
-    Use it when composing further lineage on the result (severed lineage)
-    or in engines/configs without adaptive exchange reuse; on a real
-    cluster, swap ``localCheckpoint`` for a checkpoint dir or an explicit
-    intermediate table.
+    Output: (id_a < id_b, inter, size_a, size_b, jaccard).
     """
-    if verify not in ("array", "explode"):
-        raise ValueError(f"unknown verify mode: {verify!r}")
-    if not materialize:
-        # One round-robin spread feeds BOTH the signature and the verify
-        # branch (AQE reuses the exchange): in the small-file regime the
-        # corpus otherwise arrives in 1-2 partitions and the CPU-heavy
-        # shingle walk serializes on 2 of 32 cores (measured 18.6 s -> 4.5 s
-        # for the char-5-gram query at sf0.1); at cluster scale the scan
-        # already has >= cores partitions and this is a no-op.
-        df = spread(df)
-        sigs = minhash_signatures(
-            df, text_col, id_col, num_hashes, shingle_size, char_ngrams,
-            hash_family=hash_family, bands=bands,
-        )
-        bands_df = lsh_band_signatures(sigs, id_col, num_hashes, bands)
-        pairs = _candidates_from_bands(bands_df, id_col, bucket_cap=bucket_cap)
-        if verify == "array":
-            verified = _jaccard_from_shingle_arrays(
-                df, pairs, text_col, id_col, shingle_size, char_ngrams
-            )
-        else:
-            sh = shingle_sets(df, text_col, id_col, shingle_size, char_ngrams)
-            verified = _jaccard_from_shingle_sets(sh, pairs, id_col)
-        return verified.where(F.col("jaccard") >= threshold)
-
-    pairs, sh_cand, verified = near_dup_stages(
-        df, text_col, id_col, threshold, num_hashes, bands, shingle_size,
-        char_ngrams, hash_family=hash_family, verify=verify,
-        bucket_cap=bucket_cap,
-    )
-    try:
-        return verified.transform(_materialize)
-    finally:
-        sh_cand.unpersist()
-        pairs.unpersist()
-
-
-def near_dup_stages(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    threshold: float = 0.5,
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle_size: int = 3,
-    char_ngrams: bool = False,
-    hash_family: str = "affine",
-    verify: str = "explode",
-    bucket_cap: int | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """The staged near-dup pipeline: (candidate_pairs, candidate_stage,
-    verified).
-
-    ``candidate_pairs`` and the middle ``candidate_stage`` (candidate
-    shingle sets in ``verify="explode"`` mode, the candidate-pruned
-    corpus rows in ``verify="array"`` mode) come back persisted — the
-    caller owns unpersisting them once ``verified`` is materialized
-    (``near_dup_pairs`` is the wrapper that does exactly that). Exposed
-    separately so the per-stage physical plans can be audited: explode #1
-    lives inside the candidate stage (collapsed to 16 longs/doc before its
-    shuffle), explode #2 inside the persisted candidate-shingle stage
-    (restricted to docs that appear in a pair); verification reads caches.
-    """
-    if verify not in ("array", "explode"):
-        raise ValueError(f"unknown verify mode: {verify!r}")
+    # One round-robin spread feeds BOTH the signature and the verify
+    # branch (AQE reuses the exchange): in the small-file regime the
+    # corpus otherwise arrives in 1-2 partitions and the CPU-heavy
+    # shingle walk serializes on 2 of 32 cores (measured 18.6 s -> 4.5 s
+    # for the char-5-gram query at sf0.1); at cluster scale the scan
+    # already has >= cores partitions and this is a no-op.
     df = spread(df)
-    sigs = minhash_signatures(
-        df, text_col, id_col, num_hashes, shingle_size, char_ngrams,
-        hash_family=hash_family, bands=bands,
+    bands_df = _band_table(
+        df, text_col, id_col, num_hashes, bands, shingle_size, char_ngrams,
+        hash_family,
     )
-    bands_df = lsh_band_signatures(sigs, id_col, num_hashes, bands)
-    pairs = _candidates_from_bands(
-        bands_df, id_col, bucket_cap=bucket_cap
-    ).persist()
-    cand_ids = (
-        pairs.select(F.col("id_a").alias(id_col))
-        .unionByName(pairs.select(F.col("id_b").alias(id_col)))
-        .distinct()
+    pairs = _candidates_from_bands(bands_df, id_col, bucket_cap=bucket_cap)
+    verified = _jaccard_from_shingle_arrays(
+        df, pairs, text_col, id_col, shingle_size, char_ngrams
     )
-    src = df.join(cand_ids, on=id_col, how="left_semi")
-    if verify == "array":
-        # array-intersect verify on the candidate-pruned corpus — the
-        # char-n-gram regime where exploded (doc, shingle) rows blow up
-        src_c = src.persist()
-        verified = _jaccard_from_shingle_arrays(
-            src_c, pairs, text_col, id_col, shingle_size, char_ngrams
-        ).where(F.col("jaccard") >= threshold)
-        return pairs, src_c, verified
-    sh_cand = shingle_sets(src, text_col, id_col, shingle_size, char_ngrams).persist()
-    verified = _jaccard_from_shingle_sets(sh_cand, pairs, id_col).where(
-        F.col("jaccard") >= threshold
-    )
-    return pairs, sh_cand, verified
+    return verified.where(F.col("jaccard") >= threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -1346,11 +1246,10 @@ def containment_pairs(
         sh = shingle_sets(df, text_col, id_col, shingle_size, char_ngrams)
         pairs = shingle_candidate_pairs(sh, id_col, df_cap, min_shared)
     elif candidates == "bands":
-        sigs = minhash_signatures(
-            df, text_col, id_col, num_hashes, shingle_size, char_ngrams,
-            hash_family=hash_family, bands=bands,
+        bands_df = _band_table(
+            df, text_col, id_col, num_hashes, bands, shingle_size, char_ngrams,
+            hash_family,
         )
-        bands_df = lsh_band_signatures(sigs, id_col, num_hashes, bands)
         pairs = _candidates_from_bands(bands_df, id_col, bucket_cap=bucket_cap)
     else:
         raise ValueError(f"unknown candidates mode: {candidates!r}")
@@ -1682,23 +1581,16 @@ def cross_dedup_pairs(
     needs); each incremental batch computes its own signatures and
     equi-joins bands against the store, so per-batch cost is O(batch +
     matched candidates). The verify stage re-reads text for matched ids
-    only (left-semi prune shape, as in ``jaccard_verify_pairs``).
+    only (a left-semi prune to the candidates' ids before shingling).
 
     Output: (id_a = ref id, id_b = new id, inter, size_a, size_b,
     jaccard) for pairs with jaccard >= threshold.
     """
     new_df = spread(new_df.select(id_col, text_col))
     ref_df = spread(ref_df.select(id_col, text_col))
-    sig_ref = minhash_signatures(
-        ref_df, text_col, id_col, num_hashes, shingle_size, char_ngrams,
-        hash_family=hash_family, bands=bands,
-    )
-    sig_new = minhash_signatures(
-        new_df, text_col, id_col, num_hashes, shingle_size, char_ngrams,
-        hash_family=hash_family, bands=bands,
-    )
-    bands_ref = lsh_band_signatures(sig_ref, id_col, num_hashes, bands)
-    bands_new = lsh_band_signatures(sig_new, id_col, num_hashes, bands)
+    params = (num_hashes, bands, shingle_size, char_ngrams, hash_family)
+    bands_ref = _band_table(ref_df, text_col, id_col, *params)
+    bands_new = _band_table(new_df, text_col, id_col, *params)
     # Materialize the (small) candidate list once: it feeds both the
     # verify join and the ref-side prune below — without the checkpoint
     # the band join would re-execute per consumer. LAZY (guide §5): the
@@ -1776,48 +1668,10 @@ def build_minhash_store(
     read partition-pruned, never recomputed.
     """
     df = spread(df.select(id_col, text_col))
-    sig = minhash_signatures(
-        df, text_col, id_col, num_hashes, shingle_size, char_ngrams,
-        hash_family=hash_family, bands=bands,
+    bands_df = _band_table(
+        df, text_col, id_col, num_hashes, bands, shingle_size, char_ngrams,
+        hash_family,
     )
-    bands_df = lsh_band_signatures(sig, id_col, num_hashes, bands)
-
-    def _write_bands():
-        (
-            bands_df.select(
-                F.col(id_col).alias("id"),
-                F.col("band"),
-                F.pmod(F.xxhash64("band_sig"), F.lit(n_buckets)).alias(
-                    "bucket"
-                ),
-                F.col("band_sig"),
-            )
-            # cluster by the write-partition keys: one task/file per
-            # (band, bucket) dir instead of a sliver from every shuffle
-            # partition (the postings-write lesson, retrieval.py)
-            .repartition(F.col("band"), F.col("bucket"))
-            .write.mode("overwrite")
-            .partitionBy("band", "bucket")
-            .parquet(f"{path}/bands")
-        )
-
-    def _write_shingles():
-        sh = _shingler(shingle_size, char_ngrams)
-        shset = F.array_distinct(sh(F.col(text_col)))
-        (
-            df.select(
-                F.col(id_col).alias("id"),
-                F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_buckets)).alias(
-                    "sbucket"
-                ),
-                shset.alias("shset"),
-                F.size(shset).cast("long").alias("size"),
-            )
-            .repartition(F.col("sbucket"))
-            .write.mode("overwrite")
-            .partitionBy("sbucket")
-            .parquet(f"{path}/shingles")
-        )
 
     def _write_meta():
         meta = literal_df(
@@ -1845,12 +1699,69 @@ def build_minhash_store(
 
     with ThreadPoolExecutor(max_workers=3) as pool:
         futs = [
-            pool.submit(_write_bands),
-            pool.submit(_write_shingles),
+            pool.submit(
+                _write_band_table, bands_df, id_col, path, n_buckets, "overwrite"
+            ),
+            pool.submit(
+                _write_shingle_table, df, text_col, id_col, path, n_buckets,
+                shingle_size, char_ngrams, "overwrite",
+            ),
             pool.submit(_write_meta),
         ]
         for f in futs:
             f.result()
+
+
+def _bucket(col: Column, n_buckets: int) -> Column:
+    """A store partition key: ``pmod(xxhash64(col), n_buckets)``."""
+    return F.pmod(F.xxhash64(col), F.lit(n_buckets))
+
+
+def _write_band_table(
+    bands_df: DataFrame, id_col: str, path: str, n_buckets: int, mode: str
+) -> None:
+    """Write a store's ``{path}/bands`` table in ``mode``."""
+    (
+        bands_df.select(
+            F.col(id_col).alias("id"),
+            F.col("band"),
+            _bucket(F.col("band_sig"), n_buckets).alias("bucket"),
+            F.col("band_sig"),
+        )
+        # cluster by the write-partition keys: one task/file per
+        # (band, bucket) dir instead of a sliver from every shuffle
+        # partition (the postings-write lesson, retrieval.py)
+        .repartition(F.col("band"), F.col("bucket"))
+        .write.mode(mode)
+        .partitionBy("band", "bucket")
+        .parquet(f"{path}/bands")
+    )
+
+
+def _write_shingle_table(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    path: str,
+    n_buckets: int,
+    shingle_size: int,
+    char_ngrams: bool,
+    mode: str,
+) -> None:
+    """Write a store's ``{path}/shingles`` table in ``mode``."""
+    shset = _shingle_set(F.col(text_col), shingle_size, char_ngrams)
+    (
+        df.select(
+            F.col(id_col).alias("id"),
+            _bucket(F.col(id_col), n_buckets).alias("sbucket"),
+            shset.alias("shset"),
+            _set_size(shset).alias("size"),
+        )
+        .repartition(F.col("sbucket"))
+        .write.mode(mode)
+        .partitionBy("sbucket")
+        .parquet(f"{path}/shingles")
+    )
 
 
 def append_minhash_store(
@@ -1872,43 +1783,13 @@ def append_minhash_store(
     ids must be new to the store (screen first; the probe's id spaces
     are disjoint by construction).
     """
-    spark = df.sparkSession
-    m = spark.read.parquet(f"{path}/meta").first()
+    m = df.sparkSession.read.parquet(f"{path}/meta").first()
     df = spread(df.select(id_col, text_col))
-    sig = minhash_signatures(
-        df, text_col, id_col, m["num_hashes"], m["shingle_size"],
-        m["char_ngrams"], hash_family=m["hash_family"], bands=m["bands"],
-    )
-    bands_df = lsh_band_signatures(sig, id_col, m["num_hashes"], m["bands"])
-    (
-        bands_df.select(
-            F.col(id_col).alias("id"),
-            F.col("band"),
-            F.pmod(F.xxhash64("band_sig"), F.lit(m["n_buckets"])).alias(
-                "bucket"
-            ),
-            F.col("band_sig"),
-        )
-        .repartition(F.col("band"), F.col("bucket"))
-        .write.mode("append")
-        .partitionBy("band", "bucket")
-        .parquet(f"{path}/bands")
-    )
-    sh = _shingler(m["shingle_size"], m["char_ngrams"])
-    shset = F.array_distinct(sh(F.col(text_col)))
-    (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(m["n_buckets"])).alias(
-                "sbucket"
-            ),
-            shset.alias("shset"),
-            F.size(shset).cast("long").alias("size"),
-        )
-        .repartition(F.col("sbucket"))
-        .write.mode("append")
-        .partitionBy("sbucket")
-        .parquet(f"{path}/shingles")
+    bands_df = _band_table(df, text_col, id_col, **{k: m[k] for k in _SIG_PARAMS})
+    _write_band_table(bands_df, id_col, path, m["n_buckets"], "append")
+    _write_shingle_table(
+        df, text_col, id_col, path, m["n_buckets"], m["shingle_size"],
+        m["char_ngrams"], "append",
     )
 
 
@@ -1939,16 +1820,12 @@ def cross_dedup_stored(
     """
     m = spark.read.parquet(f"{path}/meta").first()
     new_df = spread(new_df.select(id_col, text_col))
-    sig_new = minhash_signatures(
-        new_df, text_col, id_col, m["num_hashes"], m["shingle_size"],
-        m["char_ngrams"], hash_family=m["hash_family"], bands=m["bands"],
-    )
-    bands_new = lsh_band_signatures(
-        sig_new, id_col, m["num_hashes"], m["bands"]
+    bands_new = _band_table(
+        new_df, text_col, id_col, **{k: m[k] for k in _SIG_PARAMS}
     ).select(
         F.col(id_col).alias("id_b"),
         F.col("band"),
-        F.pmod(F.xxhash64("band_sig"), F.lit(m["n_buckets"])).alias("bucket"),
+        _bucket(F.col("band_sig"), m["n_buckets"]).alias("bucket"),
         F.col("band_sig"),
     )
     stored_bands = spark.read.parquet(f"{path}/bands").select(
@@ -1970,9 +1847,7 @@ def cross_dedup_stored(
         .select(
             "id_a",
             "id_b",
-            F.pmod(F.xxhash64("id_a"), F.lit(m["n_buckets"])).alias(
-                "sbucket"
-            ),
+            _bucket(F.col("id_a"), m["n_buckets"]).alias("sbucket"),
         )
         .transform(materialize_lazy)
     )
@@ -1996,31 +1871,15 @@ def cross_dedup_stored(
         ),
         on=["sbucket", "id_a"],
     )
-    sh = _shingler(m["shingle_size"], m["char_ngrams"])
-    shset = F.array_distinct(sh(F.col(text_col)))
+    shset = _shingle_set(F.col(text_col), m["shingle_size"], m["char_ngrams"])
     b = new_df.select(
         F.col(id_col).alias("id_b"),
         shset.alias("__sb"),
-        F.size(shset).cast("long").alias("size_b"),
+        _set_size(shset).alias("size_b"),
     )
-    inter = F.size(F.array_intersect(F.col("__sa"), F.col("__sb"))).cast("long")
-    v = (
-        a.join(b, on="id_b")
-        .withColumn("inter", inter)
-        .select(
-            "id_a",
-            "id_b",
-            "inter",
-            "size_a",
-            "size_b",
-            (
-                F.round(
-                    F.col("inter")
-                    / (F.col("size_a") + F.col("size_b") - F.col("inter")),
-                    6,
-                )
-                + 0.0
-            ).alias("jaccard"),
+    v = _with_jaccard(
+        a.join(b, on="id_b").select(
+            "id_a", "id_b", _intersect_size("__sa", "__sb"), "size_a", "size_b"
         )
     )
     return v.where(F.col("jaccard") >= threshold)

@@ -1152,33 +1152,31 @@ def read_profile_bin(spark, path):
     and the raw DataSketches binaries (estimable with Spark's
     kll/theta/hll functions — heapify-compatible across versions).
 
-    Uses ``binaryFile`` + ``mapInPandas`` (Arrow-batched): each profile is
-    small by construction (O(columns × sketch constants)); the parallelism
-    unit is the file, which is the right grain for object-store layouts of
-    many profiles.
+    Uses ``binaryFile`` + ``mapInArrow``: each profile is small by
+    construction (O(columns × sketch constants)); the parallelism unit is
+    the file, which is the right grain for object-store layouts of many
+    profiles. Rows go through ``_read_table``, the Arrow builder
+    ``merge_profile_bins`` uses too.
     """
-    import pandas as pd
-
     files = spark.read.format("binaryFile").load(path)
 
     def parse(batches):
-        for pdf in batches:
+        for batch in batches:
             rows: list[tuple] = []
-            for path_, content in zip(pdf["path"], pdf["content"]):
-                for idx, msg in enumerate(iter_delimited(bytes(content))):
+            cols = batch.to_pydict()
+            for path_, content in zip(cols["path"], cols["content"]):
+                for idx, msg in enumerate(iter_delimited(content)):
                     rows.extend(_rows_of_profile(path_, idx, decode_dataset_profile(msg)))
-            cols = [s.split(" ")[0] for s in _READ_SCHEMA.split(", ")]
-            yield pd.DataFrame(rows, columns=cols)
+            yield from _read_table(rows).to_batches()
 
-    return files.select("path", "content").mapInPandas(parse, schema=_READ_SCHEMA)
+    return files.select("path", "content").mapInArrow(parse, schema=_READ_SCHEMA)
 
 
 def _read_table(rows: list[tuple]):
     """``_rows_of_profile`` rows as an Arrow table in ``_READ_SCHEMA``'s
     layout, which Spark takes as a JVM-side LocalRelation. Built in Arrow
     directly, not through a pandas frame, which would widen a long column
-    holding a NULL to float64. A NaN in a double column becomes NULL, as
-    in ``read_profile_bin``'s pandas batches."""
+    holding a NULL to float64. A NaN in a double column becomes NULL."""
     import pyarrow as pa
 
     types = {
@@ -1463,7 +1461,7 @@ def profile_messages_df(
     if include_sketches:
         from ..operators.approx import sketch_profile
 
-        rels["sk"] = sketch_profile(df, group_by=keys)
+        rels["sk"] = sketch_profile(df, group_by=keys, null_strings=null_strings)
         fields = set(rels["sk"].columns)
 
         def blob(c: str, kind: str) -> str:
@@ -1691,7 +1689,9 @@ def write_profile_bin(
     if include_sketches:
         from ..operators.approx import sketch_profile
 
-        for r in sketch_profile(df, group_by=keys).collect():
+        # kept on one line: a traced run attributes this job to the
+        # sketch pass by the text of its calling line
+        for r in sketch_profile(df, group_by=keys, null_strings=null_strings).collect():
             sketches[tuple(r[k] for k in keys)] = r.asDict()
 
     groups: dict[tuple, list[dict]] = {}

@@ -6,8 +6,9 @@ everything seen BEFORE it — the online regime of a crawl pipeline that
 must drop near-dups before they reach the training shard, without
 re-running a batch join over the whole corpus.
 
-Mechanics (the hashing is the batch pipeline's formula verbatim, so batch
-and stream agree on signatures):
+Mechanics (the hashing is the batch pipeline's own affine family,
+``operators.dedup._affine_parts`` / ``_affine_family``, so batch and stream
+agree on signatures):
 
 1. per doc: shingles → k minhashes → b band signatures. Minhashes fold
    as ``array_min`` over per-shingle hash ARRAYS (min over the multiset
@@ -47,7 +48,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..operators.dedup import _H2_BOUND, _shingler, lsh_band_signatures
+from ..operators.dedup import (
+    _affine_family,
+    _affine_parts,
+    _shingler,
+    lsh_band_signatures,
+)
 
 OUT_SCHEMA = "doc_id long, dup_of long, band int"
 _STATE_SCHEMA = "owner long"
@@ -117,28 +123,18 @@ def near_dup_flag_stream(
     possible trigger degenerates to a busy loop of empty batches, and
     ``processAllAvailable()`` (which waits for quiescence) never returns.
     """
-    shingler = _shingler(shingle_size, char_ngrams)
-    arr = shingler(F.col(text_col))
-
-    def h1(s):
-        return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
-
-    def h2(s):
-        return F.conv(F.substring(F.md5(s), 16, 15), 16, 10).cast("long") % _H2_BOUND
-
+    family = _affine_family(num_hashes)
+    arr = _shingler(shingle_size, char_ngrams)(F.col(text_col))
     hashed = stream_df.where(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("doc_id"),
-        F.transform(arr, h1).alias("__h1"),
-        F.transform(arr, h2).alias("__h2"),
+        F.transform(arr, lambda s: _affine_parts(s)[0]).alias("__h1"),
+        F.transform(arr, lambda s: _affine_parts(s)[1]).alias("__h2"),
     )
-    def affine(i: int):
-        return lambda a, b: a + F.lit(i) * b
-
     mh = hashed.select(
         "doc_id",
         *[
-            F.array_min(F.zip_with("__h1", "__h2", affine(i))).alias(f"mh{i}")
-            for i in range(num_hashes)
+            F.array_min(F.zip_with("__h1", "__h2", h)).alias(f"mh{i}")
+            for i, h in enumerate(family)
         ],
     )
     band_rows = lsh_band_signatures(mh, "doc_id", num_hashes, bands)

@@ -14,6 +14,7 @@ as batch, so streaming state stays bounded.
 
 from __future__ import annotations
 
+from collections import Counter
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
@@ -38,8 +39,10 @@ def profile_stream(
     """Windowed streaming profile atoms.
 
     Output: (window_start, window_end, group keys..., one wide atom column
-    set per profiled column). Use ``outputMode("update")`` with a mergeable
-    sink, or ``append`` after watermark expiry.
+    set per profiled column, named ``<column>_<metric>``). Use
+    ``outputMode("update")`` with a mergeable sink, or ``append`` after
+    watermark expiry. Raises ``ValueError`` when two output names coincide
+    (columns ``a`` and ``a_null`` both give ``a_null_count``).
     """
     excluded = set(group_by) | {time_column}
     profiled = [c for c in (columns or stream_df.columns) if c not in excluded]
@@ -48,6 +51,13 @@ def profile_stream(
         ColumnSql(i, c, schema[c], null_strings, coerce_strings=False)
         for i, c in enumerate(profiled)
     ]
+    names = Counter(
+        ["window_start", "window_end", *group_by]
+        + [f"{s.name}_{m}" for s in specs for m, _ in ATOM_METRICS]
+    )
+    dups = sorted(n for n, k in names.items() if k > 1)
+    if dups:
+        raise ValueError(f"profile_stream output names collide: {dups}")
     # the batch profile's own SQL fragments (plans.spark_sql), in its two
     # projection layers
     passed = [qcol(c) for c in (time_column, *group_by)]
