@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import warnings
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -768,69 +770,42 @@ def test_resolve_clusters_driver_tier_matches_loop(spark, monkeypatch):
     # the bounded driver tier (collected edges + Python propagation) must
     # be bit-identical to the distributed label loop — labels, survivor
     # flags, AND the rounds counter, including ghost-edge semantics and
-    # max_iters truncation on an unconverged chain
-    from whylogs_java_spark.operators.dedup import resolve_clusters
+    # max_iters truncation on an unconverged chain, which both tiers must
+    # report with a RuntimeWarning naming the round count
+    from whylogs_java_spark.operators import dedup
 
     cases = [
-        # (edges, nodes, max_iters)
+        # (edges, nodes, max_iters, converges)
         ([(1, 2), (2, 3), (3, 4), (4, 5), (8, 9), (8, 10), (9, 10)],
-         list(range(1, 13)), 20),
-        ([(5, 0)], [5], 10),                                   # ghost edge
-        ([(i, i + 1) for i in range(1, 30)], list(range(1, 31)), 4),  # truncated
+         list(range(1, 13)), 20, True),
+        ([(5, 0)], [5], 10, True),                             # ghost edge
+        ([(i, i + 1) for i in range(1, 30)], list(range(1, 31)), 4,
+         False),                                               # truncated
     ]
-    for edges, node_ids, mi in cases:
+    default_cap = dedup.CC_DRIVER_MAX_EDGES
+    for edges, node_ids, mi, converges in cases:
         pairs = spark.createDataFrame(edges, "id_a long, id_b long")
         nodes = spark.createDataFrame([(n,) for n in node_ids], "doc_id long")
-        s_loop: dict = {}
-        s_drv: dict = {}
-        monkeypatch.setenv("WHYLOGS_SPARK_CC_DRIVER_CAP", "0")
-        loop = sorted(map(tuple, resolve_clusters(
-            pairs, nodes, "doc_id", mi, stats=s_loop
-        ).collect()))
-        monkeypatch.setenv("WHYLOGS_SPARK_CC_DRIVER_CAP", "200000")
-        drv = sorted(map(tuple, resolve_clusters(
-            pairs, nodes, "doc_id", mi, stats=s_drv
-        ).collect()))
+        runs = []
+        for cap in (0, default_cap):
+            monkeypatch.setattr(dedup, "CC_DRIVER_MAX_EDGES", cap)
+            stats: dict = {}
+            with warnings.catch_warnings(record=True) as caught:
+                warnings.simplefilter("always")
+                rows = sorted(map(tuple, dedup.resolve_clusters(
+                    pairs, nodes, "doc_id", mi, stats=stats
+                ).collect()))
+            warned = [
+                str(w.message) for w in caught if "max_iters" in str(w.message)
+            ]
+            if converges:
+                assert warned == [], (edges, cap)
+            else:
+                assert len(warned) == 1 and f"after {mi} rounds" in warned[0], cap
+            runs.append((rows, stats["rounds"]))
+        (loop, r_loop), (drv, r_drv) = runs
         assert drv == loop, (edges, mi)
-        assert s_drv["rounds"] == s_loop["rounds"], (edges, mi)
-
-
-def test_resolve_clusters_star_matches_label(spark):
-    # the large-star/small-star engine must produce byte-identical output
-    # to the label engine on a mixed graph (chain + clique + singletons)
-    from whylogs_java_spark.operators.dedup import resolve_clusters
-
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5), (8, 9), (8, 10), (9, 10)],
-        "id_a long, id_b long",
-    )
-    nodes = spark.range(1, 13).select(F.col("id").alias("doc_id"))
-    label = sorted(map(tuple, resolve_clusters(pairs, nodes).collect()))
-    star = sorted(map(tuple, resolve_clusters(
-        pairs, nodes, algorithm="star"
-    ).collect()))
-    assert star == label
-
-
-def test_resolve_clusters_star_log_rounds_on_chain(spark):
-    # mega-component regression: a 200-node chain has diameter 200, so
-    # label propagation would need ~200 rounds; the star engine must
-    # converge in O(log n): ceil(log2(200)) = 8 rewiring rounds plus one
-    # final round that confirms the fixpoint (changed == 0)
-    from whylogs_java_spark.operators.dedup import resolve_clusters
-
-    n = 200
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, n)], "id_a long, id_b long"
-    )
-    nodes = spark.range(1, n + 1).select(F.col("id").alias("doc_id"))
-    stats: dict = {}
-    out = resolve_clusters(
-        pairs, nodes, max_iters=10, algorithm="star", stats=stats
-    ).collect()
-    assert stats["rounds"] <= 9, f"star engine took {stats['rounds']} rounds"
-    assert all(r["cluster_id"] == 1 for r in out)
-    assert [r["doc_id"] for r in out if r["is_survivor"]] == [1]
+        assert r_drv == r_loop, (edges, mi)
 
 
 def test_near_dup_clusters_end_to_end(spark):
@@ -963,19 +938,20 @@ def test_near_dup_pairs_honors_hash_family(spark):
     assert pairs and pairs <= candidates
 
 
-def test_resolve_clusters_star_ghost_endpoint_keeps_node_survivor(spark):
+def test_resolve_clusters_ghost_endpoint_keeps_node_survivor(spark, monkeypatch):
     # a pair endpoint absent from `nodes` must never become a cluster_id:
-    # the node's cluster re-canonicalizes onto a member node so every
-    # cluster keeps exactly one is_survivor row (label-engine parity)
-    from whylogs_java_spark.operators.dedup import resolve_clusters
+    # the ghost pair is dropped, so the node stays its own survivor in
+    # both tiers
+    from whylogs_java_spark.operators import dedup
 
     pairs = spark.createDataFrame([(5, 0)], ["id_a", "id_b"])
     nodes = spark.createDataFrame([(5,)], ["doc_id"])
-    for algo in ("label", "star"):
-        out = resolve_clusters(pairs, nodes, "doc_id", 10, algorithm=algo).collect()
-        assert len(out) == 1, algo
+    for cap in (0, dedup.CC_DRIVER_MAX_EDGES):
+        monkeypatch.setattr(dedup, "CC_DRIVER_MAX_EDGES", cap)
+        out = dedup.resolve_clusters(pairs, nodes, "doc_id", 10).collect()
+        assert len(out) == 1, cap
         r = out[0]
-        assert r["cluster_id"] == 5 and r["is_survivor"], algo
+        assert r["cluster_id"] == 5 and r["is_survivor"], cap
 
 
 def test_hyperplane_buckets_empty_vector_matches_fold_identity(spark):

@@ -482,24 +482,19 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_iters: int = 20,
-    algorithm: str = "label",
     assign: str = "auto",
 ) -> DataFrame:
     """End-to-end SemDeDup: cosine pairs within k-means clusters →
     connected components → (id, cluster_id, is_survivor). Keeping only
     ``is_survivor`` rows is the dedup pass; the components engine is
-    the text family's (``dedup.resolve_clusters`` — "label" for the
-    usual small dup cliques, "star" for mega-components)."""
+    the text family's (``dedup.resolve_clusters``)."""
     from .dedup import resolve_clusters
 
     pairs = semantic_dedup_pairs(
         embeddings, threshold, k=k, n_iter=n_iter,
         id_col=id_col, vec_col=vec_col, assign=assign,
     ).select("id_a", "id_b")
-    return resolve_clusters(
-        pairs, embeddings.select(id_col), id_col, max_iters,
-        algorithm=algorithm,
-    )
+    return resolve_clusters(pairs, embeddings.select(id_col), id_col, max_iters)
 
 
 def cluster_sizes(assignments: DataFrame) -> DataFrame:

@@ -25,7 +25,7 @@ rounds it.
 
 from __future__ import annotations
 
-import os
+import warnings
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -760,12 +760,18 @@ def hamming_distance(bits_a: Column, bits_b: Column) -> Column:
     )
 
 
+# The resolve_clusters tier choice: a pair list of at most this many edges
+# (after the ghost filter) is collected and propagated on the driver, a
+# larger one by the distributed label loop. Two ids per edge, so the cap
+# collects a few MB, the order of a broadcast-join build side.
+CC_DRIVER_MAX_EDGES = 200_000
+
+
 def resolve_clusters(
     pairs: DataFrame,
     nodes: DataFrame,
     id_col: str = "doc_id",
     max_iters: int = 20,
-    algorithm: str = "label",
     stats: dict | None = None,
 ) -> DataFrame:
     """Connected components over near-dup pairs: every node gets the
@@ -773,120 +779,104 @@ def resolve_clusters(
 
     A dedup pipeline needs survivor RESOLUTION, not just pairs: if A~B and
     B~C, all three form one cluster and a single survivor should be kept
-    even though (A, C) may never have been emitted as a pair. Precondition:
-    pair endpoints ⊆ ``nodes`` (always true when pairs derive from the
-    same corpus, as in ``near_dup_clusters``). A ghost endpoint outside
-    ``nodes`` is inert in the label engine (never seeded, never relays)
-    but acts as a bridge in the star engine — both engines still label
-    every node with a NODE id (star re-canonicalizes its raw minima onto
-    member nodes), but a ghost that CONNECTS two nodes merges their
-    clusters only under "star". Two interchangeable engines under the
-    precondition (identical output, same min-id semantics):
+    even though (A, C) may never have been emitted as a pair.
 
-    - ``algorithm="label"`` (default): min-label propagation as iterative
-      DataFrame joins — each round every node takes min(own label,
-      neighbors' labels): a join on the symmetric edge list +
-      groupBy(min), both shuffles on the node id. Converged when no label
-      changed (a driver-side count per round, same shape as the
-      reference's segmentation search loop); worst case ≈ graph-DIAMETER
-      rounds. Near-dup graphs are unions of small cliques (diameter 2-3),
-      so 3-4 rounds in practice and the cheapest per-round plan wins.
-    - ``algorithm="star"``: alternating large-star/small-star (Kiveris et
-      al., "Connected Components in MapReduce and Beyond") — each round
-      rewires every node toward the minimum of its neighborhood, halving
-      component height, so convergence is O(log diameter) rounds. The
-      100 TB remedy when one boilerplate mega-component (long chains, a
-      giant quotation web) would make diameter — and therefore the label
-      engine's round count — large. More shuffles per round, so it only
-      wins when diameter is big; pick it when near-dup pair counts hint
-      at a mega-cluster.
+    Ghost edges: a pair with an endpoint absent from ``nodes`` (a ghost)
+    is dropped before propagation, so it neither labels a node nor joins
+    two clusters, and every ``cluster_id`` is a node id. Pairs derived
+    from the same corpus, as in ``near_dup_clusters``, have none.
 
-    ``localCheckpoint`` severs the growing lineage each round in both
-    engines — the standard treatment for iterative DataFrame algorithms.
-    If ``stats`` is given, ``stats["rounds"]`` records how many
-    propagation rounds RAN (test / observability hook). Note: the label
-    engine batches TWO propagation steps per convergence count, so when
-    convergence lands on an odd step the counter reports one more round
-    than the minimal convergence round — it is a work counter, not the
-    graph-diameter bound; labels are identical either way.
+    The engine is synchronous min-label propagation: each round every
+    endpoint takes min(own label, neighbors' labels). Near-dup graphs are
+    unions of small cliques (diameter 2-3), so 3-4 rounds in practice;
+    the worst case is about the graph's diameter. Two propagation steps
+    run per convergence check ("the second step changed nothing" proves
+    the fixpoint), which halves the check jobs; so when convergence lands
+    on an odd step ``stats["rounds"]`` (if ``stats`` is given) counts one
+    more round than the minimal one. It is a work counter, not a diameter
+    bound. Isolated nodes never enter the loop: they rejoin as their own
+    singleton survivors in the final projection.
 
-    Label-engine pair lists at or under ``WHYLOGS_SPARK_CC_DRIVER_CAP``
-    edges (default 200k — broadcast-sized) take a DRIVER TIER instead of
-    the distributed loop: the collected edge list is propagated in a
-    Python loop that replays the label engine step for step (seeding,
-    ghost semantics, two-step batching, ``max_iters`` truncation, the
-    ``rounds`` counter), and the labels rejoin the plan as a broadcast
-    ``literal_df``. Output is bit-identical on every graph; only the
-    number of driver actions changes (guide §5).
+    The ghost filter, the lazy checkpoint and the edge count run as one
+    job; the count picks the tier, with no option to set:
+
+    - at most ``CC_DRIVER_MAX_EDGES`` edges: the collected pair list is
+      propagated in a Python loop on the driver and the labels rejoin the
+      plan as a broadcast ``literal_df``;
+    - above it: the same propagation as iterative DataFrame joins (a
+      join on the symmetric edge list + groupBy(min) per step, a
+      ``localCheckpoint`` and a changed-label count per check).
+
+    Both tiers give identical labels and ``rounds``, ``max_iters``
+    truncation included. When ``max_iters`` stops propagation with labels
+    still changing, the result may split a component over several
+    ``cluster_id``s and keep more than one survivor in it, and a
+    ``RuntimeWarning`` names the round count (a run whose last allowed
+    step first reaches the fixpoint warns too: its check cannot tell).
 
     Output: (id_col, cluster_id, is_survivor) — survivor = the cluster's
     minimum id, the same min-id rule as ``exact_dedup``.
     """
-    if algorithm not in ("label", "star"):
-        raise ValueError(f"unknown algorithm {algorithm!r}: use 'label' or 'star'")
-    if algorithm == "star":
-        # Materialize the pair list ONCE before iterating: `edges` is
-        # consumed by a join in every rewiring round, and without this
-        # the entire upstream pipeline (for near-dup input, the full
-        # MinHash-LSH + verification pass) would re-execute per round.
-        pairs = pairs.transform(_materialize)
-        return _resolve_clusters_star(pairs, nodes, id_col, max_iters, stats)
-    # LAZY checkpoint + count fusion (guide §5): the count below is the
-    # first full-scan action, so it both materializes the pair pipeline
-    # and sizes the graph in ONE job instead of an eager-checkpoint job
-    # plus a count job.
-    pairs = pairs.transform(materialize_lazy)
-    n_pairs = pairs.count()
-    if n_pairs <= _cc_driver_cap():
-        # DRIVER TIER — the broadcast-side analog for tiny dup graphs
-        # (guide §3.1/§5): a pair list this small is broadcast-sized, and
-        # a single driver pass over it is cheaper than even one
-        # distributed propagation round (each round = 2 shuffling joins +
-        # a checkpoint + a convergence count) on ANY cluster. The Python
-        # loop below replays the label engine's synchronous min-label
-        # propagation step for step — same touched-node seeding, same
-        # ghost-edge semantics, same two-steps-per-convergence-check
-        # batching, same ``max_iters`` truncation, same ``rounds``
-        # counter — so labels (and ``stats``) are bit-identical to the
-        # distributed loop. Labels return to the plan as a broadcastable
-        # ``literal_df`` LocalRelation. Cap via
-        # ``WHYLOGS_SPARK_CC_DRIVER_CAP`` (edges; default 200k ≈ a few MB
-        # collected — the same order as a broadcast-join build side).
-        return _resolve_clusters_driver(pairs, nodes, id_col, max_iters, stats)
+    id_type = nodes.schema[id_col].dataType
+    node_ids = nodes.select(F.col(id_col).alias("id"))
+    # Lazy checkpoint + count fusion: the count is the first
+    # full-scan action, so it runs the pair pipeline, the ghost filter
+    # and the sizing in ONE job. After the semi-joins every endpoint is a
+    # node value, so the cast to the node type is lossless.
+    pairs = (
+        pairs.join(node_ids.withColumnRenamed("id", "id_a"), "id_a", "left_semi")
+        .join(node_ids.withColumnRenamed("id", "id_b"), "id_b", "left_semi")
+        .select(F.col("id_a").cast(id_type), F.col("id_b").cast(id_type))
+        .transform(materialize_lazy)
+    )
+    if pairs.count() <= CC_DRIVER_MAX_EDGES:
+        labels, rounds, converged = _driver_labels(pairs, max_iters)
+    else:
+        labels, rounds, converged = _loop_labels(pairs, max_iters)
+    if stats is not None:
+        stats["rounds"] = rounds
+    if not converged:
+        warnings.warn(
+            f"resolve_clusters hit max_iters after {rounds} rounds with "
+            "labels still changing: some cluster_ids may not be component "
+            "minima; raise max_iters",
+            RuntimeWarning,
+            stacklevel=2,
+        )
+    label = F.coalesce("label", "id")
+    return node_ids.join(labels, on="id", how="left").select(
+        F.col("id").alias(id_col),
+        label.alias("cluster_id"),
+        (label == F.col("id")).alias("is_survivor"),
+    )
+
+
+def _loop_labels(
+    pairs: DataFrame, max_iters: int
+) -> tuple[DataFrame, int, bool]:
+    """The distributed tier: (labels (id, label), rounds, converged)."""
     edges = pairs.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     ).unionByName(
         pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
     )
-    # Iterate over PAIR-ENDPOINT nodes only, never the corpus: an
-    # isolated node's label cannot change, so carrying all N corpus rows
-    # through every propagation round is pure shuffle waste — at 100 TB
-    # the per-round tables must be bounded by 2·|pairs| (dup graphs are
-    # a small fraction of the corpus), not by N. The left_semi seed also
-    # keeps ghost endpoints (pairs whose id is absent from ``nodes``)
-    # out of the label table — never seeded, never relayed — preserving
-    # the documented label-engine ghost semantics. Isolated nodes rejoin
-    # as their own singleton survivors in the final projection.
-    touched = nodes.select(F.col(id_col).alias("id")).join(
-        edges.select(F.col("src").alias("id")).distinct(),
-        on="id",
-        how="left_semi",
+    # Iterate over pair endpoints only, never the corpus: at 100 TB the
+    # per-round tables must be bounded by 2·|pairs|, not by N.
+    labels = (
+        edges.select(F.col("src").alias("id"))
+        .distinct()
+        .select("id", F.col("id").alias("label"))
     )
-    labels = touched.select("id", F.col("id").alias("label"))
     rounds = 0
     # TWO propagation steps per materialize + ONE convergence count:
-    # propagation is deterministic and idempotent at the fixpoint, so
-    # "the second step changed nothing" proves convergence — the batch
-    # count compares step 2 against step 1 (column __mid), which exits
-    # after a single batch on the typical small-clique dup graph
-    # (diameter 2-3). Fixpoint and output are identical to the
-    # round-per-count loop, but the driver pays roughly half the
-    # checkpoint + count jobs (per-round ACTION cost, not shuffle
-    # volume, dominates these loops at any scale — guide §5).
+    # propagation is deterministic and idempotent at the fixpoint, so the
+    # batch count compares step 2 against step 1 (column __mid). The
+    # driver pays roughly half the checkpoint + count jobs of a
+    # round-per-count loop (per-round ACTION cost, not shuffle volume,
+    # dominates these loops at any scale).
     while rounds < max_iters:
-        steps = min(2, max_iters - rounds)
-        cur = labels.select("id", "label", F.col("label").alias("__mid"))
-        for _ in range(steps):
+        cur = labels
+        for _ in range(min(2, max_iters - rounds)):
             rounds += 1
             # __mid trails the label by exactly one step: after the
             # loop it holds the second-to-last step's labels
@@ -908,197 +898,42 @@ def resolve_clusters(
         changed = new.where(F.col("label") != F.col("__mid")).count()
         labels = new.drop("__mid")
         if changed == 0:
-            break
-    if stats is not None:
-        stats["rounds"] = rounds
-    return (
-        nodes.select(F.col(id_col).alias("id"))
-        .join(labels, on="id", how="left")
-        .select(
-            F.col("id").alias(id_col),
-            F.coalesce("label", "id").alias("cluster_id"),
-            (F.coalesce("label", "id") == F.col("id")).alias("is_survivor"),
-        )
-    )
+            return labels, rounds, True
+    return labels, rounds, False
 
 
-def _cc_driver_cap() -> int:
-    """Edge-count bound for the resolve_clusters driver tier. Pair lists
-    under the cap are broadcast-sized (two ids per row); above it the
-    distributed label loop runs. Parameterized for cluster ops — a fat
-    driver can raise it, a thin one lower it."""
-    try:
-        return int(os.environ.get("WHYLOGS_SPARK_CC_DRIVER_CAP", "200000"))
-    except ValueError:
-        return 200_000
-
-
-def _resolve_clusters_driver(
-    pairs: DataFrame,
-    nodes: DataFrame,
-    id_col: str,
-    max_iters: int,
-    stats: dict | None,
-) -> DataFrame:
-    """Label-engine twin over a collected (bounded) pair list.
-
-    Replays the distributed loop exactly: labels seed from
-    nodes ∩ pair-endpoints, edges with a ghost endpoint never relay,
-    propagation is synchronous min-label over the previous step's
-    labels, TWO steps run per convergence check, and ``max_iters``
-    truncates identically — so output labels and ``stats["rounds"]``
-    match the loop bit for bit on every graph.
-    """
-    spark = nodes.sparkSession
-    id_type = nodes.schema[id_col].dataType.simpleString()
-    pdf = pairs.select("id_a", "id_b").toPandas()
-    edge_a, edge_b = pdf["id_a"].tolist(), pdf["id_b"].tolist()
-    eps = sorted(set(edge_a) | set(edge_b))
-    ep_df = literal_df(spark, [(e,) for e in eps], f"id {id_type}")
-    touched = {
-        r[0]
-        for r in nodes.select(F.col(id_col).alias("id"))
-        .join(ep_df, on="id", how="left_semi")
-        .collect()
-    }
+def _driver_labels(
+    pairs: DataFrame, max_iters: int
+) -> tuple[DataFrame, int, bool]:
+    """The driver tier: ``_loop_labels`` replayed step for step over the
+    collected pair list (same seeding, two steps per check, same
+    ``max_iters`` truncation), so labels and rounds match it bit for bit."""
+    pdf = pairs.toPandas()
     adj: dict = {}
-    for a, b in zip(edge_a, edge_b):
-        if a in touched and b in touched and a != b:
-            adj.setdefault(a, set()).add(b)
-            adj.setdefault(b, set()).add(a)
-    labels = {i: i for i in touched}
-    rounds = 0
+    for a, b in zip(pdf["id_a"].tolist(), pdf["id_b"].tolist()):
+        adj.setdefault(a, set())
+        adj.setdefault(b, set())
+        if a != b:
+            adj[a].add(b)
+            adj[b].add(a)
+    labels = {v: v for v in adj}
+    rounds, converged = 0, False
     while rounds < max_iters:
-        steps = min(2, max_iters - rounds)
-        prev = labels
-        for _ in range(steps):
+        for _ in range(min(2, max_iters - rounds)):
             rounds += 1
             prev = labels
-            new = dict(prev)
-            for v, nbrs in adj.items():
-                m = min(prev[u] for u in nbrs)
-                if m < new[v]:
-                    new[v] = m
-            labels = new
-        if all(labels[v] == prev[v] for v in labels):
+            labels = {
+                v: min([prev[v], *(prev[u] for u in nbrs)])
+                for v, nbrs in adj.items()
+            }
+        if labels == prev:
+            converged = True
             break
-    if stats is not None:
-        stats["rounds"] = rounds
+    t = pairs.schema["id_a"].dataType.simpleString()
     lab_df = literal_df(
-        spark, sorted(labels.items()), f"id {id_type}, label {id_type}"
+        pairs.sparkSession, sorted(labels.items()), f"id {t}, label {t}"
     )
-    return (
-        nodes.select(F.col(id_col).alias("id"))
-        .join(lab_df, on="id", how="left")
-        .select(
-            F.col("id").alias(id_col),
-            F.coalesce("label", "id").alias("cluster_id"),
-            (F.coalesce("label", "id") == F.col("id")).alias("is_survivor"),
-        )
-    )
-
-
-def _resolve_clusters_star(
-    pairs: DataFrame,
-    nodes: DataFrame,
-    id_col: str,
-    max_iters: int,
-    stats: dict | None,
-) -> DataFrame:
-    """Alternating large-star/small-star connected components.
-
-    One round = large-star then small-star, each a groupBy(min) + join on
-    the node id over the current edge list:
-
-    - large-star(u): with m = min(neighborhood(u) ∪ {u}), rewire every
-      STRICTLY LARGER neighbor v > u to m — emit (v, m);
-    - small-star(u): direct edges toward the smaller endpoint, and with
-      m = min(smaller-neighbors(u) ∪ {u}) rewire u and all those
-      neighbors to m — emit (u, m) and (v, m).
-
-    Both preserve connectivity and never increase any node's minimum
-    reachable id; together they at least halve the height of each
-    component per round, giving O(log diameter) convergence (Kiveris et
-    al. 2014). Convergence = the directed edge set stops changing (an
-    exceptAll count — a driver-side scalar per round, like the label
-    engine's changed-count). At the fixpoint every non-minimum node holds
-    exactly the edge (node, component-min): labels fall out of one final
-    left join; isolated nodes label themselves.
-    """
-    # Directed representation (bigger -> smaller), deduplicated.
-    e = (
-        pairs.select(
-            F.greatest("id_a", "id_b").alias("u"),
-            F.least("id_a", "id_b").alias("v"),
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .transform(_materialize)
-    )
-    rounds = 0
-    for _ in range(max_iters):
-        rounds += 1
-        # -- large-star: per node, min over full (symmetric) neighborhood.
-        sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = (
-            sym.groupBy("u")
-            .agg(F.min("v").alias("mn"))
-            .select("u", F.least("mn", "u").alias("m"))
-        )
-        large = (
-            sym.join(mins, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # -- small-star: edges already point big->small after large-star.
-        d = large.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        smins = d.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
-            d.join(smins, "u")
-            .select(
-                F.explode(
-                    F.array(
-                        F.struct(F.col("u").alias("a"), F.col("m").alias("b")),
-                        F.struct(F.col("v").alias("a"), F.col("m").alias("b")),
-                    )
-                ).alias("p")
-            )
-            .select(F.col("p.a").alias("u"), F.col("p.b").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-            .transform(_materialize)
-        )
-        changed = small.exceptAll(e).count() + e.exceptAll(small).count()
-        e = small
-        if changed == 0:
-            break
-    if stats is not None:
-        stats["rounds"] = rounds
-    # Fixpoint edges are (node, component_min); min() guards the
-    # not-fully-converged max_iters cutoff.
-    final = e.groupBy("u").agg(F.min("v").alias("label"))
-    labeled = (
-        nodes.select(F.col(id_col).alias("id"))
-        .join(final.withColumnRenamed("u", "id"), on="id", how="left")
-        .select(F.col("id"), F.coalesce("label", "id").alias("__raw"))
-    )
-    # Re-canonicalize onto NODE ids: a pair endpoint absent from `nodes`
-    # can be the raw component minimum (the label engine never lets a
-    # non-node win because labels seed from nodes), which would leave a
-    # cluster with no is_survivor row. One tiny agg over the O(nodes)
-    # label table maps every raw label to its minimum MEMBER node —
-    # an identity transform whenever the precondition (pair endpoints
-    # ⊆ nodes) holds.
-    canon = labeled.groupBy("__raw").agg(F.min("id").alias("cluster_id"))
-    return labeled.join(canon, "__raw").select(
-        F.col("id").alias(id_col),
-        F.col("cluster_id"),
-        (F.col("id") == F.col("cluster_id")).alias("is_survivor"),
-    )
+    return lab_df, rounds, converged
 
 
 def near_dup_clusters(
@@ -1111,23 +946,18 @@ def near_dup_clusters(
     shingle_size: int = 3,
     char_ngrams: bool = False,
     max_iters: int = 20,
-    algorithm: str = "label",
     hash_family: str = "affine",
 ) -> DataFrame:
     """End-to-end near-dup resolution: MinHash-LSH verified pairs ->
-    connected components -> (id, cluster_id, is_survivor). Keeping only
-    ``is_survivor`` rows is the full dedup pass a training-data pipeline
-    runs. ``algorithm`` picks the components engine (see
-    ``resolve_clusters``): "label" for the usual small-clique dup graphs,
-    "star" when a mega-component is expected."""
+    connected components (``resolve_clusters``) -> (id, cluster_id,
+    is_survivor). Keeping only ``is_survivor`` rows is the full dedup pass
+    a training-data pipeline runs."""
     pairs = near_dup_pairs(
         df, text_col, id_col, threshold=threshold, num_hashes=num_hashes,
         bands=bands, shingle_size=shingle_size, char_ngrams=char_ngrams,
         hash_family=hash_family,
     ).select("id_a", "id_b")
-    return resolve_clusters(
-        pairs, df.select(id_col), id_col, max_iters, algorithm=algorithm
-    )
+    return resolve_clusters(pairs, df.select(id_col), id_col, max_iters)
 
 
 def shingle_candidate_pairs(

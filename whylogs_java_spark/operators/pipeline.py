@@ -16,17 +16,14 @@ pass a real pre-training pipeline runs over a raw corpus:
                                 train/val/test)
       → manifest               (doc_id, split)
 
-Composition is DataFrame lineage with two materialized stage boundaries
-by default (``materialize=True``): the exact-dedup survivor corpus and
-the near-dup survivor corpus each feed multiple downstream branches, so
-they are eagerly ``localCheckpoint``-ed — the single-node analog of
-staging to parquet between pipeline phases — which means CONSTRUCTING
-the manifest runs those two stages as Spark jobs. Pass
-``materialize=False`` for pure lazy lineage (Catalyst then sees the
-whole plan and prunes/pushes across stage boundaries, at the cost of
-re-deriving the shared corpus per branch). Either way, every decision
-is deterministic (md5 keys, min-id survivors, exact filters), so the
-WHOLE pipeline output is oracle-checkable end to end, not just stage by
+Composition is DataFrame lineage with materialized stage boundaries:
+the exact-dedup survivor corpus and the near-dup survivor corpus each
+feed multiple downstream branches, so they are lazily
+``localCheckpoint``-ed — the single-node analog of staging to parquet
+between pipeline phases — and each stage runs once, as part of the
+first job that reads it, instead of once per branch. Every decision is
+deterministic (md5 keys, min-id survivors, exact filters), so the WHOLE
+pipeline output is oracle-checkable end to end, not just stage by
 stage.
 """
 
@@ -63,7 +60,6 @@ def training_manifest(
     max_boilerplate_fraction: float | None = None,
     boiler_seg_words: int = 10,
     boiler_df_threshold: int = 3,
-    materialize: bool = True,
 ) -> DataFrame:
     """Run the full cleaning pipeline; return the manifest (id, split).
 
@@ -81,22 +77,16 @@ def training_manifest(
     wholesale.
     """
     src = docs.select(id_col, text_col)
-    s1 = exact_dedup(src, text_col, id_col)
-    if materialize:
-        # s1 feeds three consumers (the near-dup signature pipeline, the
-        # survivor semi-join, and decontamination); without a stage
-        # boundary each branch re-derives it from the raw scan + content
-        # -hash shuffle. localCheckpoint is the single-node analog of the
-        # parquet staging a cluster pipeline would do between phases —
-        # set materialize=False to keep pure lineage (e.g. for plan
-        # audits or when the input is already a materialized table).
-        s1 = s1.transform(_materialize_lazy)
+    # s1 feeds three consumers (the near-dup signature pipeline, the
+    # survivor semi-join, and decontamination); without a stage boundary
+    # each branch re-derives it from the raw scan + content-hash shuffle.
+    # localCheckpoint is the single-node analog of the parquet staging a
+    # cluster pipeline would do between phases.
+    s1 = exact_dedup(src, text_col, id_col).transform(_materialize_lazy)
     survivors = near_dup_clusters(
         s1, text_col, id_col, threshold=near_threshold
     ).where(F.col("is_survivor")).select(id_col)
-    s2 = s1.join(survivors, id_col, "left_semi")
-    if materialize:
-        s2 = s2.transform(_materialize_lazy)
+    s2 = s1.join(survivors, id_col, "left_semi").transform(_materialize_lazy)
     clean = decontaminate(s2, text_col, id_col, eval_df, n=ngram_n).where(
         ~F.col("contaminated")
     ).select(id_col)
@@ -134,7 +124,6 @@ def training_manifest_v2(
         ("val", 0.1),
         ("test", 0.1),
     ),
-    materialize: bool = True,
 ) -> DataFrame:
     """The round-9 pipeline composition — every stage a trained or
     corpus-statistical operator rather than a fixed heuristic:
@@ -168,15 +157,11 @@ def training_manifest_v2(
     base = docs.select(
         F.col(id_col), F.col(text_col), label.alias("__lbl")
     )
-    s1 = exact_dedup(base, text_col, id_col)
-    if materialize:
-        s1 = s1.transform(_materialize_lazy)
+    s1 = exact_dedup(base, text_col, id_col).transform(_materialize_lazy)
     keep_span = duplicate_spans(
         s1, text_col, id_col, gram_words=span_gram
     ).where(F.col("dup_fraction") <= max_dup_fraction).select(id_col)
-    s2 = s1.join(keep_span, id_col, "left_semi")
-    if materialize:
-        s2 = s2.transform(_materialize_lazy)
+    s2 = s1.join(keep_span, id_col, "left_semi").transform(_materialize_lazy)
     scored = quality_filter(
         s2, text_col, id_col, F.col("__lbl"),
         n_iter=clf_iter, threshold=clf_threshold,
@@ -213,7 +198,6 @@ def leakage_safe_splits(
     shingle_size: int = 3,
     char_ngrams: bool = False,
     salt: str = "",
-    algorithm: str = "label",
 ) -> DataFrame:
     """Train/val/test assignment with near-duplicates held together.
 
@@ -242,7 +226,6 @@ def leakage_safe_splits(
     clusters = near_dup_clusters(
         df, text_col, id_col, threshold=threshold, num_hashes=num_hashes,
         bands=bands, shingle_size=shingle_size, char_ngrams=char_ngrams,
-        algorithm=algorithm,
     )
     return assign_splits(clusters, "cluster_id", splits, salt=salt)
 
@@ -264,7 +247,6 @@ def training_manifest_v3(
     shingle_size: int = 3,
     context_len: int = 512,
     sep_tokens: int = 1,
-    materialize: bool = True,
 ) -> DataFrame:
     """Composed v3 pipeline — the round-10 operators end to end, with a
     PHYSICAL LAYOUT as the deliverable:
@@ -287,18 +269,16 @@ def training_manifest_v3(
     Scale: the gate is scan-side; the split is the dedup pass the
     pipeline runs anyway; packing adds one window exchange on the
     3-value split key (shard-then-pack applies within splits at corpus
-    scale — see ``text.pack_assign``). ``materialize=True`` severs
-    lineage at the blocklist-survivor corpus, which feeds both the
-    cluster pass and the final pack join.
+    scale — see ``text.pack_assign``). The blocklist-survivor corpus is
+    lazily checkpointed, since it feeds both the cluster pass and the
+    final pack join.
     """
     from .text import blocklist_filter, pack_assign
 
     bl = blocklist_filter(df, text_col, id_col, tuple(blocked_terms))
     keep = df.join(
         bl.where(~F.col("blocked")).select(id_col), id_col, "left_semi"
-    )
-    if materialize:
-        keep = _materialize_lazy(keep)
+    ).transform(_materialize_lazy)
     sp = leakage_safe_splits(
         keep, text_col, id_col, splits, threshold=threshold,
         num_hashes=num_hashes, bands=bands, shingle_size=shingle_size,
@@ -321,7 +301,6 @@ def _ccnet_tier_gate(
     top_bigrams: int,
     order: int = 2,
     top_trigrams: int = 16384,
-    materialize: bool = True,
 ) -> DataFrame:
     """The v4/v5 CCNet tier gate: LM-score the cleaned corpus, assign
     per-language exact terciles, drop ``drop_tiers``.
@@ -357,9 +336,7 @@ def _ccnet_tier_gate(
             vocab_size=vocab_size, top_bigrams=top_bigrams, **kwargs,
         ).select(F.col(id_col), "perplexity"),
         id_col,
-    )
-    if materialize:
-        scored = _materialize_lazy(scored)
+    ).transform(_materialize_lazy)
     cutdf = score_cutoffs(scored, "perplexity", stratum_col=lang_col)
     px = F.col("perplexity")
     bucket = (
@@ -393,7 +370,6 @@ def training_manifest_v4(
     top_bigrams: int = 2048,
     drop_tiers: Sequence[str] = ("tail",),
     cap: int = 15,
-    materialize: bool = True,
 ) -> DataFrame:
     """Composed v4 pipeline — the round-12 operators end to end:
 
@@ -421,8 +397,8 @@ def training_manifest_v4(
     Scale: the decontam pass is the broadcast-digest scan; LM state is
     bounded/broadcast; the tier gate is an O(languages) cutoff
     broadcast; the quota is one WindowGroupLimit exchange on the source
-    key. ``materialize`` severs lineage at the cleaned corpus (it feeds
-    the LM build twice and the scoring pass).
+    key. The cleaned corpus is lazily checkpointed (it feeds the LM build
+    twice and the scoring pass).
     """
     from .decontam import decontaminate_spans
     from .sampling import source_cap
@@ -440,13 +416,11 @@ def training_manifest_v4(
             ),
             id_col,
         )
+        .transform(_materialize_lazy)
     )
-    if materialize:
-        corpus = _materialize_lazy(corpus)
     kept = _ccnet_tier_gate(
         corpus, id_col, lang_col, source_col, drop_tiers,
         vocab_size=vocab_size, top_bigrams=top_bigrams,
-        materialize=materialize,
     )
     capped = source_cap(kept, id_col, source_col, cap, "__q")
     return capped.select(
@@ -475,7 +449,6 @@ def training_manifest_v5(
     drop_tiers: Sequence[str] = ("tail",),
     cap: int = 15,
     token_budget: int = 8000,
-    materialize: bool = True,
 ) -> DataFrame:
     """Composed v5 pipeline — the round-13 operators end to end:
 
@@ -525,13 +498,12 @@ def training_manifest_v5(
             ),
             id_col,
         )
+        .transform(_materialize_lazy)
     )
-    if materialize:
-        corpus = _materialize_lazy(corpus)
     kept = _ccnet_tier_gate(
         corpus, id_col, lang_col, source_col, drop_tiers,
         vocab_size=vocab_size, top_bigrams=top_bigrams,
-        order=3, top_trigrams=top_trigrams, materialize=materialize,
+        order=3, top_trigrams=top_trigrams,
     )
     capped = source_cap(kept, id_col, source_col, cap, "__q").select(
         F.col(id_col),

@@ -98,6 +98,12 @@ def _band_owner_factory(ttl_ms: int | None):
     return fn
 
 
+def _affine_struct(shingle):
+    """Both affine parts of one shingle, from one ``transform`` pass."""
+    h1, h2 = _affine_parts(shingle)
+    return F.struct(h1.alias("h1"), h2.alias("h2"))
+
+
 def near_dup_flag_stream(
     stream_df: DataFrame,
     text_col: str,
@@ -127,13 +133,14 @@ def near_dup_flag_stream(
     arr = _shingler(shingle_size, char_ngrams)(F.col(text_col))
     hashed = stream_df.where(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("doc_id"),
-        F.transform(arr, lambda s: _affine_parts(s)[0]).alias("__h1"),
-        F.transform(arr, lambda s: _affine_parts(s)[1]).alias("__h2"),
+        F.transform(arr, _affine_struct).alias("__h"),
     )
     mh = hashed.select(
         "doc_id",
         *[
-            F.array_min(F.zip_with("__h1", "__h2", h)).alias(f"mh{i}")
+            F.array_min(
+                F.transform("__h", lambda p: h(p["h1"], p["h2"]))
+            ).alias(f"mh{i}")
             for i, h in enumerate(family)
         ],
     )
