@@ -30,7 +30,7 @@ from whylogs_java_spark.functions.metrics import numeric_atom_sql, numeric_final
 from whylogs_java_spark.operators.dedup import exact_duplicate_groups, near_dup_pairs
 from whylogs_java_spark.operators.model import confusion_matrix, regression_metrics
 from whylogs_java_spark.operators.segmentation import column_entropy
-from whylogs_java_spark.operators.similarity import cosine_topk_exact
+from whylogs_java_spark.operators.similarity import cosine_topk
 from whylogs_java_spark.operators.summary import (
     frequent_items,
     histogram,
@@ -409,9 +409,7 @@ def q_dedup_simhash_pairs(spark, sf_dir):
 
 
 def q_similarity_topk(spark, sf_dir):
-    return cosine_topk_exact(
-        _t(spark, sf_dir, "embeddings"), SIM_QUERY_IDS, k=5
-    )
+    return cosine_topk(_t(spark, sf_dir, "embeddings"), SIM_QUERY_IDS, k=5)
 
 
 def q_langid_documents(spark, sf_dir):
@@ -502,7 +500,7 @@ def q_hybrid_search_documents(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     qdf = _bm25_query_df(spark)
     text_side = bm25_topk(d, qdf, "text", "doc_id", k=10)
-    vec_side = cosine_topk_exact(
+    vec_side = cosine_topk(
         _t(spark, sf_dir, "embeddings"), [1, 2, 3, 4], k=10
     ).select("query_id", "rank", F.col("neighbor_id").alias("doc_id"))
     return rrf_fuse(text_side, vec_side, "doc_id", k0=60, k=10)
@@ -617,7 +615,7 @@ def q_dedup_embedding_bucketed(spark, sf_dir):
     """Scale-path embedding near-dup: BANDED hyperplane-bucket candidates
     (OR-construction — 2 independent 4-plane signatures, a pair is a
     candidate if it collides in either band; equi-join per band, no cross
-    product), exact order-deterministic fold cosine on the candidates.
+    product), exact strict-fold cosine on the candidates.
     Same corpus as
     dedup_embedding, so the output is the subset of its pairs whose members
     collide in ≥1 band."""
@@ -630,13 +628,13 @@ def q_dedup_embedding_bucketed(spark, sf_dir):
 
 
 def q_dedup_embedding_fast(spark, sf_dir):
-    """Production-tier bucketed embedding dedup: banded double-fold
-    signatures + zip_with dots, no dim explode, plus the hot-bucket cap
-    (buckets >2000 vectors split by 4 extra hyperplanes — bounded per-task
-    pair generation on clustered corpora). Fully oracle-checked: folds
-    evaluate strictly left-to-right, so the DuckDB list_reduce twin
-    (including the unrolled window-count cap refinement) reproduces every
-    bucket bit and cosine bit-for-bit."""
+    """Bucketed embedding dedup with the hot-bucket cap: the banded
+    signatures of dedup_embedding_bucketed, plus buckets >2000 vectors
+    split by 4 extra hyperplanes — bounded per-task pair generation on
+    clustered corpora. Fully oracle-checked: folds evaluate strictly
+    left-to-right, so the DuckDB list_reduce twin (including the
+    unrolled window-count cap refinement) reproduces every bucket bit
+    and cosine bit-for-bit."""
     from whylogs_java_spark.operators.similarity import cosine_pairs_bucketed
 
     emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -645,7 +643,6 @@ def q_dedup_embedding_fast(spark, sf_dir):
         threshold=0.9,
         planes=4,
         bands=2,
-        arithmetic="double",
         bucket_cap=2000,
     )
 
@@ -780,21 +777,6 @@ def q_similarity_pq(spark, sf_dir):
     )
 
 
-def q_similarity_ivf_int8(spark, sf_dir):
-    """IVF × int8 affine quantization (PQ-lite): inverted lists score
-    candidates on vectors reconstructed from 8-bit codes (the 100 TB
-    memory story — 8 bits/dim in the index instead of 64), then the
-    rerank-best survivors per query are re-scored exactly on doubles.
-    Floor-exact codes + md5 centroid ranks + strict fold cosines keep
-    the whole output hash-checkable against the DuckDB replay."""
-    from whylogs_java_spark.operators.similarity import ivf_topk_quantized
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return ivf_topk_quantized(
-        emb, list(range(20)), k=10, n_centroids=16, nprobe=4, rerank=30
-    )
-
-
 def q_similarity_lsh(spark, sf_dir):
     """LSH-bucketed ANN with hamming-1 multi-probe. Fully oracle-checked:
     projection signs come from strict left-to-right double folds, which
@@ -810,7 +792,7 @@ def q_similarity_lsh(spark, sf_dir):
 
 def q_ann_recall_embeddings(spark, sf_dir):
     """ANN recall dashboard over the oracle-deterministic tier family
-    (lsh / ivf_md5 / ivf_int8 / pq / rp vs brute-force exact top-10 on query
+    (lsh / ivf_md5 / pq / rp vs brute-force exact top-10 on query
     ids 0..19): recall@k and mean rank displacement per tier, the table
     a pipeline tunes nprobe/planes/m against. Every ingredient is
     md5-sampled + strict-fold scored, so the recall NUMBERS themselves
@@ -4219,7 +4201,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_recall_embeddings": q_ann_recall_embeddings,
         "knn_eval_ivf_embeddings": q_knn_eval_ivf_embeddings,
         "quantize_embeddings": q_quantize_embeddings,
-        "similarity_ivf_int8": q_similarity_ivf_int8,
         "cluster_embeddings": q_cluster_embeddings,
         "dedup_containment_fragment": q_dedup_containment_fragment,
         "dedup_char_ngram": q_dedup_char_ngram,
@@ -5325,111 +5306,6 @@ def _similarity_ivf_kmeans_oracle(
     )
     SELECT query_id, neighbor_id, ROUND(cosine, 6) + 0.0 AS cosine, rank
     FROM rankedq WHERE rank <= {k}
-    """
-
-
-def _similarity_ivf_quantized_oracle(
-    k: int = 10,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    rerank: int = 30,
-    n_queries: int = 20,
-    bits: int = 8,
-) -> str:
-    """DuckDB twin of ivf_topk_quantized: per-dim affine census, floor
-    -exact int8 codes, candidate scores on reconstructed vectors (query
-    side exact — asymmetric), rerank window, exact refine."""
-    ids = ", ".join(str(i) for i in range(n_queries))
-    levels = (1 << bits) - 1
-    cdp = _fold_sum(
-        "list_transform(generate_series(1, len(f.v)), i -> f.v[i] * c.cv[i])"
-    )
-    qrdp = _fold_sum(
-        "list_transform(generate_series(1, len(q.v)), i -> q.v[i] * f.rv[i])"
-    )
-    qdp = _fold_sum(
-        "list_transform(generate_series(1, len(q.v)), i -> q.v[i] * f.v[i])"
-    )
-    recon = (
-        "list_transform(generate_series(1, len(v)), i -> "
-        "CASE WHEN cs.scales[i] = 0 THEN cs.vmins[i] "
-        f"ELSE cs.vmins[i] + LEAST(CAST({levels} AS DOUBLE), "
-        "GREATEST(0.0, FLOOR((v[i] - cs.vmins[i]) / cs.scales[i] + 0.5))) "
-        "* cs.scales[i] END)"
-    )
-    return f"""
-    WITH vecs0 AS (
-      -- zero-norm vectors excluded from the index (mirrors the engine's
-      -- __n > 0 guard: no defined cosine, must never surface as neighbors)
-      SELECT * FROM (
-        SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
-               SQRT({_fold_sum("list_transform(list_transform(embedding, x -> CAST(x AS DOUBLE)), x -> x * x)")}) AS n
-        FROM embeddings
-      ) WHERE n > 0
-    ), census AS (
-      SELECT pos AS dim, MIN(v[pos]) AS vmin,
-             (MAX(v[pos]) - MIN(v[pos])) / CAST({levels} AS DOUBLE) AS scale
-      FROM vecs0, LATERAL (SELECT unnest(generate_series(1, len(v))) AS pos) u
-      GROUP BY pos
-    ), carr AS (
-      SELECT list(vmin ORDER BY dim) AS vmins,
-             list(scale ORDER BY dim) AS scales
-      FROM census
-    ), vecs AS (
-      SELECT vec_id, v, n, {recon} AS rv
-      FROM vecs0 CROSS JOIN carr cs
-    ), rvecs AS (
-      SELECT vec_id, v, n, rv,
-             SQRT({_fold_sum("list_transform(rv, x -> x * x)")}) AS rn
-      FROM vecs
-    ), cent AS (
-      SELECT vec_id AS centroid_id FROM vecs0
-      ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT {n_centroids}
-    ), cvecs AS (
-      SELECT c.centroid_id, w.v AS cv, w.n AS cn
-      FROM rvecs w JOIN cent c ON w.vec_id = c.centroid_id
-    ), cranked AS (
-      SELECT f.vec_id, c.centroid_id,
-             ROW_NUMBER() OVER (PARTITION BY f.vec_id ORDER BY
-               {cdp} / (f.n * c.cn) DESC,
-               c.centroid_id ASC) AS crk
-      FROM rvecs f CROSS JOIN cvecs c
-    ), lists AS (
-      SELECT vec_id AS neighbor_id, centroid_id FROM cranked WHERE crk = 1
-    ), probes AS (
-      SELECT vec_id AS query_id, centroid_id FROM cranked
-      WHERE vec_id IN ({ids}) AND crk <= {nprobe}
-    ), cand AS (
-      SELECT DISTINCT p.query_id, l.neighbor_id
-      FROM lists l JOIN probes p ON l.centroid_id = p.centroid_id
-      WHERE l.neighbor_id != p.query_id
-    ), qsim AS (
-      SELECT c.query_id, c.neighbor_id,
-             CASE WHEN q.n * f.rn > 0
-                  THEN {qrdp} / (q.n * f.rn) END AS qcos
-      FROM cand c
-      JOIN rvecs q ON q.vec_id = c.query_id
-      JOIN rvecs f ON f.vec_id = c.neighbor_id
-    ), survivors AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT *, ROW_NUMBER() OVER (
-          PARTITION BY query_id ORDER BY qcos DESC NULLS LAST,
-          neighbor_id ASC) AS qrk
-        FROM qsim
-      ) WHERE qrk <= {rerank}
-    ), sim AS (
-      SELECT s.query_id, s.neighbor_id,
-             {qdp} / (q.n * f.n) AS cosine
-      FROM survivors s
-      JOIN rvecs q ON q.vec_id = s.query_id
-      JOIN rvecs f ON f.vec_id = s.neighbor_id
-    ), ranked AS (
-      SELECT *, ROW_NUMBER() OVER (
-        PARTITION BY query_id ORDER BY cosine DESC, neighbor_id ASC
-      ) AS rank FROM sim
-    )
-    SELECT query_id, neighbor_id, ROUND(cosine, 6) + 0.0 AS cosine, rank
-    FROM ranked WHERE rank <= {k}
     """
 
 
@@ -7169,7 +7045,6 @@ def _ann_recall_oracle(k: int = 10, n_queries: int = 20) -> str:
     hash-checked, not just the tier outputs."""
     exact = _similarity_oracle(k=k, query_ids=range(n_queries))
     tiers = {
-        "ivf_int8": _similarity_ivf_quantized_oracle(k=k, n_queries=n_queries),
         "ivf_md5": _similarity_ivf_oracle(k=k, n_queries=n_queries),
         "lsh": _similarity_lsh_oracle(k=k, n_queries=n_queries),
         "pq": _pq_oracle(k=k, query_ids=range(n_queries)),
@@ -7599,7 +7474,6 @@ def oracle_sql() -> dict[str, str]:
             FROM ranked WHERE rank <= 128
         """,
         "similarity_ivf_md5": _similarity_ivf_oracle(),
-        "similarity_ivf_int8": _similarity_ivf_quantized_oracle(),
         # profile_diff_sketch BRACKET oracle: counts are exact-tracked
         # in KLL (value-hashed); sketch-score booleans asserted TRUE
         "profile_diff_sketch": """

@@ -805,13 +805,13 @@ def test_asof_tolerance_timestamp_seconds(spark):
     assert miss["a"] == (None, None)
 
 
-def test_hyperplane_buckets_exact_keeps_null_vectors(spark):
-    from whylogs_java_spark.operators.similarity import hyperplane_buckets_exact
+def test_banded_buckets_keeps_null_vectors(spark):
+    from whylogs_java_spark.operators.similarity import banded_buckets
 
     emb = spark.createDataFrame(
         [(1, [1.0, 2.0]), (2, None)], "vec_id long, embedding array<double>"
     )
-    out = {r["vec_id"]: r["bucket"] for r in hyperplane_buckets_exact(
+    out = {r["vec_id"]: r["bucket"] for r in banded_buckets(
         emb, "vec_id", "embedding", planes=4, bands=1
     ).collect()}
     assert set(out) == {1, 2}

@@ -418,17 +418,17 @@ def test_ivf_topk_recall(spark):
 
 
 def test_ivf_exact_tier_degenerates_to_brute_force(spark):
-    # nprobe == n_centroids probes every list, so the md5/DECIMAL IVF tier
-    # must reproduce exact brute-force top-k bit-for-bit
+    # nprobe == n_centroids probes every list, so the md5 IVF tier must
+    # reproduce exact brute-force top-k bit-for-bit
     from whylogs_java_spark.operators.similarity import (
-        cosine_topk_exact,
+        cosine_topk,
         ivf_topk_exact,
     )
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     qids = [0, 1, 2, 3, 4]
     exact = sorted(
-        map(tuple, cosine_topk_exact(emb, qids, k=5).collect())
+        map(tuple, cosine_topk(emb, qids, k=5).collect())
     )
     full = sorted(
         map(tuple, ivf_topk_exact(emb, qids, k=5, n_centroids=8, nprobe=8).collect())
@@ -442,45 +442,6 @@ def test_ivf_exact_tier_degenerates_to_brute_force(spark):
     top1 = {r[0]: r[1] for r in exact if r[3] == 1}
     hits = sum(1 for q in top1 if probed.get(q) == top1[q])
     assert hits >= 3, f"md5-IVF nprobe=4 top-1 recall too low: {hits}/5"
-
-
-def test_ivf_quantized_recall_floor_and_exact_survivor_scores(spark):
-    """IVF x int8 (PQ-lite): quantized candidate scoring + exact refine.
-    (a) with every list probed and rerank >= candidate count, the int8
-    detour must not change the final top-k (survivor scores are EXACT
-    doubles); (b) at nprobe<n_centroids the recall floor holds; (c)
-    every emitted cosine equals the brute-force value (no quantized
-    score leaks into the output)."""
-    from whylogs_java_spark.operators.similarity import (
-        cosine_topk_exact,
-        ivf_topk_quantized,
-    )
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    qids = [0, 1, 2, 3, 4]
-    exact = sorted(map(tuple, cosine_topk_exact(emb, qids, k=5).collect()))
-    # (a) full probe + wide rerank == brute force bit-for-bit
-    full = sorted(
-        map(
-            tuple,
-            ivf_topk_quantized(
-                emb, qids, k=5, n_centroids=8, nprobe=8, rerank=10**6
-            ).collect(),
-        )
-    )
-    assert full == exact
-    # (b)+(c) pruned probe: recall floor on top-1, exact cosines always
-    probed = ivf_topk_quantized(
-        emb, qids, k=5, n_centroids=8, nprobe=4, rerank=15
-    ).collect()
-    exact_scores = {(r[0], r[1]): r[2] for r in exact}
-    for r in probed:
-        if (r["query_id"], r["neighbor_id"]) in exact_scores:
-            assert r["cosine"] == exact_scores[(r["query_id"], r["neighbor_id"])]
-    top1 = {r[0]: r[1] for r in exact if r[3] == 1}
-    probed1 = {r["query_id"]: r["neighbor_id"] for r in probed if r["rank"] == 1}
-    hits = sum(1 for q in top1 if probed1.get(q) == top1[q])
-    assert hits >= 3, f"int8-IVF nprobe=4 top-1 recall too low: {hits}/5"
 
 
 def test_banded_bucketing_improves_recall(spark):
@@ -512,17 +473,6 @@ def test_banded_bucketing_improves_recall(spark):
     }
     assert single <= banded <= exact
     assert len(banded) / len(exact) >= 0.8
-    # double tier with the same banding: same no-false-positive guarantee
-    # and recall (bucket membership may differ for near-zero projections —
-    # double fold vs DECIMAL sum sign)
-    banded_fast = {
-        (r["id_a"], r["id_b"])
-        for r in cosine_pairs_bucketed(
-            corpus, 0.9, planes=4, bands=2, arithmetic="double"
-        ).collect()
-    }
-    assert banded_fast <= exact
-    assert len(banded_fast) / len(exact) >= 0.8
 
 
 def test_bucket_cap_splits_hot_buckets(spark):
@@ -564,8 +514,7 @@ def test_bucket_cap_splits_hot_buckets(spark):
     capped_pairs = {
         (r["id_a"], r["id_b"])
         for r in cosine_pairs_bucketed(
-            corpus, 0.9, planes=2, bands=2, arithmetic="double",
-            bucket_cap=50, split_planes=6,
+            corpus, 0.9, planes=2, bands=2, bucket_cap=50, split_planes=6,
         ).collect()
     }
     assert capped_pairs <= exact
@@ -958,13 +907,13 @@ def test_hyperplane_buckets_empty_vector_matches_fold_identity(spark):
     # empty embeddings must fold to 0.0 projections (all-'1' bucket),
     # matching the oracle's empty generate_series — not descend through
     # F.sequence(0,-1) into null projections
-    from whylogs_java_spark.operators.similarity import hyperplane_buckets_exact
+    from whylogs_java_spark.operators.similarity import banded_buckets
 
     df = spark.createDataFrame(
         [(1, [0.5, -0.25]), (2, [])],
         "vec_id long, embedding array<double>",
     )
-    out = {r["vec_id"]: r["bucket"] for r in hyperplane_buckets_exact(
+    out = {r["vec_id"]: r["bucket"] for r in banded_buckets(
         df, planes=4, bands=1
     ).collect()}
     assert out[2] == "1111"
@@ -1152,17 +1101,26 @@ def test_semantic_dedup_zero_norm_not_universal_dup(spark):
     assert res[4]["is_survivor"] is True
 
 
-def test_ann_zero_norm_never_a_neighbor(spark):
-    """Zero-norm vectors have no defined cosine: every ANN entry point
+def test_ann_zero_norm_never_a_neighbor(spark, tmp_path):
+    """Zero-norm vectors have no defined cosine: every top-k entry point
     must exclude them from both the index and the query side, else their
     0/0=NaN score sorts ABOVE all numbers under DESC and surfaces at
-    rank 1 (the ivf_topk_quantized hazard flagged in round 8)."""
+    rank 1 — and a zero-norm centroid divides by zero, which raises
+    under ANSI mode."""
     from whylogs_java_spark.operators.similarity import (
+        build_ivf_index,
+        build_ivfpq_index,
+        build_rp_index,
         cosine_pairs_exact,
         cosine_topk,
-        cosine_topk_exact,
-        ivf_topk_quantized,
+        ivf_topk,
+        ivf_topk_exact,
+        ivf_topk_stored,
+        ivfpq_topk_stored,
         lsh_bucket_topk,
+        pq_topk,
+        rp_topk,
+        rp_topk_stored,
     )
 
     rows = [
@@ -1174,23 +1132,34 @@ def test_ann_zero_norm_never_a_neighbor(spark):
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     queries = emb.where("vec_id in (0, 3)")
+    ids = [0, 3]
 
-    got = cosine_topk(emb, queries, k=4).collect()
-    assert all(r["neighbor_id"] != 3 for r in got)
-    assert all(r["query_id"] != 3 for r in got)
-    assert got and all(r["cosine"] == r["cosine"] for r in got)  # no NaN
+    def check(df, nearest=True):
+        got = df.collect()
+        assert all(r["neighbor_id"] != 3 and r["query_id"] != 3 for r in got)
+        assert all(r["cosine"] == r["cosine"] for r in got)  # no NaN
+        if nearest:
+            # rank 1 for query 0 is its genuine nearest, not the zero vector
+            top = {r["rank"]: r["neighbor_id"] for r in got if r["query_id"] == 0}
+            assert top[1] == 1
 
-    got = cosine_topk_exact(emb, [0, 3], k=4).collect()
-    assert all(r["neighbor_id"] != 3 and r["query_id"] != 3 for r in got)
-
-    got = lsh_bucket_topk(emb, queries, k=4, planes=1).collect()
-    assert all(r["neighbor_id"] != 3 and r["query_id"] != 3 for r in got)
-
-    got = ivf_topk_quantized(emb, [0, 3], k=4, n_centroids=4, nprobe=4).collect()
-    assert all(r["neighbor_id"] != 3 and r["query_id"] != 3 for r in got)
-    # rank 1 for query 0 is its genuine nearest, not the zero vector
-    top = {r["rank"]: r["neighbor_id"] for r in got if r["query_id"] == 0}
-    assert top[1] == 1
+    check(cosine_topk(emb, queries, k=4))
+    check(cosine_topk(emb, ids, k=4))
+    check(lsh_bucket_topk(emb, queries, k=4, planes=1), nearest=False)
+    # every row is sampled as a centroid unless the zero vector is
+    # filtered out before the sample
+    check(ivf_topk(emb, queries, k=4, n_centroids=5, nprobe=1), nearest=False)
+    check(ivf_topk_exact(emb, ids, k=4, n_centroids=4, nprobe=4))
+    check(pq_topk(emb, ids, k=4, m=1, codebook_k=4, rerank=4))
+    check(rp_topk(emb, ids, k=4, out_dim=2, rerank=4))
+    build_ivf_index(emb, str(tmp_path / "ivf"), n_centroids=4)
+    check(ivf_topk_stored(spark, str(tmp_path / "ivf"), queries, k=4, nprobe=4))
+    build_ivfpq_index(emb, str(tmp_path / "ivfpq"), n_centroids=4, m=1, codebook_k=4)
+    check(ivfpq_topk_stored(
+        spark, str(tmp_path / "ivfpq"), queries, k=4, nprobe=4, rerank=4
+    ))
+    build_rp_index(emb, str(tmp_path / "rp"), out_dim=2)
+    check(rp_topk_stored(spark, str(tmp_path / "rp"), ids, k=4, rerank=4))
 
     got = cosine_pairs_exact(emb, threshold=-1.0).collect()
     assert all(3 not in (r["id_a"], r["id_b"]) for r in got)

@@ -1806,7 +1806,7 @@ def test_pq_topk_recall_vs_brute_force(spark):
     true cosine, and recall@10 against brute force stays above the
     sampled-codebook floor on the real embedding table."""
     from whylogs_java_spark.operators.similarity import (
-        cosine_topk_exact,
+        cosine_topk,
         pq_topk,
     )
 
@@ -1815,11 +1815,11 @@ def test_pq_topk_recall_vs_brute_force(spark):
     )
     qids = [0, 1, 2, 3, 4]
     got = pq_topk(emb, qids, k=10, m=4, codebook_k=16, rerank=30).collect()
-    true = cosine_topk_exact(emb, qids, k=10).collect()
+    true = cosine_topk(emb, qids, k=10).collect()
     true_cos = {(r["query_id"], r["neighbor_id"]): r["cosine"] for r in true}
     exact_all = {
         (r["query_id"], r["neighbor_id"]): r["cosine"]
-        for r in cosine_topk_exact(emb, qids, k=10**6).collect()
+        for r in cosine_topk(emb, qids, k=10**6).collect()
     }
     for r in got:
         # refined scores are EXACT cosines (rerank only affects the cut)
@@ -1842,7 +1842,7 @@ def test_pq_topk_high_recall_on_clustered_data(spark):
     import math
 
     from whylogs_java_spark.operators.similarity import (
-        cosine_topk_exact,
+        cosine_topk,
         pq_topk,
     )
 
@@ -1863,7 +1863,7 @@ def test_pq_topk_high_recall_on_clustered_data(spark):
     got = pq_topk(emb, qids, k=5, m=4, codebook_k=8, rerank=15).collect()
     true = {
         (r["query_id"], r["neighbor_id"])
-        for r in cosine_topk_exact(emb, qids, k=5).collect()
+        for r in cosine_topk(emb, qids, k=5).collect()
     }
     hits = sum(1 for r in got if (r["query_id"], r["neighbor_id"]) in true)
     assert hits / len(true) >= 0.8, f"recall {hits}/{len(true)}"
@@ -1902,7 +1902,7 @@ def test_pq_trained_codebooks_beat_sampled_on_clustered_data(spark):
     import math
 
     from whylogs_java_spark.operators.similarity import (
-        cosine_topk_exact,
+        cosine_topk,
         pq_topk,
         pq_train_codebooks,
     )
@@ -1922,7 +1922,7 @@ def test_pq_trained_codebooks_beat_sampled_on_clustered_data(spark):
     qids = [0, 100, 200, 300, 400]
     true = {
         (r["query_id"], r["neighbor_id"])
-        for r in cosine_topk_exact(emb, qids, k=5).collect()
+        for r in cosine_topk(emb, qids, k=5).collect()
     }
 
     def recall(got):
@@ -2517,7 +2517,7 @@ def test_rp_topk_degenerate_exactness_and_recall(spark):
     refine then re-ranks every candidate by exact cosine); at the
     production cut (rerank=32) recall@10 stays above a floor."""
     from whylogs_java_spark.operators.similarity import (
-        cosine_topk_exact,
+        cosine_topk,
         rp_topk,
     )
 
@@ -2526,7 +2526,7 @@ def test_rp_topk_degenerate_exactness_and_recall(spark):
     qids = [0, 1, 2, 3, 4]
     exact = {
         (r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine"])
-        for r in cosine_topk_exact(emb, qids, k=10).collect()
+        for r in cosine_topk(emb, qids, k=10).collect()
     }
     full = {
         (r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine"])

@@ -580,9 +580,8 @@ def test_r7_query_plan_guards(spark):
 
 def test_r8_query_plan_guards(spark):
     """Plan pins for the round-8 queries (PLANS.md r8 sections):
-    survivors resolution stays bucketed, the int8 IVF keeps its census
-    broadcast + equi-join probes, and the large-k assignment's only
-    nested loop is the deliberate k-bounded broadcast fan-out."""
+    survivors resolution stays bucketed, and the large-k assignment's
+    only nested loop is the deliberate k-bounded broadcast fan-out."""
     import __spark_entry__ as entry
 
     qs = entry.queries()
@@ -604,15 +603,6 @@ def test_r8_query_plan_guards(spark):
     # (never shuffle the profile on the rule key)
     p = plan_of("constraints_lineitem")
     assert "BroadcastHashJoin" in p
-    # int8 IVF: candidate probe is an equi-join; the checkpointed
-    # reconstructed-vector table shows as an ExistingRDD scan.  No
-    # data x data cartesian — the only BNLJ allowed is the deliberate
-    # k-bounded centroid-rank fan-out (broadcast side = centroid table,
-    # same shape the same test allows for cluster_embeddings_k64).
-    p = plan_of("similarity_ivf_int8")
-    assert "CartesianProduct" not in p
-    assert "BroadcastHashJoin" in p or "SortMergeJoin" in p
-    assert "ExistingRDD" in p
     # large-k assignment: exactly the k-bounded broadcast fan-out —
     # BroadcastNestedLoopJoin against the centroid TABLE is deliberate
     # (k rows, not data x data) and the argmin combines map-side
@@ -1408,7 +1398,7 @@ def test_ivf_index_append_frozen_centroids_exact_at_full_probe(spark, tmp_path):
     from whylogs_java_spark.operators.similarity import (
         append_ivf_index,
         build_ivf_index,
-        cosine_topk_exact,
+        cosine_topk,
         ivf_topk_stored,
     )
 
@@ -1426,7 +1416,7 @@ def test_ivf_index_append_frozen_centroids_exact_at_full_probe(spark, tmp_path):
     stored = sorted(map(tuple, ivf_topk_stored(
         spark, p, queries, k=5, nprobe=8
     ).collect()))
-    brute = sorted(map(tuple, cosine_topk_exact(
+    brute = sorted(map(tuple, cosine_topk(
         emb, qids, k=5
     ).collect()))
     assert stored == brute and len(brute) == 20
@@ -1478,7 +1468,7 @@ def test_ivfpq_index_append_frozen_quantizers_exact_at_full_probe(
     from whylogs_java_spark.operators.similarity import (
         append_ivfpq_index,
         build_ivfpq_index,
-        cosine_topk_exact,
+        cosine_topk,
         ivfpq_topk_stored,
     )
 
@@ -1497,7 +1487,7 @@ def test_ivfpq_index_append_frozen_quantizers_exact_at_full_probe(
     stored = sorted(map(tuple, ivfpq_topk_stored(
         spark, p, queries, k=5, nprobe=8, rerank=n_all
     ).collect()))
-    brute = sorted(map(tuple, cosine_topk_exact(emb, qids, k=5).collect()))
+    brute = sorted(map(tuple, cosine_topk(emb, qids, k=5).collect()))
     assert stored == brute and len(brute) == 15
     lists = spark.read.parquet(f"{p}/lists")
     assert lists.count() == n_all
@@ -1620,7 +1610,7 @@ def test_ivf_kmeans_append_keeps_frozen_quantizer_contract(spark, tmp_path):
     from whylogs_java_spark.operators.similarity import (
         append_ivf_index,
         build_ivf_index,
-        cosine_topk_exact,
+        cosine_topk,
         ivf_topk_stored,
     )
 
@@ -1640,7 +1630,7 @@ def test_ivf_kmeans_append_keeps_frozen_quantizer_contract(spark, tmp_path):
     stored = sorted(map(tuple, ivf_topk_stored(
         spark, p, emb.where(F.col("vec_id").isin(qids)), k=5, nprobe=3
     ).collect()))
-    brute = sorted(map(tuple, cosine_topk_exact(emb, qids, k=5).collect()))
+    brute = sorted(map(tuple, cosine_topk(emb, qids, k=5).collect()))
     assert stored == brute and len(brute) == 20
 
 
