@@ -16,6 +16,7 @@ the compression tests in tests/test_pipeline_ops.py.)
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
@@ -23,7 +24,7 @@ from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry  # noqa: E402
 

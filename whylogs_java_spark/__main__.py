@@ -1135,6 +1135,7 @@ def _run_score(argv: list[str]) -> int:
             lm_score,
             lm_score_stored,
         )
+        from .stores import read_meta
 
         df = _read_input(spark, a.input)
         if a.build_lm_store:
@@ -1150,7 +1151,7 @@ def _run_score(argv: list[str]) -> int:
             return 0
         if a.lm_store:
             out = lm_score_stored(spark, a.lm_store, df, a.text_col, a.id_col)
-            order = int(spark.read.parquet(f"{a.lm_store}/meta").first()["order"])
+            order = read_meta(a.lm_store, "lm store")["order"]
         else:
             lm_df = _read_input(spark, a.lm_corpus) if a.lm_corpus else None
             out = lm_score(

@@ -77,6 +77,18 @@ def materialize(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
+def release(df: DataFrame) -> None:
+    """Free the checkpoints ``df`` reads (the RDD-backed leaves of its
+    plan) once every consumer has run; otherwise they stay held until
+    the context cleaner collects them. Call it only on frames whose
+    RDD-backed leaves the caller created."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "LogicalRDD":
+            leaf.rdd().unpersist(True)
+
+
 def materialize_lazy(df: DataFrame) -> DataFrame:
     """Checkpoint ``df`` WITHOUT spending a driver action now: the
     materialization (and lineage truncation) happens as a side effect of
@@ -118,14 +130,13 @@ def literal_df(spark, rows, schema: str) -> DataFrame:
     ``spark.createDataFrame(list, schema)`` materializes a
     ``LogicalRDD`` whose EVERY action re-evaluates the rows through a
     Python runner — measured ~5-15 s per action under local[32], so a
-    store builder that writes a literal meta/centroid table plus reads
-    it back pays tens of seconds of pure interpreter spin-up. Routing
+    store builder that writes a literal centroid table plus reads it
+    back pays tens of seconds of pure interpreter spin-up. Routing
     the same rows through a pandas frame (Arrow conversion, names and
     types assigned positionally by ``schema``) yields a
     ``LocalRelation`` that every consumer evaluates entirely JVM-side.
 
-    For CURATED literal tables only (metas, centroid codebooks, merge
-    tables): exact floats/ints/strings/arrays round-trip through Arrow
+    For CURATED literal tables only (centroid codebooks, merge tables): exact floats/ints/strings/arrays round-trip through Arrow
     bit-identically, but pandas coerces None in NUMERIC columns to NaN
     — callers with nullable numeric literals keep the plain path. Rows
     the pandas/Arrow route refuses fall back to the plain path too, with

@@ -36,8 +36,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..ckpt import literal_df, materialize, materialize_lazy, spread
+from ..ckpt import literal_df, materialize, materialize_lazy, release, spread
 from ..functions import sqlexpr as sqlx
+from ..stores import read_meta, write_meta
 
 INT_SCALE = 1_000_000
 
@@ -131,13 +132,22 @@ def _assign_literal(centroids: list[list[float]]):
 
 def _lloyd_iterations(
     emb: DataFrame,
-    centroids: list[list[float]],
+    k: int,
     n_iter: int,
     use_join: bool,
 ) -> list[list[float]]:
-    """``n_iter`` Lloyd rounds over a prepared table; returns the final
-    centroids (exact-integer per-dim means, empty clusters keep their
-    previous centroid)."""
+    """``k`` md5-ranked seeds, then ``n_iter`` Lloyd rounds over a
+    prepared table; returns the final centroids (exact-integer per-dim
+    means, empty clusters keep their previous centroid), ``[]`` for an
+    empty table."""
+    seeds = (
+        emb.orderBy(F.md5(F.col("__id").cast("string")), F.col("__id"))
+        .limit(k)
+        .collect()
+    )
+    if not seeds:
+        return []
+    centroids = [[float(x) for x in r["__v"]] for r in seeds]
     dim = len(centroids[0])
     for _ in range(n_iter):
         if use_join:
@@ -193,15 +203,10 @@ def kmeans_centroids(
         raise ValueError(f"unknown assign mode {assign!r}")
     use_join = (k > LITERAL_K_MAX) if assign == "auto" else (assign == "join")
     emb = _prepare_emb(embeddings, id_col, vec_col)
-    seeds = (
-        emb.orderBy(F.md5(F.col("__id").cast("string")), F.col("__id"))
-        .limit(k)
-        .collect()
-    )
-    if not seeds:
-        return []
-    centroids = [[float(x) for x in r["__v"]] for r in seeds]
-    return _lloyd_iterations(emb, centroids, n_iter, use_join)
+    try:
+        return _lloyd_iterations(emb, k, n_iter, use_join)
+    finally:
+        release(emb)
 
 
 def kmeans_assign(
@@ -231,13 +236,8 @@ def kmeans_assign(
     # the final assignment are separate jobs that would otherwise re-run
     # the scan + cast + spread per pass)
     emb = _prepare_emb(embeddings, id_col, vec_col)
-
-    seeds = (
-        emb.orderBy(F.md5(F.col("__id").cast("string")), F.col("__id"))
-        .limit(k)
-        .collect()
-    )
-    if not seeds:
+    centroids = _lloyd_iterations(emb, k, n_iter, use_join)
+    if not centroids:
         # empty result must carry the input's actual id type (string ids
         # are legal) or downstream unions/joins break on the empty case
         import pyspark.sql.types as T
@@ -253,8 +253,6 @@ def kmeans_assign(
                 ]
             ),
         )
-    centroids: list[list[float]] = [[float(x) for x in r["__v"]] for r in seeds]
-    centroids = _lloyd_iterations(emb, centroids, n_iter, use_join)
     return _final_assign(emb, centroids, id_col, use_join)
 
 
@@ -341,11 +339,7 @@ def build_kmeans_model(
     # meta pins the model's ACTUAL arity (seed collect can return fewer
     # than the requested k on tiny corpora) — validating against the
     # requested k would pass exactly when arity silently diverged
-    literal_df(
-        spark,
-        [(len(centroids), int(n_iter), len(centroids[0]))],
-        "k int, n_iter int, dim int",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+    write_meta(path, dict(k=len(centroids), n_iter=int(n_iter), dim=len(centroids[0])))
 
 
 def read_kmeans_model(spark, path: str, k: int | None = None) -> list[list[float]]:
@@ -355,12 +349,7 @@ def read_kmeans_model(spark, path: str, k: int | None = None) -> list[list[float
     against a model of unexpected arity is a silent-corruption hazard
     (cluster ids mean different things), so mismatches refuse loudly.
     """
-    meta = spark.read.parquet(f"{path}/meta").first()
-    if k is not None and int(meta["k"]) != int(k):
-        raise ValueError(
-            f"k-means model at {path} was built with k={meta['k']}, "
-            f"requested k={k}"
-        )
+    read_meta(path, "k-means model", k=k)
     rows = (
         spark.read.parquet(f"{path}/centroids").orderBy("cluster").collect()
     )

@@ -27,8 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..ckpt import literal_df
 from ..functions.hof import let_bound
+from ..stores import read_meta, write_meta
 
 
 def ngram_digests(text: Column, n: int) -> Column:
@@ -317,17 +317,18 @@ def build_gram_store(
     suites, and even a frozen 100 TB reference corpus reduces to its
     distinct-digest set once, instead of once per arriving batch.
     """
-    grams = eval_ngram_set(df, text_col, n).withColumn(
+    _write_grams(eval_ngram_set(df, text_col, n), path, n_buckets, "overwrite")
+    write_meta(path, dict(n=int(n), n_buckets=int(n_buckets)))
+
+
+def _write_grams(grams: DataFrame, path: str, n_buckets: int, mode: str) -> None:
+    """Write digests into a gram store's ``{path}/grams`` in ``mode``,
+    one task/file per bucket dir."""
+    grams.withColumn(
         "bucket", F.pmod(F.xxhash64("gram"), F.lit(n_buckets))
-    )
-    grams = grams.repartition(F.col("bucket"))  # one task/file per dir
-    grams.write.mode("overwrite").partitionBy("bucket").parquet(
-        f"{path}/grams"
-    )
-    meta = literal_df(
-        df.sparkSession, [(int(n), int(n_buckets))], "n int, n_buckets int"
-    )
-    meta.write.mode("overwrite").parquet(f"{path}/meta")
+    ).repartition(F.col("bucket")).write.mode(mode).partitionBy(
+        "bucket"
+    ).parquet(f"{path}/grams")
 
 
 def append_gram_store(
@@ -343,18 +344,10 @@ def append_gram_store(
     stays a distinct set, so store-backed screens after build+append
     are bit-identical to a store built on the union; pinned by test).
     ``n``/``n_buckets`` come from ``{path}/meta``."""
-    spark = df.sparkSession
-    meta = spark.read.parquet(f"{path}/meta").first()
-    n, n_buckets = int(meta["n"]), int(meta["n_buckets"])
-    existing = spark.read.parquet(f"{path}/grams").select("gram")
-    fresh = (
-        eval_ngram_set(df, text_col, n)
-        .join(existing, "gram", "left_anti")
-        .withColumn("bucket", F.pmod(F.xxhash64("gram"), F.lit(n_buckets)))
-    )
-    fresh.repartition(F.col("bucket")).write.mode("append").partitionBy(
-        "bucket"
-    ).parquet(f"{path}/grams")
+    meta = read_meta(path, "gram store")
+    existing = df.sparkSession.read.parquet(f"{path}/grams").select("gram")
+    fresh = eval_ngram_set(df, text_col, meta["n"]).join(existing, "gram", "left_anti")
+    _write_grams(fresh, path, meta["n_buckets"], "append")
 
 
 def read_gram_store(spark, path: str, n: int | None = None) -> DataFrame:
@@ -363,12 +356,7 @@ def read_gram_store(spark, path: str, n: int | None = None) -> DataFrame:
     Validates the requested ``n`` against the store's meta — screening
     with a mismatched gram length would silently find nothing.
     """
-    meta = spark.read.parquet(f"{path}/meta").first()
-    if n is not None and int(meta["n"]) != int(n):
-        raise ValueError(
-            f"gram store at {path} was built with n={meta['n']}, "
-            f"requested n={n}"
-        )
+    read_meta(path, "gram store", n=n)
     return spark.read.parquet(f"{path}/grams").select("gram")
 
 

@@ -34,6 +34,7 @@ from ..ckpt import literal_df, materialize_lazy, spread
 from ..ckpt import materialize as _materialize
 from ..functions.hof import let_bound
 from ..functions.sqlexpr import qcol
+from ..stores import read_meta, refuse_known_ids, write_meta
 
 
 def content_key(col: Column) -> Column:
@@ -1503,31 +1504,13 @@ def build_minhash_store(
         hash_family,
     )
 
-    def _write_meta():
-        meta = literal_df(
-            df.sparkSession,
-            [
-                (
-                    num_hashes,
-                    bands,
-                    shingle_size,
-                    bool(char_ngrams),
-                    hash_family,
-                    n_buckets,
-                )
-            ],
-            "num_hashes int, bands int, shingle_size int, char_ngrams boolean, "
-            "hash_family string, n_buckets int",
-        )
-        meta.coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
-
-    # the three table writes are independent jobs into different
-    # directories: overlap them so later writes' tasks back-fill the
-    # earlier ones' straggler tails (optimization guide §2.6); FIFO
+    # the two table writes are independent jobs into different
+    # directories: overlap them so the later write's tasks back-fill the
+    # earlier one's straggler tail (optimization guide §2.6); FIFO
     # scheduling preserves the back-fill shape
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
+    with ThreadPoolExecutor(max_workers=2) as pool:
         futs = [
             pool.submit(
                 _write_band_table, bands_df, id_col, path, n_buckets, "overwrite"
@@ -1536,10 +1519,13 @@ def build_minhash_store(
                 _write_shingle_table, df, text_col, id_col, path, n_buckets,
                 shingle_size, char_ngrams, "overwrite",
             ),
-            pool.submit(_write_meta),
         ]
         for f in futs:
             f.result()
+    write_meta(path, dict(
+        num_hashes=num_hashes, bands=bands, shingle_size=shingle_size,
+        char_ngrams=bool(char_ngrams), hash_family=hash_family, n_buckets=n_buckets,
+    ))
 
 
 def _bucket(col: Column, n_buckets: int) -> Column:
@@ -1609,11 +1595,15 @@ def append_minhash_store(
     probe uses), partition layouts match the builder's, and parquet
     ``append`` adds files inside the existing (band, bucket) /
     (sbucket) partitions — probes over build+append are bit-identical
-    to a store built on the union (pinned by test). Caller contract:
-    ids must be new to the store (screen first; the probe's id spaces
-    are disjoint by construction).
+    to a store built on the union (pinned by test). A batch holding an
+    id already in the store is refused before anything is written
+    (``stores.refuse_known_ids``): screen first, append the accepted.
     """
-    m = df.sparkSession.read.parquet(f"{path}/meta").first()
+    m = read_meta(path, "minhash store")
+    refuse_known_ids(
+        "minhash store", path, df, id_col,
+        df.sparkSession.read.parquet(f"{path}/shingles").select("id"),
+    )
     df = spread(df.select(id_col, text_col))
     bands_df = _band_table(df, text_col, id_col, **{k: m[k] for k in _SIG_PARAMS})
     _write_band_table(bands_df, id_col, path, m["n_buckets"], "append")
@@ -1648,7 +1638,7 @@ def cross_dedup_stored(
     jaccard), identical to ``cross_dedup_pairs`` (pinned by test). Id
     spaces must be disjoint.
     """
-    m = spark.read.parquet(f"{path}/meta").first()
+    m = read_meta(path, "minhash store")
     new_df = spread(new_df.select(id_col, text_col))
     bands_new = _band_table(
         new_df, text_col, id_col, **{k: m[k] for k in _SIG_PARAMS}
@@ -2042,8 +2032,17 @@ def build_winnow_store(
     Store size is O(selected prints) ≈ 0.4× the reference gram count at
     window=4 — a frozen reference corpus reduces once, not per batch.
     """
+    _write_prints(df, path, text_col, id_col, k, window, n_buckets, "overwrite")
+    write_meta(path, dict(k=int(k), window=int(window), n_buckets=int(n_buckets)))
+
+
+def _write_prints(
+    df: DataFrame, path: str, text_col: str, id_col: str,
+    k: int, window: int, n_buckets: int, mode: str,
+) -> None:
+    """Write a winnow store's ``{path}/prints`` table in ``mode``."""
     sel = _winnow_select_structs(F.lower(F.col(text_col)), k, window)
-    prints = (
+    (
         spread(df.select(id_col, text_col))
         .select(
             F.col(id_col).alias("ref_id"),
@@ -2054,16 +2053,12 @@ def build_winnow_store(
         .withColumn(
             "bucket", F.pmod(F.xxhash64("print_hash"), F.lit(n_buckets))
         )
+        # one task/file per bucket dir (the postings-write lesson)
+        .repartition(F.col("bucket"))
+        .write.mode(mode)
+        .partitionBy("bucket")
+        .parquet(f"{path}/prints")
     )
-    # one task/file per bucket dir (the postings-write lesson)
-    prints.repartition(F.col("bucket")).write.mode("overwrite").partitionBy(
-        "bucket"
-    ).parquet(f"{path}/prints")
-    literal_df(
-        df.sparkSession,
-        [(int(k), int(window), int(n_buckets))],
-        "k int, window int, n_buckets int",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
 
 
 def append_winnow_store(
@@ -2082,29 +2077,15 @@ def append_winnow_store(
     screen validates), the bucket layout matches the builder's, and
     parquet ``append`` adds files inside existing bucket partitions —
     screens over build+append are bit-identical to a store built on
-    the union (pinned by test). Caller contract: ids must be new to
-    the store (screen first)."""
-    spark = df.sparkSession
-    m = spark.read.parquet(f"{path}/meta").first()
-    sel = _winnow_select_structs(
-        F.lower(F.col(text_col)), int(m["k"]), int(m["window"])
+    the union (pinned by test). A batch holding an id already in the
+    store is refused before anything is written (screen first)."""
+    m = read_meta(path, "winnow store")
+    prints = df.sparkSession.read.parquet(f"{path}/prints")
+    refuse_known_ids(
+        "winnow store", path, df, id_col, prints.select(F.col("ref_id").alias("id"))
     )
-    (
-        spread(df.select(id_col, text_col))
-        .select(
-            F.col(id_col).alias("ref_id"),
-            F.explode(
-                F.array_distinct(F.transform(sel, lambda s: s["h"]))
-            ).alias("print_hash"),
-        )
-        .withColumn(
-            "bucket",
-            F.pmod(F.xxhash64("print_hash"), F.lit(int(m["n_buckets"]))),
-        )
-        .repartition(F.col("bucket"))
-        .write.mode("append")
-        .partitionBy("bucket")
-        .parquet(f"{path}/prints")
+    _write_prints(
+        df, path, text_col, id_col, m["k"], m["window"], m["n_buckets"], "append"
     )
 
 
@@ -2114,21 +2095,11 @@ def read_winnow_store(
     """Load a persisted winnow print store -> ((ref_id, print_hash)
     DataFrame, k, window). Validates requested parameters against the
     store's meta — mismatched k/window would silently find nothing."""
-    meta = spark.read.parquet(f"{path}/meta").first()
-    if k is not None and int(meta["k"]) != int(k):
-        raise ValueError(
-            f"winnow store at {path} was built with k={meta['k']}, "
-            f"requested k={k}"
-        )
-    if window is not None and int(meta["window"]) != int(window):
-        raise ValueError(
-            f"winnow store at {path} was built with window="
-            f"{meta['window']}, requested window={window}"
-        )
+    meta = read_meta(path, "winnow store", k=k, window=window)
     prints = spark.read.parquet(f"{path}/prints").select(
         "ref_id", "print_hash"
     )
-    return prints, int(meta["k"]), int(meta["window"])
+    return prints, meta["k"], meta["window"]
 
 
 def winnow_screen_stored(

@@ -39,8 +39,11 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..ckpt import literal_df
+from ..ckpt import literal_df, materialize, release
+from ..stores import read_meta, refuse_known_ids, write_meta
 from .text import tokens, ws_lower_tokens
+
+_TOKENIZER = "ws-lower-v1"  # pinned in every text index's meta
 
 __all__ = [
     "append_text_index",
@@ -252,9 +255,7 @@ def build_text_index(
             F.sum("dl").cast("double") / F.count(F.lit(1)),
         ).alias("avgdl"),
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
-    literal_df(
-        spark, [(int(n_buckets), "ws-lower-v1")], "n_buckets int, tokenizer string"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+    write_meta(path, dict(n_buckets=int(n_buckets), tokenizer=_TOKENIZER))
 
 
 def _postings(
@@ -285,18 +286,10 @@ def read_text_index(spark, path: str, n_buckets: int | None = None):
     """Open a persisted text index; returns (postings DataFrame,
     n_buckets). Passing ``n_buckets`` validates against the store's
     pinned meta and refuses a mismatch loudly."""
-    meta = spark.read.parquet(f"{path}/meta").collect()[0]
-    if meta["tokenizer"] != "ws-lower-v1":
-        raise ValueError(
-            f"text index at {path} uses tokenizer {meta['tokenizer']!r}, "
-            "this build speaks ws-lower-v1"
-        )
-    if n_buckets is not None and int(meta["n_buckets"]) != int(n_buckets):
-        raise ValueError(
-            f"text index at {path} was built with n_buckets="
-            f"{meta['n_buckets']}, refusing expectation n_buckets={n_buckets}"
-        )
-    return spark.read.parquet(f"{path}/postings"), int(meta["n_buckets"])
+    meta = read_meta(
+        path, "text index", tokenizer=_TOKENIZER, n_buckets=n_buckets
+    )
+    return spark.read.parquet(f"{path}/postings"), meta["n_buckets"]
 
 
 def phrase_search_stored(
@@ -481,14 +474,16 @@ def append_text_index(
     parquet ``append`` adds one file per touched bucket dir; the
     ``stats`` corpus constants are REWRITTEN as old + batch delta, so
     stored BM25 over build+append is bit-identical to an index built on
-    the union (pinned by test). Caller contract: ids must be new to the
-    store (dl/tf are per-(term, doc) rows — a re-appended doc would
-    double its postings, same contract as append_minhash_store).
+    the union (pinned by test). A batch holding an id already in the
+    index is refused before anything is written (dl/tf are per-(term,
+    doc) rows — a re-appended doc would double its postings).
     """
     spark = docs.sparkSession
-    _, nb = read_text_index(spark, path)
-    from ..ckpt import materialize
-
+    nb = read_meta(path, "text index", tokenizer=_TOKENIZER)["n_buckets"]
+    refuse_known_ids(
+        "text index", path, docs, id_col,
+        spark.read.parquet(f"{path}/postings").select("id"),
+    )
     # materialize: the batch pipeline runs once for BOTH the append
     # write and the stats delta
     postings = materialize(_postings(docs, text_col, id_col, nb))
@@ -524,6 +519,7 @@ def append_text_index(
     spark.createDataFrame(merged).coalesce(1).write.mode(
         "overwrite"
     ).parquet(f"{path}/stats")
+    release(postings)
 
 
 def rrf_fuse(

@@ -24,8 +24,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..ckpt import literal_df, materialize, materialize_lazy, spread
+from ..ckpt import literal_df, materialize, materialize_lazy, release, spread
 from ..functions import sqlexpr as sqlx
+from ..stores import read_meta, refuse_known_ids, write_meta
 
 
 def _as_double(vec: Column | str) -> Column:
@@ -839,12 +840,10 @@ def build_ivf_index(
         .select(F.size("cv").alias("d"))
         .first()
     )
-    literal_df(
-        spark,
-        [(centroids, int(n_centroids), int(n_iter),
-          int(dim_row["d"]) if dim_row else 0)],
-        "quantizer string, n_centroids int, n_iter int, dim int",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+    write_meta(path, dict(
+        quantizer=centroids, n_centroids=int(n_centroids), n_iter=int(n_iter),
+        dim=int(dim_row["d"]) if dim_row else 0,
+    ))
     _write_lists(lists, path, "overwrite")
 
 
@@ -858,33 +857,6 @@ def _write_lists(lists: DataFrame, path: str, mode: str) -> None:
         .partitionBy("centroid_id")
         .parquet(f"{path}/lists")
     )
-
-
-def _validate_append_dim(
-    embeddings: DataFrame, vec_col: str, dim: int, store_desc: str
-) -> None:
-    """Refuse an append batch whose vectors don't match the store's
-    pinned dimensionality (r12 advice: the builders/readers validate,
-    the append legs silently corrupted — zip_with over mismatched
-    lengths yields NULL cosines yet row_number still assigns the vector
-    to an arbitrary list). One limit(1) probe over the batch — O(batch),
-    the read_gram_store/read_kmeans_model loud-refusal convention.
-    NULL vectors stay the builders' concern (they drop them)."""
-    bad = (
-        embeddings.where(
-            F.col(vec_col).isNotNull() & (F.size(vec_col) != dim)
-        )
-        .select(F.size(vec_col).alias("got"))
-        .limit(1)
-        .collect()
-    )
-    if bad:
-        raise ValueError(
-            f"append batch has a {bad[0]['got']}-dim vector in "
-            f"{vec_col!r} but {store_desc} was built with dim={dim} — "
-            "refusing the append (a mismatched vector would corrupt "
-            "the index)"
-        )
 
 
 def append_ivf_index(
@@ -904,15 +876,16 @@ def append_ivf_index(
     With frozen centroids every probe semantics is preserved:
     nprobe=all over build(A)+append(B) is bit-identical to brute-force
     cosine over A∪B (pinned by test), and pruned probes read the
-    appended vectors through the same partition filters. Caller
-    contract: ids must be new to the index.
+    appended vectors through the same partition filters. A batch
+    holding an id already in the index, or a vector of another width
+    than the pinned ``dim``, is refused before anything is written.
     """
+    refuse_known_ids(
+        "ivf index", path, embeddings, id_col,
+        spark.read.parquet(f"{path}/lists").select(F.col(id_col).alias("id")),
+        vec_col, read_meta(path, "ivf index")["dim"],
+    )
     cvecs = spark.read.parquet(f"{path}/centroids")
-    dim_row = cvecs.select(F.size("cv").alias("d")).first()
-    if dim_row is not None:
-        _validate_append_dim(
-            embeddings, vec_col, int(dim_row["d"]), f"ivf index at {path}"
-        )
     _, lists = _ivf_structures(embeddings, None, id_col, vec_col, cvecs=cvecs)
     _write_lists(lists, path, "append")
 
@@ -1329,6 +1302,7 @@ def build_ivfpq_index(
     lists = lists.transform(materialize)
     found = _pq_codebooks(lists, m, codebook_k, id_col, codebooks)
     if found is None:
+        release(lists)
         raise ValueError("empty corpus: nothing to index")
     codebooks, dim = found
     m, codebook_k = len(codebooks), len(codebooks[0])
@@ -1343,11 +1317,8 @@ def build_ivfpq_index(
         spark, cb_rows, "subspace int, code int, cvec array<double>"
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
     _write_pq_lists(lists, codebooks, dim // m, id_col, path, "overwrite")
-    literal_df(
-        spark,
-        [(n_centroids, m, codebook_k, dim)],
-        "n_centroids int, m int, codebook_k int, dim int",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+    release(lists)
+    write_meta(path, dict(n_centroids=n_centroids, m=m, codebook_k=codebook_k, dim=dim))
 
 
 def _write_pq_lists(
@@ -1374,9 +1345,9 @@ def _write_pq_lists(
 
 
 def _stored_codebooks(spark, path: str):
-    """(meta row, codebooks[m][codebook_k]) of a persisted IVF×PQ index."""
-    meta = spark.read.parquet(f"{path}/meta").first()
-    m, codebook_k = int(meta["m"]), int(meta["codebook_k"])
+    """(meta, codebooks[m][codebook_k]) of a persisted IVF×PQ index."""
+    meta = read_meta(path, "ivfpq index")
+    m, codebook_k = meta["m"], meta["codebook_k"]
     codebooks = [[None] * codebook_k for _ in range(m)]
     for r in spark.read.parquet(f"{path}/codebooks").collect():
         codebooks[r["subspace"]][r["code"]] = [float(x) for x in r["cvec"]]
@@ -1399,10 +1370,15 @@ def append_ivfpq_index(
     parquet-append inside the existing centroid_id partitions. With
     frozen quantizers, nprobe=all + rerank=corpus probes over
     build(A)+append(B) exactly refine to brute-force cosine over A∪B
-    (pinned by test). Caller contract: ids must be new."""
+    (pinned by test). A batch holding an id already in the index, or a
+    vector of another width than the pinned ``dim``, is refused before
+    anything is written."""
     meta, codebooks = _stored_codebooks(spark, path)
-    dim = int(meta["dim"])
-    _validate_append_dim(embeddings, vec_col, dim, f"ivfpq index at {path}")
+    dim = meta["dim"]
+    refuse_known_ids(
+        "ivfpq index", path, embeddings, id_col,
+        spark.read.parquet(f"{path}/lists").select("id"), vec_col, dim,
+    )
     _, lists = _ivf_structures(
         embeddings, None, id_col, vec_col,
         cvecs=spark.read.parquet(f"{path}/centroids"),
@@ -1437,7 +1413,7 @@ def ivfpq_topk_stored(
     survivors, same contract as every other tier.
     """
     meta, codebooks = _stored_codebooks(spark, path)
-    sub = int(meta["dim"]) // len(codebooks)
+    sub = meta["dim"] // len(codebooks)
     if rerank is None:
         rerank = 3 * k
     probes = _nearest_lists(
@@ -1889,9 +1865,7 @@ def build_rp_index(
     test).
     """
     _write_rp_vectors(embeddings, path, out_dim, id_col, vec_col, dim, "overwrite")
-    literal_df(
-        embeddings.sparkSession, [(out_dim,)], "out_dim int"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+    write_meta(path, dict(out_dim=int(out_dim)))
 
 
 def append_rp_index(
@@ -1909,20 +1883,20 @@ def append_rp_index(
     vectors table: stored probes over build(A)+append(B) are
     bit-identical to build(A∪B) (pinned by test — the strongest append
     contract in the store family, holding for ANY split). out_dim comes
-    from ``{path}/meta``. Caller contract: ids must be new."""
-    meta = spark.read.parquet(f"{path}/meta").first()
-    out_dim = int(meta["out_dim"])
+    from ``{path}/meta``. A batch holding an id already in the index,
+    or a vector of another width than the stored ones, is refused
+    before anything is written."""
+    out_dim = read_meta(path, "rp index")["out_dim"]
     # the RP meta predates an input-dim field, so pin the input width
     # from a stored exact vector: the md5 sign planes are position
     # functions, so a narrower batch would silently project into a
     # DIFFERENT geometry (a prefix of the planes) and corrupt rankings
-    stored = spark.read.parquet(f"{path}/vectors").select(
-        F.size("v").alias("d")
-    ).first()
-    if stored is not None:
-        _validate_append_dim(
-            embeddings, vec_col, int(stored["d"]), f"rp index at {path}"
-        )
+    vectors = spark.read.parquet(f"{path}/vectors")
+    stored = vectors.select(F.size("v").alias("d")).first()
+    refuse_known_ids(
+        "rp index", path, embeddings, id_col, vectors.select("id"),
+        vec_col, stored["d"] if stored is not None else None,
+    )
     _write_rp_vectors(embeddings, path, out_dim, id_col, vec_col, dim, "append")
 
 
@@ -1950,13 +1924,7 @@ def rp_topk_stored(
 
     Output: (query_id, neighbor_id, cosine, rank) — exact cosines.
     """
-    if out_dim is not None:
-        meta = spark.read.parquet(f"{path}/meta").first()
-        if int(meta["out_dim"]) != int(out_dim):
-            raise ValueError(
-                f"rp index at {path} was built with out_dim="
-                f"{meta['out_dim']}, requested out_dim={out_dim}"
-            )
+    read_meta(path, "rp index", out_dim=out_dim)
     vecs = spark.read.parquet(f"{path}/vectors")
     return _rp_rank_refine(
         vecs.select("id", "pv", "pn"), vecs.select("id", "v", "n"), query_ids, k, rerank

@@ -15,7 +15,8 @@ from pyspark.sql import functions as F
 
 from ..functions.hof import let_bound
 
-from ..ckpt import literal_df, materialize, materialize_lazy
+from ..ckpt import materialize, materialize_lazy, release
+from ..stores import read_meta, write_meta
 
 # Minimal stopword lexicons for the n-gram/stopword language heuristic.
 LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
@@ -1050,7 +1051,6 @@ def build_lm_store(
     train-once / score-many; refreshing the model is a rebuild."""
     if order not in (2, 3):
         raise ValueError(f"order must be 2 or 3, got {order}")
-    spark = src.sparkSession
     if order == 2:
         if smoothing != "jm":
             raise ValueError("smoothing is a trigram (order=3) knob")
@@ -1067,49 +1067,36 @@ def build_lm_store(
             smoothing=smoothing, discount=discount,
         )
         bi = lm3.bigram
-    bi.vocab.coalesce(1).write.mode("overwrite").parquet(f"{path}/vocab")
-    bi.prefix_counts.coalesce(1).write.mode("overwrite").parquet(
-        f"{path}/bigram_prefix"
-    )
-    bi.bigram_counts.coalesce(1).write.mode("overwrite").parquet(
-        f"{path}/bigram_counts"
-    )
+    tables = {
+        "vocab": bi.vocab,
+        "bigram_prefix": bi.prefix_counts,
+        "bigram_counts": bi.bigram_counts,
+    }
     if lm3 is not None:
-        lm3.unigram_counts.coalesce(1).write.mode("overwrite").parquet(
-            f"{path}/unigram"
-        )
-        lm3.trigram_prefix_counts.coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{path}/trigram_prefix")
-        lm3.trigram_counts.coalesce(1).write.mode("overwrite").parquet(
-            f"{path}/trigram_counts"
+        tables.update(
+            unigram=lm3.unigram_counts,
+            trigram_prefix=lm3.trigram_prefix_counts,
+            trigram_counts=lm3.trigram_counts,
         )
         if lm3.smoothing == "kn":
-            lm3.kn_cont.coalesce(1).write.mode("overwrite").parquet(
-                f"{path}/kn_cont"
+            tables.update(
+                kn_cont=lm3.kn_cont, kn_mid=lm3.kn_mid, kn_uni=lm3.kn_uni
             )
-            lm3.kn_mid.coalesce(1).write.mode("overwrite").parquet(
-                f"{path}/kn_mid"
-            )
-            lm3.kn_uni.coalesce(1).write.mode("overwrite").parquet(
-                f"{path}/kn_uni"
-            )
+    for name, table in tables.items():
+        table.coalesce(1).write.mode("overwrite").parquet(f"{path}/{name}")
     l3, l2, l1 = (lm3.lambdas if lm3 is not None else
                   tuple(float(x) for x in lambdas))
-    literal_df(
-        spark,
-        [(
-            int(order), int(vocab_size), float(alpha),
-            float(l3), float(l2), float(l1),
-            (lm3.smoothing if lm3 is not None else "jm"),
-            float(discount),
-            int(lm3.total_tokens) if lm3 is not None else 0,
-            int(lm3.kn_bigram_types) if lm3 is not None else 0,
-        )],
-        "order int, vocab_size int, alpha double, l3 double, l2 double, "
-        "l1 double, smoothing string, discount double, total_tokens long, "
-        "kn_bigram_types long",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+    write_meta(path, dict(
+        order=int(order), vocab_size=int(vocab_size), alpha=float(alpha),
+        l3=float(l3), l2=float(l2), l1=float(l1),
+        smoothing=lm3.smoothing if lm3 is not None else "jm",
+        discount=float(discount),
+        total_tokens=int(lm3.total_tokens) if lm3 is not None else 0,
+        kn_bigram_types=int(lm3.kn_bigram_types) if lm3 is not None else 0,
+    ))
+    # every table reads only the build's own checkpoints
+    for table in tables.values():
+        release(table)
 
 
 def read_lm_store(spark, path: str) -> "BigramLM | TrigramLM":
@@ -1118,30 +1105,30 @@ def read_lm_store(spark, path: str) -> "BigramLM | TrigramLM":
     (bounded by construction), so this is a metadata-cheap open; the
     count tables stay DataFrames and broadcast at score time exactly
     like a freshly built model's."""
-    meta = spark.read.parquet(f"{path}/meta").first()
+    meta = read_meta(path, "lm store")
     bi = BigramLM(
         spark.read.parquet(f"{path}/vocab"),
         spark.read.parquet(f"{path}/bigram_prefix"),
         spark.read.parquet(f"{path}/bigram_counts"),
-        int(meta["vocab_size"]),
-        float(meta["alpha"]),
+        meta["vocab_size"],
+        meta["alpha"],
     )
-    if int(meta["order"]) == 2:
+    if meta["order"] == 2:
         return bi
     kn = meta["smoothing"] == "kn"
     return TrigramLM(
         bi,
         spark.read.parquet(f"{path}/unigram"),
-        int(meta["total_tokens"]),
+        meta["total_tokens"],
         spark.read.parquet(f"{path}/trigram_prefix"),
         spark.read.parquet(f"{path}/trigram_counts"),
-        (float(meta["l3"]), float(meta["l2"]), float(meta["l1"])),
-        smoothing=str(meta["smoothing"]),
-        discount=float(meta["discount"]),
+        (meta["l3"], meta["l2"], meta["l1"]),
+        smoothing=meta["smoothing"],
+        discount=meta["discount"],
         kn_cont=spark.read.parquet(f"{path}/kn_cont") if kn else None,
         kn_mid=spark.read.parquet(f"{path}/kn_mid") if kn else None,
         kn_uni=spark.read.parquet(f"{path}/kn_uni") if kn else None,
-        kn_bigram_types=int(meta["kn_bigram_types"]),
+        kn_bigram_types=meta["kn_bigram_types"],
     )
 
 
