@@ -537,30 +537,13 @@ def q_token_budget_documents(spark, sf_dir):
     """Greedy token-budget cut (r12): the best-quality prefix whose
     running ws-token total fits 15k tokens. The plan never globally
     sorts the corpus — per-quality-value running totals ladder +
-    boundary-bucket window only (sampling.token_budget_select)."""
+    within-bucket windows (sampling.token_budget_select)."""
     from whylogs_java_spark.operators.sampling import token_budget_select
 
     q = quality_metrics(_t(spark, sf_dir, "documents"), "text", "doc_id").select(
         "doc_id", F.col("word_count").cast("long").alias("word_count"), "quality"
     )
     return token_budget_select(q, "doc_id", "word_count", "quality", 15_000)
-
-
-def q_token_budget_scan_documents(spark, sf_dir):
-    """The SCAN tier of the token-budget cut (r13): identical greedy
-    semantics computed as a distributed prefix sum (range partition +
-    per-partition offsets + Arrow cumsum) — NO one-task window at any
-    score distribution, the cliff-free answer to the ladder tier's
-    allow_hot_bucket guard. Shares token_budget_documents' oracle
-    verbatim (the tiers are bit-identical by contract)."""
-    from whylogs_java_spark.operators.sampling import token_budget_select
-
-    q = quality_metrics(_t(spark, sf_dir, "documents"), "text", "doc_id").select(
-        "doc_id", F.col("word_count").cast("long").alias("word_count"), "quality"
-    )
-    return token_budget_select(
-        q, "doc_id", "word_count", "quality", 15_000, method="scan"
-    )
 
 
 def q_vocab_oov_documents(spark, sf_dir):
@@ -4192,7 +4175,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lm_score3_kn_stored_documents": q_lm_score3_kn_stored_documents,
         "ccnet_buckets_documents": q_ccnet_buckets_documents,
         "token_budget_documents": q_token_budget_documents,
-        "token_budget_scan_documents": q_token_budget_scan_documents,
         "corpus_overlap": q_corpus_overlap,
         "winnow_pairs": q_winnow_pairs,
         "dedup_threshold_report": q_dedup_threshold_report,
@@ -7271,22 +7253,7 @@ def oracle_sql() -> dict[str, str]:
     SELECT doc_id, source, quality, CAST(source_rank AS INT) AS source_rank
     FROM r WHERE source_rank <= 12
 """,
-        # the scan tier shares this oracle verbatim (bit-identical tiers)
         "token_budget_documents": f"""
-    WITH q AS ( {_QUALITY_ORACLE} ),
-    c AS (
-      SELECT doc_id, CAST(word_count AS BIGINT) AS word_count, quality,
-             SUM(word_count) OVER (
-               ORDER BY COALESCE(quality, '-infinity'::DOUBLE) DESC,
-                        doc_id ASC
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-             ) AS cum_tokens
-      FROM q
-    )
-    SELECT doc_id, word_count, quality, CAST(cum_tokens AS BIGINT) AS cum_tokens
-    FROM c WHERE cum_tokens <= 15000
-""",
-        "token_budget_scan_documents": f"""
     WITH q AS ( {_QUALITY_ORACLE} ),
     c AS (
       SELECT doc_id, CAST(word_count AS BIGINT) AS word_count, quality,

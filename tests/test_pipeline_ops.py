@@ -1159,7 +1159,7 @@ def test_lm_stream_matches_batch_any_boundaries(spark, tmp_path):
     """Streaming LM scoring == batch scoring with the same static LM over
     the same rows, regardless of micro-batch boundaries (per-doc operator;
     foreachBatch runs the exact batch scorer per batch)."""
-    from whylogs_java_spark.operators.text import build_bigram_lm, lm_score_with
+    from whylogs_java_spark.operators.text import build_ngram_lm, lm_score_with
     from whylogs_java_spark.streaming.lm_stream import lm_score_stream
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
@@ -1191,7 +1191,7 @@ def test_lm_stream_matches_batch_any_boundaries(spark, tmp_path):
     finally:
         q.stop()
 
-    lm = build_bigram_lm(lm_corpus, "text", vocab_size=128, top_bigrams=1024)
+    lm = build_ngram_lm(lm_corpus, "text", vocab_size=128, top_bigrams=1024)
     batch_report = {
         r["doc_id"]: (r["n_bigrams"], r["avg_logp"], r["perplexity"])
         for r in lm_score_with(docs, "text", "doc_id", lm).collect()
@@ -1206,13 +1206,10 @@ def test_lm_stream_matches_batch_any_boundaries(spark, tmp_path):
 
 
 def test_lm_stream_trigram_tier_matches_batch(spark, tmp_path):
-    """order=3 streaming LM scoring == batch lm_score3_with against the
-    same frozen TrigramLM over the same rows (per-doc operator — the
-    bigram-tier equivalence argument carries unchanged)."""
-    from whylogs_java_spark.operators.text import (
-        build_trigram_lm,
-        lm_score3_with,
-    )
+    """order=3 streaming LM scoring == batch lm_score_with against the
+    same frozen order-3 NgramLM over the same rows (per-doc operator —
+    the bigram-tier equivalence argument carries unchanged)."""
+    from whylogs_java_spark.operators.text import build_ngram_lm, lm_score_with
     from whylogs_java_spark.streaming.lm_stream import lm_score_stream
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
@@ -1240,10 +1237,10 @@ def test_lm_stream_trigram_tier_matches_batch(spark, tmp_path):
     finally:
         q.stop()
 
-    lm3 = build_trigram_lm(lm_corpus, "text", **kw)
+    lm3 = build_ngram_lm(lm_corpus, "text", order=3, **kw)
     batch_report = {
         r["doc_id"]: (r["n_trigrams"], r["avg_logp"], r["perplexity"])
-        for r in lm_score3_with(docs, "text", "doc_id", lm3).collect()
+        for r in lm_score_with(docs, "text", "doc_id", lm3).collect()
     }
     stream_report = {
         r["doc_id"]: (r["n_trigrams"], r["avg_logp"], r["perplexity"])
@@ -3183,11 +3180,9 @@ def test_token_budget_select_matches_global_greedy(spark):
 
 
 def test_token_budget_continuous_score_guard(spark):
-    """r12 verdict item: the ladder contract ('round continuous scores
-    first') is now ENFORCED — a score with more distinct values than
-    max_ladder is refused with a pointer at quantize; quantize bounds
-    the ladder and matches the python greedy over the ROUNDED scores
-    (ties ordered id-asc, the documented coarsening contract)."""
+    """quantize bounds the ladder of a continuous score and matches the
+    python greedy over the ROUNDED scores (ties ordered id-asc, the
+    documented coarsening contract)."""
     from whylogs_java_spark.operators.sampling import token_budget_select
 
     df = spark.range(200).select(
@@ -3195,11 +3190,8 @@ def test_token_budget_continuous_score_guard(spark):
         (F.col("id") / 7.0).alias("q"),   # 200 distinct 'continuous' scores
         F.lit(3).cast("long").alias("toks"),
     )
-    with pytest.raises(ValueError, match="quantize"):
-        token_budget_select(df, "id", "toks", "q", 60, max_ladder=50)
-
     out = {r["id"]: r["cum_tokens"] for r in token_budget_select(
-        df, "id", "toks", "q", 60, quantize=0, max_ladder=50
+        df, "id", "toks", "q", 60, quantize=0
     ).collect()}
     rows = [(i, round(i / 7.0 + 1e-12), 3) for i in range(200)]
     order = sorted(rows, key=lambda r: (-r[1], r[0]))
@@ -3211,70 +3203,18 @@ def test_token_budget_continuous_score_guard(spark):
     assert out == want and len(out) == 20
 
 
-def test_token_budget_hot_boundary_bucket_guard(spark):
-    """A CONSTANT score funnels the whole corpus into the boundary
-    bucket's one-task window — refused past max_bucket_rows unless the
-    caller opts in (the pack_assign allow_single_stream precedent).
-    Whole-bucket ACCEPTS (never paying the boundary window) stay
-    unguarded."""
-    from whylogs_java_spark.operators.sampling import token_budget_select
-
-    df = spark.range(50).select(
-        F.col("id"), F.lit(1.0).alias("q"), F.lit(2).cast("long").alias("toks")
-    )
-    with pytest.raises(ValueError, match="allow_hot_bucket"):
-        token_budget_select(df, "id", "toks", "q", 30, max_bucket_rows=10)
-    got = token_budget_select(
-        df, "id", "toks", "q", 30, max_bucket_rows=10, allow_hot_bucket=True
-    )
-    assert got.count() == 15
-    # ACCEPTED hot buckets are guarded too — they pay the same
-    # one-task window for their per-row running totals
-    with pytest.raises(ValueError, match="allow_hot_bucket"):
-        token_budget_select(df, "id", "toks", "q", 1_000, max_bucket_rows=10)
-    # buckets below the threshold never trip the guard
-    fine = spark.range(50).select(
-        F.col("id"), (F.col("id") % 10).cast("double").alias("q"),
-        F.lit(2).cast("long").alias("toks"),
-    )
-    assert token_budget_select(
-        fine, "id", "toks", "q", 1_000, max_bucket_rows=10
-    ).count() == 50
-
-
-def test_token_budget_scan_tier_bit_identical_and_cliff_free(spark):
-    """method='scan' (distributed prefix sum) == the ladder tier on
-    mixed data, == the brute global window on a CONSTANT score (the
-    regime the ladder guard refuses), and its plan carries NO Window at
-    all — range exchange + Arrow cumsum only."""
+def test_token_budget_constant_score_matches_brute_window(spark):
+    """A CONSTANT score puts the whole corpus in one bucket: the kept
+    rows still equal the brute global cumulative window."""
     from pyspark.sql import Window
 
     from whylogs_java_spark.operators.sampling import token_budget_select
 
-    rows = [
-        (1, 0.9, 10), (2, 0.9, 10), (3, 0.5, 25), (4, 0.5, 5),
-        (5, None, 1), (6, 0.1, None), (7, 0.1, -3), (8, 1.0, 7),
-        (9, 0.5, 0),
-    ]
-    df = spark.createDataFrame(rows, "id long, q double, toks long")
-    for budget in (0, 50, 52, 57, 1_000):
-        ladder = sorted(map(tuple, token_budget_select(
-            df, "id", "toks", "q", budget
-        ).collect()))
-        scan = sorted(map(tuple, token_budget_select(
-            df, "id", "toks", "q", budget, method="scan"
-        ).collect()))
-        assert scan == ladder, budget
-
-    # constant score: ladder refuses at tight max_bucket_rows; scan
-    # just runs, matching the brute global cumulative window
     const = spark.range(500).select(
         F.col("id"), F.lit(1.0).alias("q"),
         (F.col("id") % 7 + 1).cast("long").alias("toks"),
     )
-    with pytest.raises(ValueError, match="scan"):
-        token_budget_select(const, "id", "toks", "q", 900, max_bucket_rows=100)
-    got = token_budget_select(const, "id", "toks", "q", 900, method="scan")
+    got = token_budget_select(const, "id", "toks", "q", 900)
     w = Window.orderBy(F.col("q").desc(), F.col("id").asc()).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -3284,11 +3224,48 @@ def test_token_budget_scan_tier_bit_identical_and_cliff_free(spark):
     assert sorted(map(tuple, got.collect())) == sorted(
         map(tuple, brute.collect())
     )
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan and "MapInPandas" in plan
 
-    with pytest.raises(ValueError, match="method"):
-        token_budget_select(df, "id", "toks", "q", 10, method="sorted")
+
+def test_token_budget_many_distinct_scores_match_brute_window(spark):
+    """70,000 distinct scores with the default arguments: no refusal,
+    and the kept rows equal the brute global SUM() OVER (ORDER BY q
+    DESC, id) cut."""
+    from pyspark.sql import Window
+
+    from whylogs_java_spark.operators.sampling import token_budget_select
+
+    n = 70_000
+    df = spark.range(n).select(
+        F.col("id"),
+        ((F.col("id") * 104729 % n) / float(n)).alias("q"),
+        (F.col("id") * 7919 % 500 + 1).alias("toks"),
+    )
+    budget = df.agg(F.sum("toks")).first()[0] // 2
+    got = token_budget_select(df, "id", "toks", "q", budget)
+    w = Window.orderBy(F.col("q").desc(), F.col("id").asc()).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    brute = df.withColumn("cum_tokens", F.sum("toks").over(w)).where(
+        F.col("cum_tokens") <= budget
+    )
+    assert got.count() > 0
+    assert got.exceptAll(brute).isEmpty() and brute.exceptAll(got).isEmpty()
+
+
+def test_token_budget_leaves_nothing_persisted(spark):
+    """The plan is lazy: a call and an action over its output leave the
+    session's persisted RDDs as they were."""
+    from whylogs_java_spark.operators.sampling import token_budget_select
+
+    df = spark.range(2_000).select(
+        F.col("id"),
+        (F.col("id") % 13).cast("double").alias("q"),
+        (F.col("id") % 11 + 1).alias("toks"),
+    )
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    assert token_budget_select(df, "id", "toks", "q", 5_000).collect()
+    assert set(jsc.getPersistentRDDs().keySet()) <= before
 
 
 def test_token_budget_plan_has_no_global_sort(spark):
@@ -4512,14 +4489,12 @@ def test_bpe_train_census_row_guard(spark):
         bpe_train(docs, "text", n_merges=4, method="driver")
 
 
-def test_token_budget_scan_float_tokens_with_nonfinite(spark):
-    """Float tokens_col with NaN/Inf: both tiers try_cast to long, so
+def test_token_budget_float_tokens_with_nonfinite(spark):
+    """Float tokens_col with NaN/Inf: the tokens try_cast to long, so
     non-finite token counts land in the documented rejected-rows
-    bucket (NULL tokens) instead of throwing the ANSI CAST_OVERFLOW —
-    and the scan tier's Arrow cumsum sees pre-cast longs (raw NaN
-    would crash pandas astype("int64") and break the
-    bit-identical-tiers contract). Kept rows keep their ORIGINAL
-    float values; fractional counts truncate like SQL cast."""
+    bucket (NULL tokens) instead of throwing the ANSI CAST_OVERFLOW.
+    Kept rows keep their ORIGINAL float values; fractional counts
+    truncate like SQL cast."""
     from whylogs_java_spark.operators.sampling import token_budget_select
 
     rows = [
@@ -4533,16 +4508,15 @@ def test_token_budget_scan_float_tokens_with_nonfinite(spark):
             (r["id"], r["q"], r["toks"], r["cum_tokens"]) for r in rs
         )
 
-    for budget in (0, 12, 43, 10**15):
-        ladder = norm(token_budget_select(
+    # greedy over (q DESC, id): ids 1, 3, 4, 6 at cum 10, 35, 40, 43
+    want = {0: [], 12: [1], 43: [1, 3, 4, 6], 10**15: [1, 3, 4, 6]}
+    for budget, ids in want.items():
+        got = norm(token_budget_select(
             df, "id", "toks", "q", budget
         ).collect())
-        scan = norm(token_budget_select(
-            df, "id", "toks", "q", budget, method="scan"
-        ).collect())
-        assert scan == ladder, budget
+        assert [r[0] for r in got] == ids, budget
     # non-finite rows are rejected everywhere; 5.5 truncates to 5
-    kept = {r[0]: r for r in scan}
+    kept = {r[0]: r for r in got}
     assert 2 not in kept and 5 not in kept
     assert kept[4][2] == 5.5 and kept[4][3] == 10 + 25 + 5
 
@@ -4572,7 +4546,7 @@ def test_parse_state_ttl_forms_and_errors():
 def _py_kn_score(corpus, docs, vocab_size=512, top_bigrams=4096,
                  top_trigrams=16384, alpha=0.5, discount=0.75):
     """Pure-python interpolated-KN reference (Chen & Goodman 1999),
-    mirroring build_trigram_lm(smoothing='kn') + lm_score3_with:
+    mirroring build_ngram_lm(order=3, smoothing='kn') + lm_score_with:
     top-V vocab, unk-mapping, top-T trigram truncation, continuation
     counts from the untruncated type censuses, add-alpha-floored
     continuation unigram."""

@@ -1380,46 +1380,15 @@ def test_cli_quota_subcommand(spark, tmp_path, monkeypatch, capsys):
     with _pytest.raises(SystemExit):
         cli.main(["quota", src, "-o", out2, "--token-budget", "35"])
 
-    # the ladder guards' escape hatches are reachable from the CLI
-    # (r13 advice): a constant score at a tight --max-bucket-rows trips
-    # the hot-bucket refusal; --method scan and --allow-hot-bucket both
-    # clear it with identical kept rows; --quantize coarsens a
-    # continuous score past a tight --max-ladder.
-    const = str(tmp_path / "q_const.parquet")
-    spark.createDataFrame(
-        [(i, "s", 1.0, 10) for i in range(12)],
-        "doc_id long, source string, q double, n_tokens long",
-    ).write.parquet(const)
-    with _pytest.raises(ValueError, match="allow_hot_bucket"):
-        cli.main(["quota", const, "-o", str(tmp_path / "q_g"),
-                  "--token-budget", "35", "--prefer-col", "q",
-                  "--max-bucket-rows", "5"])
-    outs = []
-    for name, extra in [
-        ("q_scan", ["--method", "scan", "--max-bucket-rows", "5"]),
-        ("q_hot", ["--allow-hot-bucket", "--max-bucket-rows", "5"]),
-    ]:
-        dst = str(tmp_path / name)
-        rc = cli.main(["quota", const, "-o", dst, "--token-budget", "35",
-                       "--prefer-col", "q"] + extra)
-        assert rc == 0
-        outs.append(sorted(
-            map(tuple, spark.read.parquet(dst).collect())
-        ))
-    assert outs[0] == outs[1] and len(outs[0]) == 3
-
+    # --quantize coarsens a continuous score into the ladder
     cont = str(tmp_path / "q_cont.parquet")
     spark.createDataFrame(
         [(i, "s", i * 0.001, 10) for i in range(12)],
         "doc_id long, source string, q double, n_tokens long",
     ).write.parquet(cont)
-    with _pytest.raises(ValueError, match="quantize"):
-        cli.main(["quota", cont, "-o", str(tmp_path / "q_l"),
-                  "--token-budget", "35", "--prefer-col", "q",
-                  "--max-ladder", "5"])
     rc = cli.main(["quota", cont, "-o", str(tmp_path / "q_q"),
                    "--token-budget", "35", "--prefer-col", "q",
-                   "--max-ladder", "5", "--quantize", "1"])
+                   "--quantize", "1"])
     assert rc == 0 and spark.read.parquet(str(tmp_path / "q_q")).count() == 3
 
 

@@ -2,8 +2,9 @@
 
 Three properties of every build-once / probe-many store:
 
-- an append refuses a batch holding an id the store already holds, and
-  leaves the store's files as they were;
+- a build or an append refuses a batch holding an id twice, and an
+  append one holding an id the store already holds, and leaves the
+  store's files as they were;
 - opening a store reads its meta on the driver, with no Spark job: the
   job counts below are the data-table reads alone (one schema
   inference per parquet table; the k-means model also sorts its
@@ -24,6 +25,7 @@ import pytest
 
 from whylogs_java_spark.operators.cluster import (
     build_kmeans_model,
+    kmeans_assign_stored,
     read_kmeans_model,
 )
 from whylogs_java_spark.operators.decontam import (
@@ -71,48 +73,51 @@ def _vectors(spark, ids, dim=8):
     )
 
 
-def _text_store(build, append):
-    def make(spark, path):
-        build(_docs(spark, DOCS), path)
-        # id 1 again, with longer text, next to a new id 3
-        again = _docs(spark, [(1, TEXT + " again and again"), (3, "fresh text")])
-        return lambda: append(again, path)
-
-    return make
-
-
-def _vector_store(build, append):
-    def make(spark, path):
-        build(_vectors(spark, range(1, 9)), path)
-        return lambda: append(spark, path, _vectors(spark, [1, 20]))
-
-    return make
-
-
-APPENDS = {
-    "minhash": _text_store(
+# store -> (batch kind, build(df, path), append(df, path))
+STORES = {
+    "minhash": (
+        "text",
         lambda df, p: build_minhash_store(df, p, "text", "doc_id", n_buckets=4),
         lambda df, p: append_minhash_store(df, p, "text", "doc_id"),
     ),
-    "winnow": _text_store(
+    "winnow": (
+        "text",
         lambda df, p: build_winnow_store(df, p, "text", "doc_id", n_buckets=4),
         lambda df, p: append_winnow_store(df, p, "text", "doc_id"),
     ),
-    "text_index": _text_store(
+    "text_index": (
+        "text",
         lambda df, p: build_text_index(df, p, "text", "doc_id", n_buckets=4),
         lambda df, p: append_text_index(df, p, "text", "doc_id"),
     ),
-    "ivf": _vector_store(
-        lambda df, p: build_ivf_index(df, p, n_centroids=2), append_ivf_index
+    "ivf": (
+        "vector",
+        lambda df, p: build_ivf_index(df, p, n_centroids=2),
+        lambda df, p: append_ivf_index(df.sparkSession, p, df),
     ),
-    "ivfpq": _vector_store(
+    "ivfpq": (
+        "vector",
         lambda df, p: build_ivfpq_index(df, p, n_centroids=2, m=2, codebook_k=2),
-        append_ivfpq_index,
+        lambda df, p: append_ivfpq_index(df.sparkSession, p, df),
     ),
-    "rp": _vector_store(
-        lambda df, p: build_rp_index(df, p, out_dim=4), append_rp_index
+    "rp": (
+        "vector",
+        lambda df, p: build_rp_index(df, p, out_dim=4),
+        lambda df, p: append_rp_index(df.sparkSession, p, df),
     ),
 }
+
+
+def _base(spark, kind):
+    """The batch every store is built from: docs 1-2 or vectors 1-8."""
+    return _docs(spark, DOCS) if kind == "text" else _vectors(spark, range(1, 9))
+
+
+def _batch(spark, kind, ids):
+    """A batch of ``ids`` (repeats allowed), each row with its own text."""
+    if kind == "vector":
+        return _vectors(spark, ids)
+    return _docs(spark, [(i, f"{TEXT} {n}") for n, i in enumerate(ids)])
 
 
 def _files(path):
@@ -126,13 +131,15 @@ def _files(path):
     return out
 
 
-@pytest.mark.parametrize("store", sorted(APPENDS))
+@pytest.mark.parametrize("store", sorted(STORES))
 def test_append_refuses_ids_already_in_store(spark, tmp_path, store):
     path = str(tmp_path / store)
-    append = APPENDS[store](spark, path)
+    kind, build, append = STORES[store]
+    build(_base(spark, kind), path)
     before = _files(path)
     with pytest.raises(ValueError, match=re.escape(f"at {path} already holds id 1")):
-        append()
+        # id 1 again, with other content, next to a new id
+        append(_batch(spark, kind, [1, 20]), path)
     assert _files(path) == before
     if store == "minhash":
         # a probe copy of doc 1 matches the stored doc once, not once
@@ -140,6 +147,27 @@ def test_append_refuses_ids_already_in_store(spark, tmp_path, store):
         probe = _docs(spark, [(100, TEXT)])
         pairs = cross_dedup_stored(spark, path, probe, "text", "doc_id")
         assert [(r["id_a"], r["id_b"]) for r in pairs.collect()] == [(1, 100)]
+
+
+@pytest.mark.parametrize("leg", ["build", "append"])
+@pytest.mark.parametrize("store", sorted(STORES))
+def test_write_refuses_ids_repeated_in_batch(spark, tmp_path, store, leg):
+    """A batch holding one id twice is refused by every build and
+    append, before anything is written: both versions would otherwise
+    be stored and match."""
+    path = str(tmp_path / store)
+    kind, build, append = STORES[store]
+    write = build
+    if leg == "append":
+        build(_base(spark, kind), path)
+        write = append
+    before = _files(path)
+    batch = _batch(spark, kind, [20, 21, 20])
+    with pytest.raises(
+        ValueError, match=re.escape(f"at {path}: the batch holds id 20 more")
+    ):
+        write(batch, path)
+    assert _files(path) == before
 
 
 @contextlib.contextmanager
@@ -212,3 +240,17 @@ def test_store_writers_release_checkpoints(spark, tmp_path):
         before = _persisted(spark)
         step()
         assert _persisted(spark) <= before, name
+
+
+def test_kmeans_assign_stored_leaves_nothing_persisted(spark, tmp_path):
+    """Assigning against a stored model reads the prepared vectors once,
+    so it takes no checkpoint that would outlive the call."""
+    path = str(tmp_path / "k")
+    build_kmeans_model(_vectors(spark, range(1, 17)), path, k=2)
+    before = _persisted(spark)
+    for _ in range(2):
+        rows = kmeans_assign_stored(
+            spark, path, _vectors(spark, range(30, 40))
+        ).collect()
+        assert len(rows) == 10
+    assert _persisted(spark) <= before

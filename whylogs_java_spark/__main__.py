@@ -869,25 +869,10 @@ def _run_quota(argv: list[str]) -> int:
     p.add_argument("--prefer-col", default=None,
                    help="ordering column (required for --token-budget; "
                         "optional for --cap: id-ordered when omitted)")
-    p.add_argument("--method", choices=["ladder", "scan"], default="ladder",
-                   help="token-budget plan: 'ladder' (default; refuses "
-                        "continuous scores / hot buckets — see --quantize "
-                        "and --allow-hot-bucket) or 'scan' (distributed "
-                        "prefix sum, bit-identical output, no guards — "
-                        "pays a range shuffle)")
     p.add_argument("--quantize", type=int, default=None, metavar="DECIMALS",
                    help="round --prefer-col to DECIMALS before the "
-                        "token-budget ladder (the continuous-score "
-                        "escape hatch; ties order id-asc)")
-    p.add_argument("--allow-hot-bucket", action="store_true",
-                   help="accept the one-task window a mega-bucket score "
-                        "implies instead of refusing (prefer --method "
-                        "scan)")
-    p.add_argument("--max-ladder", type=int, default=65536,
-                   help="ladder guard: max distinct --prefer-col values")
-    p.add_argument("--max-bucket-rows", type=int, default=10_000_000,
-                   help="ladder guard: max rows in one participating "
-                        "score bucket")
+                        "token-budget ladder (bounds its distinct "
+                        "scores; ties order id-asc)")
     a = p.parse_args(argv)
     if a.token_budget is not None and a.prefer_col is None:
         p.error("--token-budget requires --prefer-col")
@@ -904,10 +889,6 @@ def _run_quota(argv: list[str]) -> int:
             out = token_budget_select(
                 df, a.id_col, a.tokens_col, a.prefer_col, a.token_budget,
                 quantize=a.quantize,
-                max_ladder=a.max_ladder,
-                max_bucket_rows=a.max_bucket_rows,
-                allow_hot_bucket=a.allow_hot_bucket,
-                method=a.method,
             )
         out.write.mode("overwrite").parquet(a.output)
         n = spark.read.parquet(a.output).count()

@@ -97,15 +97,15 @@ def _assign_join(emb: DataFrame, centroids: list[list[float]]) -> DataFrame:
 
 
 def _prepare_emb(embeddings: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """Checkpointed (__id, __v double[]) table — the shared prep for the
-    assignment and codebook-training entry points (one materialization,
-    multiple Lloyd passes read it)."""
+    """The (__id, __v double[]) table — the shared prep for the
+    assignment and codebook-training entry points. The training callers
+    materialize it (several Lloyd passes read it); a fixed-centroid
+    assignment reads it once, so it stays lazy there."""
     emb = embeddings.select(
         F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")
     ).where(F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) > 0))
     emb = emb.selectExpr("__id", f"{sqlx.as_double_s('__v')} AS __v")
-    emb = spread(emb)
-    return emb.transform(materialize)
+    return spread(emb)
 
 
 def _assign_literal(centroids: list[list[float]]):
@@ -202,7 +202,7 @@ def kmeans_centroids(
     if assign not in ("auto", "literal", "join"):
         raise ValueError(f"unknown assign mode {assign!r}")
     use_join = (k > LITERAL_K_MAX) if assign == "auto" else (assign == "join")
-    emb = _prepare_emb(embeddings, id_col, vec_col)
+    emb = _prepare_emb(embeddings, id_col, vec_col).transform(materialize)
     try:
         return _lloyd_iterations(emb, k, n_iter, use_join)
     finally:
@@ -235,7 +235,7 @@ def kmeans_assign(
     # prepared table materialized ONCE (seeding, each Lloyd round, and
     # the final assignment are separate jobs that would otherwise re-run
     # the scan + cast + spread per pass)
-    emb = _prepare_emb(embeddings, id_col, vec_col)
+    emb = _prepare_emb(embeddings, id_col, vec_col).transform(materialize)
     centroids = _lloyd_iterations(emb, k, n_iter, use_join)
     if not centroids:
         # empty result must carry the input's actual id type (string ids

@@ -1498,6 +1498,7 @@ def build_minhash_store(
     per-batch cost is O(batch + matched candidates), with the ref side
     read partition-pruned, never recomputed.
     """
+    refuse_known_ids("minhash store", path, df, id_col)
     df = spread(df.select(id_col, text_col))
     bands_df = _band_table(
         df, text_col, id_col, num_hashes, bands, shingle_size, char_ngrams,
@@ -2032,6 +2033,7 @@ def build_winnow_store(
     Store size is O(selected prints) ≈ 0.4× the reference gram count at
     window=4 — a frozen reference corpus reduces once, not per batch.
     """
+    refuse_known_ids("winnow store", path, df, id_col)
     _write_prints(df, path, text_col, id_col, k, window, n_buckets, "overwrite")
     write_meta(path, dict(k=int(k), window=int(window), n_buckets=int(n_buckets)))
 

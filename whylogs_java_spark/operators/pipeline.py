@@ -325,15 +325,13 @@ def _ccnet_tier_gate(
     from .sampling import score_cutoffs
     from .text import lm_score
 
-    kwargs = {} if order == 2 else {
-        "order": order, "top_trigrams": top_trigrams,
-    }
     scored = corpus.select(
         F.col(id_col), F.col(lang_col), F.col(source_col), "__clean_tokens"
     ).join(
         lm_score(
             corpus, "clean_text", id_col,
-            vocab_size=vocab_size, top_bigrams=top_bigrams, **kwargs,
+            vocab_size=vocab_size, top_bigrams=top_bigrams, order=order,
+            top_trigrams=top_trigrams,
         ).select(F.col(id_col), "perplexity"),
         id_col,
     ).transform(_materialize_lazy)
@@ -463,12 +461,9 @@ def training_manifest_v5(
                                              exact terciles, tail drops)
           → per-source quota                (cap best-perplexity docs
                                              per source)
-          → global token budget, SCAN tier  (the final "best N tokens"
+          → global token budget             (the final "best N tokens"
                                              cut over the survivors by
-                                             (-perplexity, id) — the
-                                             r13 distributed prefix
-                                             sum, cliff-free for any
-                                             perplexity distribution)
+                                             (-perplexity, id))
           → manifest
 
     Output, one row per admitted doc: (id, lang, source, perplexity,
@@ -479,8 +474,8 @@ def training_manifest_v5(
     quota window → budget window).
 
     Scale: v4's ledger plus the trigram LM's two extra bounded
-    broadcast tables and the budget stage's one range shuffle over the
-    already-quota-capped survivor set (≤ cap × sources rows).
+    broadcast tables and the budget stage's census and bucket windows
+    over the already-quota-capped survivor set (≤ cap × sources rows).
     """
     from .decontam import decontaminate_spans
     from .sampling import source_cap, token_budget_select
@@ -516,5 +511,5 @@ def training_manifest_v5(
         F.col("__q"),
     )
     return token_budget_select(
-        capped, id_col, "n_tokens", "__q", token_budget, method="scan"
+        capped, id_col, "n_tokens", "__q", token_budget
     ).drop("__q")

@@ -227,6 +227,7 @@ def build_text_index(
     collect)."""
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
+    refuse_known_ids("text index", path, docs, id_col)
     postings = _postings(docs, text_col, id_col, n_buckets)
     # cluster by bucket before the partitioned write: one task per
     # bucket writes one file instead of every shuffle partition writing

@@ -809,6 +809,7 @@ def build_ivf_index(
         raise ValueError(
             f"centroids must be 'sample' or 'kmeans', got {centroids!r}"
         )
+    refuse_known_ids("ivf index", path, embeddings, id_col)
     spark = embeddings.sparkSession
     cvecs_in = None
     if centroids == "kmeans":
@@ -1297,6 +1298,7 @@ def build_ivfpq_index(
     corpus probe identically (pinned by test). Pass ``codebooks`` (e.g.
     ``pq_train_codebooks`` output) to trade oracle replay for recall.
     """
+    refuse_known_ids("ivfpq index", path, embeddings, id_col)
     cvecs, lists = _ivf_structures(embeddings, n_centroids, id_col, vec_col)
     # two consumers (codebook sample, encode scan): materialize once
     lists = lists.transform(materialize)
@@ -1864,6 +1866,7 @@ def build_rp_index(
     stored probes are bit-identical to the in-memory tier (pinned by
     test).
     """
+    refuse_known_ids("rp index", path, embeddings, id_col)
     _write_rp_vectors(embeddings, path, out_dim, id_col, vec_col, dim, "overwrite")
     write_meta(path, dict(out_dim=int(out_dim)))
 

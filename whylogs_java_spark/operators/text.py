@@ -449,95 +449,150 @@ def packing_stats(
     )
 
 
-class BigramLM(NamedTuple):
-    """A built smoothed-bigram LM: three bounded DataFrame tables (all
-    checkpointed/broadcastable regardless of corpus size) plus the
-    smoothing constants. Build once with ``build_bigram_lm``; score any
-    number of corpora or micro-batches with ``lm_score_with``."""
+class NgramLM(NamedTuple):
+    """A built smoothed n-gram LM (see :func:`build_ngram_lm`): bounded
+    count tables (all broadcastable regardless of corpus size) plus the
+    scoring constants. Build once; score any number of corpora or
+    micro-batches with :func:`lm_score_with`.
 
-    vocab: DataFrame           # (tok) — exact top-V, deterministic ties
-    prefix_counts: DataFrame   # (prev, __cp) — ≤ V+1 rows
-    bigram_counts: DataFrame   # (prev, w, __cb) — exact top-B
+    Every model carries the vocabulary and the bigram tables. An
+    ``order=3`` model adds the unigram, trigram-prefix and trigram
+    tables; a ``smoothing="kn"`` model adds the Kneser-Ney continuation
+    tables, every one an aggregate of the trigram/bigram type census,
+    so none can outgrow the count tables it derives from. The tables an
+    order or smoothing does not use are ``None``."""
+
+    order: int                       # 2 | 3
+    vocab: DataFrame                 # (tok) — exact top-V, deterministic ties
+    prefix_counts: DataFrame         # (prev, __cp) — ≤ V+1 rows
+    bigram_counts: DataFrame         # (prev, w, __cb) — exact top-B
     vocab_size: int
     alpha: float
-    # the FULL mapped-bigram census the two count tables derive from
-    # (≤ (V+1)² rows, checkpointed). Kept so downstream builders that
-    # need the same census (the KN trigram tier's unigram-continuation
-    # counts) reuse it instead of re-running the corpus pass; None when
-    # the LM was reconstructed from a store (stores persist only the
-    # bounded count tables).
-    bigram_type_counts: DataFrame | None = None
+    lambdas: tuple                   # (λ3, λ2, λ1), sums to 1 (order-3 jm)
+    smoothing: str = "jm"            # "jm" | "kn" (order 3)
+    discount: float = 0.75           # KN absolute discount D
+    unigram_counts: DataFrame | None = None   # (w, __cu) — ≤ V+1 rows
+    total_tokens: int = 0            # N: total mapped token count
+    trigram_prefix_counts: DataFrame | None = None  # (prev2, prev, __cq[, __nt])
+    trigram_counts: DataFrame | None = None  # (prev2, prev, w, __ct) — top-T
+    kn_cont: DataFrame | None = None  # (prev, w, __npw=N1+(·,v,w))
+    kn_mid: DataFrame | None = None   # (prev, __nmid=N1+(·,v,·), __tv)
+    kn_uni: DataFrame | None = None   # (w, __n1w=N1+(·,w))
+    kn_bigram_types: int = 0          # N1+(·,·): distinct mapped bigrams
+
+
+# the context columns of an n-gram row, last token last
+_GRAM_COLS = ("prev2", "prev", "w")
 
 
 def _lm_toks(c: Column) -> Column:
     return F.filter(F.split(F.lower(c), " "), lambda t: t != "")
 
 
-def _bigram_rows(
-    source: DataFrame, text_col: str, vocab: DataFrame, id_col: str | None
+def _gram_rows(
+    source: DataFrame, text_col: str, vocab: DataFrame, id_col: str | None,
+    n: int,
 ) -> DataFrame:
-    """(id?, pos, prev, w) bigram rows with out-of-vocabulary tokens
-    mapped to ``<unk>`` via two broadcast joins. The bigram array is a
-    pure per-row array expression — no window, no per-doc state."""
+    """(id?, pos, [prev2,] prev, w) ``n``-gram rows with
+    out-of-vocabulary tokens mapped to ``<unk>`` via one broadcast join
+    per position. The gram array is a pure per-row array expression —
+    no window, no per-doc state."""
+    names = _GRAM_COLS[-n:]
     cols = [F.col(id_col)] if id_col else []
+    empty = "array<struct<" + ",".join(f"{c}:string" for c in names) + ">>"
 
-    def bigrams(t: Column) -> Column:
+    def grams(t: Column) -> Column:
         # let-bound: a free `t` here would re-tokenize the text once per
-        # bigram (functions.hof)
+        # gram (functions.hof)
         return F.when(
-            F.size(t) >= 2,
+            F.size(t) >= n,
             F.transform(
-                F.sequence(F.lit(1), F.size(t) - 1),
-                lambda i: F.struct(
-                    F.element_at(t, i).alias("prev"),
-                    F.element_at(t, i + 1).alias("w"),
-                ),
+                F.sequence(F.lit(1), F.size(t) - (n - 1)),
+                lambda i: F.struct(*[
+                    F.element_at(t, i + k).alias(c)
+                    for k, c in enumerate(names)
+                ]),
             ),
-        ).otherwise(F.array().cast("array<struct<prev:string,w:string>>"))
+        ).otherwise(F.array().cast(empty))
 
-    arr = let_bound(_lm_toks(F.col(text_col)), bigrams)
-    rows = source.select(*cols, F.posexplode(arr).alias("pos", "bg"))
-    pv = vocab.select(F.col("tok").alias("__pv"))
-    wv = vocab.select(F.col("tok").alias("__wv"))
-    return (
-        rows.join(F.broadcast(pv), rows["bg.prev"] == F.col("__pv"), "left")
-        .join(F.broadcast(wv), rows["bg.w"] == F.col("__wv"), "left")
-        .select(
-            *cols,
-            "pos",
-            F.coalesce("__pv", F.lit("<unk>")).alias("prev"),
-            F.coalesce("__wv", F.lit("<unk>")).alias("w"),
+    arr = let_bound(_lm_toks(F.col(text_col)), grams)
+    rows = source.select(*cols, F.posexplode(arr).alias("pos", "__g"))
+    for c in names:
+        v = vocab.select(F.col("tok").alias(f"__v_{c}"))
+        rows = rows.join(
+            F.broadcast(v), F.col(f"__g.{c}") == F.col(f"__v_{c}"), "left"
         )
+    return rows.select(
+        *cols,
+        "pos",
+        *[F.coalesce(f"__v_{c}", F.lit("<unk>")).alias(c) for c in names],
     )
 
 
-def build_bigram_lm(
+def build_ngram_lm(
     src: DataFrame,
     text_col: str,
+    *,
+    order: int = 2,
     vocab_size: int = 512,
     top_bigrams: int = 4096,
+    top_trigrams: int = 16384,
     alpha: float = 0.5,
-) -> BigramLM:
-    """Train the add-alpha smoothed bigram LM from ``src`` in two corpus
-    passes, returning three bounded tables:
+    lambdas: tuple = (0.5, 0.3, 0.2),
+    smoothing: str = "jm",
+    discount: float = 0.75,
+) -> NgramLM:
+    """Train a smoothed n-gram LM from ``src``; every table is bounded
+    and every tie is broken by a total order, so the build is
+    deterministic and DuckDB-replayable.
+
+    ``order=2``, the add-``alpha`` bigram LM, in two corpus passes:
 
     - vocabulary: exact top-``vocab_size`` lowercase whitespace tokens
-      (count desc, token asc — deterministic ties); everything else maps
-      to ``<unk>``, so the conditional denominator table is ≤ V+1 rows.
-    - prefix counts: occurrences of each mapped token as a bigram prefix
-      (≤ V+1 rows) — derived from the bigram table, not a third pass.
-    - bigram counts: exact top-``top_bigrams`` mapped bigrams (count
-      desc, prev asc, w asc); dropped/unseen bigrams back off to the
-      add-``alpha`` numerator.
+      (count desc, token asc); everything else maps to ``<unk>``, so
+      the conditional denominator table is ≤ V+1 rows. Checkpointed
+      once: it feeds the mapping joins of every later consumer.
+    - one mapped-bigram aggregation, bounded at (V+1)² rows by
+      unk-mapping before counting and checkpointed lazily, from which
+      both the prefix counts (≤ V+1 rows) and the exact
+      top-``top_bigrams`` bigram counts (count desc, prev asc, w asc)
+      derive; dropped/unseen bigrams back off to the add-``alpha``
+      numerator.
 
-    Pass 1 is the token count for the vocabulary (checkpointed once — it
-    feeds the prev/w mapping joins of every later consumer); pass 2 is
-    ONE mapped-bigram aggregation whose result is bounded at (V+1)² rows
-    by unk-mapping-before-counting, checkpointed, with both count tables
-    derived from it.
+    ``order=3`` adds one mapped-unigram and one mapped-trigram
+    aggregation (run from two threads so their jobs overlap), the
+    trigram prefix table (≤ (V+1)² rows: ~263k short rows at V=512) and
+    the exact top-``top_trigrams`` trigram table. ``smoothing="jm"``
+    scores the Jelinek-Mercer interpolation P(w|u,v) = λ3·P̂3(w|u,v) +
+    λ2·P̂2(w|v) + λ1·P̂1(w) of add-``alpha`` conditionals — one step
+    toward the published CCNet shape (Wenzek et al. 2020 use a 5-gram
+    KenLM). ``smoothing="kn"`` scores interpolated KNESER-NEY instead
+    (Kneser & Ney 1995; the Chen & Goodman 1999 form — the family
+    KenLM, and so the published CCNet pipeline, uses): absolute
+    ``discount`` D at the trigram level, continuation counts at the
+    bigram/unigram levels, and an add-``alpha`` floor on the
+    continuation unigram so every trigram keeps finite mass; its extra
+    tables aggregate the trigram and bigram type censuses, so nothing
+    grows past the (V+1)² ceiling, and ``lambdas`` goes unused.
     """
+    from concurrent.futures import ThreadPoolExecutor
+
     from ..ckpt import spread
 
+    if order not in (2, 3):
+        raise ValueError(f"order must be 2 or 3, got {order}")
+    if smoothing not in ("jm", "kn"):
+        raise ValueError(f"smoothing must be 'jm' or 'kn', got {smoothing!r}")
+    if smoothing == "kn" and order != 3:
+        raise ValueError("smoothing='kn' is a trigram (order=3) tier")
+    if not 0.0 < discount <= 1.0:
+        raise ValueError(f"discount must be in (0, 1], got {discount}")
+    if len(lambdas) != 3 or any(l <= 0 for l in lambdas) or abs(
+        sum(lambdas) - 1.0
+    ) > 1e-9:
+        raise ValueError(
+            f"lambdas must be 3 positive weights summing to 1: {lambdas!r}"
+        )
     lm_toks = spread(src.select(_lm_toks(F.col(text_col)).alias("__toks")))
     vocab = (
         lm_toks.select(F.explode("__toks").alias("tok"))
@@ -548,211 +603,35 @@ def build_bigram_lm(
         .select("tok")
         .transform(materialize)
     )
-    # LAZY checkpoint (guide §5): bc_full feeds the prefix/bigram
-    # tables (broadcast sides of the scoring plan) and the KN census —
-    # the caller's first action (KN's bigram-type count, or the scoring
-    # job itself) materializes it once with no extra eager job.
-    bc_full = (
-        _bigram_rows(spread(src), text_col, vocab, id_col=None)
+    # LAZY checkpoint (guide §5): the bigram-type census feeds the
+    # prefix/bigram tables (broadcast sides of the scoring plan) and
+    # KN's unigram continuation — the first action (KN's type count, or
+    # the scoring job itself) materializes it once, no extra eager job
+    bigram_types = (
+        _gram_rows(spread(src), text_col, vocab, None, 2)
         .groupBy("prev", "w")
         .agg(F.count(F.lit(1)).alias("__cb"))
         .transform(materialize_lazy)
     )
-    prefix_counts = bc_full.groupBy("prev").agg(F.sum("__cb").alias("__cp"))
-    bigram_counts = bc_full.orderBy(
-        F.desc("__cb"), F.asc("prev"), F.asc("w")
-    ).limit(top_bigrams)
-    return BigramLM(
-        vocab, prefix_counts, bigram_counts, vocab_size, alpha,
-        bigram_type_counts=bc_full,
+    lm = NgramLM(
+        order,
+        vocab,
+        bigram_types.groupBy("prev").agg(F.sum("__cb").alias("__cp")),
+        bigram_types.orderBy(
+            F.desc("__cb"), F.asc("prev"), F.asc("w")
+        ).limit(top_bigrams),
+        vocab_size,
+        alpha,
+        tuple(float(x) for x in lambdas),
+        smoothing,
+        float(discount),
     )
+    if order == 2:
+        return lm
 
+    toks = spread(src).select(F.explode(_lm_toks(F.col(text_col))).alias("t0"))
+    uv = vocab.select(F.col("tok").alias("__uv"))
 
-def lm_score_with(
-    df: DataFrame, text_col: str, id_col: str, lm: BigramLM
-) -> DataFrame:
-    """Score ``df`` against an already-built ``BigramLM``.
-
-    Scan-shaped: per-row bigram arrays, one explode, three broadcast
-    joins, one doc-keyed aggregation (the only shuffle, skew-free by key
-    construction). Add-alpha conditional: P(w|prev) = (c(prev,w)+α) /
-    (c(prev)+α·(V+1)); the smoothing denominator uses the CONFIGURED
-    vocab_size so scores don't shift when the corpus has fewer distinct
-    tokens. Both count joins are left + zero backoff, so a prefix the LM
-    corpus never saw still scores (as pure add-alpha mass) instead of
-    silently dropping the bigram.
-
-    Output, one row per input doc: (id, n_bigrams, avg_logp, perplexity)
-    with avg_logp = mean ln P rounded to 6 decimals, perplexity =
-    exp(-mean) rounded to 6; docs with < 2 tokens keep their row with
-    n_bigrams=0 and null scores.
-    """
-    from ..ckpt import spread
-
-    denom_v = float(lm.alpha) * (lm.vocab_size + 1)
-    scored = (
-        _bigram_rows(spread(df), text_col, lm.vocab, id_col)
-        .join(F.broadcast(lm.prefix_counts), on="prev", how="left")
-        .join(F.broadcast(lm.bigram_counts), on=["prev", "w"], how="left")
-        .select(
-            F.col(id_col),
-            F.log(
-                (F.coalesce(F.col("__cb"), F.lit(0)) + F.lit(float(lm.alpha)))
-                / (F.coalesce(F.col("__cp"), F.lit(0)) + F.lit(denom_v))
-            ).alias("__lnp"),
-        )
-    )
-    agg = scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_bigrams"),
-        F.sum("__lnp").alias("__s"),
-    )
-    mean = F.col("__s") / F.col("n_bigrams")
-    return (
-        df.select(id_col)
-        .join(agg, on=id_col, how="left")
-        .select(
-            F.col(id_col),
-            F.coalesce("n_bigrams", F.lit(0)).cast("long").alias("n_bigrams"),
-            (F.round(mean, 6) + 0.0).alias("avg_logp"),
-            (F.round(F.exp(-mean), 6) + 0.0).alias("perplexity"),
-        )
-    )
-
-
-class TrigramLM(NamedTuple):
-    """A built interpolated-trigram LM (see :func:`build_trigram_lm`):
-    the bigram LM's tables plus mapped unigram counts, trigram prefix
-    counts and the exact top-T trigram table — all bounded and
-    broadcastable regardless of corpus size. ``smoothing="kn"`` models
-    additionally carry the Kneser-Ney continuation-count tables (every
-    one an aggregate of the trigram/bigram type census, so none can
-    outgrow the count tables they derive from)."""
-
-    bigram: BigramLM
-    unigram_counts: DataFrame        # (w, __cu) — ≤ V+1 rows
-    total_tokens: int                # N: total mapped token count
-    trigram_prefix_counts: DataFrame  # (prev2, prev, __cq[, __nt]) — ≤ (V+1)²
-    trigram_counts: DataFrame        # (prev2, prev, w, __ct) — exact top-T
-    lambdas: tuple                   # (λ3, λ2, λ1), sums to 1 (jm tier)
-    smoothing: str = "jm"            # "jm" | "kn"
-    discount: float = 0.75           # KN absolute discount D
-    kn_cont: DataFrame | None = None  # (prev, w, __npw=N1+(·,v,w))
-    kn_mid: DataFrame | None = None   # (prev, __nmid=N1+(·,v,·), __tv)
-    kn_uni: DataFrame | None = None   # (w, __n1w=N1+(·,w))
-    kn_bigram_types: int = 0          # N1+(·,·): distinct mapped bigrams
-
-
-def _trigram_rows(
-    source: DataFrame, text_col: str, vocab: DataFrame, id_col: str | None
-) -> DataFrame:
-    """(id?, pos, prev2, prev, w) trigram rows with OOV tokens mapped to
-    ``<unk>`` via three broadcast joins — the 3-gram twin of
-    :func:`_bigram_rows`."""
-    cols = [F.col(id_col)] if id_col else []
-
-    def trigrams(t: Column) -> Column:
-        return F.when(
-            F.size(t) >= 3,
-            F.transform(
-                F.sequence(F.lit(1), F.size(t) - 2),
-                lambda i: F.struct(
-                    F.element_at(t, i).alias("p2"),
-                    F.element_at(t, i + 1).alias("p1"),
-                    F.element_at(t, i + 2).alias("w"),
-                ),
-            ),
-        ).otherwise(
-            F.array().cast("array<struct<p2:string,p1:string,w:string>>")
-        )
-
-    arr = let_bound(_lm_toks(F.col(text_col)), trigrams)
-    rows = source.select(*cols, F.posexplode(arr).alias("pos", "tg"))
-    v2 = vocab.select(F.col("tok").alias("__v2"))
-    v1 = vocab.select(F.col("tok").alias("__v1"))
-    vw = vocab.select(F.col("tok").alias("__vw"))
-    return (
-        rows.join(F.broadcast(v2), rows["tg.p2"] == F.col("__v2"), "left")
-        .join(F.broadcast(v1), rows["tg.p1"] == F.col("__v1"), "left")
-        .join(F.broadcast(vw), rows["tg.w"] == F.col("__vw"), "left")
-        .select(
-            *cols,
-            "pos",
-            F.coalesce("__v2", F.lit("<unk>")).alias("prev2"),
-            F.coalesce("__v1", F.lit("<unk>")).alias("prev"),
-            F.coalesce("__vw", F.lit("<unk>")).alias("w"),
-        )
-    )
-
-
-def build_trigram_lm(
-    src: DataFrame,
-    text_col: str,
-    vocab_size: int = 512,
-    top_bigrams: int = 4096,
-    top_trigrams: int = 16384,
-    alpha: float = 0.5,
-    lambdas: tuple = (0.5, 0.3, 0.2),
-    smoothing: str = "jm",
-    discount: float = 0.75,
-) -> TrigramLM:
-    """Train the Jelinek-Mercer-interpolated trigram LM — one step
-    toward the published CCNet shape (Wenzek et al. 2020 use a 5-gram
-    KenLM): P(w|u,v) = λ3·P̂3(w|u,v) + λ2·P̂2(w|v) + λ1·P̂1(w), each P̂
-    an add-``alpha`` conditional over unk-mapped counts, so the whole
-    build stays deterministic and DuckDB-replayable (the existing
-    bigram-LM contract) while the model actually conditions on two
-    words of context.
-
-    Tables stay bounded by construction: the mapped unigram table is
-    ≤ V+1 rows; the trigram prefix table ≤ (V+1)² rows (broadcastable
-    at the default V=512: ~263k short rows); the trigram table is the
-    exact top-``top_trigrams`` (count desc, prev2/prev/w asc ties) —
-    dropped/unseen trigrams back off to the add-alpha numerator, the
-    bigram-table convention. Build passes over the corpus: the two
-    bigram-LM passes plus one mapped-unigram and one mapped-trigram
-    aggregation, each a map-side-combined hash agg.
-
-    ``smoothing="kn"`` builds the interpolated KNESER-NEY tier instead
-    (Kneser & Ney 1995; the Chen & Goodman 1999 interpolated form —
-    the smoothing family KenLM, and therefore the published CCNet
-    pipeline, actually uses): absolute ``discount`` D at the trigram
-    level, CONTINUATION counts (how many distinct contexts a gram
-    completes) at the bigram/unigram levels, and an add-``alpha``
-    floor on the continuation unigram so every trigram keeps finite
-    mass. The extra state is four more bounded aggregates over the
-    type censuses the JM build already materializes (plus one mapped
-    bigram-type census): nothing grows past the (V+1)² prefix-table
-    ceiling. ``lambdas`` is ignored by this tier — interpolation
-    weights come from the discount mass D·N1+(prefix,·)/c(prefix).
-    """
-    if smoothing not in ("jm", "kn"):
-        raise ValueError(
-            f"smoothing must be 'jm' or 'kn', got {smoothing!r}"
-        )
-    if smoothing == "kn" and not (0.0 < discount <= 1.0):
-        raise ValueError(
-            f"discount must be in (0, 1], got {discount}"
-        )
-    if len(lambdas) != 3 or any(l <= 0 for l in lambdas) or abs(
-        sum(lambdas) - 1.0
-    ) > 1e-9:
-        raise ValueError(
-            f"lambdas must be 3 positive weights summing to 1: {lambdas!r}"
-        )
-    from ..ckpt import spread
-
-    bi = build_bigram_lm(
-        src, text_col, vocab_size=vocab_size,
-        top_bigrams=top_bigrams, alpha=alpha,
-    )
-    toks = spread(src).select(
-        F.explode(_lm_toks(F.col(text_col))).alias("t0")
-    )
-    uv = bi.vocab.select(F.col("tok").alias("__uv"))
-
-    # the unigram and trigram censuses are independent given the vocab:
-    # build them from two threads so their materialization jobs overlap
-    # (optimization guide §2.6) instead of running back to back
     def _build_ug():
         # lazy checkpoint + total-count fusion (guide §5): the sum
         # collect is the first full action, so one job materializes the
@@ -768,191 +647,151 @@ def build_trigram_lm(
 
     def _build_tc():
         return (
-            _trigram_rows(spread(src), text_col, bi.vocab, id_col=None)
+            _gram_rows(spread(src), text_col, vocab, None, 3)
             .groupBy("prev2", "prev", "w")
             .agg(F.count(F.lit(1)).alias("__ct"))
             .transform(materialize)
         )
 
-    from concurrent.futures import ThreadPoolExecutor
-
+    # the unigram and trigram censuses are independent given the vocab:
+    # build them from two threads so their materialization jobs overlap
+    # (optimization guide §2.6) instead of running back to back
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_ug, f_tc = pool.submit(_build_ug), pool.submit(_build_tc)
         (ug, total), tc_full = f_ug.result(), f_tc.result()
-    tcounts = tc_full.orderBy(
-        F.desc("__ct"), F.asc("prev2"), F.asc("prev"), F.asc("w")
-    ).limit(top_trigrams)
+    lm = lm._replace(
+        unigram_counts=ug,
+        total_tokens=int(total),
+        trigram_counts=tc_full.orderBy(
+            F.desc("__ct"), F.asc("prev2"), F.asc("prev"), F.asc("w")
+        ).limit(top_trigrams),
+    )
     if smoothing == "jm":
-        tpfx = tc_full.groupBy("prev2", "prev").agg(
-            F.sum("__ct").alias("__cq")
-        )
-        return TrigramLM(
-            bi, ug, int(total), tpfx, tcounts,
-            tuple(float(x) for x in lambdas),
-        )
+        return lm._replace(trigram_prefix_counts=tc_full.groupBy(
+            "prev2", "prev"
+        ).agg(F.sum("__ct").alias("__cq")))
     # KN continuation state — every table an aggregate of a type
     # census (tc_full rows are distinct (u,v,w), so COUNT(*) groupings
     # ARE the N1+ "distinct contexts" counts):
     #   __nt   = N1+(u,v,·): distinct w after the trigram prefix
     #   __npw  = N1+(·,v,w): distinct u before the bigram
     #   __nmid = N1+(·,v,·) and __tv = |{w: N1+(·,v,w)>0}|
-    #   __n1w  = N1+(·,w) from the mapped bigram-TYPE census (the
-    #            trigram census misses each doc's first bigram, so the
-    #            unigram continuation re-censuses bigram types — one
-    #            extra map-side hash agg, ≤ (V+1)² rows)
-    tpfx = tc_full.groupBy("prev2", "prev").agg(
-        F.sum("__ct").alias("__cq"), F.count(F.lit(1)).alias("__nt")
-    )
+    #   __n1w  = N1+(·,w) from the bigram-type census (the trigram
+    #            census misses each doc's first bigram)
     cont = tc_full.groupBy("prev", "w").agg(
         F.count(F.lit(1)).alias("__npw")
     ).transform(materialize_lazy)
-    mid = cont.groupBy("prev").agg(
-        F.sum("__npw").alias("__nmid"), F.count(F.lit(1)).alias("__tv")
-    )
-    # the bigram-TYPE census is the exact aggregate build_bigram_lm
-    # already materialized as bc_full (same grouping, same __cb): reuse
-    # it instead of re-running the corpus pass (one full scan + shuffle
-    # + checkpoint removed from every KN build). The store path, which
-    # has no census, recomputes it as before.
-    bg_types = bi.bigram_type_counts
-    if bg_types is None:
-        bg_types = (
-            _bigram_rows(spread(src), text_col, bi.vocab, id_col=None)
-            .groupBy("prev", "w")
-            .agg(F.count(F.lit(1)).alias("__cb"))
-            .transform(materialize_lazy)  # the n11 count materializes it
-        )
-    kn_uni = bg_types.groupBy("w").agg(F.count(F.lit(1)).alias("__n1w"))
-    n11 = bg_types.count()
-    return TrigramLM(
-        bi, ug, int(total), tpfx, tcounts,
-        tuple(float(x) for x in lambdas),
-        smoothing="kn", discount=float(discount),
-        kn_cont=cont, kn_mid=mid, kn_uni=kn_uni,
-        kn_bigram_types=int(n11),
+    return lm._replace(
+        trigram_prefix_counts=tc_full.groupBy("prev2", "prev").agg(
+            F.sum("__ct").alias("__cq"), F.count(F.lit(1)).alias("__nt")
+        ),
+        kn_cont=cont,
+        kn_mid=cont.groupBy("prev").agg(
+            F.sum("__npw").alias("__nmid"), F.count(F.lit(1)).alias("__tv")
+        ),
+        kn_uni=bigram_types.groupBy("w").agg(F.count(F.lit(1)).alias("__n1w")),
+        kn_bigram_types=int(bigram_types.count()),
     )
 
 
-def lm_score3_with(
-    df: DataFrame, text_col: str, id_col: str, lm: TrigramLM
+def lm_score_with(
+    df: DataFrame, text_col: str, id_col: str, lm: NgramLM
 ) -> DataFrame:
-    """Score ``df`` against a built :class:`TrigramLM` — the same
-    scan shape as :func:`lm_score_with` (per-row trigram arrays, one
-    explode, five broadcast count joins, one doc-keyed aggregation as
-    the only shuffle). Per trigram position,
-    ln(λ3·P̂3 + λ2·P̂2 + λ1·P̂1); all three conditionals share the
-    add-alpha denominator constant α·(V+1) (the unigram denominator is
-    the corpus token total), and unseen prefixes back off to pure
-    add-alpha mass via left joins + zero coalesce.
+    """Score ``df`` against a built :class:`NgramLM`.
 
-    Output, one row per input doc: (id, n_trigrams, avg_logp,
-    perplexity), 6-decimal rounding; docs with < 3 tokens keep their
-    row with n_trigrams=0 and null scores.
+    Scan-shaped: per-row gram arrays, one explode, broadcast count
+    joins, one doc-keyed aggregation (the only shuffle, skew-free by
+    key construction). All add-``alpha`` conditionals share the
+    denominator constant α·(V+1), so scores don't shift when the corpus
+    has fewer distinct tokens than the CONFIGURED vocab_size; every
+    count join is left + zero backoff, so a prefix the LM corpus never
+    saw still scores (as pure add-alpha mass) instead of silently
+    dropping the gram. Per position, ln of:
 
-    ``smoothing="kn"`` models score with interpolated Kneser-Ney
-    instead (same join count, continuation tables swapped in for the
-    raw bigram tables): per level the discounted MLE term plus the
-    discount mass times the lower level, a prefix the census never saw
-    backing off entirely to that lower level —
+    - order 2: P̂2(w|v) = (c(v,w)+α) / (c(v)+α·(V+1));
+    - order 3, jm: λ3·P̂3 + λ2·P̂2 + λ1·P̂1, P̂3 the trigram twin of P̂2
+      and P̂1(w) = (c(w)+α) / (N+α·(V+1)), N the corpus token total;
+    - order 3, kn: per level the discounted MLE term plus the discount
+      mass times the lower level, a prefix the census never saw backing
+      off entirely to that lower level —
 
         P(w|u,v) = (max(c(u,v,w)−D,0) + D·N1+(u,v,·)·P(w|v)) / c(u,v)
         P(w|v)   = (max(N1+(·,v,w)−D,0) + D·|after v|·P(w)) / N1+(·,v,·)
         P(w)     = (N1+(·,w) + α) / (N1+(·,·) + α·(V+1))
 
-    (the unigram α-floor keeps every log finite and sums to exactly 1
-    over the mapped vocabulary, since ΣN1+(·,w) = N1+(·,·)).
+      (the unigram α-floor keeps every log finite and sums to exactly 1
+      over the mapped vocabulary, since ΣN1+(·,w) = N1+(·,·)).
+
+    Output, one row per input doc: (id, n_bigrams | n_trigrams,
+    avg_logp, perplexity) with avg_logp = mean ln P rounded to 6
+    decimals, perplexity = exp(-mean) rounded to 6; docs with fewer
+    than ``order`` tokens keep their row with a zero count and null
+    scores.
     """
     from ..ckpt import spread
 
-    bi = lm.bigram
-    a = float(bi.alpha)
-    denom = a * (bi.vocab_size + 1)
-    rows = _trigram_rows(spread(df), text_col, bi.vocab, id_col)
-    if lm.smoothing == "kn":
+    a = float(lm.alpha)
+    denom = a * (lm.vocab_size + 1)
+    n_col = "n_bigrams" if lm.order == 2 else "n_trigrams"
+
+    def c(name):
+        return F.coalesce(F.col(name), F.lit(0))
+
+    def add_alpha(count, context):
+        return (c(count) + F.lit(a)) / (context + F.lit(denom))
+
+    def discounted(count, types, context, lower):
         d = float(lm.discount)
-        scored = (
-            rows.join(
-                F.broadcast(lm.trigram_prefix_counts),
-                on=["prev2", "prev"], how="left",
-            )
-            .join(
-                F.broadcast(lm.trigram_counts),
-                on=["prev2", "prev", "w"], how="left",
-            )
-            .join(F.broadcast(lm.kn_cont), on=["prev", "w"], how="left")
-            .join(F.broadcast(lm.kn_mid), on="prev", how="left")
-            .join(F.broadcast(lm.kn_uni), on="w", how="left")
-        )
-        p1 = (F.coalesce(F.col("__n1w"), F.lit(0)) + F.lit(a)) / F.lit(
-            float(lm.kn_bigram_types) + denom
-        )
-        nmid = F.coalesce(F.col("__nmid"), F.lit(0))
-        p2 = F.when(
-            nmid > 0,
+        return F.when(
+            c(context) > 0,
             (
-                F.greatest(
-                    F.coalesce(F.col("__npw"), F.lit(0)) - F.lit(d),
-                    F.lit(0.0),
-                )
-                + F.lit(d) * F.coalesce(F.col("__tv"), F.lit(0)) * p1
-            )
-            / nmid,
-        ).otherwise(p1)
-        cq = F.coalesce(F.col("__cq"), F.lit(0))
-        p3 = F.when(
-            cq > 0,
-            (
-                F.greatest(
-                    F.coalesce(F.col("__ct"), F.lit(0)) - F.lit(d),
-                    F.lit(0.0),
-                )
-                + F.lit(d) * F.coalesce(F.col("__nt"), F.lit(0)) * p2
-            )
-            / cq,
-        ).otherwise(p2)
-        lnp = F.log(p3)
+                F.greatest(c(count) - F.lit(d), F.lit(0.0))
+                + F.lit(d) * c(types) * lower
+            ) / c(context),
+        ).otherwise(lower)
+
+    p2 = add_alpha("__cb", c("__cp"))
+    trigram = [
+        (lm.trigram_prefix_counts, ["prev2", "prev"]),
+        (lm.trigram_counts, ["prev2", "prev", "w"]),
+    ]
+    if lm.order == 2:
+        joins = [(lm.prefix_counts, "prev"), (lm.bigram_counts, ["prev", "w"])]
+        p = p2
+    elif lm.smoothing == "kn":
+        joins = trigram + [
+            (lm.kn_cont, ["prev", "w"]), (lm.kn_mid, "prev"), (lm.kn_uni, "w"),
+        ]
+        p1 = add_alpha("__n1w", F.lit(float(lm.kn_bigram_types)))
+        p = discounted(
+            "__ct", "__nt", "__cq", discounted("__npw", "__tv", "__nmid", p1)
+        )
     else:
+        joins = trigram + [
+            (lm.prefix_counts, "prev"), (lm.bigram_counts, ["prev", "w"]),
+            (lm.unigram_counts, "w"),
+        ]
         l3, l2, l1 = lm.lambdas
-        scored = (
-            rows.join(
-                F.broadcast(lm.trigram_prefix_counts),
-                on=["prev2", "prev"], how="left",
-            )
-            .join(
-                F.broadcast(lm.trigram_counts),
-                on=["prev2", "prev", "w"], how="left",
-            )
-            .join(F.broadcast(bi.prefix_counts), on="prev", how="left")
-            .join(F.broadcast(bi.bigram_counts), on=["prev", "w"], how="left")
-            .join(F.broadcast(lm.unigram_counts), on="w", how="left")
+        p = (
+            F.lit(l3) * add_alpha("__ct", c("__cq"))
+            + F.lit(l2) * p2
+            + F.lit(l1) * add_alpha("__cu", F.lit(float(lm.total_tokens)))
         )
-        p3 = (F.coalesce(F.col("__ct"), F.lit(0)) + F.lit(a)) / (
-            F.coalesce(F.col("__cq"), F.lit(0)) + F.lit(denom)
-        )
-        p2 = (F.coalesce(F.col("__cb"), F.lit(0)) + F.lit(a)) / (
-            F.coalesce(F.col("__cp"), F.lit(0)) + F.lit(denom)
-        )
-        p1 = (F.coalesce(F.col("__cu"), F.lit(0)) + F.lit(a)) / (
-            F.lit(float(lm.total_tokens)) + F.lit(denom)
-        )
-        lnp = F.log(F.lit(l3) * p3 + F.lit(l2) * p2 + F.lit(l1) * p1)
+    scored = _gram_rows(spread(df), text_col, lm.vocab, id_col, lm.order)
+    for table, on in joins:
+        scored = scored.join(F.broadcast(table), on=on, how="left")
     agg = (
-        scored.select(F.col(id_col), lnp.alias("__lnp"))
+        scored.select(F.col(id_col), F.log(p).alias("__lnp"))
         .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_trigrams"),
-            F.sum("__lnp").alias("__s"),
-        )
+        .agg(F.count(F.lit(1)).alias(n_col), F.sum("__lnp").alias("__s"))
     )
-    mean = F.col("__s") / F.col("n_trigrams")
+    mean = F.col("__s") / F.col(n_col)
     return (
         df.select(id_col)
         .join(agg, on=id_col, how="left")
         .select(
             F.col(id_col),
-            F.coalesce("n_trigrams", F.lit(0)).cast("long").alias(
-                "n_trigrams"
-            ),
+            F.coalesce(n_col, F.lit(0)).cast("long").alias(n_col),
             (F.round(mean, 6) + 0.0).alias("avg_logp"),
             (F.round(F.exp(-mean), 6) + 0.0).alias("perplexity"),
         )
@@ -973,46 +812,46 @@ def lm_score(
     smoothing: str = "jm",
     discount: float = 0.75,
 ) -> DataFrame:
-    """Corpus-trained smoothed-bigram LM quality score (the CCNet-style
+    """Corpus-trained smoothed n-gram LM quality score (the CCNet-style
     perplexity proxy: fluent, corpus-typical text scores low perplexity;
     gibberish, boilerplate, and wrong-language text score high).
 
-    ``build_bigram_lm`` + ``lm_score_with`` in one call: the LM trains on
-    the corpus itself (or ``lm_df``, e.g. a clean deterministic sample
-    from ``operators.sampling``) and the corpus is scanned at most three
-    times end-to-end (vocab count, mapped-bigram count, scoring). All LM
-    state is bounded and broadcast by construction, every decision is
-    deterministic (exact top-k with total-order ties), so the whole
-    pipeline is oracle-checkable in DuckDB to the 6-decimal rounding.
+    :func:`build_ngram_lm` + :func:`lm_score_with` in one call: the LM
+    trains on the corpus itself (or ``lm_df``, e.g. a clean
+    deterministic sample from ``operators.sampling``). At ``order=2``
+    the corpus is scanned at most three times end-to-end (vocab count,
+    mapped-bigram count, scoring). All LM state is bounded and
+    broadcast by construction, every decision is deterministic (exact
+    top-k with total-order ties), so the whole pipeline is
+    oracle-checkable in DuckDB to the 6-decimal rounding.
 
-    ``order=3`` switches to the interpolated-trigram tier
-    (:func:`build_trigram_lm` + :func:`lm_score3_with` — closer to the
-    published CCNet 5-gram shape while keeping the same bounded,
-    replayable design); output column is then ``n_trigrams``. The
-    default ``order=2`` keeps every existing caller (incl. the CCNet
-    tier pipeline) bit-unchanged.
+    ``order=3`` scores the interpolated-trigram tier (``smoothing`` "jm"
+    or "kn") — closer to the published CCNet 5-gram shape while keeping
+    the same bounded, replayable design; the output column is then
+    ``n_trigrams`` instead of ``n_bigrams``.
     """
-    src = lm_df if lm_df is not None else df
-    if order == 3:
-        lm3 = build_trigram_lm(
-            src, text_col, vocab_size=vocab_size,
-            top_bigrams=top_bigrams, top_trigrams=top_trigrams,
-            alpha=alpha, lambdas=lambdas,
-            smoothing=smoothing, discount=discount,
-        )
-        return lm_score3_with(df, text_col, id_col, lm3)
-    if smoothing != "jm":
-        raise ValueError("smoothing is a trigram (order=3) knob")
-    if order != 2:
-        raise ValueError(f"order must be 2 or 3, got {order}")
-    lm = build_bigram_lm(
-        src,
-        text_col,
-        vocab_size=vocab_size,
-        top_bigrams=top_bigrams,
-        alpha=alpha,
+    lm = build_ngram_lm(
+        lm_df if lm_df is not None else df, text_col, order=order,
+        vocab_size=vocab_size, top_bigrams=top_bigrams,
+        top_trigrams=top_trigrams, alpha=alpha, lambdas=lambdas,
+        smoothing=smoothing, discount=discount,
     )
     return lm_score_with(df, text_col, id_col, lm)
+
+
+# on-disk table name -> NgramLM field; an order-2 model writes the first
+# three, an order-3 jm model the first six, a kn model all nine
+_LM_TABLES = {
+    "vocab": "vocab",
+    "bigram_prefix": "prefix_counts",
+    "bigram_counts": "bigram_counts",
+    "unigram": "unigram_counts",
+    "trigram_prefix": "trigram_prefix_counts",
+    "trigram_counts": "trigram_counts",
+    "kn_cont": "kn_cont",
+    "kn_mid": "kn_mid",
+    "kn_uni": "kn_uni",
+}
 
 
 def build_lm_store(
@@ -1049,86 +888,49 @@ def build_lm_store(
     dropped gram's true count is gone) — an "appended" model would
     silently diverge from the retrained one. The store contract is
     train-once / score-many; refreshing the model is a rebuild."""
-    if order not in (2, 3):
-        raise ValueError(f"order must be 2 or 3, got {order}")
-    if order == 2:
-        if smoothing != "jm":
-            raise ValueError("smoothing is a trigram (order=3) knob")
-        bi = build_bigram_lm(
-            src, text_col, vocab_size=vocab_size,
-            top_bigrams=top_bigrams, alpha=alpha,
-        )
-        lm3 = None
-    else:
-        lm3 = build_trigram_lm(
-            src, text_col, vocab_size=vocab_size,
-            top_bigrams=top_bigrams, top_trigrams=top_trigrams,
-            alpha=alpha, lambdas=lambdas,
-            smoothing=smoothing, discount=discount,
-        )
-        bi = lm3.bigram
+    lm = build_ngram_lm(
+        src, text_col, order=order, vocab_size=vocab_size,
+        top_bigrams=top_bigrams, top_trigrams=top_trigrams, alpha=alpha,
+        lambdas=lambdas, smoothing=smoothing, discount=discount,
+    )
     tables = {
-        "vocab": bi.vocab,
-        "bigram_prefix": bi.prefix_counts,
-        "bigram_counts": bi.bigram_counts,
+        name: getattr(lm, field) for name, field in _LM_TABLES.items()
+        if getattr(lm, field) is not None
     }
-    if lm3 is not None:
-        tables.update(
-            unigram=lm3.unigram_counts,
-            trigram_prefix=lm3.trigram_prefix_counts,
-            trigram_counts=lm3.trigram_counts,
-        )
-        if lm3.smoothing == "kn":
-            tables.update(
-                kn_cont=lm3.kn_cont, kn_mid=lm3.kn_mid, kn_uni=lm3.kn_uni
-            )
     for name, table in tables.items():
         table.coalesce(1).write.mode("overwrite").parquet(f"{path}/{name}")
-    l3, l2, l1 = (lm3.lambdas if lm3 is not None else
-                  tuple(float(x) for x in lambdas))
+    l3, l2, l1 = lm.lambdas
     write_meta(path, dict(
         order=int(order), vocab_size=int(vocab_size), alpha=float(alpha),
-        l3=float(l3), l2=float(l2), l1=float(l1),
-        smoothing=lm3.smoothing if lm3 is not None else "jm",
-        discount=float(discount),
-        total_tokens=int(lm3.total_tokens) if lm3 is not None else 0,
-        kn_bigram_types=int(lm3.kn_bigram_types) if lm3 is not None else 0,
+        l3=l3, l2=l2, l1=l1, smoothing=lm.smoothing, discount=lm.discount,
+        total_tokens=lm.total_tokens, kn_bigram_types=lm.kn_bigram_types,
     ))
     # every table reads only the build's own checkpoints
     for table in tables.values():
         release(table)
 
 
-def read_lm_store(spark, path: str) -> "BigramLM | TrigramLM":
+def read_lm_store(spark, path: str) -> NgramLM:
     """Load a persisted LM (``build_lm_store``) back into the exact
-    in-memory model object — the scoring tables are KB-scale parquet
-    (bounded by construction), so this is a metadata-cheap open; the
-    count tables stay DataFrames and broadcast at score time exactly
-    like a freshly built model's."""
+    in-memory model — the scoring tables are KB-scale parquet (bounded
+    by construction), so this is a metadata-cheap open; the count
+    tables stay DataFrames and broadcast at score time exactly like a
+    freshly built model's."""
     meta = read_meta(path, "lm store")
-    bi = BigramLM(
-        spark.read.parquet(f"{path}/vocab"),
-        spark.read.parquet(f"{path}/bigram_prefix"),
-        spark.read.parquet(f"{path}/bigram_counts"),
-        meta["vocab_size"],
-        meta["alpha"],
-    )
-    if meta["order"] == 2:
-        return bi
-    kn = meta["smoothing"] == "kn"
-    return TrigramLM(
-        bi,
-        spark.read.parquet(f"{path}/unigram"),
-        meta["total_tokens"],
-        spark.read.parquet(f"{path}/trigram_prefix"),
-        spark.read.parquet(f"{path}/trigram_counts"),
-        (meta["l3"], meta["l2"], meta["l1"]),
+    n_tables = 3 if meta["order"] == 2 else 9 if meta["smoothing"] == "kn" else 6
+    return NgramLM(
+        order=meta["order"],
+        vocab_size=meta["vocab_size"],
+        alpha=meta["alpha"],
+        lambdas=(meta["l3"], meta["l2"], meta["l1"]),
         smoothing=meta["smoothing"],
         discount=meta["discount"],
-        kn_cont=spark.read.parquet(f"{path}/kn_cont") if kn else None,
-        kn_mid=spark.read.parquet(f"{path}/kn_mid") if kn else None,
-        kn_uni=spark.read.parquet(f"{path}/kn_uni") if kn else None,
+        total_tokens=meta["total_tokens"],
         kn_bigram_types=meta["kn_bigram_types"],
+        **{
+            field: spark.read.parquet(f"{path}/{name}")
+            for name, field in list(_LM_TABLES.items())[:n_tables]
+        },
     )
 
 
@@ -1138,12 +940,9 @@ def lm_score_stored(
     """Score a corpus against a persisted LM (``build_lm_store``):
     the production CCNet loop — the reference model is a frozen
     artifact, every shard pays only the scan + broadcast-join scoring
-    plan. Dispatches on the store's pinned order; bit-identical to
-    in-memory scoring with the same model (pinned by test)."""
-    lm = read_lm_store(spark, path)
-    if isinstance(lm, TrigramLM):
-        return lm_score3_with(df, text_col, id_col, lm)
-    return lm_score_with(df, text_col, id_col, lm)
+    plan. Bit-identical to in-memory scoring with the same model
+    (pinned by test)."""
+    return lm_score_with(df, text_col, id_col, read_lm_store(spark, path))
 
 
 # Encoding-hygiene regexes — shared Java-regex/RE2 subset (two-digit \xhh

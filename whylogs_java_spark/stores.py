@@ -55,19 +55,28 @@ def read_meta(path: str, what: str, **expected) -> dict:
 
 
 def refuse_known_ids(
-    what: str, path: str, batch: DataFrame, id_col: str, stored_ids: DataFrame,
+    what: str, path: str, batch: DataFrame, id_col: str,
+    stored_ids: DataFrame | None = None,
     vec_col: str | None = None, dim: int | None = None,
 ) -> None:
-    """The one append rule, run before anything is written: refuse a
-    batch holding an id already in the store (``stored_ids``, one ``id``
-    column), which would otherwise match twice, once per version. With
-    ``dim``, the same action refuses a non-NULL ``vec_col`` vector of
-    another width, which would rank to an arbitrary list."""
+    """The one id rule of a store write, run before anything is
+    written: refuse a batch holding an id twice, or an id already in
+    the store (``stored_ids``, one ``id`` column; ``None`` for a
+    build), either of which would otherwise match twice, once per
+    version. With ``dim``, the same action refuses a non-NULL
+    ``vec_col`` vector of another width, which would rank to an
+    arbitrary list."""
+    ids = batch.select(F.col(id_col).alias("id"))
     check = (
-        batch.select(F.col(id_col).alias("id"))
-        .join(stored_ids, "id", "left_semi")
-        .agg(F.min("id").alias("known"))
+        ids.groupBy("id")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .agg(F.min(F.when(F.col("n") > 1, F.col("id"))).alias("repeated"))
     )
+    if stored_ids is not None:
+        check = check.crossJoin(
+            ids.join(stored_ids, "id", "left_semi")
+            .agg(F.min("id").alias("known"))
+        )
     if dim is not None:
         check = check.crossJoin(
             batch.where(F.col(vec_col).isNotNull() & (F.size(vec_col) != dim))
@@ -79,7 +88,12 @@ def refuse_known_ids(
             f"append batch has a {row['got']}-dim vector in {vec_col!r} but "
             f"{what} at {path} was built with dim={dim}"
         )
-    if row["known"] is not None:
+    if row["repeated"] is not None:
+        raise ValueError(
+            f"{what} at {path}: the batch holds id {row['repeated']!r} more "
+            "than once: store writes refuse repeated ids"
+        )
+    if stored_ids is not None and row["known"] is not None:
         raise ValueError(
             f"{what} at {path} already holds id {row['known']!r}: appends "
             "refuse ids already in the store"

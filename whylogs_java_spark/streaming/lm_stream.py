@@ -1,4 +1,4 @@
-"""Streaming bigram-LM quality scoring.
+"""Streaming n-gram-LM quality scoring.
 
 The streaming half of ``operators.text.lm_score``: an unbounded ingest
 feed scored online against a STATIC language model trained once at query
@@ -6,7 +6,7 @@ start (the CCNet deployment shape — the LM trains on a trusted/reference
 corpus; the firehose is what gets filtered).
 
 LM scoring is per-document — a doc's score depends only on its own
-bigrams and the fixed LM tables, never on other stream rows — so the
+n-grams and the fixed LM tables, never on other stream rows — so the
 streaming treatment carries ZERO cross-batch state: each micro-batch runs
 the exact batch scorer (same broadcast-join plan) and the union of
 micro-batch reports equals the batch report over the same rows, under any
@@ -14,8 +14,8 @@ batch boundaries (the same argument as ``decontam_stream``).
 ``foreachBatch`` is the sanctioned shape for that.
 
 The LM tables are built and CHECKPOINTED once at query start
-(``build_bigram_lm`` localCheckpoints the vocabulary and the bigram-count
-base); each micro-batch re-broadcasts the cached tables instead of
+(``build_ngram_lm`` checkpoints the vocabulary and the count
+censuses); each micro-batch re-broadcasts the cached tables instead of
 re-scanning the LM corpus.
 """
 
@@ -25,14 +25,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame
 
-from ..operators.text import (
-    BigramLM,
-    TrigramLM,
-    build_bigram_lm,
-    build_trigram_lm,
-    lm_score3_with,
-    lm_score_with,
-)
+from ..operators.text import NgramLM, build_ngram_lm, lm_score_with
 
 
 def lm_score_stream(
@@ -44,7 +37,7 @@ def lm_score_stream(
     vocab_size: int = 512,
     top_bigrams: int = 4096,
     alpha: float = 0.5,
-    lm: "BigramLM | TrigramLM | None" = None,
+    lm: NgramLM | None = None,
     checkpoint_dir: str | None = None,
     order: int = 2,
     top_trigrams: int = 16384,
@@ -52,8 +45,8 @@ def lm_score_stream(
 ):
     """Start a streaming query scoring each micro-batch against a static
     LM — bigram by default, the interpolated trigram tier with
-    ``order=3`` (or by passing a prebuilt :class:`TrigramLM` as ``lm``;
-    the model type dispatches the scorer).
+    ``order=3`` (or pass a prebuilt :class:`NgramLM` as ``lm``; its own
+    order then holds).
 
     ``on_batch(report_df, batch_id)`` receives the batch's per-doc report
     — (id, n_bigrams|n_trigrams, avg_logp, perplexity), the same schema
@@ -67,25 +60,14 @@ def lm_score_stream(
         raise ValueError("provide lm_df (to train) or a prebuilt lm")
     if lm_df is not None and lm_df.isStreaming:
         raise ValueError("lm_df must be static — the LM corpus is not a stream")
-    if order not in (2, 3):
-        raise ValueError(f"order must be 2 or 3, got {order}")
-    if lm is not None:
-        model = lm
-    elif order == 3:
-        model = build_trigram_lm(
-            lm_df, text_col, vocab_size=vocab_size,
-            top_bigrams=top_bigrams, top_trigrams=top_trigrams,
-            alpha=alpha, lambdas=lambdas,
-        )
-    else:
-        model = build_bigram_lm(
-            lm_df, text_col, vocab_size=vocab_size,
-            top_bigrams=top_bigrams, alpha=alpha,
-        )
-    scorer = lm_score3_with if isinstance(model, TrigramLM) else lm_score_with
+    model = lm if lm is not None else build_ngram_lm(
+        lm_df, text_col, order=order, vocab_size=vocab_size,
+        top_bigrams=top_bigrams, top_trigrams=top_trigrams, alpha=alpha,
+        lambdas=lambdas,
+    )
 
     def _handle(batch_df: DataFrame, batch_id: int) -> None:
-        on_batch(scorer(batch_df, text_col, id_col, model), batch_id)
+        on_batch(lm_score_with(batch_df, text_col, id_col, model), batch_id)
 
     writer = stream_df.writeStream.foreachBatch(_handle).outputMode("append")
     if checkpoint_dir is not None:
